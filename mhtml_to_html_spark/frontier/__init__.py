@@ -11,8 +11,8 @@
 - ``seenset``: counting-Bloom + cuckoo-filter structures for the
   10^10-URL seen set.
 - ``spark_frontier``: the distributed implementation — driver fixpoint
-  loop over DataFrames, bloom-pruned anti-join dedup, salted
-  repartitionByRange priority queue, per-host budget windows, fetch
+  loop over DataFrames, bloom-pruned anti-join dedup, priority queue
+  as per-host budget windows plus a two-pass global fetch index, fetch
   UDF, snapshot checkpoints.
 """
 

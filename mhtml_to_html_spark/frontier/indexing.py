@@ -13,6 +13,10 @@ distributed:
    driver, cumulative offsets go back as a broadcast join;
 4. ``index = partition_offset + within_partition_position``.
 
+The index is the exclusive prefix sum of weight 1, so
+:func:`assign_prefix_sum` (any integral weight) runs the same two
+passes.
+
 The total order is byte-identical to the window version as long as
 ``order_cols`` is a TOTAL order (no ties) — both callers in the crawl
 qualify: (depth, host_rank, disc_seq) has a unique disc_seq, and
@@ -21,23 +25,79 @@ qualify: (depth, host_rank, disc_seq) has a unique disc_seq, and
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 
-def _local_index_batches(batches):
-    import pandas as pd  # noqa: F401  (worker-side import)
+def _local_prefix_batches(batches, weight_col: str | None):
+    """Tag each row with its partition id and the exclusive prefix sum
+    of ``weight_col`` (weight 1 when None) within its partition."""
+    import pandas as pd
     from pyspark import TaskContext
 
     pid = TaskContext.get().partitionId()
-    i = 0
+    acc = 0
     for pdf in batches:
-        pdf = pdf.copy()
-        pdf["_pid"] = pd.Series([pid] * len(pdf), dtype="int32")
-        pdf["_ppos"] = pd.Series(range(i, i + len(pdf)), dtype="int64")
-        i += len(pdf)
+        if weight_col is None:
+            w = pd.Series(1, index=pdf.index, dtype="int64")
+        else:
+            w = pdf[weight_col].astype("int64")
+        pdf = pdf.assign(
+            _pid=pd.Series(pid, index=pdf.index, dtype="int32"),
+            _pcum=(w.cumsum() - w + acc).astype("int64"),
+        )
+        acc += int(w.sum())
         yield pdf
+
+
+def _two_pass_prefix_sum(
+    df: DataFrame,
+    order_cols: list[str],
+    weight_col: str | None,
+    out_col: str,
+    start: int,
+    num_partitions: int | None,
+) -> tuple[DataFrame, int]:
+    """``out_col`` = ``start`` + the exclusive prefix sum of
+    ``weight_col`` (1 per row when None) under ``order_cols``; returns
+    ``(df, total weight)``."""
+    spark = df.sparkSession
+    n = num_partitions or max(spark.sparkContext.defaultParallelism, 4)
+    parted = df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols)
+
+    out_schema = StructType(
+        parted.schema.fields
+        + [StructField("_pid", IntegerType()), StructField("_pcum", LongType())]
+    )
+    # localCheckpoint pins partition boundaries: the totals job and the
+    # final projection must see the SAME range partitioning (range
+    # boundary sampling is not otherwise guaranteed stable across jobs).
+    # Lazy: the totals job right below is the first materialization and
+    # persists the blocks — eager would spend a whole extra job per
+    # call on a loop-iterated path (driver job latency is the
+    # width-independent term that caps scaling efficiency)
+    indexed = parted.mapInPandas(
+        functools.partial(_local_prefix_batches, weight_col=weight_col), schema=out_schema
+    ).localCheckpoint(eager=False)
+    weight = F.lit(1) if weight_col is None else F.col(weight_col)
+    sums = sorted(
+        (r["_pid"], int(r["s"] or 0))
+        for r in indexed.groupBy("_pid").agg(F.sum(weight).alias("s")).collect()
+    )
+    offsets, acc = [], int(start)
+    for pid, s in sums:
+        offsets.append((pid, acc))
+        acc += s
+    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
+    out = (
+        indexed.join(F.broadcast(off_df), "_pid")
+        .withColumn(out_col, (F.col("_pcum") + F.col("_off")).cast("long"))
+        .drop("_pid", "_pcum", "_off")
+    )
+    return out, acc - int(start)
 
 
 def assign_global_index(
@@ -53,41 +113,8 @@ def assign_global_index(
     exchange anywhere in the plan. ``order_cols`` must be tie-free.
     With ``return_count`` returns ``(df, n_rows)`` — the total falls
     out of the offsets pass for free."""
-    spark = df.sparkSession
-    n = num_partitions or max(spark.sparkContext.defaultParallelism, 4)
-    parted = df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols)
-
-    out_schema = StructType(
-        parted.schema.fields
-        + [StructField("_pid", IntegerType()), StructField("_ppos", LongType())]
-    )
-    # localCheckpoint pins partition boundaries: the counts job and the
-    # final projection must see the SAME range partitioning (range
-    # boundary sampling is not otherwise guaranteed stable across jobs).
-    # Lazy: the counts job right below is the first materialization and
-    # persists the blocks — eager would spend a whole extra job per
-    # call on a loop-iterated path (driver job latency is the
-    # width-independent term that caps scaling efficiency)
-    indexed = parted.mapInPandas(_local_index_batches, schema=out_schema).localCheckpoint(
-        eager=False
-    )
-    counts = sorted(
-        (r["_pid"], r["n"])
-        for r in indexed.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    )
-    offsets, acc = [], int(start)
-    for pid, cnt in counts:
-        offsets.append((pid, acc))
-        acc += cnt
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
-    out = (
-        indexed.join(F.broadcast(off_df), "_pid")
-        .withColumn(out_col, (F.col("_ppos") + F.col("_off")).cast("long"))
-        .drop("_pid", "_ppos", "_off")
-    )
-    if return_count:
-        return out, acc - int(start)
-    return out
+    out, n_rows = _two_pass_prefix_sum(df, order_cols, None, out_col, start, num_partitions)
+    return (out, n_rows) if return_count else out
 
 
 def assign_prefix_sum(
@@ -104,45 +131,4 @@ def assign_prefix_sum(
     ``Window.orderBy().rowsBetween(unboundedPreceding, -1)`` computes
     the identical column through ONE task; this never does.
     ``order_cols`` must be tie-free; weights must be integral."""
-    spark = df.sparkSession
-    n = num_partitions or max(spark.sparkContext.defaultParallelism, 4)
-    parted = df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols)
-
-    out_schema = StructType(
-        parted.schema.fields
-        + [StructField("_pid", IntegerType()), StructField("_pcum", LongType())]
-    )
-
-    def _local_prefix_batches(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        acc = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            w = pdf[weight_col].astype("int64")
-            pdf["_pid"] = pd.Series([pid] * len(pdf), dtype="int32")
-            pdf["_pcum"] = (w.cumsum() - w + acc).astype("int64")
-            acc += int(w.sum())
-            yield pdf
-
-    # localCheckpoint pins the sampled range boundaries (see
-    # assign_global_index) so the totals job and the projection agree
-    indexed = parted.mapInPandas(_local_prefix_batches, schema=out_schema).localCheckpoint(
-        eager=True
-    )
-    sums = sorted(
-        (r["_pid"], int(r["s"] or 0))
-        for r in indexed.groupBy("_pid").agg(F.sum(weight_col).alias("s")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, s in sums:
-        offsets.append((pid, acc))
-        acc += s
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
-    return (
-        indexed.join(F.broadcast(off_df), "_pid")
-        .withColumn(out_col, (F.col("_pcum") + F.col("_off")).cast("long"))
-        .drop("_pid", "_pcum", "_off")
-    )
+    return _two_pass_prefix_sum(df, order_cols, weight_col, out_col, 0, num_partitions)[0]

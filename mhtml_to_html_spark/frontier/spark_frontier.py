@@ -6,9 +6,10 @@ Each round (the Spark shape of SURVEY.md §3.3):
      their keys DELETED from the exact seen table + hybrid filter]
     frontier ──canonicalize──▶ dedup-first (min_by on key)
              ──sharded bloom+cuckoo prune + exact anti-join──▶ new candidates
-             ──salted repartitionByRange + secondary sort──▶ priority
-             ──per-host budget window (+ opt-in politeness-debt boost,
-               robots token-bucket)──▶ fetch_now / deferred
+             ──per-host budget window ordered by (depth, host_rank,
+               disc_seq) (+ opt-in politeness-debt boost, robots
+               token-bucket)──▶ fetch_now / deferred
+             ──global fetch position over the same keys──▶ manifest
              ──fetch UDF (scripted double, retry/backoff)──▶ results
              ──explode children──▶ discovered
     seen/failed/metrics updated; snapshot checkpoint; repeat.
@@ -30,13 +31,16 @@ Scale notes (no single-partition exchange, no driver-held state):
   source of truth: a filter false positive never drops a URL (exact
   anti-join verifies the maybe-seen sliver), and because neither
   structure has false negatives, a seen URL is never refetched;
-- the priority queue is repartitionByRange on (depth, host_rank,
-  salt) + sortWithinPartitions: ranges keep the global order readable
-  per partition, the salt splits hot hosts (skew);
+- the priority queue is the per-host politeness window (partitioned
+  by host, ordered by depth, host_rank, disc_seq) plus the global
+  fetch position below. The window's host exchange is its only
+  shuffle, and a robots hash join on host (above the broadcast
+  threshold) already provides that partitioning, so the window reuses
+  it;
 - global fetch positions and discovery sequence numbers are assigned
   by indexing.assign_global_index (two-pass zipWithIndex trick over
-  range-partitioned data) once the frontier passes the same adaptive
-  threshold as the range partitioner — above it a partitionless
+  range-partitioned data) once the frontier passes
+  ``range_partition_threshold`` — above it a partitionless
   window would funnel budget×hosts (or fanout×fetched) rows through
   one task; below it the rows are few by definition and the window is
   cheaper. Both paths produce the identical logical order and both are
@@ -67,6 +71,8 @@ _FETCH_SCHEMA = (
 )
 _SEEN_SCHEMA = "key string, h64 long, host string, fetched_round int"
 _SHARD_BLOB_SCHEMA = "shard int, bloom binary, cuckoo binary"
+# fetch-stage task size target (step 7's adaptive partition count)
+_FETCH_ROWS_PER_TASK = 24
 
 
 def _canonicalize_batches(batches):
@@ -412,7 +418,6 @@ def crawl_spark(
     host_budget: int = 8,
     checkpoint_dir: str | None = None,
     resume: bool = False,
-    salt_buckets: int = 4,
     collect_order: bool = False,
     decode_payload: bool = False,
     fanout: int = 3,
@@ -431,11 +436,9 @@ def crawl_spark(
     recrawl_budget: int = 0,
     max_recrawls: int = 1,
     debt_boost: bool = False,
-    verbose: bool = False,
     fetcher: str = "double",
     http_timeout: float = 10.0,
     discover: str = "scripted",
-    fetch_rows_per_task: int = 24,
 ) -> SparkCrawlResult:
     """Run the crawl to fixpoint (or ``max_rounds``); optionally
     checkpoint each round to ``checkpoint_dir`` and resume from the
@@ -468,13 +471,15 @@ def crawl_spark(
     empty_keys = spark.createDataFrame([], "key string, h64 long")
     start_round = 0
     disc_total = 0
-    resumed_recrawls_done = 0
+    # the injection budget must survive resume: a resumed crawl that
+    # forgot its past injections would exceed max_recrawls and diverge
+    # from both the oracle and the uninterrupted run
+    recrawls_done = 0
 
     empty_robots = spark.createDataFrame(
         [], "host string, disallow string, crawl_delay_level int"
     )
-    empty_debt = spark.createDataFrame([], "host string, debt long")
-    debt_df = empty_debt
+    debt_df = spark.createDataFrame([], "host string, debt long")
     seenset_df = spark.createDataFrame([], _SHARD_BLOB_SCHEMA)
     # seen keys fetched since the last blob merge (lazy union of
     # checkpointed per-round outputs): the hybrid filter is an
@@ -483,40 +488,26 @@ def crawl_spark(
     # adds into the shard blobs before that point is a pure
     # shuffle+checkpoint tax — one cogroup per round for nothing
     seen_pending = None
-    seenset_loaded = False
     if resume and catalog is not None and catalog.latest() is not None:
         manifest = catalog.latest()
         snap = manifest["snapshot_id"]
         frontier = catalog.load_table(spark, snap, "frontier")
         seen = catalog.load_table(spark, snap, "seen")
-        # pre-recrawl snapshots lack (host, fetched_round): null-fill
-        # (additive schema evolution, same rule the catalog applies)
-        if "host" not in seen.columns:
-            seen = seen.withColumn("host", F.lit(None).cast("string"))
-        if "fetched_round" not in seen.columns:
-            seen = seen.withColumn("fetched_round", F.lit(None).cast("int"))
         failed = catalog.load_table(spark, snap, "failed")
         start_round = manifest["round"] + 1
         disc_total = manifest["metrics"]["disc_total"]
-        resumed_recrawls_done = int(manifest["metrics"].get("recrawls_done", 0))
+        recrawls_done = int(manifest["metrics"]["recrawls_done"])
         order_acc = catalog.load_table(spark, snap, "order")
-        result.metrics = manifest["metrics"].get("rounds", [])
+        seenset_df = catalog.load_table(spark, snap, "seenset")
+        result.metrics = manifest["metrics"]["rounds"]
         if use_robots:
             robots_cache = catalog.load_table(spark, snap, "robots")
             blocked = catalog.load_table(spark, snap, "blocked")
         else:
             robots_cache = empty_robots
             blocked = empty_keys
-        try:
-            seenset_df = catalog.load_table(spark, snap, "seenset")
-            seenset_loaded = True
-        except Exception:
-            pass  # pre-seenset snapshot: rebuilt below
         if debt_boost:
-            try:
-                debt_df = catalog.load_table(spark, snap, "debt")
-            except Exception:
-                debt_df = empty_debt  # pre-debt snapshot: no boost info
+            debt_df = catalog.load_table(spark, snap, "debt")
     else:
         rows = []
         for url in seeds:
@@ -551,22 +542,9 @@ def crawl_spark(
     n_pending = 0
 
     have_seen = start_round > 0
-    if have_seen and not seenset_loaded:
-        # pre-seenset checkpoint: rebuild the hybrid distributed from
-        # the exact key tables (one cogroup pass, one task per shard)
-        rebuilt_from = seen.select("key", "h64").unionByName(failed)
-        if use_robots:
-            rebuilt_from = rebuilt_from.unionByName(blocked)
-        seenset_df = seenset_merge(
-            seenset_df, rebuilt_from, seen_shards, seen_bloom_bits, seen_cuckoo_buckets
-        ).localCheckpoint(eager=True)
     expected_frontier = frontier.count()
-    seen_total = sum(m["fetched"] + m.get("blocked", 0) for m in result.metrics)
+    seen_total = sum(m["fetched"] + m["blocked"] for m in result.metrics)
     n_par = max(spark.sparkContext.defaultParallelism, 4)
-    # the injection budget must survive resume: a resumed crawl that
-    # forgot its past injections would exceed max_recrawls and diverge
-    # from both the oracle and the uninterrupted run
-    recrawls_done = resumed_recrawls_done if start_round > 0 else 0
     robots_large = False
     robots_chain_len = 0
     n_debt_hosts = 0
@@ -583,8 +561,8 @@ def crawl_spark(
         #    counting-Bloom decrements, the cuckoo deletes its
         #    fingerprint (deletion is why the Bloom counts) — so the
         #    unchanged exactly-once machinery re-admits exactly them.
-        #    Same adaptive index rule as steps 4/6 (hosts×budget rows
-        #    can be huge at 10^7 hosts).
+        #    Same adaptive index rule as step 6 (hosts×budget rows can
+        #    be huge at 10^7 hosts).
         n_recrawled = 0
         if expected_frontier == 0 and recrawl_budget > 0 and recrawls_done < max_recrawls:
             revisits = plan_recrawl(
@@ -642,7 +620,8 @@ def crawl_spark(
 
         # 1. canonicalize + host metadata (one vectorized UDF pass) —
         #    over the FRESH rows only (seeds/discoveries/recrawls); the
-        #    deferred backlog is already canonical and rejoins at step 4
+        #    deferred backlog is already canonical and rejoins after
+        #    the robots gate (step 4)
         canon = frontier.mapInPandas(_canonicalize_batches, schema=_CANON_SCHEMA)
 
         # 2. within-round first-discovery dedup: deterministic min_by on
@@ -690,16 +669,16 @@ def crawl_spark(
             # pending row always wins
             candidates = candidates.join(pending.select("key"), "key", "left_anti")
 
-        # 3b. robots gate: the cache table grows by the round's newly
-        #     met hosts ('fetched' via the deterministic double), then a
-        #     join classifies candidates; disallowed URLs go to the
-        #     permanent blocked set. The cache grows with every host
-        #     ever met, so the join is ADAPTIVE like the index/range
-        #     steps: broadcast while the cache is small, plain hash
-        #     join on `host` once it passes the threshold (at 10^7-10^8
-        #     hosts a forced broadcast is a multi-GB executor OOM; the
-        #     hash join's exchange is then reused by the step-5
-        #     politeness window, which partitions by host anyway).
+        # 4. robots gate: the cache table grows by the round's newly
+        #    met hosts ('fetched' via the deterministic double), then a
+        #    join classifies candidates; disallowed URLs go to the
+        #    permanent blocked set. The cache grows with every host
+        #    ever met, so the join is ADAPTIVE like the index steps:
+        #    broadcast while the cache is small, plain hash join on
+        #    `host` once it passes the threshold (at 10^7-10^8 hosts a
+        #    forced broadcast is a multi-GB executor OOM; the hash
+        #    join's exchange is then reused by the step-5 politeness
+        #    window, which partitions by host anyway).
         n_blocked = 0
         newly_blocked = None
         if use_robots:
@@ -767,33 +746,12 @@ def crawl_spark(
                 pending.withColumn("allowed", F.lit(True)) if use_robots else pending
             )
 
-        # 4. priority queue: salted range partitioning + secondary sort
-        #    (the physical order); politeness + positions derive from
-        #    the same explicit (depth, host_rank, disc_seq) columns.
-        #    repartitionByRange costs a sampling pass over the input, so
-        #    it is applied adaptively: only once the frontier is big
-        #    enough that range-clustered partitions pay for themselves
-        #    (at 10^10 that is every round; at test scale it would be
-        #    pure overhead). The LOGICAL order never depends on it —
-        #    the windows sort on the same explicit keys.
-        if expected_frontier >= range_partition_threshold:
-            salt = (F.xxhash64("key") % salt_buckets).cast("int")
-            prioritized = candidates.withColumn("salt", salt).repartitionByRange(
-                n_par,
-                "depth",
-                "host_rank",
-                "salt",
-            ).sortWithinPartitions("depth", "host_rank", "disc_seq").drop("salt")
-        else:
-            prioritized = candidates
-
-        # 5. politeness: per-host budget, overflow deferred to next
-        #    round. Materialize ONCE — everything downstream (fetch
-        #    manifest, deferred frontier, counts) derives from this
-        #    single evaluation of the round pipeline.
-        import time as _time
-
-        _t0 = _time.perf_counter()
+        # 5. priority + politeness: per-host budget window ordered by the
+        #    explicit (depth, host_rank, disc_seq) priority keys,
+        #    overflow deferred to next round; the global order over the
+        #    same keys is step 6. Materialize ONCE — everything
+        #    downstream (fetch manifest, deferred frontier, counts)
+        #    derives from this single evaluation of the round pipeline.
         if debt_boost:
             # politeness-debt boost: hosts whose queue overflowed LAST
             # round get base + min(debt, base) this round (bounded 2x).
@@ -807,13 +765,13 @@ def crawl_spark(
                 debt_side = debt_df
             else:
                 debt_side = F.broadcast(debt_df)
-            prioritized = prioritized.join(debt_side, "host", "left")
+            candidates = candidates.join(debt_side, "host", "left")
         # blocked rows (allowed=false) ride the same exchange but rank
         # in their own window partition, so they never consume budget
         w_host = (
             Window.partitionBy("host", "allowed") if use_robots else Window.partitionBy("host")
         ).orderBy("depth", "host_rank", "disc_seq")
-        budgeted = prioritized.withColumn("host_pos", F.row_number().over(w_host))
+        budgeted = candidates.withColumn("host_pos", F.row_number().over(w_host))
         if use_robots:
             # token-bucket crawl delay: the robots crawl-delay level
             # scales each host's per-round refill
@@ -830,7 +788,6 @@ def crawl_spark(
         # lazy: the bcounts agg right below materializes (and persists)
         # it in the same job; fetch_now/deferred then read the blocks
         budgeted = budgeted.localCheckpoint(eager=False)
-        _t1 = _time.perf_counter()
         # ONE agg answers "is the frontier drained?", the deferred
         # count, the debt-host count AND (robots) the blocked count —
         # separate driver jobs otherwise
@@ -878,8 +835,8 @@ def crawl_spark(
             ok_rows & (F.col("host_pos") > F.col("token_budget"))
         ).select(*pend_cols)
 
-        # 6. global fetch position (ordering contract). Above the same
-        #    adaptive threshold as step 4, a distributed two-pass index
+        # 6. global fetch position (ordering contract). Above
+        #    ``range_partition_threshold``, a distributed two-pass index
         #    over (depth, host_rank, disc_seq) — at budget×hosts rows
         #    per round a partitionless window would single-task the
         #    whole manifest. Below it the manifest is small by
@@ -924,7 +881,7 @@ def crawl_spark(
         # 8-waves-per-slot policy put ~1 row in each of 256 tasks at
         # toy rounds and cost the round-4 bench 16.3s → 24s; the
         # round-5 bisect pinned it to exactly that commit). Policy:
-        # enough partitions that a task holds ~fetch_rows_per_task
+        # enough partitions that a task holds ~_FETCH_ROWS_PER_TASK
         # rows, never fewer than one wave (all slots busy once there
         # is enough work), capped at 8 waves per slot — at 10^10-URL
         # rounds the cap binds and the behavior is the old fine-wave
@@ -932,7 +889,7 @@ def crawl_spark(
         # enough to amortize their fixed cost.
         n_fetchable = int(bcounts["fetchable"] or 0)
         n_fetch_parts = min(
-            n_par * 8, max(n_par, -(-n_fetchable // fetch_rows_per_task))
+            n_par * 8, max(n_par, -(-n_fetchable // _FETCH_ROWS_PER_TASK))
         )
         # Distribution WITHIN the stage: keyless ROUND-ROBIN, not hash
         # and (since r6) not range. Hash placement is binomial — at
@@ -987,7 +944,6 @@ def crawl_spark(
         ).collect()[0]
         n_fetched = int(stats["n"] or 0)
         n_ok = int(stats["ok"] or 0)
-        _t2 = _time.perf_counter()
 
         # 9. link discovery from ok fetches; disc_seq continues the
         #    global counter in (parent_pos, child_idx) order — same
@@ -1086,12 +1042,6 @@ def crawl_spark(
             "recrawled": n_recrawled,
         }
         result.metrics.append(round_metrics)
-        if verbose:
-            print(
-                f"round {round_idx}: pipeline={_t1 - _t0:.2f}s fetch={_t2 - _t1:.2f}s "
-                f"post={_time.perf_counter() - _t2:.2f}s fetched={n_fetched}",
-                flush=True,
-            )
 
         # fresh rows next round = discoveries only; the deferred
         # backlog stays canonical in `pending`

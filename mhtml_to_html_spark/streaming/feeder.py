@@ -56,9 +56,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _FRONTIER_SCHEMA = "url string, depth int, disc_seq long"
-_CHILD_SCHEMA = (
-    "p_depth int, p_rank int, p_seq long, child_idx int, url string, depth int"
-)
 _CHILD_ORDER = ["p_depth", "p_rank", "p_seq", "child_idx"]
 _ORDER_KEYS = ("round", "pos", "url", "depth", "status", "attempts")
 
@@ -79,33 +76,6 @@ def host_rank_col(host: Column) -> Column:
     )
 
 
-def _scripted_children_batches(batches, fanout: int, n_hosts: int):
-    """Children of ok fetches in the scripted world, tagged with the
-    parent's fetch-order key (depth, host_rank, disc_seq) + document
-    position — the total order the distributed indexer numbers.
-    Mirrors the batch crawl's scripted-discovery contract (the fetch
-    UDF in spark_frontier.py emits eligibility-filtered children in
-    document order): unfetchable children are dropped BEFORE
-    numbering, exactly the oracle's disc counter semantics."""
-    import pandas as pd
-
-    from ..frontier.fixtures import children_of
-    from ..urlnorm import is_fetchable
-
-    cols = ["p_depth", "p_rank", "p_seq", "child_idx", "url", "depth"]
-    for pdf in batches:
-        rows = []
-        for depth, rank, seq, key in zip(
-            pdf["depth"], pdf["host_rank"], pdf["disc_seq"], pdf["key"]
-        ):
-            for j, child in enumerate(children_of(key, fanout, n_hosts)):
-                if is_fetchable(child):
-                    rows.append(
-                        (int(depth), int(rank), int(seq), j, child, int(depth) + 1)
-                    )
-        yield pd.DataFrame(rows, columns=cols)
-
-
 _COUNTER_AGGS = lambda: [  # noqa: E731 — shared by the agg and observe paths
     F.count(F.lit(1)).alias("n"),
     F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
@@ -120,9 +90,6 @@ _COUNTER_KEYS = ("n", "ok", "failed", "deferred", "blocked")
 def _next_frontier(
     out: DataFrame,
     disc: int,
-    discover: str,
-    fanout: int,
-    n_hosts: int,
     dist_index_threshold: int,
     counters: dict | None = None,
 ) -> tuple[DataFrame, int, dict]:
@@ -131,6 +98,7 @@ def _next_frontier(
     the same numbers, collected by the micro-batch itself), next
     frontier = deferred ∪ children-of-ok with ``disc_seq`` continuing
     the global counter in (parent fetch order, document order).
+    ``out`` is the gate's output with its ``children`` column.
     Returns (frontier_df, n_discovered, counters)."""
     from ..frontier.indexing import assign_global_index
 
@@ -144,35 +112,25 @@ def _next_frontier(
     ok = out.filter(F.col("status") == "ok").withColumn(
         "host_rank", host_rank_col(F.col("host"))
     )
-    if "children" in out.columns:
-        # links came out of the gate itself (parse mode: extracted from
-        # the fetched bytes; scripted mode: emit_children riding the
-        # fetch — both already eligibility-filtered, document order):
-        # one JVM-side posexplode, no second Python pass per round
-        children = ok.select(
-            F.col("depth").alias("p_depth"),
-            F.col("host_rank").alias("p_rank"),
-            F.col("disc_seq").alias("p_seq"),
-            F.posexplode("children").alias("child_idx", "url"),
-            (F.col("depth") + 1).cast("int").alias("depth"),
-        )
-    else:
-        import functools
-
-        children = ok.select("key", "host_rank", "depth", "disc_seq").mapInPandas(
-            functools.partial(
-                _scripted_children_batches, fanout=fanout, n_hosts=n_hosts
-            ),
-            schema=_CHILD_SCHEMA,
-        )
+    # links came out of the gate itself (parse mode: extracted from the
+    # fetched bytes; scripted mode: emit_children riding the fetch —
+    # both already eligibility-filtered, document order): one JVM-side
+    # posexplode, no second Python pass per round
+    children = ok.select(
+        F.col("depth").alias("p_depth"),
+        F.col("host_rank").alias("p_rank"),
+        F.col("disc_seq").alias("p_seq"),
+        F.posexplode("children").alias("child_idx", "url"),
+        (F.col("depth") + 1).cast("int").alias("depth"),
+    )
 
     # disc_seq continues the crawl-global counter under the total
     # order (parent fetch order, child document order) — distributed
-    # two-pass index above the adaptive threshold, one window task
-    # below it (the round is tiny by definition there); identical
-    # total order either way, both paths oracle-pinned
-    expected = counters["ok"] * max(fanout, 1)
-    if expected >= dist_index_threshold:
+    # two-pass index once the round's frontier reaches the threshold
+    # (the batch crawl's rule), one window task below it (the round is
+    # tiny by definition there); identical total order either way,
+    # both paths oracle-pinned
+    if counters["n"] >= dist_index_threshold:
         discovered, n_disc = assign_global_index(
             children, _CHILD_ORDER, out_col="disc_seq", start=disc, return_count=True
         )
@@ -339,8 +297,7 @@ def stream_crawl_job(
         # fetched — the batch oracle's semantics (they also yield no
         # children: only status='ok' rows discover)
         frontier, n_disc, counters = _next_frontier(
-            out, disc, discover, fanout, n_hosts, dist_index_threshold,
-            counters=counters,
+            out, disc, dist_index_threshold, counters=counters
         )
 
         # COMMIT POINT: persist the feeder state for this round. The

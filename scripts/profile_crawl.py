@@ -88,22 +88,13 @@ def main() -> None:
     for j in api("/jobs"):
         if j["jobId"] in jobs_before or j.get("completionTime") is None:
             continue
-        t0 = j["submissionTime"]
-        t1 = j["completionTime"]
-        fmt = "%Y-%m-%dT%H:%M:%S.%f"
-        dur = (
-            time.mktime(time.strptime(t1[:-3], fmt))
-            + float(t1[-7:-3])
-            - time.mktime(time.strptime(t0[:-3], fmt))
-            - float(t0[-7:-3])
-        ) if False else None
         jobs.append(
             {
                 "jobId": j["jobId"],
                 "name": (j.get("name") or "")[:60],
                 "numTasks": j["numTasks"],
-                "submission": t0,
-                "completion": t1,
+                "submission": j["submissionTime"],
+                "completion": j["completionTime"],
             }
         )
     stages = []

@@ -68,3 +68,43 @@ def test_spark_debt_boost_resumes_from_snapshot(spark, tmp_path):
     )
     assert r.order == o.order
     assert r.seen == o.seen and r.failed == o.failed
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("damage", ["deleted", "corrupt"])
+def test_spark_debt_boost_resume_fails_without_debt_table(spark, tmp_path, damage):
+    """A snapshot whose debt table is gone or unreadable must not
+    resume: carrying on with an empty debt table would silently
+    diverge from the uninterrupted schedule."""
+    import glob
+    import os
+
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import AnalysisException
+
+    from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
+    from mhtml_to_html_spark.plans.catalog import SnapshotCatalog
+
+    ckpt = str(tmp_path / "ckpt")
+    crawl_spark(
+        spark, SEEDS, debt_boost=True, checkpoint_dir=ckpt,
+        **{**KW, "max_rounds": 2},
+    )
+    latest = SnapshotCatalog(ckpt).latest()["snapshot_id"]
+    files = glob.glob(
+        os.path.join(ckpt, "snapshots", f"snap_{latest:06d}", "debt", "*.parquet")
+    )
+    assert files
+    for f in files:
+        if damage == "deleted":
+            os.remove(f)
+        else:
+            with open(f, "wb") as fh:
+                fh.write(b"not a parquet file")
+    # a missing table fails schema inference; a corrupt one fails the
+    # footer read of the same load
+    with pytest.raises((AnalysisException, Py4JJavaError)):
+        crawl_spark(
+            spark, SEEDS, debt_boost=True, checkpoint_dir=ckpt, resume=True,
+            collect_order=True, **KW
+        )

@@ -85,11 +85,28 @@ def test_spark_matches_oracle(spark, oracle_result, tmp_path):
 
 
 @pytest.mark.spark
-def test_spark_matches_oracle_with_range_partitioning(spark, oracle_result):
-    """The salted repartitionByRange physical path (forced on) must not
-    change the logical crawl order."""
+@pytest.mark.parametrize(
+    "robots_kw",
+    [
+        pytest.param({}, id="robots-off"),
+        # robots on with the hash (not broadcast) rules join: the host
+        # window reuses the join's host partitioning
+        pytest.param(
+            {"use_robots": True, "robots_broadcast_threshold": 0}, id="robots-hash-join"
+        ),
+    ],
+)
+def test_spark_matches_oracle_with_range_partitioning(spark, oracle_result, robots_kw):
+    """The distributed-index physical path (forced on: the two-pass
+    range-partitioned global index for fetch positions and discovery
+    sequence numbers) must not change the logical crawl order."""
     from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
 
+    oracle = (
+        crawl_oracle(SEEDS, max_rounds=MAX_ROUNDS, host_budget=BUDGET, use_robots=True)
+        if robots_kw
+        else oracle_result
+    )
     res = crawl_spark(
         spark,
         SEEDS,
@@ -97,10 +114,12 @@ def test_spark_matches_oracle_with_range_partitioning(spark, oracle_result):
         host_budget=BUDGET,
         range_partition_threshold=0,
         collect_order=True,
+        **robots_kw,
     )
-    assert res.order == oracle_result.order
-    assert res.seen == oracle_result.seen
-    assert res.failed == oracle_result.failed
+    assert res.order == oracle.order
+    assert res.seen == oracle.seen
+    assert res.failed == oracle.failed
+    assert res.blocked == oracle.blocked
 
 
 def test_oracle_robots_blocks_and_throttles():
