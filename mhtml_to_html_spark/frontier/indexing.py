@@ -10,7 +10,8 @@ distributed:
 2. one ``mapInPandas`` pass numbers rows within each partition
    (0..n_p-1) and tags the partition id;
 3. the per-partition counts (one tiny row per partition) come to the
-   driver, cumulative offsets go back as a broadcast join;
+   driver, cumulative offsets go back as a literal array indexed by
+   partition id (a projection, no join);
 4. ``index = partition_offset + within_partition_position``.
 
 The index is the exclusive prefix sum of weight 1, so
@@ -83,19 +84,21 @@ def _two_pass_prefix_sum(
         functools.partial(_local_prefix_batches, weight_col=weight_col), schema=out_schema
     ).localCheckpoint(eager=False)
     weight = F.lit(1) if weight_col is None else F.col(weight_col)
-    sums = sorted(
-        (r["_pid"], int(r["s"] or 0))
+    totals = {
+        r["_pid"]: int(r["s"] or 0)
         for r in indexed.groupBy("_pid").agg(F.sum(weight).alias("s")).collect()
-    )
+    }
+    # dense by partition id, at most n values (a partition with no rows
+    # gets the running offset; no row reads it)
     offsets, acc = [], int(start)
-    for pid, s in sums:
-        offsets.append((pid, acc))
-        acc += s
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
-    out = (
-        indexed.join(F.broadcast(off_df), "_pid")
-        .withColumn(out_col, (F.col("_pcum") + F.col("_off")).cast("long"))
-        .drop("_pid", "_pcum", "_off")
+    for pid in range(max(totals, default=-1) + 1):
+        offsets.append(acc)
+        acc += totals.get(pid, 0)
+    # the offsets are a literal array indexed by _pid: a projection,
+    # no join and no driver-built frame
+    off = F.element_at(F.lit(offsets).cast("array<bigint>"), F.col("_pid") + 1)
+    out = indexed.withColumn(out_col, (F.col("_pcum") + off).cast("long")).drop(
+        "_pid", "_pcum"
     )
     return out, acc - int(start)
 

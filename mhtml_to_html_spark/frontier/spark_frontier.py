@@ -47,7 +47,10 @@ Scale notes (no single-partition exchange, no driver-held state):
   pinned to the oracle by tests;
 - per-round metrics are one agg; nothing per-row ever reaches the
   driver (the test-contract order collection at the very end is the
-  only exception, and ``collect_order=False`` turns it off).
+  only exception, and ``collect_order=False`` turns it off);
+- driver-side frames (seeds, empty state tables) are Arrow-built JVM
+  ``LocalRelation``s (:func:`local_frame`), so empty state is pruned
+  from unions and anti-joins by the optimizer and no scan runs Python.
 """
 
 from __future__ import annotations
@@ -73,6 +76,28 @@ _SEEN_SCHEMA = "key string, h64 long, host string, fetched_round int"
 _SHARD_BLOB_SCHEMA = "shard int, bloom binary, cuckoo binary"
 # fetch-stage task size target (step 7's adaptive partition count)
 _FETCH_ROWS_PER_TASK = 24
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """``rows`` (driver-held tuples) as a DataFrame with the DDL schema
+    ``ddl``, built from an Arrow table so it is a JVM ``LocalRelation``.
+    A Python list would go through ``parallelize`` and plan as ``Scan
+    ExistingRDD``: every scan of it, even an empty one, starts Python
+    worker tasks, and the optimizer cannot see that it is empty. An
+    empty ``LocalRelation`` plans as ``LocalTableScan <empty>``, which
+    Catalyst prunes from unions and anti-joins."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def _canonicalize_batches(batches):
@@ -331,9 +356,13 @@ def _fetch_batches(
         from ..sources.corpus import build_archive
 
         # corpus synthesis stands in for the network body; production
-        # never pays it, so amortize it per worker over a bounded pool
-        # of distinct archives (the DECODE runs per URL, uncached —
-        # that is the measured work)
+        # never pays it, so amortize it over a bounded pool of 64
+        # distinct archives. The cache is created in this call, so it
+        # lives for ONE task, not per worker: a worker-lifetime cache
+        # would let later jobs reuse bodies earlier jobs synthesized
+        # (speeding up the stand-in, not the engine) and hold them per
+        # worker. The DECODE runs per URL, uncached — that is the
+        # measured work.
         cached_build = _ft.lru_cache(maxsize=64)(build_archive)
 
     for pdf in batches:
@@ -467,8 +496,8 @@ def crawl_spark(
 
     # seen carries (host, fetched_round) for the recrawl scheduler;
     # failed/blocked are permanent deny-lists and stay (key, h64)
-    empty_seen = spark.createDataFrame([], _SEEN_SCHEMA)
-    empty_keys = spark.createDataFrame([], "key string, h64 long")
+    empty_seen = local_frame(spark, [], _SEEN_SCHEMA)
+    empty_keys = local_frame(spark, [], "key string, h64 long")
     start_round = 0
     disc_total = 0
     # the injection budget must survive resume: a resumed crawl that
@@ -476,11 +505,11 @@ def crawl_spark(
     # from both the oracle and the uninterrupted run
     recrawls_done = 0
 
-    empty_robots = spark.createDataFrame(
-        [], "host string, disallow string, crawl_delay_level int"
+    empty_robots = local_frame(
+        spark, [], "host string, disallow string, crawl_delay_level int"
     )
-    debt_df = spark.createDataFrame([], "host string, debt long")
-    seenset_df = spark.createDataFrame([], _SHARD_BLOB_SCHEMA)
+    debt_df = local_frame(spark, [], "host string, debt long")
+    seenset_df = local_frame(spark, [], _SHARD_BLOB_SCHEMA)
     # seen keys fetched since the last blob merge (lazy union of
     # checkpointed per-round outputs): the hybrid filter is an
     # ACCELERATOR that only pays for itself once the probe actually
@@ -508,17 +537,20 @@ def crawl_spark(
             blocked = empty_keys
         if debt_boost:
             debt_df = catalog.load_table(spark, snap, "debt")
+        expected_frontier = frontier.count()
     else:
         rows = []
         for url in seeds:
             if is_fetchable(url):
                 rows.append((unwrap_urn(url), 0, disc_total))
                 disc_total += 1
-        frontier = spark.createDataFrame(rows, _FRONTIER_SCHEMA)
+        frontier = local_frame(spark, rows, _FRONTIER_SCHEMA)
+        # the driver built the seeds itself: no count() job
+        expected_frontier = len(rows)
         seen = empty_seen
         failed = empty_keys
-        order_acc = spark.createDataFrame(
-            [], "round int, pos long, url string, depth int, status string, attempts int"
+        order_acc = local_frame(
+            spark, [], "round int, pos long, url string, depth int, status string, attempts int"
         )
         robots_cache = empty_robots
         blocked = empty_keys
@@ -535,14 +567,13 @@ def crawl_spark(
     pend_cols = ["url", "depth", "disc_seq", "key", "host", "host_rank", "h64"]
     if use_robots:
         pend_cols.append("crawl_delay_level")
-    empty_pending = spark.createDataFrame(
-        [], _CANON_SCHEMA + (", crawl_delay_level int" if use_robots else "")
+    empty_pending = local_frame(
+        spark, [], _CANON_SCHEMA + (", crawl_delay_level int" if use_robots else "")
     )
     pending = empty_pending
     n_pending = 0
 
     have_seen = start_round > 0
-    expected_frontier = frontier.count()
     seen_total = sum(m["fetched"] + m["blocked"] for m in result.metrics)
     n_par = max(spark.sparkContext.defaultParallelism, 4)
     robots_large = False

@@ -55,6 +55,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..frontier.spark_frontier import local_frame
+
 _FRONTIER_SCHEMA = "url string, depth int, disc_seq long"
 _CHILD_ORDER = ["p_depth", "p_rank", "p_seq", "child_idx"]
 _ORDER_KEYS = ("round", "pos", "url", "depth", "status", "attempts")
@@ -210,7 +212,7 @@ def stream_crawl_job(
                 disc += 1
         n_pending = len(seed_rows)
         frontier = (
-            spark.createDataFrame(seed_rows, _FRONTIER_SCHEMA) if seed_rows else None
+            local_frame(spark, seed_rows, _FRONTIER_SCHEMA) if seed_rows else None
         )
 
     metrics = []

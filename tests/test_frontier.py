@@ -276,3 +276,50 @@ def test_robots_cache_flatten_preserves_parity(spark):
     assert res.order == oracle.order
     assert res.seen == oracle.seen
     assert res.blocked == oracle.blocked
+
+
+def _sql_plans(spark) -> dict[int, str]:
+    """Physical plan of every SQL execution the status store holds, by
+    execution id, once the listener bus has delivered them."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {
+        e.executionId(): e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+    }
+
+
+@pytest.mark.spark
+def test_crawl_scans_no_python_rdd(spark):
+    """Driver-built frames (seeds, empty state tables) are Arrow
+    LocalRelations: no execution of a robots-on crawl scans a Python
+    RDD (``Scan ExistingRDD`` over ``applySchemaToPythonRDD``; the
+    crawl's own local checkpoints also plan as ``Scan ExistingRDD``),
+    and empty state is pruned from the seen anti-join."""
+    import re
+
+    from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark, local_frame
+
+    before = set(_sql_plans(spark))
+    res = crawl_spark(spark, SEEDS, max_rounds=2, host_budget=BUDGET, use_robots=True)
+    assert res.metrics
+    plans = [p for i, p in _sql_plans(spark).items() if i not in before]
+    assert plans
+    rdd_scans = [
+        args
+        for plan in plans
+        for args in re.findall(
+            r"\(\d+\) Scan ExistingRDD[^\n]*\n(?:[^\n]+\n)*?Arguments: ([^\n]*)", plan
+        )
+    ]
+    foreign = [a for a in rdd_scans if "at localCheckpoint" not in a]
+    assert not foreign, f"a crawl execution scans a non-checkpoint RDD: {foreign[:2]}"
+
+    empty = local_frame(spark, [], "key string, h64 long")
+    assert "LocalTableScan <empty>" in empty._jdf.queryExecution().executedPlan().toString()
+    x = local_frame(spark, [("a", 1), ("b", 2)], "key string, h64 long")
+    seen_all = empty.unionByName(empty).unionByName(empty)
+    pruned = x.join(seen_all.select("key"), "key", "left_anti")
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan
+    assert plan == x._jdf.queryExecution().executedPlan().toString()
