@@ -44,6 +44,25 @@ def host_rank(host: str) -> int:
     return _h(host, "rank|") % 1000
 
 
+def host_rank_col(host):
+    """JVM replay of :func:`host_rank` (md5 of ``rank|host``, first 8
+    bytes big-endian, mod 1000) over a host ``Column``, so rows built
+    in the JVM (feeder parents, crawl recrawls) need no Python pass.
+    The unsigned-64 value never materializes: split the 16 hex chars
+    into two 32-bit halves and fold mod 1000 (2^32 % 1000 == 296) —
+    branch-free and safe from any signed-``conv`` ambiguity. Parity
+    with the Python kernel is pinned by
+    tests/test_streaming.py::test_host_rank_col_parity."""
+    from pyspark.sql import functions as F
+
+    hx = F.md5(F.concat(F.lit("rank|"), host))
+    hi = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")
+    lo = F.conv(F.substring(hx, 9, 8), 16, 10).cast("long")
+    return F.pmod(F.pmod(hi, F.lit(1000)) * 296 + F.pmod(lo, F.lit(1000)), F.lit(1000)).cast(
+        "int"
+    )
+
+
 def children_of(url: str, fanout: int = 3, n_hosts: int = 7) -> list[str]:
     """Ordered out-links of a fetched page. Mostly same-host (one hot
     host gets extra in-links — the skew the salting handles), depth

@@ -4,13 +4,14 @@ Each round (the Spark shape of SURVEY.md §3.3):
 
     [drained? recrawl injection: stalest-per-host revisits re-enter;
      their keys DELETED from the exact seen table + hybrid filter]
-    frontier ──canonicalize──▶ dedup-first (min_by on key)
+    canonical frontier ──▶ dedup-first (min_by on key)
              ──sharded bloom+cuckoo prune + exact anti-join──▶ new candidates
              ──per-host budget window ordered by (depth, host_rank,
                disc_seq) (+ opt-in politeness-debt boost, robots
                token-bucket)──▶ fetch_now / deferred
              ──global fetch position over the same keys──▶ manifest
-             ──fetch UDF (scripted double, retry/backoff)──▶ results
+             ──fetch UDF (scripted double, retry/backoff; canonicalizes
+               the children it emits)──▶ results
              ──explode children──▶ discovered
     seen/failed/metrics updated; snapshot checkpoint; repeat.
 
@@ -50,7 +51,14 @@ Scale notes (no single-partition exchange, no driver-held state):
   only exception, and ``collect_order=False`` turns it off);
 - driver-side frames (seeds, empty state tables) are Arrow-built JVM
   ``LocalRelation``s (:func:`local_frame`), so empty state is pruned
-  from unions and anti-joins by the optimizer and no scan runs Python.
+  from unions and anti-joins by the optimizer and no scan runs Python;
+- frontier rows are canonical from birth (:func:`canonical_fields` on
+  the driver's seeds and on the fetch UDF's children; recrawls reuse
+  seen's columns; snapshots store them), so no round runs a
+  canonicalize pass, and the fetch stage runs in whole waves of the
+  session's slots, since each Python task pays ~230ms before its UDF
+  runs (step 7): a robots-on round below slots × 256 fetches starts
+  one robots task plus one fetch task per slot.
 """
 
 from __future__ import annotations
@@ -62,20 +70,26 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.catalog import SnapshotCatalog
+from ..urlnorm import canonicalize_url, url_host
+from .fixtures import host_rank, host_rank_col
 from .indexing import assign_global_index
+from .seenset import url_hash64
 
-_FRONTIER_SCHEMA = "url string, depth int, disc_seq long"
-_CANON_SCHEMA = (
-    "url string, depth int, disc_seq long, key string, host string, host_rank int, h64 long"
-)
+# a frontier row is canonical from birth: (url, depth, disc_seq) plus
+# the canonical fields of :func:`canonical_fields`
+_CANON_FIELDS = "key string, host string, host_rank int, h64 long"
+_CANON_SCHEMA = f"url string, depth int, disc_seq long, {_CANON_FIELDS}"
+_CANON_COLS = ["url", "depth", "disc_seq", "key", "host", "host_rank", "h64"]
+_CHILD_FIELDS = ("url", "key", "host", "host_rank", "h64")
 _FETCH_SCHEMA = (
     "key string, host string, depth int, disc_seq long, pos long, status string, "
-    "attempts int, delay_ms long, h64 long, children array<string>"
+    "attempts int, delay_ms long, h64 long, "
+    f"children array<struct<url string, {_CANON_FIELDS}>>"
 )
 _SEEN_SCHEMA = "key string, h64 long, host string, fetched_round int"
 _SHARD_BLOB_SCHEMA = "shard int, bloom binary, cuckoo binary"
-# fetch-stage task size target (step 7's adaptive partition count)
-_FETCH_ROWS_PER_TASK = 24
+# fetch-stage task size target (step 7's wave count; sizing rule there)
+_FETCH_ROWS_PER_TASK = 256
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
@@ -100,25 +114,33 @@ def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     return spark.createDataFrame(table, schema=schema)
 
 
+def canonical_fields(url: str) -> tuple[str, str, int, int]:
+    """``(key, host, host_rank, h64)`` of one URL: the crawl's single
+    canonicalization, shared by the driver's seeds, the fetch UDF's
+    children and the streaming gate. ``h64`` is signed two's-complement
+    so it fits LongType."""
+    key = canonicalize_url(url)
+    host = url_host(key) or ""
+    h64 = url_hash64(key)
+    return key, host, host_rank(host), h64 - (1 << 64) if h64 >= 1 << 63 else h64
+
+
 def _canonicalize_batches(batches):
+    """The streaming gate's canonicalize pass (the batch crawl's rows
+    are canonical from birth and never take it)."""
     import pandas as pd
 
-    from ..urlnorm import canonicalize_url, url_host
-    from .fixtures import host_rank
-    from .seenset import url_hash64
-
     for pdf in batches:
-        keys = [canonicalize_url(u) for u in pdf["url"]]
-        hosts = [url_host(k) or "" for k in keys]
-        h64s = [url_hash64(k) for k in keys]
+        fields = [canonical_fields(u) for u in pdf["url"]]
+        keys, hosts, ranks, h64s = zip(*fields) if fields else ((),) * 4
         out = {
             "url": pdf["url"],
             "depth": pdf["depth"],
             "disc_seq": pdf["disc_seq"],
-            "key": keys,
-            "host": hosts,
-            "host_rank": [host_rank(h) for h in hosts],
-            "h64": [h - (1 << 64) if h >= 1 << 63 else h for h in h64s],
+            "key": list(keys),
+            "host": list(hosts),
+            "host_rank": list(ranks),
+            "h64": list(h64s),
         }
         if "revisit" in pdf.columns:  # recrawl manifests (streaming gate)
             out["revisit"] = pdf["revisit"]
@@ -347,7 +369,6 @@ def _fetch_batches(
 
     from ..urlnorm import is_fetchable
     from .fixtures import children_of, fetch_with_retries
-    from .seenset import url_hash64
 
     if fetcher == "http":
         from .httpclient import fetch_url_with_retries
@@ -362,7 +383,11 @@ def _fetch_batches(
         # would let later jobs reuse bodies earlier jobs synthesized
         # (speeding up the stand-in, not the engine) and hold them per
         # worker. The DECODE runs per URL, uncached — that is the
-        # measured work.
+        # measured work. Memory bound: 64 bodies × body size × running
+        # tasks (~0.96MB bodies at payload (8, 6): ≤ ~62MB per task,
+        # ~185MB on 3 slots). A task holds at most min(64, its rows)
+        # bodies, so the wave-sized fetch tasks of step 7 reach the
+        # bound where the old ~24-row tasks could not.
         cached_build = _ft.lru_cache(maxsize=64)(build_archive)
 
     for pdf in batches:
@@ -393,19 +418,22 @@ def _fetch_batches(
                     parse_mhtml(body)
                 else:
                     parse_mhtml(cached_build(h64 % 64, payload_images, payload_scale))
-            children: list[str] = []
+            links: list[str] = []
             if discover == "parse" and status == "ok" and body:
                 # real-crawl discovery: links come from the fetched
                 # bytes, not the scripted children_of world
-                children = extract_links(body)
+                links = extract_links(body)
             elif discover == "scripted" and status == "ok":
                 # scripted discovery rides the same fetch pass (one
                 # Python stage per round instead of two); eligibility
                 # filtering here preserves document order, which is
                 # all the (parent_pos, child_idx) contract needs
-                children = [
-                    c for c in children_of(key, fanout, n_hosts) if is_fetchable(c)
-                ]
+                links = [c for c in children_of(key, fanout, n_hosts) if is_fetchable(c)]
+            # children leave the UDF canonical: the next round's
+            # frontier rows need no Python pass of their own
+            children = [
+                dict(zip(_CHILD_FIELDS, (c, *canonical_fields(c)))) for c in links
+            ]
             rows.append(
                 {
                     "key": key,
@@ -542,9 +570,10 @@ def crawl_spark(
         rows = []
         for url in seeds:
             if is_fetchable(url):
-                rows.append((unwrap_urn(url), 0, disc_total))
+                url = unwrap_urn(url)
+                rows.append((url, 0, disc_total, *canonical_fields(url)))
                 disc_total += 1
-        frontier = local_frame(spark, rows, _FRONTIER_SCHEMA)
+        frontier = local_frame(spark, rows, _CANON_SCHEMA)
         # the driver built the seeds itself: no count() job
         expected_frontier = len(rows)
         seen = empty_seen
@@ -555,16 +584,15 @@ def crawl_spark(
         robots_cache = empty_robots
         blocked = empty_keys
 
-    # the politeness backlog (deferred rows) is carried CANONICALIZED
-    # between rounds: a row that cleared admission once (canon + dedup
-    # + seen prune + robots) never re-pays it. At 10^10-URL scale a
-    # throttled host's whole queue would otherwise recycle through the
-    # canonicalize UDF, the dedup shuffle, the filter probe and the
-    # rules join on EVERY round — O(backlog × rounds) admission work
-    # for rows whose verdict cannot change (deferred keys cannot enter
-    # seen/failed/blocked while they wait, and robots rules per host
-    # are immutable once cached).
-    pend_cols = ["url", "depth", "disc_seq", "key", "host", "host_rank", "h64"]
+    # the politeness backlog (deferred rows) is carried between rounds
+    # past admission: a row that cleared it once (dedup + seen prune +
+    # robots) never re-pays it. At 10^10-URL scale a throttled host's
+    # whole queue would otherwise recycle through the dedup shuffle,
+    # the filter probe and the rules join on EVERY round —
+    # O(backlog × rounds) admission work for rows whose verdict cannot
+    # change (deferred keys cannot enter seen/failed/blocked while they
+    # wait, and robots rules per host are immutable once cached).
+    pend_cols = list(_CANON_COLS)
     if use_robots:
         pend_cols.append("crawl_delay_level")
     empty_pending = local_frame(
@@ -593,14 +621,16 @@ def crawl_spark(
         #    fingerprint (deletion is why the Bloom counts) — so the
         #    unchanged exactly-once machinery re-admits exactly them.
         #    Same adaptive index rule as step 6 (hosts×budget rows can
-        #    be huge at 10^7 hosts).
+        #    be huge at 10^7 hosts). A seen key is already canonical, so
+        #    the revisit rows are built in the JVM from seen's own
+        #    (key, h64, host) — no canonicalize pass.
         n_recrawled = 0
         if expected_frontier == 0 and recrawl_budget > 0 and recrawls_done < max_recrawls:
             revisits = plan_recrawl(
                 seen.select("key", "host", "fetched_round"),
                 host_budget=recrawl_budget,
                 current_round=round_idx,
-            )
+            ).join(seen.select("key", "h64"), "key")
             if seen_total >= range_partition_threshold:
                 revisits, n_recrawled = assign_global_index(
                     revisits,
@@ -619,9 +649,7 @@ def crawl_spark(
                 revisits = revisits.localCheckpoint(eager=True)
                 n_recrawled = revisits.count()
             if n_recrawled:
-                removed_h64 = seen.join(
-                    revisits.select("key"), "key", "left_semi"
-                ).select("h64")
+                removed_h64 = revisits.select("h64")
                 if seen_pending is not None:
                     # fold deferred adds first so the removal sees
                     # every key (stays lazy — the checkpoint below
@@ -641,6 +669,10 @@ def crawl_spark(
                     F.col("key").alias("url"),
                     F.lit(0).cast("int").alias("depth"),
                     F.col("rseq").cast("long").alias("disc_seq"),
+                    "key",
+                    "host",
+                    host_rank_col(F.col("host")).alias("host_rank"),
+                    "h64",
                 )
                 disc_total += n_recrawled
                 expected_frontier = n_recrawled
@@ -649,11 +681,11 @@ def crawl_spark(
         if expected_frontier == 0:
             break
 
-        # 1. canonicalize + host metadata (one vectorized UDF pass) —
-        #    over the FRESH rows only (seeds/discoveries/recrawls); the
-        #    deferred backlog is already canonical and rejoins after
-        #    the robots gate (step 4)
-        canon = frontier.mapInPandas(_canonicalize_batches, schema=_CANON_SCHEMA)
+        # 1. the fresh rows (seeds/discoveries/recrawls) are canonical
+        #    from birth: the driver canonicalizes seeds, the fetch UDF
+        #    its children, and recrawls reuse seen's columns — no round
+        #    runs a canonicalize pass. The deferred backlog rejoins
+        #    after the robots gate (step 4).
 
         # 2. within-round first-discovery dedup: deterministic min_by on
         #    the explicit disc_seq (never dropDuplicates — shuffle-order
@@ -661,7 +693,7 @@ def crawl_spark(
         #    key reaches the shuffle — cheaper than a window sort at
         #    frontier scale.
         deduped = (
-            canon.groupBy("key")
+            frontier.groupBy("key")
             .agg(
                 F.min_by(
                     F.struct("url", "depth", "disc_seq", "host", "host_rank", "h64"), "disc_seq"
@@ -903,25 +935,30 @@ def crawl_spark(
             fanout=fanout,
             n_hosts=n_hosts,
         )
-        # Fetch partitioning is ADAPTIVE to the round's manifest size.
+        # Fetch partitioning runs in WHOLE WAVES of the session's slots.
         # Two opposing costs: the straggler tail of the stage is
         # O(task size) (hold+decode are per-row costs), so finer tasks
         # bound it tighter — but every mapInPandas task pays a fixed
-        # Python-worker/Arrow round-trip (~10-20ms), so at small
-        # manifests extra waves are pure scheduling overhead (a fixed
-        # 8-waves-per-slot policy put ~1 row in each of 256 tasks at
-        # toy rounds and cost the round-4 bench 16.3s → 24s; the
-        # round-5 bisect pinned it to exactly that commit). Policy:
-        # enough partitions that a task holds ~_FETCH_ROWS_PER_TASK
-        # rows, never fewer than one wave (all slots busy once there
-        # is enough work), capped at 8 waves per slot — at 10^10-URL
-        # rounds the cap binds and the behavior is the old fine-wave
-        # insurance; at toy rounds the floor binds and tasks stay fat
-        # enough to amortize their fixed cost.
+        # ~230ms before its UDF runs: pyspark's worker_util
+        # setup_spark_files calls importlib.invalidate_caches() per
+        # task, and on Python 3.11 that makes each of the worker's ~16
+        # zipimporters re-read pyspark.zip's central directory. A
+        # decoded fetch costs ~33ms per row (19ms body synthesis + 14ms
+        # parse_mhtml), so at _FETCH_ROWS_PER_TASK = 256 a full task
+        # carries ~8.4s of rows against ~0.23s fixed (~3%); at the old
+        # 24 rows it was ~30%. A partial wave is the worst case of
+        # both: 4 tasks on 3 slots run a second wave of ONE task that
+        # pays the fixed cost again on the critical path. Policy:
+        # slots × waves tasks, waves = ⌈n / (slots · rows per task)⌉
+        # clamped to [1, 8] — at toy rounds one wave of fat tasks; at
+        # 10^10-URL rounds the cap binds and the behavior is the old
+        # fine-wave insurance. Round-robin dealing (below) keeps every
+        # task within ±1 row of the others, so fatter tasks add no
+        # straggler tail.
         n_fetchable = int(bcounts["fetchable"] or 0)
-        n_fetch_parts = min(
-            n_par * 8, max(n_par, -(-n_fetchable // _FETCH_ROWS_PER_TASK))
-        )
+        n_slots = spark.sparkContext.defaultParallelism
+        waves = min(8, max(1, -(-n_fetchable // (n_slots * _FETCH_ROWS_PER_TASK))))
+        n_fetch_parts = n_slots * waves
         # Distribution WITHIN the stage: keyless ROUND-ROBIN, not hash
         # and (since r6) not range. Hash placement is binomial — at
         # ~100 rows/task the row count swings ±10% and the slowest
@@ -982,16 +1019,16 @@ def crawl_spark(
         #    bigger of the two per-round orderings). Children — parsed
         #    from the fetched bodies or scripted, both already
         #    eligibility-filtered in document order — are emitted by
-        #    the fetch UDF itself: one JVM-side posexplode, never a
-        #    second Python pass over the round.
+        #    the fetch UDF itself, canonical: one JVM-side posexplode,
+        #    never a second Python pass over the round.
         ok = fetched.filter(F.col("status") == "ok")
         children = ok.select(
-            "pos", "depth", F.posexplode("children").alias("child_idx", "url")
+            "pos", "depth", F.posexplode("children").alias("child_idx", "c")
         ).select(
             F.col("pos").alias("parent_pos"),
             F.col("child_idx").cast("int").alias("child_idx"),
-            "url",
             (F.col("depth") + 1).cast("int").alias("depth"),
+            *(F.col(f"c.{f}").alias(f) for f in _CHILD_FIELDS),
         )
         if use_dist_index:
             discovered, n_discovered = assign_global_index(
@@ -1002,13 +1039,13 @@ def crawl_spark(
                 num_partitions=n_par,
                 return_count=True,
             )
-            discovered = discovered.select("url", "depth", "disc_seq")
+            discovered = discovered.select(*_CANON_COLS)
         else:
             w_child = Window.orderBy("parent_pos", "child_idx")
             discovered = children.withColumn(
                 "disc_seq",
                 (F.row_number().over(w_child) - 1 + F.lit(disc_total)).cast("long"),
-            ).select("url", "depth", "disc_seq")
+            ).select(*_CANON_COLS)
             # the window path's discovery count comes from the stats
             # agg (sum of children sizes) — the exact posexplode row
             # count, no dedicated count job
@@ -1088,13 +1125,11 @@ def crawl_spark(
         #     round's lineage stays one round deep.
         if catalog is not None:
             tables = {
-                # the snapshot keeps the original (url, depth,
-                # disc_seq) frontier contract: backlog rows are
-                # written uncanonical and re-canonicalize once on
-                # reload — deterministic, so resume stays byte-exact
-                "frontier": frontier.unionByName(
-                    pending.select("url", "depth", "disc_seq")
-                ),
+                # the snapshot frontier holds canonical rows (fresh ∪
+                # backlog), so a resumed or reloaded round never
+                # re-canonicalizes; backlog rows re-run admission once
+                # on reload — deterministic, so resume stays byte-exact
+                "frontier": frontier.unionByName(pending.select(*_CANON_COLS)),
                 "seen": seen,
                 "failed": failed,
                 "order": order_acc,

@@ -52,30 +52,15 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..frontier.fixtures import host_rank_col
 from ..frontier.spark_frontier import local_frame
 
 _FRONTIER_SCHEMA = "url string, depth int, disc_seq long"
 _CHILD_ORDER = ["p_depth", "p_rank", "p_seq", "child_idx"]
 _ORDER_KEYS = ("round", "pos", "url", "depth", "status", "attempts")
-
-
-def host_rank_col(host: Column) -> Column:
-    """JVM replay of ``fixtures.host_rank`` (md5 of ``rank|host``,
-    first 8 bytes big-endian, mod 1000) so the feeder can order
-    parents without a Python pass. The unsigned-64 value never
-    materializes: split the 16 hex chars into two 32-bit halves and
-    fold mod 1000 (2^32 % 1000 == 296) — branch-free and safe from
-    any signed-``conv`` ambiguity. Parity with the Python kernel is
-    pinned by tests/test_streaming.py::test_host_rank_col_parity."""
-    hx = F.md5(F.concat(F.lit("rank|"), host))
-    hi = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")
-    lo = F.conv(F.substring(hx, 9, 8), 16, 10).cast("long")
-    return F.pmod(F.pmod(hi, F.lit(1000)) * 296 + F.pmod(lo, F.lit(1000)), F.lit(1000)).cast(
-        "int"
-    )
 
 
 _COUNTER_AGGS = lambda: [  # noqa: E731 — shared by the agg and observe paths

@@ -35,17 +35,22 @@ sys.path.insert(0, REPO)
 
 PAYLOAD_IMAGES = 8  # keep in lockstep with bench_scaling.BASE_PARAMS
 PAYLOAD_SCALE = 3
+FANOUT = 7
+N_HOSTS = 120  # bench_scaling's quick pair
 DECODES_PER_TASK = 40
 
 
 def _kernel(seed: int) -> int:
     """The fetch UDF's per-URL CPU work (spark_frontier._fetch_batches):
-    scripted fetch + full MHTML decode. No sleep — the hold scales
+    scripted fetch + full MHTML decode + the scripted children, each
+    canonicalized as the UDF emits it. No sleep — the hold scales
     perfectly by construction; the CPU part is what contends."""
-    from mhtml_to_html_spark.frontier.fixtures import fetch_with_retries
+    from mhtml_to_html_spark.frontier.fixtures import children_of, fetch_with_retries
     from mhtml_to_html_spark.frontier.seenset import url_hash64
+    from mhtml_to_html_spark.frontier.spark_frontier import canonical_fields
     from mhtml_to_html_spark.mime.splitter import parse_mhtml
     from mhtml_to_html_spark.sources.corpus import build_archive
+    from mhtml_to_html_spark.urlnorm import is_fetchable
 
     n = 0
     for i in range(DECODES_PER_TASK):
@@ -54,6 +59,9 @@ def _kernel(seed: int) -> int:
         h64 = url_hash64(key)
         if status == "ok":
             parse_mhtml(build_archive(h64 % 64, PAYLOAD_IMAGES, PAYLOAD_SCALE))
+            for child in children_of(key, FANOUT, N_HOSTS):
+                if is_fetchable(child):
+                    canonical_fields(child)
             n += 1
     return n
 

@@ -323,3 +323,110 @@ def test_crawl_scans_no_python_rdd(spark):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert plan == x._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.spark
+def test_crawl_runs_no_canonicalize_pass_and_fetches_in_whole_waves(spark, tmp_path):
+    """Frontier rows are canonical from birth: no execution of a fresh,
+    checkpointed, resumed or recrawling crawl runs
+    ``_canonicalize_batches``. The fetch stage is whole waves of the
+    session's slots: a fresh crawl whose rounds fit one wave deals
+    every manifest into exactly ``defaultParallelism`` tasks."""
+    import re
+
+    from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
+
+    slots = spark.sparkContext.defaultParallelism
+    seeds = seed_urls(40, 4)
+    kw = dict(host_budget=BUDGET, n_hosts=40, use_robots=True)
+    before = set(_sql_plans(spark))
+    fresh = crawl_spark(spark, seeds, max_rounds=2, **kw)
+    # round 1 alone is more rows than slots × 24, so a rows-per-task
+    # sizing rule would have spread it past one wave
+    assert fresh.metrics[0]["fetched"] > slots * 24
+    fresh_plans = {i: p for i, p in _sql_plans(spark).items() if i not in before}
+    dealt = {
+        int(n)
+        for p in fresh_plans.values()
+        for n in re.findall(r"RoundRobinPartitioning\((\d+)\)", p)
+    }
+    assert dealt == {slots}
+
+    ckpt = str(tmp_path / "ckpt")
+    crawl_spark(spark, seeds, max_rounds=1, checkpoint_dir=ckpt, **kw)
+    resumed = crawl_spark(spark, seeds, max_rounds=2, checkpoint_dir=ckpt, resume=True, **kw)
+    assert resumed.metrics == fresh.metrics
+    # a one-host chain that drains early, so recrawl rows are injected
+    recrawled = crawl_spark(
+        spark,
+        ["https://host0.example.com/seed/12", "https://host0.example.com/seed/16"],
+        max_rounds=10, host_budget=50, fanout=1, n_hosts=1, recrawl_budget=2, max_recrawls=2,
+    )
+    assert any(m["recrawled"] for m in recrawled.metrics)
+
+    plans = [p for i, p in _sql_plans(spark).items() if i not in before]
+    # positive control: plan descriptions name the Python functions
+    assert any("_robots_batches" in p for p in plans)
+    assert not [p for p in plans if "_canonicalize_batches" in p]
+
+
+def test_fetch_children_match_canonicalize_pass(monkeypatch):
+    """The fetch UDF's canonical child structs equal the canonicalize
+    pass's row for each child URL — scripted children, and links parsed
+    out of a fetched archive — so both sites share one
+    canonicalization. No Spark: the UDF bodies run on pandas batches."""
+    import pandas as pd
+
+    from mhtml_to_html_spark.frontier import httpclient
+    from mhtml_to_html_spark.frontier.spark_frontier import (
+        _canonicalize_batches,
+        _fetch_batches,
+        extract_links,
+    )
+    from mhtml_to_html_spark.urlnorm import canonicalize_url, url_host
+
+    def canonical_rows(urls):
+        pdf = pd.DataFrame({"url": urls, "depth": 1, "disc_seq": range(len(urls))})
+        (out,) = _canonicalize_batches(iter([pdf]))
+        return out[["url", "key", "host", "host_rank", "h64"]].to_dict("records")
+
+    def children(keys, **kw):
+        manifest = pd.DataFrame(
+            {
+                "key": keys,
+                "host": [url_host(k) for k in keys],
+                "depth": 0,
+                "disc_seq": range(len(keys)),
+                "pos": range(len(keys)),
+            }
+        )
+        (out,) = _fetch_batches(iter([manifest]), **kw)
+        return [c for kids in out["children"] for c in kids]
+
+    scripted = children([canonicalize_url(u) for u in SEEDS], fanout=3, n_hosts=5)
+    assert len(scripted) > len(SEEDS)
+    assert scripted == canonical_rows([c["url"] for c in scripted])
+
+    links = [
+        "HTTPS://Host1.Example.COM:443/a/../b/%7Euser",
+        "c/./d?x=1",
+        "mailto:someone@example.com",
+        "http://host2.example.com:80/seed/%41",
+        "//host3.example.com/",
+    ]
+    anchors = "".join(f'<a href="{u}">x</a>' for u in links)
+    archive = (
+        'MIME-Version: 1.0\r\nContent-Type: multipart/related; boundary="B1"\r\n\r\n'
+        "--B1\r\nContent-Type: text/html; charset=utf-8\r\n"
+        "Content-Location: https://host0.example.com/dir/page\r\n\r\n"
+        f"<html><body>{anchors}</body></html>\r\n--B1--\r\n"
+    ).encode()
+    monkeypatch.setattr(
+        httpclient,
+        "fetch_url_with_retries",
+        lambda key, timeout: ("ok", 1, 0, "multipart/related", archive),
+    )
+    parsed = children(["https://host0.example.com/dir/page"], fetcher="http", discover="parse")
+    assert [c["url"] for c in parsed] == extract_links(archive)
+    assert len(parsed) == 4
+    assert parsed == canonical_rows([c["url"] for c in parsed])
