@@ -142,8 +142,6 @@ def _canonicalize_batches(batches):
             "host_rank": list(ranks),
             "h64": list(h64s),
         }
-        if "revisit" in pdf.columns:  # recrawl manifests (streaming gate)
-            out["revisit"] = pdf["revisit"]
         yield pd.DataFrame(out)
 
 

@@ -30,7 +30,7 @@ the no-collect property; ``stream_crawl_order`` below is the one
 sanctioned collect (a test/debug helper, not the job path).
 
 Durability contract:
-- the GATE state (per-host seen sets, fetch totals) lives in the
+- the GATE state (per-host exact seen-hash sets) lives in the
   structured-streaming checkpoint — exactly-once admission survives
   any crash;
 - the FEEDER state (pending frontier + discovery counter) persists
@@ -155,7 +155,6 @@ def stream_crawl_job(
     decode_payload: bool = False,
     payload_images: int = 2,
     payload_scale: int = 1,
-    state_partitions: int | None = None,
 ) -> dict:
     """Run the streaming crawl to fixpoint (or ``max_rounds``);
     returns ``{"rounds": [...], "fixpoint": bool, "next_round": int}``
@@ -167,21 +166,6 @@ def stream_crawl_job(
 
     src, sink, ckpt = f"{work_dir}/src", f"{work_dir}/sink", f"{work_dir}/ckpt"
     meta_path = _state_meta_path(work_dir)
-
-    # State-shard width for the politeness gate. The stateful shuffle
-    # inherits spark.sql.shuffle.partitions at the checkpoint's FIRST
-    # batch, and every micro-batch then pays a fixed per-shard cost
-    # (state-store commit + delta file + one gate task) regardless of
-    # row count — so the right default is the number of executor slots
-    # (defaultParallelism), not the SQL shuffle width tuned for joins
-    # (r6 profile: 64 shards -> 32 on local[32] cut ~0.7s/round of
-    # pure commit overhead at identical results). Raise
-    # ``state_partitions`` explicitly when the host space is large
-    # enough that per-shard seen-sets need finer spreading; an existing
-    # checkpoint keeps the width it was created with (Spark pins it in
-    # the offset metadata), so resume is unaffected.
-    if state_partitions is None:
-        state_partitions = spark.sparkContext.defaultParallelism
 
     if resume and os.path.exists(meta_path):
         with open(meta_path) as fh:
@@ -221,11 +205,21 @@ def stream_crawl_job(
                 f"{sink}/r{_r:06d}"
             )
 
-        # scope the shard width to the streaming query only: the
-        # barrier jobs below keep the session's own shuffle width
+        # State-shard width for the politeness gate. The stateful
+        # shuffle inherits spark.sql.shuffle.partitions at the
+        # checkpoint's FIRST batch, and every micro-batch then pays a
+        # fixed per-shard cost (state-store commit + delta file + one
+        # gate task) regardless of row count — so the width is the
+        # number of executor slots (defaultParallelism), not the SQL
+        # shuffle width tuned for joins (r6 profile: 64 shards -> 32 on
+        # local[32] cut ~0.7s/round of pure commit overhead at
+        # identical results). An existing checkpoint keeps the width it
+        # was created with (Spark pins it in the offset metadata), so
+        # resume is unaffected. The width is scoped to the streaming
+        # query only: the barrier jobs below keep the SparkSession's own.
         shuffle_conf = "spark.sql.shuffle.partitions"
         prev_shuffle = spark.conf.get(shuffle_conf)
-        spark.conf.set(shuffle_conf, str(state_partitions))
+        spark.conf.set(shuffle_conf, str(spark.sparkContext.defaultParallelism))
         try:
             q = (
                 stream_frontier_fetch(

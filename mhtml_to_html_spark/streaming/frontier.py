@@ -7,12 +7,11 @@ This module is the Structured-Streaming shape of
 
 - **politeness + exactly-once as a custom stateful operator**:
   ``applyInPandasWithState`` keyed by host; the state carries the
-  host's exact seen-hash set and admission counters, so each canonical
-  URL is fetched at most once for all time and each host admits at
-  most ``host_budget`` fetches per micro-batch (the token-bucket
-  refill interval). Overflow is emitted as ``status='deferred'`` for
-  the feeder to re-queue — the same defer-to-next-wave semantics as
-  the batch crawl's round loop.
+  host's exact seen-hash set, so each canonical URL is fetched at most
+  once for all time, and each host admits at most ``host_budget``
+  fetches per micro-batch (the token-bucket refill interval). Overflow
+  is emitted as ``status='deferred'`` for the feeder to re-queue — the
+  same defer-to-next-wave semantics as the batch crawl's round loop.
 - **the discovery loop is the outer system**: Structured Streaming
   queries are acyclic by design, so children feed back through the
   source (a Kafka topic / Delta table in production; appended files in
@@ -23,11 +22,8 @@ This module is the Structured-Streaming shape of
 Scale notes: state is per-host (hash-partitioned by the groupBy), one
 state row per host — 10^7 hosts spread over executors, each holding
 its own seen hashes; the global exact seen table still exists
-downstream (the sink), the state is the admission gate. Per-host page
-counts bound the state row; hosts with very deep crawls GRADUATE to a
-per-host counting-Bloom (:class:`HostSeen`, opt-in via
-``graduate_after``) whose state row is bounded forever — no false
-negatives, documented false-positive contract.
+downstream (the sink), the state is the admission gate. A host's
+state row grows by 8 bytes per URL it has fetched or blocked.
 """
 
 from __future__ import annotations
@@ -42,97 +38,7 @@ GATE_SCHEMA = (
     "key string, url string, host string, depth int, disc_seq long, "
     "status string, attempts int, delay_ms long"
 )
-_GATE_STATE_SCHEMA = (
-    "seen array<long>, fetched_total long, bloom binary, revisit array<long>"
-)
-
-
-class HostSeen:
-    """Per-host seen set with Bloom graduation for very deep hosts.
-
-    Exact int64 set up to ``graduate_after`` keys; past that the host
-    GRADUATES: the exact set folds into a per-host counting-Bloom
-    (bounded ``bloom_bits`` bytes forever, vs an exact array that grows
-    with the host's page count — the state-row killer at 10^8-page
-    hosts). Graduation is opt-in (``graduate_after=None`` keeps exact
-    semantics) because it trades exactness for bounded state: a Bloom
-    has NO false negatives (nothing is ever fetched twice) but a
-    bounded false-positive rate (a never-seen URL can be skipped as
-    seen, ~(1-e^(-kn/m))^k). That is the standard large-crawler
-    contract (bloom-gated frontiers); the byte-for-byte-vs-oracle
-    configurations keep the default."""
-
-    def __init__(
-        self,
-        exact=None,
-        bloom_blob=None,
-        graduate_after=None,
-        bloom_bits=1 << 17,
-        pending=None,
-    ):
-        from ..frontier.seenset import CountingBloom
-
-        self.exact = set(exact or ())
-        self.bloom = CountingBloom.from_bytes(bytes(bloom_blob)) if bloom_blob else None
-        self.graduate_after = graduate_after
-        self.bloom_bits = bloom_bits
-        # revisit keys awaiting refetch in GRADUATED mode: an exact
-        # side-set (bounded by revisit manifests in flight) so removal
-        # never touches Bloom counters shared with other keys
-        self.pending = set(pending or ())
-
-    def __contains__(self, h64: int) -> bool:
-        if h64 in self.pending:
-            return False  # a revisit key reads unseen until refetched
-        if self.bloom is not None and self.bloom.might_contain(h64):
-            return True
-        return h64 in self.exact
-
-    def add(self, h64: int) -> None:
-        was_pending = h64 in self.pending
-        self.pending.discard(h64)
-        if self.bloom is not None:
-            # a pending revisit key is still counted in the Bloom (its
-            # removal never decremented) — re-adding would double-count
-            if not was_pending:
-                self.bloom.add(h64)
-            return
-        self.exact.add(h64)
-        if self.graduate_after is not None and len(self.exact) >= self.graduate_after:
-            from ..frontier.seenset import CountingBloom
-
-            self.bloom = CountingBloom(self.bloom_bits)
-            for v in self.exact:
-                self.bloom.add(v)
-            self.exact = set()
-
-    def remove(self, h64: int) -> None:
-        """Forget a key (the streaming side of recrawl): exact set
-        discard, or counting-Bloom decrement past graduation — the
-        same no-false-negative-for-survivors contract as the batch
-        crawl's sharded filter deletion.
-
-        Graduated mode NEVER decrements the Bloom: the counters are
-        shared, and an at-least-once feeder can deliver a revisit for
-        a key that was never fetched — an unchecked decrement would
-        drain cells belonging to genuinely seen keys (a false negative
-        for a survivor, the one contract violation this structure must
-        not have). Instead the key joins the exact ``pending`` set,
-        which the membership check consults first, so the unchanged
-        admission loop re-admits exactly the requested keys."""
-        if self.bloom is not None:
-            if self.bloom.might_contain(h64):
-                self.pending.add(h64)
-            return
-        self.exact.discard(h64)
-
-    def state_tuple(self, fetched_total: int) -> tuple:
-        return (
-            _encode_seen(self.exact),
-            fetched_total,
-            self.bloom.to_bytes() if self.bloom is not None else None,
-            _encode_seen(self.pending),
-        )
+_GATE_STATE_SCHEMA = "seen array<long>"
 
 
 def _decode_seen(seen_list) -> set:
@@ -150,9 +56,16 @@ def _encode_seen(seen: set) -> list:
 @functools.lru_cache(maxsize=64)
 def _cached_archive(idx: int, images: int, scale: int) -> bytes:
     """Synthetic archive pool for decode_payload with the scripted
-    double — module-level so the cache lives for the Python worker's
-    lifetime (the long-running-service amortization; the batch path's
-    per-task lru_cache in ``_fetch_batches`` is the same contract)."""
+    double. Module-level, so the cache lives as long as the Python
+    worker: at most 64 bodies of ``build_archive(idx, images, scale)``
+    per worker. At ``payload_images=8, payload_scale=6`` the 64 bodies
+    total 61 MB (0.65-1.39 MB each, 0.96 MB mean).
+
+    This is NOT the batch crawl's contract. ``_fetch_batches`` keeps a
+    per-task cache on purpose, so a later job never reuses bodies an
+    earlier job synthesized. Here, after warm-up, micro-batches and
+    whole jobs reuse bodies, so a streaming crawl's wall time leaves
+    out body synthesis that the batch crawl pays."""
     from ..sources.corpus import build_archive
 
     return build_archive(idx, images, scale)
@@ -167,12 +80,11 @@ def _admit_host_batch(
     payload_scale: int = 1,
     emit_children: tuple[int, int] | None = None,
 ):
-    """The per-host admission kernel, shared by BOTH stateful-operator
-    shapes (applyInPandasWithState and transformWithStateInPandas):
-    sort the micro-batch by the crawl priority (depth, host_rank,
-    disc_seq), dedup first-discovery-wins against the batch and the
-    host's all-time seen set (mutated in place), fetch up to the
-    host's token budget, defer the rest. Returns (rows, admitted).
+    """The per-host admission kernel of the politeness gate: sort the
+    micro-batch by the crawl priority (depth, host_rank, disc_seq),
+    dedup first-discovery-wins against the batch and the host's
+    all-time seen-hash set (mutated in place), fetch up to the host's
+    token budget, defer the rest. Returns the output rows.
 
     With ``use_robots`` the host's robots rules gate admission:
     disallowed URLs emit ``status='blocked'`` once and join the seen
@@ -240,16 +152,6 @@ def _admit_host_batch(
             return out + (kids,)
 
     budget = host_token_budget(host, host_budget) if use_robots else host_budget
-    # revisit rows (recrawl manifests) FORGET their key first, so the
-    # unchanged exactly-once admission below re-admits exactly them.
-    # HostSeen.remove is safe for non-members in BOTH modes (an
-    # at-least-once feeder can deliver the same revisit twice, or one
-    # for a key never fetched): exact mode is a set discard, graduated
-    # mode routes through the pending side-set and never decrements
-    # Bloom counters shared with other keys
-    if "revisit" in batch.columns:
-        for rkey in {r.key for r in batch[batch["revisit"].fillna(False)].itertuples()}:
-            seen.remove(url_hash64(rkey))
     # first-discovery-wins dedup (min disc_seq — the batch crawl's
     # min_by semantics), then the crawl priority order
     batch = (
@@ -286,7 +188,7 @@ def _admit_host_batch(
             rows.append(row)
         else:
             rows.append({**base, "status": "deferred", "attempts": 0, "delay_ms": 0})
-    return rows, admitted
+    return rows
 
 
 _GATE_COLUMNS = ["key", "url", "host", "depth", "disc_seq", "status", "attempts", "delay_ms"]
@@ -299,7 +201,6 @@ def _politeness_gate(
     state,
     host_budget: int = 8,
     use_robots: bool = False,
-    graduate_after: int | None = None,
     fetcher: str = "double",
     discover: str = "scripted",
     decode_payload: bool = False,
@@ -308,39 +209,21 @@ def _politeness_gate(
     emit_children: tuple[int, int] | None = None,
 ):
     """applyInPandasWithState wrapper around :func:`_admit_host_batch`:
-    the host's seen set (exact, or Bloom past graduation) + admission
-    counters ride in the GroupState (per-host state is exactly where a
-    robots cache and a seen set belong — they are host-keyed data)."""
+    the host's exact seen-hash set rides in the GroupState (per-host
+    state is exactly where a robots cache and a seen set belong — they
+    are host-keyed data)."""
     import pandas as pd
 
     (host,) = key
-    if getattr(state, "hasTimedOut", False):
-        state.remove()
-        return
-    if state.exists:
-        vals = state.get
-        # pre-r4 checkpoints carried 3 state fields (no revisit
-        # pending set); tolerate both layouts. NOTE: Spark's state
-        # store ALSO validates the declared schema, so restoring an
-        # old checkpoint additionally needs its state rewritten to the
-        # 4-field layout offline (the catalog migration note applies)
-        seen_list, fetched_total, bloom_blob = vals[0], vals[1], vals[2]
-        pending_list = vals[3] if len(vals) > 3 else []
-        seen = HostSeen(
-            _decode_seen(seen_list), bloom_blob, graduate_after,
-            pending=_decode_seen(pending_list or []),
-        )
-    else:
-        seen, fetched_total = HostSeen(graduate_after=graduate_after), 0
-
+    seen = _decode_seen(state.get[0]) if state.exists else set()
     batch = pd.concat(list(pdfs), ignore_index=True)
-    rows, admitted = _admit_host_batch(
+    rows = _admit_host_batch(
         host, batch, seen, host_budget, use_robots, fetcher=fetcher,
         discover=discover, decode_payload=decode_payload,
         payload_images=payload_images, payload_scale=payload_scale,
         emit_children=emit_children,
     )
-    state.update(seen.state_tuple(fetched_total + admitted))
+    state.update((_encode_seen(seen),))
     cols = (
         _GATE_COLUMNS_PARSE
         if (discover == "parse" or emit_children is not None)
@@ -353,8 +236,6 @@ def stream_frontier_fetch(
     urls_stream: DataFrame,
     host_budget: int = 8,
     use_robots: bool = False,
-    graduate_after: int | None = None,
-    allow_revisit: bool = False,
     fetcher: str = "double",
     discover: str = "scripted",
     decode_payload: bool = False,
@@ -374,15 +255,10 @@ def stream_frontier_fetch(
     Output rows carry ``status`` ∈ {ok, failed, deferred, blocked};
     deferred rows are the feeder's re-queue contract. Canonicalization
     runs in the same vectorized UDF as the batch path, so the seen-set
-    KEY is identical between the two crawl shapes. ``graduate_after``
-    opts a deep host's state into Bloom graduation (see
-    :class:`HostSeen`); default keeps exact byte-for-byte semantics.
-    With ``allow_revisit`` the input stream carries a ``revisit``
-    boolean column (recrawl manifests — plan_recrawl's output mapped
-    to the stream schema): revisit rows forget their key in the
-    host's state first, so the unchanged exactly-once admission
-    re-admits exactly them — the streaming shape of the batch loop's
-    recrawl injection."""
+    KEY is identical between the two crawl shapes. Each host's state is
+    its exact seen-hash set (``seen array<long>``): a key admitted or
+    blocked once is never emitted again, so the stream has no recrawl
+    (the batch crawl's ``recrawl_budget`` is its only recrawl)."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -395,16 +271,14 @@ def stream_frontier_fetch(
     ).otherwise(F.col("url"))
     if discover == "parse" and fetcher != "http":
         raise ValueError('discover="parse" requires fetcher="http"')
-    canon_schema = _CANON_SCHEMA + (", revisit boolean" if allow_revisit else "")
     canon = eligible.withColumn("url", unwrapped).mapInPandas(
-        _canonicalize_batches, schema=canon_schema
+        _canonicalize_batches, schema=_CANON_SCHEMA
     )
     return canon.groupBy("host").applyInPandasWithState(
         functools.partial(
             _politeness_gate,
             host_budget=host_budget,
             use_robots=use_robots,
-            graduate_after=graduate_after,
             fetcher=fetcher,
             discover=discover,
             decode_payload=decode_payload,
@@ -422,110 +296,3 @@ def stream_frontier_fetch(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-class FrontierGateProcessor:
-    """transformWithStateInPandas twin of the politeness gate — the
-    Spark 4 successor API for custom stateful streaming operators
-    (typed state variables + timers instead of one opaque state tuple).
-    Output is byte-identical to :func:`stream_frontier_fetch`'s
-    applyInPandasWithState shape: both call :func:`_admit_host_batch`.
-
-    State layout: one ValueState per host holding (seen array<long>,
-    fetched_total long, bloom binary) — the same struct the GroupState
-    carries, so a checkpoint migration between the two operators is a
-    plain state rewrite. Requires the RocksDB state store provider
-    (TWS contract)."""
-
-    _graduate_after: int | None = None
-    _fetcher: str = "double"
-    _discover: str = "scripted"
-    _decode_payload: bool = False
-    _payload_images: int = 2
-    _payload_scale: int = 1
-
-    def init(self, handle):
-        self._gate = handle.getValueState("gate", _GATE_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        (host,) = key
-        if self._gate.exists():
-            seen_list, fetched_total, bloom_blob, pending_list = self._gate.get()
-            seen = HostSeen(
-                _decode_seen(seen_list), bloom_blob, self._graduate_after,
-                pending=_decode_seen(pending_list or []),
-            )
-        else:
-            seen, fetched_total = HostSeen(graduate_after=self._graduate_after), 0
-        batch = pd.concat(list(rows), ignore_index=True)
-        out, admitted = _admit_host_batch(
-            host, batch, seen, self._host_budget, self._use_robots,
-            fetcher=self._fetcher, discover=self._discover,
-            decode_payload=self._decode_payload,
-            payload_images=self._payload_images,
-            payload_scale=self._payload_scale,
-        )
-        self._gate.update(seen.state_tuple(fetched_total + admitted))
-        cols = _GATE_COLUMNS_PARSE if self._discover == "parse" else _GATE_COLUMNS
-        yield pd.DataFrame(out, columns=cols)
-
-    def close(self):
-        pass
-
-
-def stream_frontier_fetch_tws(
-    urls_stream: DataFrame,
-    host_budget: int = 8,
-    use_robots: bool = False,
-    graduate_after: int | None = None,
-    fetcher: str = "double",
-    discover: str = "scripted",
-    decode_payload: bool = False,
-    payload_images: int = 2,
-    payload_scale: int = 1,
-) -> DataFrame:
-    """:func:`stream_frontier_fetch` on the transformWithStateInPandas
-    API — same canonicalization, same admission kernel, same output
-    schema; only the stateful-operator binding differs. The session
-    must run the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...RocksDBStateStoreProvider``)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # bind the abstract base lazily so importing this module never
-    # requires the streaming extras at batch-only call sites
-    proc_cls = type(
-        "_BoundFrontierGateProcessor", (FrontierGateProcessor, StatefulProcessor), {}
-    )
-    if discover == "parse" and fetcher != "http":
-        raise ValueError('discover="parse" requires fetcher="http"')
-    proc = proc_cls()
-    # instance attributes (the class-level declarations are defaults,
-    # never mutated — two concurrently-configured gates must not share)
-    proc._host_budget = host_budget
-    proc._use_robots = use_robots
-    proc._graduate_after = graduate_after
-    proc._fetcher = fetcher
-    proc._discover = discover
-    proc._decode_payload = decode_payload
-    proc._payload_images = payload_images
-    proc._payload_scale = payload_scale
-
-    eligible = urls_stream.filter(F.col("url").rlike("^(?i)(https?|urn):"))
-    unwrapped = F.when(
-        F.col("url").rlike("^(?i)urn:[^:]+:.+"),
-        F.regexp_extract(F.col("url"), "^(?i)urn:[^:]+:(.+)$", 1),
-    ).otherwise(F.col("url"))
-    canon = eligible.withColumn("url", unwrapped).mapInPandas(
-        _canonicalize_batches, schema=_CANON_SCHEMA
-    )
-    return canon.groupBy("host").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=(
-            GATE_SCHEMA + ", children array<string>" if discover == "parse" else GATE_SCHEMA
-        ),
-        outputMode="append",
-        timeMode="none",
-    )

@@ -128,26 +128,3 @@ def test_hash_split_bounds_partition_every_key(weights, doc_id):
     h4 = hashlib.md5(f"split:{doc_id}".encode()).hexdigest()[:4]
     assigned = next((name for name, b in bounds if h4 < b), splits[-1][0])
     assert assigned in {name for name, _ in splits}
-
-
-@given(
-    st.lists(st.integers(min_value=0, max_value=2**64 - 1), min_size=1, max_size=300),
-    st.integers(min_value=1, max_value=50),
-)
-@settings(max_examples=50, deadline=None)
-def test_host_seen_never_false_negative(keys, graduate_after):
-    """HostSeen (exact or Bloom-graduated at ANY threshold): every
-    added key always reads back as seen — graduation may add false
-    positives, never false negatives — and the state round-trips."""
-    from mhtml_to_html_spark.streaming.frontier import HostSeen
-
-    s = HostSeen(graduate_after=graduate_after, bloom_bits=1 << 12)
-    for k in keys:
-        s.add(k)
-    assert all(k in s for k in keys)
-    exact, total, blob, pending = s.state_tuple(0)
-    s2 = HostSeen(
-        {v & 0xFFFFFFFFFFFFFFFF for v in exact}, blob, graduate_after, bloom_bits=1 << 12
-    )
-    assert pending == []
-    assert all(k in s2 for k in keys)

@@ -388,351 +388,71 @@ def test_streaming_frontier_matches_oracle_with_robots(spark, tmp_path):
 
 
 @pytest.mark.spark
-def test_tws_gate_matches_apply_in_pandas_gate(spark, tmp_path):
-    """The transformWithStateInPandas politeness gate (Spark 4 API)
-    emits EXACTLY what the applyInPandasWithState gate emits for the
-    same two micro-batches — both bind the same admission kernel, and
-    the second batch proves per-host state (exactly-once + budget)
-    survives between batches in both operators.
-
-    Environment-gated: pyspark's TWS state protocol needs protobuf,
-    which this container lacks; the stub-state parity test below keeps
-    the processor's logic covered here regardless."""
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithStateInPandas needs protobuf"
-    )
-    from mhtml_to_html_spark.frontier.fixtures import seed_urls
-    from mhtml_to_html_spark.streaming.frontier import (
-        stream_frontier_fetch,
-        stream_frontier_fetch_tws,
-    )
-
-    schema = "url string, depth int, disc_seq long"
-    batches = [
-        # batch 0: over-budget host mix + an in-batch duplicate
-        [(u, 0, i) for i, u in enumerate(seed_urls(4, 3))]
-        + [(seed_urls(4, 3)[0], 0, 99)],
-        # batch 1: replays batch-0 URLs (must all dedup) + fresh ones
-        [(u, 1, 100 + i) for i, u in enumerate(seed_urls(4, 3))]
-        + [(f"https://tws{i}.example.net/x", 1, 200 + i) for i in range(3)],
-    ]
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        outs = {}
-        for variant, gate in (("aip", stream_frontier_fetch), ("tws", stream_frontier_fetch_tws)):
-            src = tmp_path / f"src_{variant}"
-            src.mkdir()
-            sink = str(tmp_path / f"sink_{variant}")
-            ckpt = str(tmp_path / f"ckpt_{variant}")
-            for rows in batches:
-                spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                    "append"
-                ).parquet(str(src))
-                q = (
-                    gate(spark.readStream.schema(schema).parquet(str(src)), host_budget=2)
-                    .writeStream.foreachBatch(
-                        lambda df, bid, s=sink: df.coalesce(1).write.mode("append").parquet(s)
-                    )
-                    .outputMode("append")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(120)
-            outs[variant] = sorted(
-                tuple(r) for r in spark.read.parquet(sink).collect()
-            )
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    assert outs["aip"], "gate emitted nothing"
-    assert outs["aip"] == outs["tws"]
-
-
-@pytest.mark.spark
-def test_tws_processor_kernel_parity_with_stub_state(spark):
-    """FrontierGateProcessor.handleInputRows against a stub ValueState
-    must emit the same rows and store the same state as the
-    applyInPandasWithState wrapper on the same per-host batch — this
-    pins the TWS binding (state encode/decode, budget wiring) without
-    needing Spark's TWS runtime (protobuf-gated in this container)."""
-    import pandas as pd
-
-    from mhtml_to_html_spark.frontier.fixtures import host_rank
-    from mhtml_to_html_spark.streaming.frontier import (
-        FrontierGateProcessor,
-        _politeness_gate,
-    )
-
-    host = "host0.example.com"
-    batch = pd.DataFrame(
-        {
-            "key": [f"https://{host}/p{i}" for i in range(5)] + [f"https://{host}/p0"],
-            "url": [f"https://{host}/p{i}" for i in range(5)] + [f"https://{host}/p0"],
-            "host": [host] * 6,
-            "depth": [0] * 6,
-            "host_rank": [host_rank(host)] * 6,
-            "disc_seq": [0, 1, 2, 3, 4, 9],
-        }
-    )
-
-    class StubValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class StubGroupState:
-        def __init__(self):
-            self._v = None
-            self.hasTimedOut = False
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class StubHandle:
-        def __init__(self, state):
-            self._state = state
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self._state
-
-    tws_state = StubValueState()
-    proc = FrontierGateProcessor()
-    proc._host_budget = 2
-    proc._use_robots = False
-    proc.init(StubHandle(tws_state))
-
-    group_state = StubGroupState()
-
-    for rnd in range(2):  # second round re-sends the batch: all dedup
-        tws_out = pd.concat(list(proc.handleInputRows((host,), iter([batch]), None)))
-        aip_out = pd.concat(
-            list(_politeness_gate((host,), iter([batch]), group_state, host_budget=2))
-        )
-        pd.testing.assert_frame_equal(
-            tws_out.reset_index(drop=True), aip_out.reset_index(drop=True)
-        )
-        assert tws_state.get() == group_state.get  # identical state layout
-    # 5 unique urls, budget 2/round: round 0 fetches 2 (3 deferred),
-    # round 1 fetches 2 more of the deferred — 4 seen, 4 fetched total
-    assert tws_state.get()[1] == 4 and len(tws_state.get()[0]) == 4
-
-
-def test_host_seen_bloom_graduation():
-    """HostSeen: exact until graduate_after, then the set folds into a
-    bounded per-host Bloom — never a false negative (nothing refetched),
-    state row bounded forever."""
-    from mhtml_to_html_spark.streaming.frontier import HostSeen
-
-    s = HostSeen(graduate_after=100, bloom_bits=1 << 15)
-    keys = [hash(("k", i)) & 0xFFFFFFFFFFFFFFFF for i in range(5000)]
-    for k in keys[:99]:
-        s.add(k)
-    assert s.bloom is None and len(s.exact) == 99  # still exact
-    s.add(keys[99])
-    assert s.bloom is not None and not s.exact  # graduated, exact folded
-    for k in keys[100:]:
-        s.add(k)
-    # no false negatives: every added key still reads as seen
-    assert all(k in s for k in keys)
-    # bounded state: blob size is the filter, not the key count
-    exact_list, total, blob, pending_list = s.state_tuple(0)
-    assert exact_list == [] and pending_list == [] and len(blob) == (1 << 15) + 8
-    # round-trip through the state tuple preserves membership
-    s2 = HostSeen(exact_list, blob, graduate_after=100)
-    assert all(k in s2 for k in keys)
-
-
-@pytest.mark.spark
-def test_streaming_gate_bloom_graduation_live(spark, tmp_path):
-    """The gate with graduate_after: batch 0 graduates the host; batch
-    1 must dedup every replayed URL against the BLOOM (nothing fetched
-    twice) while still admitting fresh URLs, and the checkpointed state
-    row stays bounded (empty exact array + fixed-size blob)."""
-    from mhtml_to_html_spark.streaming.frontier import stream_frontier_fetch
-
-    host = "deep0.example.com"
-    schema = "url string, depth int, disc_seq long"
-    urls0 = [(f"https://{host}/page/{i}", 0, i) for i in range(8)]
-    urls1 = urls0 + [(f"https://{host}/fresh/{i}", 1, 100 + i) for i in range(4)]
-
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    outs = []
-    for rows in (urls0, urls1):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
-            str(src)
-        )
-        q = (
-            stream_frontier_fetch(
-                spark.readStream.schema(schema).parquet(str(src)),
-                host_budget=50,
-                graduate_after=4,
-            )
-            .writeStream.foreachBatch(
-                lambda df, bid, s=sink: df.coalesce(1).write.mode("append").parquet(s)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        outs.append(spark.read.parquet(sink).collect())
-
-    batch0 = {r["key"] for r in outs[0]}
-    assert len(batch0) == 8  # all admitted in batch 0
-    batch1 = [r for r in outs[1] if r not in outs[0]]
-    batch1_keys = {r["key"] for r in outs[1]} - batch0
-    # replays NEVER re-emit (bloom dedup); only the fresh URLs appear
-    assert batch1_keys == {f"https://{host}/fresh/{i}" for i in range(4)}
-
-
-@pytest.mark.spark
-def test_streaming_frontier_revisit_readmits_exactly_marked_keys(spark, tmp_path):
-    """Recrawl in the streaming shape: wave 2 re-sends every URL but
-    marks only SOME as revisit=True — the gate must refetch exactly
-    the marked keys (their hashes are forgotten from the host state
-    first) and keep deduping the rest; a later unmarked duplicate of a
-    revisited key dedups again (the refetch re-seeded the state)."""
+def test_gate_state_is_one_exact_seen_set(spark, tmp_path):
+    """The gate's per-host state is ONE field, the host's exact seen
+    set: after one checkpointed robots-on micro-batch, the state store
+    holds ``struct<seen:array<bigint>>`` per host, and each host's
+    ``seen`` is exactly the signed url_hash64 of its admitted (ok or
+    failed) and blocked keys — deferred keys stay out."""
     from pyspark.sql import functions as F
 
+    from mhtml_to_html_spark.frontier.fixtures import robots_rules
+    from mhtml_to_html_spark.frontier.seenset import url_hash64
     from mhtml_to_html_spark.streaming.frontier import stream_frontier_fetch
 
-    src = tmp_path / "src"
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = "url string, depth int, disc_seq long, revisit boolean"
+    hosts = [f"host{i}.example.com" for i in range(200)]
+    walled = next(h for h in hosts if robots_rules(h)["disallow"])
+    prefix = robots_rules(walled)["disallow"]
+    urls = [f"https://{h}/p{i}" for h in (hosts[0], walled) for i in range(5)]
+    urls += [f"https://{walled}{prefix}/x{i}" for i in range(2)]
 
-    def to_sink(df, batch_id):
-        df.withColumn("batch_id", F.lit(batch_id)).coalesce(1).write.mode(
-            "append"
-        ).parquet(sink)
-
-    def run_wave(rows):
-        # a wave that dedups EVERYTHING emits zero rows, so "max
-        # batch_id in the sink" would return the previous wave — track
-        # the sink watermark instead
-        import os
-
-        prev = (
-            spark.read.parquet(sink).agg({"batch_id": "max"}).collect()[0][0]
-            if os.path.exists(sink)
-            else -1
+    src, sink, ckpt = tmp_path / "src", str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    schema = "url string, depth int, disc_seq long"
+    spark.createDataFrame(
+        [(u, 0, i) for i, u in enumerate(urls)], schema
+    ).coalesce(1).write.parquet(str(src))
+    q = (
+        stream_frontier_fetch(
+            spark.readStream.schema(schema).parquet(str(src)),
+            host_budget=2,
+            use_robots=True,
         )
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
-            str(src)
-        )
-        q = (
-            stream_frontier_fetch(
-                spark.readStream.schema(schema).parquet(str(src)),
-                host_budget=10,
-                allow_revisit=True,
-            )
-            .writeStream.foreachBatch(to_sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        out = spark.read.parquet(sink)
-        return [
-            r.asDict() for r in out.filter(out.batch_id > (prev if prev is not None else -1)).collect()
-        ]
-
-    urls = [f"https://h1.example.com/p{i}" for i in range(6)]
-    wave1 = run_wave([(u, 0, i, False) for i, u in enumerate(urls)])
-    assert {r["status"] for r in wave1} <= {"ok", "failed"}
-    assert len(wave1) == 6
-
-    revisit = {urls[1], urls[4]}
-    wave2 = run_wave(
-        [(u, 0, 100 + i, u in revisit) for i, u in enumerate(urls)]
+        .writeStream.foreachBatch(lambda df, _bid: df.write.mode("append").parquet(sink))
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
     )
-    refetched = {r["key"] for r in wave2 if r["status"] in ("ok", "failed")}
-    assert refetched == {f"https://h1.example.com/p1", f"https://h1.example.com/p4"}
+    q.awaitTermination(120)
 
-    # wave 3: plain duplicates again — nothing refetches (revisited
-    # keys were re-seeded into the state by their wave-2 fetch)
-    wave3 = run_wave([(u, 0, 200 + i, False) for i, u in enumerate(urls)])
-    assert [r for r in wave3 if r["status"] in ("ok", "failed")] == []
+    out = spark.read.parquet(sink).collect()
+    statuses = {r["status"] for r in out}
+    assert {"blocked", "deferred"} <= statuses and statuses & {"ok", "failed"}
+    want = {}
+    for r in out:
+        if r["status"] != "deferred":
+            h = url_hash64(r["key"])
+            want.setdefault(r["host"], []).append(h - (1 << 64) if h >= 1 << 63 else h)
 
-
-def test_admit_host_batch_revisit_kernel_shared_by_both_bindings():
-    """The revisit path lives in the SHARED admission kernel, so both
-    stateful bindings get it: a batch with revisit-marked keys forgets
-    them from the host's seen set and refetches exactly them."""
-    import pandas as pd
-
-    from mhtml_to_html_spark.frontier.fixtures import host_rank
-    from mhtml_to_html_spark.frontier.seenset import url_hash64
-    from mhtml_to_html_spark.streaming.frontier import HostSeen, _admit_host_batch
-
-    host = "host0.example.com"
-    keys = [f"https://{host}/p{i}" for i in range(4)]
-    seen = HostSeen({url_hash64(k) for k in keys})  # everything seen
-
-    batch = pd.DataFrame(
-        {
-            "key": keys,
-            "url": keys,
-            "host": [host] * 4,
-            "depth": [0] * 4,
-            "host_rank": [host_rank(host)] * 4,
-            "disc_seq": list(range(4)),
-            "revisit": [False, True, False, True],
-        }
+    state = spark.read.format("statestore").load(ckpt)
+    assert (
+        state.schema["value"].dataType.simpleString()
+        == "struct<groupState:struct<seen:array<bigint>>>"
     )
-    rows, admitted = _admit_host_batch(host, batch, seen, host_budget=10, use_robots=False)
-    fetched = {r["key"] for r in rows if r["status"] in ("ok", "failed")}
-    assert fetched == {keys[1], keys[3]}
-    assert admitted == 2
-    # refetched keys are re-seeded: a plain re-send dedups everything
-    batch2 = batch.assign(revisit=[False] * 4)
-    rows2, admitted2 = _admit_host_batch(host, batch2, seen, host_budget=10, use_robots=False)
-    assert rows2 == [] and admitted2 == 0
-    # Bloom-graduated state honors revisit through the exact pending
-    # side-set (counters are NEVER decremented — shared cells must not
-    # drain for survivors; a refetch clears its pending entry)
-    gseen = HostSeen(graduate_after=2)
-    for k in keys:
-        gseen.add(url_hash64(k))
-    assert gseen.bloom is not None  # graduated
-    rows3, _ = _admit_host_batch(host, batch, gseen, host_budget=10, use_robots=False)
-    fetched3 = {r["key"] for r in rows3 if r["status"] in ("ok", "failed")}
-    assert fetched3 == {keys[1], keys[3]}
-    assert gseen.pending == set()  # refetch cleared the side-set
-    # and every original key still reads as seen (no counter drain)
-    assert all(url_hash64(k) in gseen for k in keys)
-    # a revisit for a key NEVER fetched must not disturb survivors
-    ghost = url_hash64(f"https://{host}/never-fetched")
-    gseen.remove(ghost)
-    assert all(url_hash64(k) in gseen for k in keys)
+    got = {
+        r["host"]: r["seen"]
+        for r in state.select(
+            F.col("key.host").alias("host"), F.col("value.groupState.seen").alias("seen")
+        ).collect()
+    }
+    assert got == {h: sorted(v) for h, v in want.items()}
+
+
+# The feeder numbers each round's children with the distributed
+# two-pass index at or above ``dist_index_threshold`` and with one
+# window task below it: 0 forces the first, the 50_000 default the
+# second, so each parity test pins both round-barrier paths.
+_DIST_INDEX_THRESHOLDS = (0, 50_000)
 
 
 @pytest.mark.spark
@@ -741,7 +461,8 @@ def test_stream_crawl_job_restart_parity(spark, tmp_path):
     --streaming): run one round, STOP, resume to completion — the full
     crawl ordering must be byte-for-byte the batch oracle's, with the
     gate checkpoint carrying seen state and the feeder state carrying
-    the pending frontier across the restart."""
+    the pending frontier across the restart. Pinned on both child
+    indexers."""
     from mhtml_to_html_spark.frontier.fixtures import seed_urls
     from mhtml_to_html_spark.frontier.oracle import crawl_oracle
     from mhtml_to_html_spark.streaming.feeder import (
@@ -751,25 +472,23 @@ def test_stream_crawl_job_restart_parity(spark, tmp_path):
 
     SEEDS, ROUNDS, BUDGET = seed_urls(4, 2), 3, 5
     oracle = crawl_oracle(SEEDS, max_rounds=ROUNDS, host_budget=BUDGET)
-    work = str(tmp_path / "stream_job")
+    want_rounds = [(m["round"], m["fetched"]) for m in oracle.metrics]
 
-    first = stream_crawl_job(
-        spark, SEEDS, work, max_rounds=ROUNDS, host_budget=BUDGET, stop_after_round=1
-    )
-    assert len(first["rounds"]) == 1 and not first["fixpoint"]
+    for threshold in _DIST_INDEX_THRESHOLDS:
+        work = str(tmp_path / f"stream_job_{threshold}")
+        args = dict(
+            max_rounds=ROUNDS, host_budget=BUDGET, dist_index_threshold=threshold
+        )
+        first = stream_crawl_job(spark, SEEDS, work, stop_after_round=1, **args)
+        assert len(first["rounds"]) == 1 and not first["fixpoint"]
 
-    resumed = stream_crawl_job(
-        spark, SEEDS, work, max_rounds=ROUNDS, host_budget=BUDGET, resume=True
-    )
-    assert resumed["rounds"][0]["round"] == 1  # continued, not restarted
+        resumed = stream_crawl_job(spark, SEEDS, work, resume=True, **args)
+        assert resumed["rounds"][0]["round"] == 1  # continued, not restarted
 
-    got = stream_crawl_order(spark, work)
-    assert got == oracle.order
-    # metrics line up per round with the oracle's
-    all_rounds = first["rounds"] + resumed["rounds"]
-    assert [(m["round"], m["fetched"]) for m in all_rounds] == [
-        (m["round"], m["fetched"]) for m in oracle.metrics
-    ]
+        assert stream_crawl_order(spark, work) == oracle.order, threshold
+        # metrics line up per round with the oracle's
+        all_rounds = first["rounds"] + resumed["rounds"]
+        assert [(m["round"], m["fetched"]) for m in all_rounds] == want_rounds, threshold
 
 
 @pytest.mark.spark
@@ -777,7 +496,7 @@ def test_stream_crawl_job_robots_parity(spark, tmp_path):
     """Robots-enabled streaming feeder job: blocked URLs are reported
     in metrics but get NO crawl-order position and never count as
     fetched — the full ordering must still match the batch oracle
-    byte-for-byte."""
+    byte-for-byte, on both child indexers."""
     from mhtml_to_html_spark.frontier.fixtures import seed_urls
     from mhtml_to_html_spark.frontier.oracle import crawl_oracle
     from mhtml_to_html_spark.streaming.feeder import (
@@ -787,15 +506,17 @@ def test_stream_crawl_job_robots_parity(spark, tmp_path):
 
     SEEDS, ROUNDS, BUDGET = seed_urls(4, 2), 3, 5
     oracle = crawl_oracle(SEEDS, max_rounds=ROUNDS, host_budget=BUDGET, use_robots=True)
-    work = str(tmp_path / "robots_job")
-    res = stream_crawl_job(
-        spark, SEEDS, work, max_rounds=ROUNDS, host_budget=BUDGET, use_robots=True
-    )
-    got = stream_crawl_order(spark, work)
-    assert got == oracle.order
-    assert [(m["round"], m["fetched"], m["blocked"]) for m in res["rounds"]] == [
-        (m["round"], m["fetched"], m["blocked"]) for m in oracle.metrics
-    ]
+    want_rounds = [(m["round"], m["fetched"], m["blocked"]) for m in oracle.metrics]
+
+    for threshold in _DIST_INDEX_THRESHOLDS:
+        work = str(tmp_path / f"robots_job_{threshold}")
+        res = stream_crawl_job(
+            spark, SEEDS, work, max_rounds=ROUNDS, host_budget=BUDGET,
+            use_robots=True, dist_index_threshold=threshold,
+        )
+        assert stream_crawl_order(spark, work) == oracle.order, threshold
+        got_rounds = [(m["round"], m["fetched"], m["blocked"]) for m in res["rounds"]]
+        assert got_rounds == want_rounds, threshold
 
 
 @pytest.mark.spark
