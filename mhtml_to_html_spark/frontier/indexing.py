@@ -19,18 +19,30 @@ The index is the exclusive prefix sum of weight 1, so
 passes.
 
 The total order is byte-identical to the window version as long as
-``order_cols`` is a TOTAL order (no ties) — both callers in the crawl
-qualify: (depth, host_rank, disc_seq) has a unique disc_seq, and
-(parent_pos, child_idx) is unique by construction.
+``order_cols`` is a TOTAL order (no ties) — every caller in the crawl
+qualifies: (depth, host_rank, disc_seq) has a unique disc_seq, and
+(parent_pos, child_idx) and (host, rk) are unique by construction.
+
+:func:`index_rows` is the crawl's one rule for choosing between the two
+paths: the two-pass index from :data:`DIST_INDEX_MIN_ROWS` rows up, one
+window task below.
 """
 
 from __future__ import annotations
 
 import functools
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+# Rows to index at which the two-pass index takes over from a
+# partitionless window. Above it the window would funnel the round's
+# manifest (budget × hosts rows) or discoveries (fanout × fetched)
+# through one task; below it the rows are few by definition and one
+# window task is cheaper than the two-pass index's range-partition and
+# totals jobs.
+DIST_INDEX_MIN_ROWS = 50_000
 
 
 def _local_prefix_batches(batches, weight_col: str | None):
@@ -135,3 +147,20 @@ def assign_prefix_sum(
     the identical column through ONE task; this never does.
     ``order_cols`` must be tie-free; weights must be integral."""
     return _two_pass_prefix_sum(df, order_cols, weight_col, out_col, 0, num_partitions)[0]
+
+
+def index_rows(
+    df: DataFrame, order_cols: list[str], out_col: str, n_rows: int, start: int = 0
+) -> tuple[DataFrame, int | None]:
+    """Add ``out_col`` = ``start`` + the 0-based rank of each row under
+    the tie-free total order ``order_cols``, choosing the physical path
+    from ``n_rows``, a row count the caller already has (exact, or an
+    upper bound): :func:`assign_global_index` at or above
+    :data:`DIST_INDEX_MIN_ROWS`, one ``Window.orderBy`` task below it.
+    Both paths give the identical column. Returns ``(df, count)``:
+    ``count`` is the exact row count when the two-pass path computed
+    it anyway, else ``None``."""
+    if n_rows >= DIST_INDEX_MIN_ROWS:
+        return assign_global_index(df, order_cols, out_col, start, return_count=True)
+    rank = F.row_number().over(Window.orderBy(*order_cols)) - 1 + F.lit(start)
+    return df.withColumn(out_col, rank.cast("long")), None

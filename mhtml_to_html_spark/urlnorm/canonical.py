@@ -83,6 +83,11 @@ def _normalize_host(host: str) -> str:
     return host
 
 
+# Memory bound, measured with tracemalloc on a cache filled to its cap
+# with distinct URLs under CPython 3.11: 286 B per entry at 51-character
+# URLs (the key, the normalized value and the LRU node), plus 2 B per
+# further character, so ~18 MiB per Python worker (~43 MiB at 251
+# characters).
 @lru_cache(maxsize=65536)
 def normalize_location(value: str) -> str:
     """Absolute URL → normalized href; everything else unchanged."""
@@ -153,6 +158,11 @@ def _percent_decode_unreserved(component: str) -> str:
     return re.sub(r"%([0-9A-Fa-f]{2})", repl, component)
 
 
+# Memory bound, measured like normalize_location's: a fill of this
+# cache also fills normalize_location's (sharing its keys), and the two
+# hold 471 B per entry at 51-character URLs, plus 3 B per further
+# character, so ~29 MiB per Python worker together (~67 MiB at 251
+# characters), ~12 MiB of it this cache's own.
 @lru_cache(maxsize=65536)
 def canonicalize_url(url: str) -> str:
     """Frontier seen-set key: RFC 3986 normalization + percent-decode of

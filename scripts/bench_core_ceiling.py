@@ -41,28 +41,22 @@ DECODES_PER_TASK = 40
 
 
 def _kernel(seed: int) -> int:
-    """The fetch UDF's per-URL CPU work (spark_frontier._fetch_batches):
-    scripted fetch + full MHTML decode + the scripted children, each
-    canonicalized as the UDF emits it. No sleep — the hold scales
-    perfectly by construction; the CPU part is what contends."""
-    from mhtml_to_html_spark.frontier.fixtures import children_of, fetch_with_retries
-    from mhtml_to_html_spark.frontier.seenset import url_hash64
-    from mhtml_to_html_spark.frontier.spark_frontier import canonical_fields
-    from mhtml_to_html_spark.mime.splitter import parse_mhtml
+    """The fetch UDF's per-URL CPU work: ``spark_frontier.fetch_row``,
+    the function the UDF runs per row (scripted fetch + full MHTML
+    decode + the scripted children, each canonicalized). No hold — the
+    hold scales perfectly by construction; the CPU part is what
+    contends. Every body is synthesized, uncached."""
+    from mhtml_to_html_spark.frontier.spark_frontier import fetch_row
     from mhtml_to_html_spark.sources.corpus import build_archive
-    from mhtml_to_html_spark.urlnorm import is_fetchable
+
+    def stand_in(h64: int) -> bytes:
+        return build_archive(h64 % 64, PAYLOAD_IMAGES, PAYLOAD_SCALE)
 
     n = 0
     for i in range(DECODES_PER_TASK):
         key = f"https://host{seed % 97}.example.com/seed/{seed}/{i}"
-        status, attempts, _delay = fetch_with_retries(key)
-        h64 = url_hash64(key)
-        if status == "ok":
-            parse_mhtml(build_archive(h64 % 64, PAYLOAD_IMAGES, PAYLOAD_SCALE))
-            for child in children_of(key, FANOUT, N_HOSTS):
-                if is_fetchable(child):
-                    canonical_fields(child)
-            n += 1
+        status = fetch_row(key, fanout=FANOUT, n_hosts=N_HOSTS, stand_in=stand_in)[0]
+        n += status == "ok"
     return n
 
 

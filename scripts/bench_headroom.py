@@ -1,7 +1,8 @@
 """Headroom crawl: one big crawl at local[32] with no fetch hold —
-measures the scheduler + decode pipeline's raw URL throughput with the
-range-partition / distributed-index paths exercised well past the 50k
-adaptive threshold. Prints ONE JSON line.
+measures the scheduler + decode pipeline's raw URL throughput at a
+size where the discovery index of later rounds reaches
+``indexing.DIST_INDEX_MIN_ROWS`` (50 000 rows) and takes the two-pass
+path. Prints ONE JSON line.
 
 Run: python scripts/bench_headroom.py
 """

@@ -86,36 +86,40 @@ def test_spark_matches_oracle(spark, oracle_result, tmp_path):
 
 @pytest.mark.spark
 @pytest.mark.parametrize(
-    "robots_kw",
+    "use_robots",
     [
-        pytest.param({}, id="robots-off"),
+        pytest.param(False, id="robots-off"),
         # robots on with the hash (not broadcast) rules join: the host
         # window reuses the join's host partitioning
-        pytest.param(
-            {"use_robots": True, "robots_broadcast_threshold": 0}, id="robots-hash-join"
-        ),
+        pytest.param(True, id="robots-hash-join"),
     ],
 )
-def test_spark_matches_oracle_with_range_partitioning(spark, oracle_result, robots_kw):
+def test_spark_matches_oracle_with_range_partitioning(
+    spark, oracle_result, use_robots, monkeypatch
+):
     """The distributed-index physical path (forced on: the two-pass
     range-partitioned global index for fetch positions and discovery
     sequence numbers) must not change the logical crawl order."""
-    from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
+    from mhtml_to_html_spark.frontier import spark_frontier
+    from tests.helpers.indexing import two_pass_index
 
+    two_pass = two_pass_index(monkeypatch)
+    if use_robots:
+        monkeypatch.setattr(spark_frontier, "BROADCAST_MAX_ROWS", 0)
     oracle = (
         crawl_oracle(SEEDS, max_rounds=MAX_ROUNDS, host_budget=BUDGET, use_robots=True)
-        if robots_kw
+        if use_robots
         else oracle_result
     )
-    res = crawl_spark(
+    res = spark_frontier.crawl_spark(
         spark,
         SEEDS,
         max_rounds=MAX_ROUNDS,
         host_budget=BUDGET,
-        range_partition_threshold=0,
         collect_order=True,
-        **robots_kw,
+        use_robots=use_robots,
     )
+    assert {"pos", "disc_seq"} <= set(two_pass)
     assert res.order == oracle.order
     assert res.seen == oracle.seen
     assert res.failed == oracle.failed
@@ -209,22 +213,22 @@ def test_spark_matches_oracle_with_forced_probe_path(spark, oracle_result):
 
 
 @pytest.mark.spark
-def test_saturated_filters_never_drop_urls(spark, oracle_result):
+def test_saturated_filters_never_drop_urls(spark, oracle_result, monkeypatch):
     """The false-positive-free contract: with absurdly undersized
     filters (every probe answers maybe-seen) the exact anti-join still
     keeps the crawl byte-identical — the filter is an accelerator,
     never the source of truth."""
-    from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
+    from mhtml_to_html_spark.frontier import spark_frontier
 
-    res = crawl_spark(
+    monkeypatch.setattr(spark_frontier, "SEEN_SHARDS", 2)
+    monkeypatch.setattr(spark_frontier, "SEEN_BLOOM_BITS", 64)
+    monkeypatch.setattr(spark_frontier, "SEEN_CUCKOO_BUCKETS", 8)
+    res = spark_frontier.crawl_spark(
         spark,
         SEEDS,
         max_rounds=MAX_ROUNDS,
         host_budget=BUDGET,
         probe_threshold=0,
-        seen_shards=2,
-        seen_bloom_bits=64,
-        seen_cuckoo_buckets=8,
         collect_order=True,
     )
     assert res.order == oracle_result.order
@@ -261,17 +265,18 @@ def test_plan_recrawl_budget_and_staleness(spark):
 
 
 @pytest.mark.spark
-def test_robots_cache_flatten_preserves_parity(spark):
+def test_robots_cache_flatten_preserves_parity(spark, monkeypatch):
     """The periodic robots-cache lineage flatten (r6: bound the shallow
-    union chain at ``robots_flatten_every`` pieces) must not change one
+    union chain at ``ROBOTS_FLATTEN_EVERY`` pieces) must not change one
     byte of the crawl: force a flatten every round and compare against
     the oracle."""
-    from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
+    from mhtml_to_html_spark.frontier import spark_frontier
 
+    monkeypatch.setattr(spark_frontier, "ROBOTS_FLATTEN_EVERY", 1)
     oracle = crawl_oracle(SEEDS, max_rounds=MAX_ROUNDS, host_budget=BUDGET, use_robots=True)
-    res = crawl_spark(
+    res = spark_frontier.crawl_spark(
         spark, SEEDS, max_rounds=MAX_ROUNDS, host_budget=BUDGET,
-        use_robots=True, collect_order=True, robots_flatten_every=1,
+        use_robots=True, collect_order=True,
     )
     assert res.order == oracle.order
     assert res.seen == oracle.seen
@@ -424,7 +429,7 @@ def test_fetch_children_match_canonicalize_pass(monkeypatch):
     monkeypatch.setattr(
         httpclient,
         "fetch_url_with_retries",
-        lambda key, timeout: ("ok", 1, 0, "multipart/related", archive),
+        lambda key: ("ok", 1, 0, "multipart/related", archive),
     )
     parsed = children(["https://host0.example.com/dir/page"], fetcher="http", discover="parse")
     assert [c["url"] for c in parsed] == extract_links(archive)

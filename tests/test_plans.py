@@ -155,21 +155,43 @@ def test_global_index_no_single_partition_exchange(spark):
 @pytest.mark.spark
 def test_global_index_matches_window_order(spark):
     """Distributed index == the partitionless-window rank, byte for
-    byte (the ordering contract both crawl paths must share)."""
+    byte (the ordering contract both crawl paths must share), and
+    ``index_rows`` returns the identical column on both sides of
+    ``DIST_INDEX_MIN_ROWS``: the window below it, the two-pass index
+    (which also counts the rows) from it up."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from mhtml_to_html_spark.frontier.indexing import assign_global_index
+    from mhtml_to_html_spark.frontier.indexing import (
+        DIST_INDEX_MIN_ROWS,
+        assign_global_index,
+        index_rows,
+    )
 
     df = spark.range(0, 5_000).select(
         (F.xxhash64("id") % 5).cast("int").alias("depth"),
         (F.xxhash64("id", "id") % 11).cast("int").alias("host_rank"),
         F.col("id").alias("disc_seq"),
     )
-    dist = assign_global_index(df, ["depth", "host_rank", "disc_seq"], "pos")
-    w = Window.orderBy("depth", "host_rank", "disc_seq")
+    order = ["depth", "host_rank", "disc_seq"]
+    dist = assign_global_index(df, order, "pos")
+    w = Window.orderBy(*order)
     ref = df.withColumn("pos", (F.row_number().over(w) - 1).cast("long"))
-    assert sorted(map(tuple, dist.collect())) == sorted(map(tuple, ref.collect()))
+    want = sorted(map(tuple, ref.collect()))
+    assert sorted(map(tuple, dist.collect())) == want
+
+    below, n_below = index_rows(df, order, "pos", DIST_INDEX_MIN_ROWS - 1)
+    above, n_above = index_rows(df, order, "pos", DIST_INDEX_MIN_ROWS)
+    assert (n_below, n_above) == (None, 5_000)
+    assert "Window" in plan_of(below) and "Window" not in plan_of(above)
+    assert below.dtypes == above.dtypes == ref.dtypes
+    assert sorted(map(tuple, below.collect())) == want
+    assert sorted(map(tuple, above.collect())) == want
+    # a nonzero start offsets both paths alike
+    shifted = [r[:3] + (r[3] + 7,) for r in want]
+    for n_rows in (DIST_INDEX_MIN_ROWS - 1, DIST_INDEX_MIN_ROWS):
+        out, _ = index_rows(df, order, "pos", n_rows, start=7)
+        assert sorted(map(tuple, out.collect())) == shifted
 
 
 @pytest.mark.spark

@@ -84,13 +84,16 @@ def test_spark_matches_oracle_recrawl(spark):
 
 
 @pytest.mark.spark
-def test_spark_matches_oracle_recrawl_distributed_index(spark):
+def test_spark_matches_oracle_recrawl_distributed_index(spark, monkeypatch):
     """Force the assign_global_index / repartitionByRange physical path
     for the revisit manifest — identical logical order."""
     from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
+    from tests.helpers.indexing import two_pass_index
 
+    two_pass = two_pass_index(monkeypatch)
     o = crawl_oracle(SEEDS_2HOST, **KW_2HOST)
-    r = crawl_spark(spark, SEEDS_2HOST, range_partition_threshold=0, collect_order=True, **KW_2HOST)
+    r = crawl_spark(spark, SEEDS_2HOST, collect_order=True, **KW_2HOST)
+    assert "rseq" in two_pass
     assert r.order == o.order
     assert r.seen == o.seen and r.failed == o.failed
 

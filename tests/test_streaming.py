@@ -5,11 +5,13 @@ import os
 
 import pytest
 
+from mhtml_to_html_spark.frontier.indexing import DIST_INDEX_MIN_ROWS
 from mhtml_to_html_spark.streaming import (
     stream_dedup_events,
     stream_events_windowed,
     stream_split_archives,
 )
+from tests.helpers.indexing import two_pass_index
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -449,14 +451,15 @@ def test_gate_state_is_one_exact_seen_set(spark, tmp_path):
 
 
 # The feeder numbers each round's children with the distributed
-# two-pass index at or above ``dist_index_threshold`` and with one
-# window task below it: 0 forces the first, the 50_000 default the
-# second, so each parity test pins both round-barrier paths.
-_DIST_INDEX_THRESHOLDS = (0, 50_000)
+# two-pass index from ``indexing.DIST_INDEX_MIN_ROWS`` rows up and with
+# one window task below it: 0 forces the first, the constant's own
+# value keeps these small crawls on the second, so each parity test
+# pins both round-barrier paths (and checks which one ran).
+_DIST_INDEX_THRESHOLDS = (0, DIST_INDEX_MIN_ROWS)
 
 
 @pytest.mark.spark
-def test_stream_crawl_job_restart_parity(spark, tmp_path):
+def test_stream_crawl_job_restart_parity(spark, tmp_path, monkeypatch):
     """The packaged streaming feeder job (scripts/crawl_job.py
     --streaming): run one round, STOP, resume to completion — the full
     crawl ordering must be byte-for-byte the batch oracle's, with the
@@ -476,14 +479,15 @@ def test_stream_crawl_job_restart_parity(spark, tmp_path):
 
     for threshold in _DIST_INDEX_THRESHOLDS:
         work = str(tmp_path / f"stream_job_{threshold}")
-        args = dict(
-            max_rounds=ROUNDS, host_budget=BUDGET, dist_index_threshold=threshold
-        )
-        first = stream_crawl_job(spark, SEEDS, work, stop_after_round=1, **args)
-        assert len(first["rounds"]) == 1 and not first["fixpoint"]
+        args = dict(max_rounds=ROUNDS, host_budget=BUDGET)
+        with monkeypatch.context() as m:
+            two_pass = two_pass_index(m, threshold)
+            first = stream_crawl_job(spark, SEEDS, work, stop_after_round=1, **args)
+            assert len(first["rounds"]) == 1 and not first["fixpoint"]
 
-        resumed = stream_crawl_job(spark, SEEDS, work, resume=True, **args)
-        assert resumed["rounds"][0]["round"] == 1  # continued, not restarted
+            resumed = stream_crawl_job(spark, SEEDS, work, resume=True, **args)
+            assert resumed["rounds"][0]["round"] == 1  # continued, not restarted
+        assert bool(two_pass) == (threshold == 0), threshold
 
         assert stream_crawl_order(spark, work) == oracle.order, threshold
         # metrics line up per round with the oracle's
@@ -492,7 +496,33 @@ def test_stream_crawl_job_restart_parity(spark, tmp_path):
 
 
 @pytest.mark.spark
-def test_stream_crawl_job_robots_parity(spark, tmp_path):
+def test_stream_crawl_job_resume_raises_on_missing_frontier(spark, tmp_path):
+    """Honest resume: when the frontier parquet that
+    ``feeder/latest.json`` names is gone, ``resume=True`` raises — it
+    never puts an empty frontier in its place and reports a fixpoint."""
+    import json
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    from mhtml_to_html_spark.frontier.fixtures import seed_urls
+    from mhtml_to_html_spark.streaming.feeder import stream_crawl_job
+
+    SEEDS, work = seed_urls(4, 2), str(tmp_path / "stream_job")
+    args = dict(max_rounds=3, host_budget=5)
+    first = stream_crawl_job(spark, SEEDS, work, stop_after_round=1, **args)
+    assert not first["fixpoint"]
+    with open(os.path.join(work, "feeder", "latest.json")) as fh:
+        meta = json.load(fh)
+    assert meta["n_pending"] > 0 and os.path.isdir(meta["frontier"])
+    shutil.rmtree(meta["frontier"])
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        stream_crawl_job(spark, SEEDS, work, resume=True, **args)
+
+
+@pytest.mark.spark
+def test_stream_crawl_job_robots_parity(spark, tmp_path, monkeypatch):
     """Robots-enabled streaming feeder job: blocked URLs are reported
     in metrics but get NO crawl-order position and never count as
     fetched — the full ordering must still match the batch oracle
@@ -510,10 +540,13 @@ def test_stream_crawl_job_robots_parity(spark, tmp_path):
 
     for threshold in _DIST_INDEX_THRESHOLDS:
         work = str(tmp_path / f"robots_job_{threshold}")
-        res = stream_crawl_job(
-            spark, SEEDS, work, max_rounds=ROUNDS, host_budget=BUDGET,
-            use_robots=True, dist_index_threshold=threshold,
-        )
+        with monkeypatch.context() as m:
+            two_pass = two_pass_index(m, threshold)
+            res = stream_crawl_job(
+                spark, SEEDS, work, max_rounds=ROUNDS, host_budget=BUDGET,
+                use_robots=True,
+            )
+        assert bool(two_pass) == (threshold == 0), threshold
         assert stream_crawl_order(spark, work) == oracle.order, threshold
         got_rounds = [(m["round"], m["fetched"], m["blocked"]) for m in res["rounds"]]
         assert got_rounds == want_rounds, threshold
