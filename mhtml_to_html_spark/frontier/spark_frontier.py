@@ -80,10 +80,12 @@ _CANON_FIELDS = "key string, host string, host_rank int, h64 long"
 _CANON_SCHEMA = f"url string, depth int, disc_seq long, {_CANON_FIELDS}"
 _CANON_COLS = ["url", "depth", "disc_seq", "key", "host", "host_rank", "h64"]
 _CHILD_FIELDS = ("url", "key", "host", "host_rank", "h64")
+# the children :func:`fetch_row` emits, as the fetch UDF and the
+# streaming gate both output them
+_CHILDREN_TYPE = f"array<struct<url string, {_CANON_FIELDS}>>"
 _FETCH_SCHEMA = (
     "key string, host string, depth int, disc_seq long, pos long, status string, "
-    "attempts int, delay_ms long, h64 long, "
-    f"children array<struct<url string, {_CANON_FIELDS}>>"
+    f"attempts int, delay_ms long, h64 long, children {_CHILDREN_TYPE}"
 )
 _SEEN_SCHEMA = "key string, h64 long, host string, fetched_round int"
 _SHARD_BLOB_SCHEMA = "shard int, bloom binary, cuckoo binary"
@@ -136,33 +138,25 @@ def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
 
 def canonical_fields(url: str) -> tuple[str, str, int, int]:
     """``(key, host, host_rank, h64)`` of one URL: the crawl's single
-    canonicalization, shared by the driver's seeds, the fetch UDF's
-    children and the streaming gate. ``h64`` is signed two's-complement
-    so it fits LongType."""
+    canonicalization, shared by the seeds (:func:`seed_rows`), the
+    children :func:`fetch_row` emits and the raw-URL streaming entry
+    (``streaming/frontier.py``). ``h64`` is signed two's-complement so
+    it fits LongType."""
     key = canonicalize_url(url)
     host = url_host(key) or ""
     h64 = url_hash64(key)
     return key, host, host_rank(host), h64 - (1 << 64) if h64 >= 1 << 63 else h64
 
 
-def _canonicalize_batches(batches):
-    """The streaming gate's canonicalize pass (the batch crawl's rows
-    are canonical from birth and never take it)."""
-    import pandas as pd
+def seed_rows(seeds: list[str]) -> list[tuple]:
+    """The canonical frontier rows (``_CANON_COLS``) of a crawl's seeds:
+    the fetch-eligible ones, urn-unwrapped once, at depth 0 with
+    ``disc_seq`` 0, 1, ... in seed order. The batch crawl and the
+    streaming feeder both start from these rows."""
+    from ..urlnorm import unwrap_urn
 
-    for pdf in batches:
-        fields = [canonical_fields(u) for u in pdf["url"]]
-        keys, hosts, ranks, h64s = zip(*fields) if fields else ((),) * 4
-        out = {
-            "url": pdf["url"],
-            "depth": pdf["depth"],
-            "disc_seq": pdf["disc_seq"],
-            "key": list(keys),
-            "host": list(hosts),
-            "host_rank": list(ranks),
-            "h64": list(h64s),
-        }
-        yield pd.DataFrame(out)
+    urls = [unwrap_urn(u) for u in seeds if is_fetchable(u)]
+    return [(u, 0, disc, *canonical_fields(u)) for disc, u in enumerate(urls)]
 
 
 # --- sharded seen-set as a DataFrame of shard blobs ---------------------------
@@ -376,13 +370,16 @@ def fetch_row(
     hold_ms: int = 0,
     stand_in=None,
 ) -> tuple[str, int, int, int, list[dict]]:
-    """One URL's fetch-stage work, exactly as the fetch UDF runs it per
-    row: fetch with retry/backoff, h64, the optional decode, discovery,
-    and the children's canonical fields. ``stand_in`` (unsigned h64 →
-    MHTML body) turns the decode on: the real body is decoded when the
-    fetch returned one, else the stand-in's synthesized archive.
-    Returns ``(status, attempts, delay_ms, h64, children)``, ``h64``
-    signed so it fits LongType."""
+    """One URL's fetch work: fetch with retry/backoff, h64, the
+    optional decode, discovery, and the children's canonical fields.
+    It is the crawl's one per-URL fetch kernel: the batch fetch UDF
+    (:func:`_fetch_batches`) runs it per manifest row and the streaming
+    gate (``streaming/frontier.py``) per admitted key. ``stand_in``
+    (unsigned h64 → MHTML body, see :func:`stand_in_pool`) turns the
+    decode on: the real body is decoded when the fetch returned one,
+    else the stand-in's synthesized archive. Returns ``(status,
+    attempts, delay_ms, h64, children)``, ``h64`` signed so it fits
+    LongType."""
     body = b""
     if fetcher == "http":
         from .httpclient import fetch_url_with_retries
@@ -423,6 +420,45 @@ def fetch_row(
     return status, attempts, delay_ms, signed, children
 
 
+# (task attempt id, payload_images, payload_scale) and its stand-in
+_task_pool: tuple = (None, None)
+
+
+def stand_in_pool(payload_images: int, payload_scale: int):
+    """The decode's stand-in for a network body (unsigned h64 → MHTML
+    archive): corpus synthesis, which production never pays, amortized
+    over a pool of 64 distinct archives, ``h64 % 64``. The DECODE runs
+    per URL, uncached; that is the measured work.
+
+    The pool lives for ONE Spark task (``TaskContext.taskAttemptId()``),
+    for the fetch UDF (one ``mapInPandas`` call per task) and the
+    streaming gate (one call per host, many hosts per task) alike: a
+    worker-lifetime pool would let later tasks and jobs reuse bodies
+    earlier ones synthesized, speeding up the stand-in, not the engine.
+    Outside a task (in-process callers) each call gets a fresh pool.
+    Memory bound: a Python worker runs one task at a time and keeps only
+    its latest task's pool, so 64 bodies × body size per worker (~0.96MB
+    bodies at payload (8, 6): ≤ ~62MB per worker, ~185MB on 3 slots). A
+    task holds at most min(64, its URLs) bodies."""
+    global _task_pool
+    from pyspark import TaskContext
+
+    from ..sources.corpus import build_archive
+
+    ctx = TaskContext.get()
+    key = (ctx.taskAttemptId(), payload_images, payload_scale) if ctx else None
+    if key is not None and _task_pool[0] == key:
+        return _task_pool[1]
+    build = functools.lru_cache(maxsize=64)(build_archive)
+
+    def stand_in(h64):
+        return build(h64 % 64, payload_images, payload_scale)
+
+    if key is not None:
+        _task_pool = (key, stand_in)
+    return stand_in
+
+
 def _fetch_batches(
     batches,
     decode_payload: bool = False,
@@ -431,31 +467,9 @@ def _fetch_batches(
     **fetch_kw,
 ):
     """The fetch UDF: :func:`fetch_row` over every manifest row."""
-    import functools as _ft
-
     import pandas as pd
 
-    stand_in = None
-    if decode_payload:
-        from ..sources.corpus import build_archive
-
-        # corpus synthesis stands in for the network body; production
-        # never pays it, so amortize it over a bounded pool of 64
-        # distinct archives. The cache is created in this call, so it
-        # lives for ONE task, not per worker: a worker-lifetime cache
-        # would let later jobs reuse bodies earlier jobs synthesized
-        # (speeding up the stand-in, not the engine) and hold them per
-        # worker. The DECODE runs per URL, uncached — that is the
-        # measured work. Memory bound: 64 bodies × body size × running
-        # tasks (~0.96MB bodies at payload (8, 6): ≤ ~62MB per task,
-        # ~185MB on 3 slots). A task holds at most min(64, its rows)
-        # bodies, so the wave-sized fetch tasks of step 7 reach the
-        # bound where the old ~24-row tasks could not.
-        cached_build = _ft.lru_cache(maxsize=64)(build_archive)
-
-        def stand_in(h64):
-            return cached_build(h64 % 64, payload_images, payload_scale)
-
+    stand_in = stand_in_pool(payload_images, payload_scale) if decode_payload else None
     cols = [
         "key", "host", "depth", "disc_seq", "pos", "status", "attempts",
         "delay_ms", "h64", "children",
@@ -520,8 +534,6 @@ def crawl_spark(
     :data:`ROBOTS_FLATTEN_EVERY`, and indexing.DIST_INDEX_MIN_ROWS for
     every global index. ``fetcher="http"`` fetches with httpclient's
     default timeout."""
-    from ..urlnorm import unwrap_urn
-
     if discover == "parse" and fetcher != "http":
         # the scripted double carries no body, so parse-discovery would
         # silently crawl nothing past the seeds
@@ -575,15 +587,10 @@ def crawl_spark(
             debt_df = catalog.load_table(spark, snap, "debt")
         expected_frontier = frontier.count()
     else:
-        rows = []
-        for url in seeds:
-            if is_fetchable(url):
-                url = unwrap_urn(url)
-                rows.append((url, 0, disc_total, *canonical_fields(url)))
-                disc_total += 1
+        rows = seed_rows(seeds)
         frontier = local_frame(spark, rows, _CANON_SCHEMA)
         # the driver built the seeds itself: no count() job
-        expected_frontier = len(rows)
+        disc_total = expected_frontier = len(rows)
         seen = empty_seen
         failed = empty_keys
         order_acc = local_frame(

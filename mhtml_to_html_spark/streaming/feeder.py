@@ -5,12 +5,18 @@ The round-based discovery feedback that the oracle harness drives
 inline (``q_frontier_stream``) packaged as a RESUMABLE job: each round
 materializes the current frontier into the stream source directory,
 runs ONE ``availableNow`` pass of the streaming politeness gate
-(``stream_frontier_fetch`` — applyInPandasWithState; its checkpoint
-carries every host's seen set across passes AND process restarts),
-then derives the next frontier from the gate's output — deferred rows
+(``canonical_gate`` — applyInPandasWithState; its checkpoint carries
+every host's seen set across passes AND process restarts), then
+derives the next frontier from the gate's output — deferred rows
 re-queue first, then ok rows discover children in fetch order (the
 batch crawl's collecting walk, ``lib/convert.js:129-146`` round-loop
 semantics).
+
+Frontier rows are canonical from birth, as in the batch crawl: the
+source holds ``_CANON_SCHEMA`` rows (seeds from ``seed_rows``,
+deferred rows with the canonical columns the gate passed through,
+children from the gate's canonical child structs), so each micro-batch
+runs one Python stage, the gate itself.
 
 Scale shape (the whole round barrier is DataFrame ops — the batch
 crawl's own pattern, ``spark_frontier.py`` steps 6-8):
@@ -55,11 +61,18 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..frontier.fixtures import host_rank_col
 from ..frontier.indexing import index_rows
-from ..frontier.spark_frontier import local_frame
+from ..frontier.spark_frontier import (
+    _CANON_COLS,
+    _CANON_SCHEMA,
+    _CHILD_FIELDS,
+    local_frame,
+    seed_rows,
+)
 
-_FRONTIER_SCHEMA = "url string, depth int, disc_seq long"
+# seconds one availableNow gate pass may run before the round fails
+# (its feeder state is then not committed; resume=True re-runs it)
+PASS_TIMEOUT_S = 600
 _CHILD_ORDER = ["p_depth", "p_rank", "p_seq", "child_idx"]
 _ORDER_KEYS = ("round", "pos", "url", "depth", "status", "attempts")
 
@@ -82,31 +95,25 @@ def _next_frontier(
     (skipped when the caller already observed them on the stream —
     the same numbers, collected by the micro-batch itself), next
     frontier = deferred ∪ children-of-ok with ``disc_seq`` continuing
-    the global counter in (parent fetch order, document order).
-    ``out`` is the gate's output with its ``children`` column.
+    the global counter in (parent fetch order, document order), all
+    canonical rows (``_CANON_COLS``). ``out`` is the gate's output.
     Returns (frontier_df, n_discovered, counters); ``n_discovered`` is
     None when the index path did not count the children."""
     if counters is None:
         c = out.agg(*_COUNTER_AGGS()).collect()[0]
         counters = {k: int(c[k] or 0) for k in _COUNTER_KEYS}
 
-    deferred = out.filter(F.col("status") == "deferred").select(
-        "url", "depth", "disc_seq"
-    )
-    ok = out.filter(F.col("status") == "ok").withColumn(
-        "host_rank", host_rank_col(F.col("host"))
-    )
-    # links came out of the gate itself (parse mode: extracted from the
-    # fetched bytes; scripted mode: emit_children riding the fetch —
-    # both already eligibility-filtered, document order): one JVM-side
-    # posexplode, no second Python pass per round
-    children = ok.select(
+    deferred = out.filter(F.col("status") == "deferred").select(*_CANON_COLS)
+    # children came out of the gate's fetch_row, canonical (parsed from
+    # the fetched bytes or scripted, eligibility-filtered, document
+    # order): one JVM-side posexplode, no second Python pass per round
+    children = out.filter(F.col("status") == "ok").select(
         F.col("depth").alias("p_depth"),
         F.col("host_rank").alias("p_rank"),
         F.col("disc_seq").alias("p_seq"),
-        F.posexplode("children").alias("child_idx", "url"),
+        F.posexplode("children").alias("child_idx", "c"),
         (F.col("depth") + 1).cast("int").alias("depth"),
-    )
+    ).select(*_CHILD_ORDER, "depth", *(F.col(f"c.{f}").alias(f) for f in _CHILD_FIELDS))
 
     # disc_seq continues the crawl-global counter under the total
     # order (parent fetch order, child document order); the round's
@@ -114,7 +121,7 @@ def _next_frontier(
     discovered, n_disc = index_rows(
         children, _CHILD_ORDER, "disc_seq", counters["n"], start=disc
     )
-    frontier = deferred.unionByName(discovered.select("url", "depth", "disc_seq"))
+    frontier = deferred.unionByName(discovered.select(*_CANON_COLS))
     return frontier, n_disc, counters
 
 
@@ -135,7 +142,6 @@ def stream_crawl_job(
     stop_after_round: int | None = None,
     fetcher: str = "double",
     discover: str = "scripted",
-    pass_timeout_s: int = 600,
     decode_payload: bool = False,
     payload_images: int = 2,
     payload_scale: int = 1,
@@ -144,9 +150,9 @@ def stream_crawl_job(
     returns ``{"rounds": [...], "fixpoint": bool, "next_round": int}``
     with one metrics dict per executed round. ``stop_after_round``
     stops cleanly after that many NEW rounds (the mid-crawl restart
-    test's hook); call again with ``resume=True`` to continue."""
-    from ..urlnorm import is_fetchable, unwrap_urn
-    from .frontier import stream_frontier_fetch
+    test's hook); call again with ``resume=True`` to continue. Each
+    gate pass may run :data:`PASS_TIMEOUT_S` seconds."""
+    from .frontier import canonical_gate
 
     src, sink, ckpt = f"{work_dir}/src", f"{work_dir}/sink", f"{work_dir}/ckpt"
     meta_path = _state_meta_path(work_dir)
@@ -158,15 +164,10 @@ def stream_crawl_job(
         n_pending = int(meta["n_pending"])
         frontier = spark.read.parquet(meta["frontier"]) if meta["frontier"] else None
     else:
-        start_round, disc, seed_rows = 0, 0, []
-        for u in seeds:  # seeds are the job's driver-side input
-            if is_fetchable(u):
-                seed_rows.append((unwrap_urn(u), 0, disc))
-                disc += 1
-        n_pending = len(seed_rows)
-        frontier = (
-            local_frame(spark, seed_rows, _FRONTIER_SCHEMA) if seed_rows else None
-        )
+        rows = seed_rows(seeds)  # seeds are the job's driver-side input
+        start_round, disc = 0, len(rows)
+        n_pending = len(rows)
+        frontier = local_frame(spark, rows, _CANON_SCHEMA) if rows else None
 
     metrics = []
     executed = 0
@@ -206,8 +207,8 @@ def stream_crawl_job(
         spark.conf.set(shuffle_conf, str(spark.sparkContext.defaultParallelism))
         try:
             q = (
-                stream_frontier_fetch(
-                    spark.readStream.schema(_FRONTIER_SCHEMA).parquet(src),
+                canonical_gate(
+                    spark.readStream.schema(_CANON_SCHEMA).parquet(src),
                     host_budget=host_budget,
                     use_robots=use_robots,
                     fetcher=fetcher,
@@ -215,9 +216,8 @@ def stream_crawl_job(
                     decode_payload=decode_payload,
                     payload_images=payload_images,
                     payload_scale=payload_scale,
-                    emit_children=(
-                        (fanout, n_hosts) if discover == "scripted" else None
-                    ),
+                    fanout=fanout,
+                    n_hosts=n_hosts,
                 )
                 # round counters ride the micro-batch itself
                 # (CollectMetrics over every gate row) instead of a
@@ -229,7 +229,7 @@ def stream_crawl_job(
                 .trigger(availableNow=True)
                 .start()
             )
-            terminated = q.awaitTermination(pass_timeout_s)
+            terminated = q.awaitTermination(PASS_TIMEOUT_S)
         finally:
             spark.conf.set(shuffle_conf, prev_shuffle)
         if not terminated:
@@ -239,7 +239,7 @@ def stream_crawl_job(
             q.stop()
             raise RuntimeError(
                 f"streaming pass for round {feeder_round} exceeded "
-                f"{pass_timeout_s}s; feeder state NOT committed — "
+                f"{PASS_TIMEOUT_S}s; feeder state NOT committed — "
                 "re-run with resume=True (the gate checkpoint dedups)"
             )
 
@@ -319,8 +319,6 @@ def stream_crawl_order(spark: SparkSession, work_dir: str) -> list[dict]:
     test-contract shape [(round, pos, url, depth, status, attempts)],
     byte-comparable to ``crawl_oracle(...).order``. A test/debug
     collect, not part of the job's steady-state path."""
-    from ..frontier.fixtures import host_rank
-
     out = spark.read.parquet(f"{work_dir}/sink/r*").collect()
     order = []
     for r in sorted({row["feeder_round"] for row in out}):
@@ -331,7 +329,7 @@ def stream_crawl_order(spark: SparkSession, work_dir: str) -> list[dict]:
                 if row["feeder_round"] == r
                 and row["status"] not in ("deferred", "blocked")
             ),
-            key=lambda row: (row["depth"], host_rank(row["host"]), row["disc_seq"]),
+            key=lambda row: (row["depth"], row["host_rank"], row["disc_seq"]),
         )
         for pos, row in enumerate(fetched):
             order.append(

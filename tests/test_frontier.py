@@ -336,10 +336,17 @@ def test_crawl_runs_no_canonicalize_pass_and_fetches_in_whole_waves(spark, tmp_p
     checkpointed, resumed or recrawling crawl runs
     ``_canonicalize_batches``. The fetch stage is whole waves of the
     session's slots: a fresh crawl whose rounds fit one wave deals
-    every manifest into exactly ``defaultParallelism`` tasks."""
+    every manifest into exactly ``defaultParallelism`` tasks. The
+    streaming feeder's micro-batch runs one Python operator, the gate;
+    only the raw-URL ``stream_frontier_fetch`` canonicalizes ahead of
+    it."""
+    import contextlib
+    import io
     import re
 
     from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
+    from mhtml_to_html_spark.streaming.feeder import stream_crawl_job
+    from mhtml_to_html_spark.streaming.frontier import stream_frontier_fetch
 
     slots = spark.sparkContext.defaultParallelism
     seeds = seed_urls(40, 4)
@@ -374,6 +381,26 @@ def test_crawl_runs_no_canonicalize_pass_and_fetches_in_whole_waves(spark, tmp_p
     assert any("_robots_batches" in p for p in plans)
     assert not [p for p in plans if "_canonicalize_batches" in p]
 
+    before = set(_sql_plans(spark))
+    stream_crawl_job(spark, seeds[:8], str(tmp_path / "stream"), max_rounds=1, **kw)
+    gate_plans = [
+        p
+        for i, p in _sql_plans(spark).items()
+        if i not in before and "FlatMapGroupsInPandasWithState" in p
+    ]
+    assert gate_plans
+    assert not [p for p in gate_plans if "MapInPandas" in p.replace("FlatMapGroupsInPandas", "")]
+    raw = stream_frontier_fetch(
+        spark.readStream.schema("url string, depth int, disc_seq long").parquet(
+            str(tmp_path / "stream" / "src")
+        )
+    )
+    with contextlib.redirect_stdout(io.StringIO()) as out:
+        raw.explain()
+    raw_plan = out.getvalue()
+    assert "MapInPandas _canonicalize_batches" in raw_plan
+    assert raw_plan.index("FlatMapGroupsInPandasWithState") < raw_plan.index("MapInPandas")
+
 
 def test_fetch_children_match_canonicalize_pass(monkeypatch):
     """The fetch UDF's canonical child structs equal the canonicalize
@@ -383,11 +410,8 @@ def test_fetch_children_match_canonicalize_pass(monkeypatch):
     import pandas as pd
 
     from mhtml_to_html_spark.frontier import httpclient
-    from mhtml_to_html_spark.frontier.spark_frontier import (
-        _canonicalize_batches,
-        _fetch_batches,
-        extract_links,
-    )
+    from mhtml_to_html_spark.frontier.spark_frontier import _fetch_batches, extract_links
+    from mhtml_to_html_spark.streaming.frontier import _canonicalize_batches
     from mhtml_to_html_spark.urlnorm import canonicalize_url, url_host
 
     def canonical_rows(urls):

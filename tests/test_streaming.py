@@ -389,6 +389,52 @@ def test_streaming_frontier_matches_oracle_with_robots(spark, tmp_path):
     assert blocked_urls == oracle.blocked
 
 
+def test_gate_fetches_through_fetch_row(monkeypatch):
+    """The gate's admitted keys run the batch crawl's fetch kernel: with
+    ``fetcher="http"`` and scripted discovery, each fetched row carries
+    its eligible scripted children, canonical, and an ok response with
+    an empty body decodes the stand-in. Deferred rows keep their
+    canonical columns and carry no children. No Spark: the admission
+    kernel runs on a pandas batch."""
+    import pandas as pd
+
+    from mhtml_to_html_spark.frontier import httpclient
+    from mhtml_to_html_spark.frontier.fixtures import children_of
+    from mhtml_to_html_spark.frontier.seenset import url_hash64
+    from mhtml_to_html_spark.frontier.spark_frontier import (
+        _CANON_COLS,
+        canonical_fields,
+        seed_rows,
+    )
+    from mhtml_to_html_spark.streaming.frontier import _GATE_COLUMNS, _admit_host_batch
+    from mhtml_to_html_spark.urlnorm import is_fetchable
+
+    monkeypatch.setattr(
+        httpclient, "fetch_url_with_retries", lambda key: ("ok", 1, 0, "text/html", b"")
+    )
+    FANOUT, NHOSTS, BUDGET = 4, 5, 3
+    host = "host1.example.com"
+    rows = seed_rows([f"https://{host}/seed/{i}" for i in range(5)])
+    decoded = []
+    out = _admit_host_batch(
+        host, pd.DataFrame(rows, columns=_CANON_COLS), set(), BUDGET, False,
+        fetcher="http", discover="scripted", fanout=FANOUT, n_hosts=NHOSTS,
+        stand_in=lambda h64: decoded.append(h64) or b"",
+    )
+    got = [dict(zip(_GATE_COLUMNS, r)) for r in out]
+    assert [r["status"] for r in got] == ["ok"] * BUDGET + ["deferred"] * 2
+    assert [tuple(r[c] for c in _CANON_COLS) for r in got] == rows
+    for r in got[:BUDGET]:
+        want = [c for c in children_of(r["key"], FANOUT, NHOSTS) if is_fetchable(c)]
+        assert want
+        assert r["children"] == [
+            dict(zip(("url", "key", "host", "host_rank", "h64"), (c, *canonical_fields(c))))
+            for c in want
+        ]
+    assert all(r["children"] == [] for r in got[BUDGET:])
+    assert decoded == [url_hash64(r["key"]) for r in got[:BUDGET]]
+
+
 @pytest.mark.spark
 def test_gate_state_is_one_exact_seen_set(spark, tmp_path):
     """The gate's per-host state is ONE field, the host's exact seen
@@ -561,8 +607,7 @@ def test_host_rank_col_parity(spark):
     the crawl."""
     from pyspark.sql import functions as F
 
-    from mhtml_to_html_spark.frontier.fixtures import host_rank
-    from mhtml_to_html_spark.streaming.feeder import host_rank_col
+    from mhtml_to_html_spark.frontier.fixtures import host_rank, host_rank_col
 
     hosts = (
         [f"host{i}.example.com" for i in range(50)]
