@@ -15,17 +15,14 @@ exponential backoff (500ms·2^attempt capped 5s), and Retry-After
 parsing (seconds or HTTP-date, rejected beyond the cap) all come from
 frontier.fixtures, so the double and the real client can never drift.
 
-Shape at scale: :func:`http_fetch_batches` is a mapInPandas generator;
-per Arrow batch a bounded thread pool fetches concurrently (I/O-bound
-— threads amortize connection latency inside one Python worker while
-the task count provides cross-worker parallelism). Politeness stays
-upstream in the scheduler; this stage only turns URLs into bytes.
+The crawl calls :func:`fetch_url_with_retries` once per URL from
+``spark_frontier.fetch_row``. Politeness stays upstream in the
+scheduler; this module only turns URLs into bytes.
 """
 
 from __future__ import annotations
 
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 from .fixtures import (
     MAX_RETRIES,
@@ -177,35 +174,3 @@ def fetch_url_with_retries(
         sleep(delay / 1000.0)
         total_delay += delay
         attempt += 1
-
-
-def http_fetch_batches(
-    batches,
-    url_col: str = "key",
-    max_retries: int = MAX_RETRIES,
-    timeout: float = DEFAULT_TIMEOUT_S,
-    pool_size: int = 16,
-):
-    """mapInPandas generator: per Arrow batch, fetch every row's
-    ``url_col`` through a bounded thread pool; yields the input
-    columns plus (status, attempts, delay_ms, content_type, body).
-    Use ``df.mapInPandas(functools.partial(http_fetch_batches, ...),
-    schema=...)``; keep per-host politeness upstream."""
-    import pandas as pd
-
-    for pdf in batches:
-        urls = list(pdf[url_col])
-        with ThreadPoolExecutor(max_workers=max(1, min(pool_size, len(urls) or 1))) as ex:
-            results = list(
-                ex.map(
-                    lambda u: fetch_url_with_retries(u, max_retries=max_retries, timeout=timeout),
-                    urls,
-                )
-            )
-        out = pdf.copy()
-        out["status"] = [r[0] for r in results]
-        out["attempts"] = [r[1] for r in results]
-        out["delay_ms"] = [r[2] for r in results]
-        out["content_type"] = [r[3] for r in results]
-        out["body"] = [r[4] for r in results]
-        yield pd.DataFrame(out)

@@ -1,4 +1,4 @@
-"""Partitioned counting-Bloom + cuckoo-filter hybrid seen-set.
+"""Per-shard structures of the counting-Bloom + cuckoo-filter seen set.
 
 The 10^10-URL design (north_rule):
 
@@ -7,13 +7,10 @@ The 10^10-URL design (north_rule):
   (fast membership, supports deletion when a crawl segment is
   retracted) and a cuckoo filter (compact exact-ish verify layer whose
   fingerprints make false positives ~2^-f instead of the Bloom's fpp).
-- Probe path in Spark: ``might_contain(bloom, xxhash64(url))`` prunes
-  the definitely-new URLs JVM-side; only the maybe-seen remainder pays
-  the exact anti-join against the seen table. The filters are an
-  accelerator — the exact table is the source of truth, so the crawl
-  is false-negative-free AND false-positive-free.
 - Shard blobs serialize to bytes rows, so the whole structure lives in
   a DataFrame/Parquet and survives checkpoints.
+- The sharding and the cogroup merge/probe/remove kernels live in
+  ``spark_frontier``: the filters accelerate, the exact seen table decides.
 
 Numpy-vectorized; no Spark imports (usable inside pandas UDFs).
 """
@@ -60,13 +57,6 @@ class CountingBloom:
 
     def might_contain(self, h64: int) -> bool:
         return bool(np.all(self.counts[self._positions(h64)] > 0))
-
-    def merge(self, other: "CountingBloom") -> None:
-        """Union by saturating counter add (the distributed-build merge:
-        per-partition partial filters sum into the global one)."""
-        assert other.n_bits == self.n_bits and other.k == self.k
-        total = self.counts.astype(np.uint16) + other.counts.astype(np.uint16)
-        self.counts = np.minimum(total, 255).astype(np.uint8)
 
     def might_contain_many(self, h64s: np.ndarray) -> np.ndarray:
         h1 = (h64s & 0xFFFFFFFF).astype(np.uint64)
@@ -142,19 +132,6 @@ class CuckooFilter:
                 return
         self.stash.add((i, fp))
 
-    def merge_from(self, other: "CuckooFilter") -> None:
-        """Union: re-insert every occupied slot of ``other`` at its
-        bucket index (valid because i ↔ i^hash(fp) is an involution, so
-        a fingerprint stored at bucket i still belongs to the same
-        bucket pair in the merged table). Stash entries carry their
-        bucket, so they re-insert the same way."""
-        assert other.n_buckets == self.n_buckets
-        buckets, slots = np.nonzero(other.table)
-        for i, s in zip(buckets.tolist(), slots.tolist()):
-            self._insert_fp(i, int(other.table[i, s]))
-        for i, fp in other.stash:
-            self._insert_fp(i, fp)
-
     def contains(self, h64: int) -> bool:
         fp = self._fingerprint(h64)
         i1 = self._index1(h64)
@@ -199,79 +176,3 @@ class CuckooFilter:
             f.stash.add((i, fp))
             offset += 6
         return f
-
-
-class ShardedSeenSet:
-    """P-sharded hybrid: shard = h64 % P; each shard holds a counting
-    Bloom (fast reject) + cuckoo filter (verify). The exact key table
-    lives in Spark; this structure is the probe accelerator that rides
-    in broadcast/checkpoint blobs."""
-
-    def __init__(self, n_shards: int = 8, bloom_bits: int = 1 << 16, cuckoo_buckets: int = 1 << 12):
-        self.n_shards = n_shards
-        self.blooms = [CountingBloom(bloom_bits) for _ in range(n_shards)]
-        self.cuckoos = [CuckooFilter(cuckoo_buckets) for _ in range(n_shards)]
-
-    def _shard(self, h64: int) -> int:
-        return h64 % self.n_shards
-
-    def add(self, key: str) -> None:
-        self.add_h64(url_hash64(key))
-
-    def add_h64(self, h64: int) -> None:
-        h64 &= 0xFFFFFFFFFFFFFFFF
-        s = self._shard(h64)
-        self.blooms[s].add(h64)
-        self.cuckoos[s].add(h64)
-
-    def remove(self, key: str) -> None:
-        h = url_hash64(key)
-        s = self._shard(h)
-        self.blooms[s].remove(h)
-        self.cuckoos[s].remove(h)
-
-    def might_contain(self, key: str) -> bool:
-        return self.might_contain_h64(url_hash64(key))
-
-    def might_contain_h64(self, h64: int) -> bool:
-        h64 &= 0xFFFFFFFFFFFFFFFF
-        s = self._shard(h64)
-        return self.blooms[s].might_contain(h64) and self.cuckoos[s].contains(h64)
-
-    def might_contain_many(self, h64s: "np.ndarray") -> "np.ndarray":
-        """Vectorized probe: per-shard Bloom batch check first, then the
-        cuckoo verify only on the Bloom-positive sliver (the hybrid's
-        point: most probes stop at the Bloom)."""
-        h64s = h64s.astype(np.uint64)
-        out = np.zeros(len(h64s), dtype=bool)
-        shards = (h64s % np.uint64(self.n_shards)).astype(np.int64)
-        for s in range(self.n_shards):
-            idx = np.where(shards == s)[0]
-            if len(idx) == 0:
-                continue
-            bloom_hit = self.blooms[s].might_contain_many(h64s[idx])
-            for j in idx[bloom_hit]:
-                out[j] = self.cuckoos[s].contains(int(h64s[j]))
-        return out
-
-    def merge_shard(self, shard: int, bloom_blob: bytes, cuckoo_blob: bytes) -> None:
-        """Fold a distributed-build partial (one shard's per-partition
-        filters) into this set."""
-        self.blooms[shard].merge(CountingBloom.from_bytes(bloom_blob))
-        self.cuckoos[shard].merge_from(CuckooFilter.from_bytes(cuckoo_blob))
-
-    def shard_blobs(self) -> list[tuple[int, bytes, bytes]]:
-        return [
-            (i, self.blooms[i].to_bytes(), self.cuckoos[i].to_bytes())
-            for i in range(self.n_shards)
-        ]
-
-    @classmethod
-    def from_shard_blobs(cls, blobs: list[tuple[int, bytes, bytes]]) -> "ShardedSeenSet":
-        inst = cls(n_shards=len(blobs), bloom_bits=8, cuckoo_buckets=8)
-        inst.blooms = [None] * len(blobs)  # type: ignore[list-item]
-        inst.cuckoos = [None] * len(blobs)  # type: ignore[list-item]
-        for i, bloom_blob, cuckoo_blob in blobs:
-            inst.blooms[i] = CountingBloom.from_bytes(bloom_blob)
-            inst.cuckoos[i] = CuckooFilter.from_bytes(cuckoo_blob)
-        return inst

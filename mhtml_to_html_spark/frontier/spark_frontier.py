@@ -556,8 +556,19 @@ def crawl_spark(
     empty_robots = local_frame(
         spark, [], "host string, disallow string, crawl_delay_level int"
     )
-    debt_df = local_frame(spark, [], "host string, debt long")
+    debt_df = empty_debt = local_frame(spark, [], "host string, debt long")
     seenset_df = local_frame(spark, [], _SHARD_BLOB_SCHEMA)
+    # the snapshot's tables, for the write, resume and the reload after
+    # each write; loading a table the snapshot lacks raises
+    snap_tables = ["frontier", "seen", "failed", "order", "seenset"] + (
+        ["robots", "blocked"] if use_robots else []) + (["debt"] if debt_boost else [])
+
+    def load_snapshot(snap):
+        t = {name: catalog.load_table(spark, snap, name) for name in snap_tables}
+        return (t["frontier"], t["seen"], t["failed"], t["order"], t["seenset"],
+                t.get("robots", empty_robots), t.get("blocked", empty_keys),
+                t.get("debt", empty_debt))
+
     # seen keys fetched since the last blob merge (lazy union of
     # checkpointed per-round outputs): the hybrid filter is an
     # ACCELERATOR that only pays for itself once the probe actually
@@ -568,23 +579,12 @@ def crawl_spark(
     if resume and catalog is not None and catalog.latest() is not None:
         manifest = catalog.latest()
         snap = manifest["snapshot_id"]
-        frontier = catalog.load_table(spark, snap, "frontier")
-        seen = catalog.load_table(spark, snap, "seen")
-        failed = catalog.load_table(spark, snap, "failed")
+        (frontier, seen, failed, order_acc, seenset_df,
+         robots_cache, blocked, debt_df) = load_snapshot(snap)
         start_round = manifest["round"] + 1
         disc_total = manifest["metrics"]["disc_total"]
         recrawls_done = int(manifest["metrics"]["recrawls_done"])
-        order_acc = catalog.load_table(spark, snap, "order")
-        seenset_df = catalog.load_table(spark, snap, "seenset")
         result.metrics = manifest["metrics"]["rounds"]
-        if use_robots:
-            robots_cache = catalog.load_table(spark, snap, "robots")
-            blocked = catalog.load_table(spark, snap, "blocked")
-        else:
-            robots_cache = empty_robots
-            blocked = empty_keys
-        if debt_boost:
-            debt_df = catalog.load_table(spark, snap, "debt")
         expected_frontier = frontier.count()
     else:
         rows = seed_rows(seeds)
@@ -1100,14 +1100,12 @@ def crawl_spark(
                 "failed": failed,
                 "order": order_acc,
                 "seenset": seenset_df,
+                "robots": robots_cache,
+                "blocked": blocked,
+                "debt": debt_df,
             }
-            if use_robots:
-                tables["robots"] = robots_cache
-                tables["blocked"] = blocked
-            if debt_boost:
-                tables["debt"] = debt_df
             snap = catalog.write_snapshot(
-                tables,
+                {name: tables[name] for name in snap_tables},
                 metrics={
                     "rounds": result.metrics,
                     "disc_total": disc_total,
@@ -1117,18 +1115,10 @@ def crawl_spark(
                 round_idx=round_idx,
             )
             result.snapshots.append(snap)
-            frontier = catalog.load_table(spark, snap, "frontier")
+            (frontier, seen, failed, order_acc, seenset_df,
+             robots_cache, blocked, debt_df) = load_snapshot(snap)
             pending = empty_pending
             n_pending = 0
-            seen = catalog.load_table(spark, snap, "seen")
-            failed = catalog.load_table(spark, snap, "failed")
-            order_acc = catalog.load_table(spark, snap, "order")
-            seenset_df = catalog.load_table(spark, snap, "seenset")
-            if use_robots:
-                robots_cache = catalog.load_table(spark, snap, "robots")
-                blocked = catalog.load_table(spark, snap, "blocked")
-            if debt_boost:
-                debt_df = catalog.load_table(spark, snap, "debt")
 
     if collect_order:
         for row in order_acc.orderBy("round", "pos").collect():

@@ -34,35 +34,11 @@ import numpy as np
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
-class _BitReader:
-    """LSB-first bit reader over the concatenated image sub-blocks."""
-
-    __slots__ = ("data", "pos", "bits", "acc")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.bits = 0
-        self.acc = 0
-
-    def read(self, n: int) -> int:
-        while self.bits < n:
-            if self.pos >= len(self.data):
-                raise ValueError("GIF LZW stream exhausted")
-            self.acc |= self.data[self.pos] << self.bits
-            self.pos += 1
-            self.bits += 8
-        val = self.acc & ((1 << n) - 1)
-        self.acc >>= n
-        self.bits -= n
-        return val
-
-
 def _lzw_decode(min_code_size: int, data: bytes, n_pixels: int) -> bytes:
     """GIF-flavoured LZW → index bytes (exactly n_pixels of them).
 
-    The bit reader is inlined as plain locals: the per-code
-    ``_BitReader.read`` method call was ~40% of the decode wall
+    The LSB-first bit reader is inlined as plain locals: a per-code
+    method call was ~40% of the decode wall
     (~1.8k calls per 64x48 frame), and this loop sits inside the
     image-decode bench units. Same algorithm, same outputs
     (tests/test_image_codecs.py round-trips pin it)."""

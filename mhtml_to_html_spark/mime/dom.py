@@ -168,10 +168,6 @@ class Element(Node):
                 out.extend(child.get_elements_by_tag_name(tag))
         return out
 
-    @property
-    def outer_html(self) -> str:
-        return _serialize(self)
-
 
 class Document(Node):
     node_type = "document"

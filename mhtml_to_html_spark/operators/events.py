@@ -1,10 +1,7 @@
 """Event-stream batch operators.
 
-``sessionize_batch`` is the BATCH twin of the streaming
-``stream_sessionize`` gate (streaming/ingest.py) — same gap-session
-semantics expressed as window functions, which puts the sessionization
-contract under the DuckDB oracle gate (the streaming side is pinned to
-this by tests/test_streaming.py's batch-parity test).
+``sessionize_batch`` expresses gap-based sessions as window functions,
+which puts the sessionization contract under the DuckDB oracle gate.
 
 Scale notes: both windows partition by ``user_id`` — a hash shuffle on
 the key, never a global sort; the per-user event sequence is the unit

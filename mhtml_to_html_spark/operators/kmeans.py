@@ -172,77 +172,3 @@ def ivf_topk_trained(
         .orderBy(F.col("cosine").desc(), "vec_id")
         .limit(k)
     )
-
-
-def kmeans_predict(embeddings: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """(vec_id, cid): assignment under a fixed centroid matrix — the
-    IVF cell-routing step at query/index time."""
-    return _assign(embeddings, centroids).select("vec_id", "cid")
-
-
-def write_ivf_index(
-    embeddings: DataFrame, path: str, n_cells: int = 4, n_iter: int = 2
-) -> list[list[float]]:
-    """Materialize an IVF index: train the codebook, route every vector
-    to its cell, and write the vectors PARTITIONED BY CELL — at query
-    time the n_probe filter becomes a PartitionFilter, so the scan
-    physically reads n_probe/n_cells of the files (the IVF promise made
-    real by the storage layout, not just the join). Centroids persist
-    alongside. Returns the trained centroids."""
-    spark = embeddings.sparkSession
-    centroids, _ = lloyd(embeddings, n_cells, n_iter)
-    assigned = _assign(embeddings, centroids).withColumnRenamed("cid", "cell")
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/vectors")
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], "cid int, c array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    return centroids
-
-
-def ivf_query(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-    exclude_vec_id: int | None = None,
-) -> DataFrame:
-    """Top-k over a materialized IVF index: pick the query's n_probe
-    nearest cells from the persisted codebook (k rows — a driver read),
-    scan ONLY those partitions, exact-cosine rerank. Same distance /
-    quantization / tie rules as :func:`ivf_topk_trained`."""
-    cents = {r["cid"]: [float(v) for v in r["c"]] for r in
-             spark.read.parquet(f"{path}/centroids").collect()}
-    qv = [float(v) for v in query_vec]
-
-    def _d(c):
-        return sum((a - b) * (a - b) for a, b in zip(qv, c))
-
-    probe_cells = sorted(cents, key=lambda cid: (_d(cents[cid]), cid))[:n_probe]
-
-    vectors = spark.read.parquet(f"{path}/vectors").filter(F.col("cell").isin(probe_cells))
-    if exclude_vec_id is not None:
-        vectors = vectors.filter(F.col("vec_id") != exclude_vec_id)
-    qdf = spark.createDataFrame([(qv,)], "qvec array<double>")
-    dot = F.aggregate(
-        F.zip_with("embedding", "qvec", lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-    def _norm(c):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(c, lambda v: v.cast("double") * v.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-
-    return (
-        vectors.crossJoin(F.broadcast(qdf))
-        .withColumn("cosine", F.round(dot / (_norm(F.col("embedding")) * _norm(F.col("qvec"))), 6))
-        .select("vec_id", F.col("cell").cast("int").alias("cell"), "cosine")
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(k)
-    )

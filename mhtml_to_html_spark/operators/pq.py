@@ -200,8 +200,8 @@ def ivfpq_topk(
     Scale shape: routing and residuals are narrow projections (centroid
     matrix driver-held, element_at-indexed by cell); the probe filter
     prunes the scan to n_probe/n_cells of the corpus BEFORE any ADC
-    work (pair with :func:`kmeans.write_ivf_index`-style cell
-    partitioning to make the prune physical); ranking touches only the
+    work (vectors stored partitioned by cell would make the prune
+    physical); ranking touches only the
     m-byte codes. Returns (vec_id, cell, adc_dist) ascending, ties to
     lowest vec_id."""
     from .kmeans import _assign, lloyd

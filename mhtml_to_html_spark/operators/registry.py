@@ -90,60 +90,3 @@ def select_index(parts: DataFrame) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("archive_id", F.col("part_id").alias("index_id"), "tier")
     )
-
-
-def resolve_references(refs: DataFrame, keys: DataFrame) -> DataFrame:
-    """References ⋈ registry on exact string keys (U3): by resolved
-    url, else by the reference as written, else ``cid:x`` → ``<x>``.
-    The fallbacks are extra join attempts folded into one expression:
-    each reference row probes up to 3 keys, then takes the best tier.
-
-    ``refs``: (archive_id, ref, resolved) — resolved = resolve_path(ref, base).
-    Returns refs + matched part_id (null = unfound).
-    """
-    probes = refs.select(
-        "archive_id",
-        "ref",
-        "resolved",
-        F.explode(
-            F.array_distinct(
-                F.filter(
-                    F.array(
-                        F.col("resolved"),
-                        F.col("ref"),
-                        F.when(
-                            F.col("resolved").startswith("cid:"),
-                            F.concat(F.lit("<"), F.expr("substring(resolved, 5)"), F.lit(">")),
-                        ),
-                    ),
-                    lambda c: c.isNotNull(),
-                )
-            )
-        ).alias("probe"),
-    )
-    joined = probes.join(
-        keys.select("archive_id", F.col("key").alias("probe"), "part_id"),
-        on=["archive_id", "probe"],
-        how="left",
-    )
-    # prefer the resolved-url match, then raw, then cid (probe order)
-    tier = (
-        F.when(F.col("probe") == F.col("resolved"), 0)
-        .when(F.col("probe") == F.col("ref"), 1)
-        .otherwise(2)
-    )
-    w = Window.partitionBy("archive_id", "ref", "resolved").orderBy(
-        F.col("part_id").isNull().cast("int"), tier
-    )
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("archive_id", "ref", "resolved", "part_id")
-    )
-
-
-def unfound_references(refs_resolved: DataFrame) -> DataFrame:
-    """R5: references that matched no part; ``data:`` URIs excluded."""
-    return refs_resolved.filter(
-        F.col("part_id").isNull() & ~F.col("resolved").startswith("data:")
-    ).select("archive_id", F.col("resolved").alias("url"))

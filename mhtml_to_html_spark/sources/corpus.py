@@ -40,10 +40,6 @@ def _encode_qp(data: bytes) -> str:
     return "".join(out)
 
 
-def _encode_single_byte(value: str, codec: str) -> bytes:
-    return value.encode(codec)
-
-
 def image_meta(global_img_id: int, dim_scale: int = 1, with_phash: bool = True) -> dict:
     """Golden row for one image (input_hint schema). ``dim_scale``
     multiplies the dimensions (bench corpora use web-realistic sizes;

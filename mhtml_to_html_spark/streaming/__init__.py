@@ -1,7 +1,2 @@
 from .frontier import stream_frontier_fetch  # noqa: F401
-from .ingest import (  # noqa: F401
-    stream_events_windowed,
-    stream_split_archives,
-    stream_dedup_events,
-    stream_sessionize,
-)
+from .ingest import stream_events_windowed  # noqa: F401

@@ -2,15 +2,10 @@
 
 A crawl at 10^10 URLs is naturally a stream: fetched archives arrive
 continuously and the decode stage should not wait for a round barrier.
-These operators are the streaming shape of the batch pipeline:
+This operator is the streaming shape of the batch pipeline:
 
-- ``stream_split_archives``: the SAME mapInPandas split stage as the
-  batch path, applied to a streaming DataFrame of archives — the UDF is
-  stateless, so batch/stream parity is structural, not re-implemented.
 - ``stream_events_windowed``: watermarked tumbling-window aggregation
   (late data handled by the watermark, not by reprocessing).
-- ``stream_dedup_events``: exactly-once-style dedup within the
-  watermark, the streaming analogue of the frontier's seen-set.
 
 Tested with file sources + Trigger.AvailableNow against the batch
 equivalents (tests/test_streaming.py).
@@ -20,16 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators.split import PARTS_SCHEMA, _split_batches
-
-
-def stream_split_archives(archives_stream: DataFrame) -> DataFrame:
-    """Streaming archive → parts: identical kernel to the batch stage
-    (operators/split.py); Spark plans it as a stateless streaming map."""
-    return archives_stream.select("archive_id", "content").mapInPandas(
-        _split_batches, schema=PARTS_SCHEMA
-    )
 
 
 def stream_events_windowed(
@@ -55,102 +40,3 @@ def stream_events_windowed(
             "total_value",
         )
     )
-
-
-def stream_dedup_events(events_stream: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    """Dedup on event_id within the watermark horizon — bounded state,
-    the streaming seen-set."""
-    events_stream = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return events_stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
-_SESSION_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, "
-    "n_events long, total_value double"
-)
-_SESSION_STATE_SCHEMA = "start long, end long, n long, total double"
-
-
-def _sessionize(key, pdfs, state, gap_ms: int):
-    """Custom stateful operator: gap-based sessionization per user.
-    Emits a session row whenever a gap larger than ``gap_ms`` closes
-    one; the open session rides in the state store (or times out at
-    the watermark)."""
-    import pandas as pd
-
-    (user_id,) = key
-    if state.hasTimedOut:
-        start, end, n, total = state.get
-        state.remove()
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "session_start": [pd.Timestamp(start, unit="us")],
-                "session_end": [pd.Timestamp(end, unit="us")],
-                "n_events": [n],
-                "total_value": [round(total, 4)],
-            }
-        )
-        return
-    events = pd.concat(list(pdfs)).sort_values("ts")
-    ts_us = (events["ts"].astype("int64") // 1_000).tolist()
-    values = events["value"].tolist()
-    if state.exists:
-        start, end, n, total = state.get
-    else:
-        start = end = None
-        n, total = 0, 0.0
-    out = {"user_id": [], "session_start": [], "session_end": [], "n_events": [], "total_value": []}
-    for t, v in zip(ts_us, values):
-        if start is None:
-            start = end = t
-            n, total = 1, float(v)
-        elif t - end > gap_ms * 1000:
-            out["user_id"].append(user_id)
-            out["session_start"].append(pd.Timestamp(start, unit="us"))
-            out["session_end"].append(pd.Timestamp(end, unit="us"))
-            out["n_events"].append(n)
-            out["total_value"].append(round(total, 4))
-            start = end = t
-            n, total = 1, float(v)
-        else:
-            end = t
-            n += 1
-            total += float(v)
-    state.update((start, end, n, total))
-    state.setTimeoutTimestamp(end // 1000 + gap_ms)
-    yield pd.DataFrame(out)
-
-
-def stream_sessionize(
-    events_stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Gap-based sessionization via applyInPandasWithState — the
-    custom-stateful-operator shape (per-key state + event-time
-    timeouts) the built-in aggregations can't express."""
-    import functools
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_ms = _duration_ms(gap)
-    events_stream = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            functools.partial(_sessionize, gap_ms=gap_ms),
-            outputStructType=_SESSION_SCHEMA,
-            stateStructType=_SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def _duration_ms(duration: str) -> int:
-    value, unit = duration.split()
-    if not unit.endswith("s"):
-        unit += "s"
-    return int(value) * {"seconds": 1000, "minutes": 60_000, "hours": 3_600_000}[unit]

@@ -8,11 +8,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
-from mhtml_to_html_spark.frontier.httpclient import (
-    fetch_once,
-    fetch_url_with_retries,
-    http_fetch_batches,
-)
+from mhtml_to_html_spark.frontier.httpclient import fetch_once, fetch_url_with_retries
 from mhtml_to_html_spark.sources.corpus import build_archive
 
 ARCHIVE = build_archive(7, 2, 1)
@@ -160,15 +156,6 @@ def test_connection_error_is_thrown_marker():
         "http://127.0.0.1:9/nothing", max_retries=1, timeout=0.5, sleep=lambda s: None
     )
     assert status == "failed" and attempts == 2
-
-
-def test_batch_pool_fetches_real_bytes(server):
-    import pandas as pd
-
-    pdf = pd.DataFrame({"key": [f"{server}/ok/{i}" for i in range(12)]})
-    (out,) = list(http_fetch_batches(iter([pdf]), pool_size=8))
-    assert list(out["status"]) == ["ok"] * 12
-    assert all(b == ARCHIVE for b in out["body"])
 
 
 @pytest.mark.spark

@@ -24,7 +24,7 @@ def _planted(spark):
 
 @pytest.mark.spark
 def test_kmeans_recovers_planted_clusters(spark):
-    from mhtml_to_html_spark.operators.kmeans import kmeans_fit, kmeans_predict
+    from mhtml_to_html_spark.operators.kmeans import _assign, kmeans_fit
 
     df = _planted(spark)
     fitted = kmeans_fit(df, k=3, n_iter=3)
@@ -40,9 +40,9 @@ def test_kmeans_recovers_planted_clusters(spark):
     for c in by_cid.values():
         big = [j for j in range(3) if abs(c[j] - 10.0) < 0.5]
         assert len(big) == 1, c
-    # predict routes every vector to the centroid of its planted anchor
+    # assignment routes every vector to the centroid of its planted anchor
     centroids = [by_cid[c] for c in sorted(by_cid)]
-    pred = {r["vec_id"]: r["cid"] for r in kmeans_predict(df, centroids).collect()}
+    pred = {r["vec_id"]: r["cid"] for r in _assign(df, centroids).collect()}
     assert len({pred[v] for v in (0, 3, 6, 9)}) == 1  # same planted cluster
     assert len({pred[0], pred[1], pred[2]}) == 3  # different clusters apart
 
@@ -133,34 +133,6 @@ def test_image_dedup_clusters_transitive(spark):
     assert got["b"] == ("a", False)
     assert got["c"] == ("a", False)   # reachable only through b
     assert got["z"] == ("z", True)
-
-
-@pytest.mark.spark
-def test_ivf_index_partition_pruning_and_parity(spark, tmp_path):
-    """The materialized IVF index: (a) queries over the written index
-    return EXACTLY what the in-memory trained IVF returns, and (b) the
-    probe filter reaches the scan as a PartitionFilter — the physical
-    read is n_probe/n_cells of the files, not a post-scan filter."""
-    from mhtml_to_html_spark.operators.kmeans import (
-        ivf_query,
-        ivf_topk_trained,
-        write_ivf_index,
-    )
-
-    from test_plans import plan_of
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb, path, n_cells=4, n_iter=2)
-
-    qv = [float(v) for v in emb.filter("vec_id = 0").first()["embedding"]]
-    got = ivf_query(spark, path, qv, k=10, n_probe=2, exclude_vec_id=0)
-    want = ivf_topk_trained(emb, 0, 10, n_cells=4, n_iter=2, n_probe=2)
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
-
-    plan = plan_of(ivf_query(spark, path, qv, k=10, n_probe=2))
-    scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert scan_lines and any("cell" in ln for ln in scan_lines), plan[:2000]
 
 
 @pytest.mark.spark

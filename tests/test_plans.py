@@ -326,40 +326,6 @@ def test_ivf_topk_probes_subset_and_broadcasts_centroids(spark):
 
 
 @pytest.mark.spark
-def test_bucketed_join_has_no_exchange(spark):
-    """Bucketing pays the shuffle once at write time: a join of two
-    tables bucketed+sorted on the key must plan with ZERO Exchange
-    (the co-located join the 100 TB fact-to-fact case needs)."""
-    from mhtml_to_html_spark.plans.bucketing import read_table, write_bucketed
-
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    lineitem = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    write_bucketed(orders, "t_orders_b", ["o_orderkey"], 4)
-    write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "t_lineitem_b",
-        ["o_orderkey"],
-        4,
-    )
-    # at sf0.001 the planner would broadcast the tiny side and skip the
-    # buckets; disable auto-broadcast to plan the big-table case the
-    # buckets exist for
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = read_table(spark, "t_orders_b").join(
-            read_table(spark, "t_lineitem_b"), "o_orderkey"
-        )
-        plan = plan_of(joined.select("o_orderkey", "o_totalprice", "l_quantity"))
-        assert "Exchange" not in plan, "bucketed join still shuffles"
-        assert "SortMergeJoin" in plan
-        n = joined.count()
-        assert n == lineitem.count(), "bucketed join lost rows"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-@pytest.mark.spark
 def test_partition_pruning_reaches_scan(spark, tmp_path):
     """A filter on the partition column must prune at the FILE level
     (PartitionFilters), not post-scan — the difference between reading

@@ -101,19 +101,18 @@ def test_spark_matches_oracle_recrawl_distributed_index(spark, monkeypatch):
 def test_seenset_remove_no_false_negative_for_survivors():
     """Deleting key A from the hybrid must never make a DIFFERENT
     inserted key probe as unseen (multiset cuckoo inserts + counting
-    Bloom decrements guarantee it)."""
-    from mhtml_to_html_spark.frontier.seenset import ShardedSeenSet
+    Bloom decrements guarantee it). Runs the crawl's merge, remove and
+    probe kernels in-process."""
+    from tests.helpers import seenset as kernels
 
-    s = ShardedSeenSet(n_shards=4, bloom_bits=1 << 12, cuckoo_buckets=1 << 8)
     keys = [f"https://h{i % 7}.example.com/p/{i}" for i in range(500)]
-    for k in keys:
-        s.add(k)
+    blobs = kernels.merge({}, kernels.h64_of(keys), 4, 1 << 12, 1 << 8)
     removed = keys[::3]
-    for k in removed:
-        s.remove(k)
-    for k in keys:
-        if k not in removed:
-            assert s.might_contain(k), f"false negative for surviving key {k}"
+    blobs = kernels.remove(blobs, kernels.h64_of(removed), 4)
+    survivors = [k for k in keys if k not in removed]
+    seen = kernels.probe(blobs, kernels.h64_of(survivors), 4)
+    for k, hit in zip(survivors, seen):
+        assert hit, f"false negative for surviving key {k}"
 
 
 @pytest.mark.spark

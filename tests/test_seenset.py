@@ -1,14 +1,11 @@
 """Counting-Bloom / cuckoo-filter correctness: no false negatives,
-deletion works, serialization round-trips."""
+deletion works, serialization round-trips. The sharded tests run the
+crawl's seen-set cogroup kernels in-process (tests/helpers/seenset.py)."""
 
 import numpy as np
 
-from mhtml_to_html_spark.frontier.seenset import (
-    CountingBloom,
-    CuckooFilter,
-    ShardedSeenSet,
-    url_hash64,
-)
+from mhtml_to_html_spark.frontier.seenset import CountingBloom, CuckooFilter, url_hash64
+from tests.helpers import seenset as kernels
 
 KEYS = [f"https://host{i % 13}.example.com/p{i}" for i in range(2000)]
 ABSENT = [f"https://other{i}.example.net/x{i}" for i in range(2000)]
@@ -81,61 +78,37 @@ def test_cuckoo_serialization():
 
 
 def test_sharded_hybrid_round_trip():
-    ss = ShardedSeenSet(n_shards=4)
-    for k in KEYS:
-        ss.add(k)
-    assert all(ss.might_contain(k) for k in KEYS)
-    restored = ShardedSeenSet.from_shard_blobs(ss.shard_blobs())
-    assert all(restored.might_contain(k) for k in KEYS)
-    fp = sum(restored.might_contain(k) for k in ABSENT)
-    assert fp / len(ABSENT) < 0.01
-    for k in KEYS[:300]:
-        restored.remove(k)
-    assert all(restored.might_contain(k) for k in KEYS[300:])
-
-
-def test_bloom_merge_equals_single_build():
-    a, b, whole = CountingBloom(1 << 14, 4), CountingBloom(1 << 14, 4), CountingBloom(1 << 14, 4)
-    for k in KEYS[:1000]:
-        a.add(url_hash64(k))
-        whole.add(url_hash64(k))
-    for k in KEYS[1000:]:
-        b.add(url_hash64(k))
-        whole.add(url_hash64(k))
-    a.merge(b)
-    assert np.array_equal(a.counts, whole.counts)
-
-
-def test_cuckoo_merge_no_false_negatives():
-    a, b = CuckooFilter(1 << 10), CuckooFilter(1 << 10)
-    for k in KEYS[:1000]:
-        a.add(url_hash64(k))
-    for k in KEYS[1000:]:
-        b.add(url_hash64(k))
-    a.merge_from(b)
-    assert all(a.contains(url_hash64(k)) for k in KEYS), (
-        "merge lost a fingerprint — the exactly-once guarantee rides on this"
-    )
+    hs = kernels.h64_of(KEYS)
+    blobs = kernels.merge({}, hs, 4, 1 << 16, 1 << 12)
+    assert kernels.probe(blobs, hs, 4).all()
+    restored = kernels.through_arrow(blobs)
+    assert kernels.probe(restored, hs, 4).all()
+    fp = kernels.probe(restored, kernels.h64_of(ABSENT), 4).mean()
+    assert fp < 0.01
+    restored = kernels.remove(restored, hs[:300], 4)
+    assert kernels.probe(restored, hs[300:], 4).all()
 
 
 def test_cuckoo_merge_overflow_lands_in_stash():
-    # deliberately tiny: way past capacity, stash must absorb everything
-    a, b = CuckooFilter(8), CuckooFilter(8)
-    for k in KEYS[:300]:
-        a.add(url_hash64(k))
-    for k in KEYS[300:600]:
-        b.add(url_hash64(k))
-    a.merge_from(b)
-    assert all(a.contains(url_hash64(k)) for k in KEYS[:600])
+    """Adds far past capacity (600 keys, 32 slots) overflow into the
+    stash and are never lost."""
+    cf = CuckooFilter(8)
+    for k in KEYS[:600]:
+        cf.add(url_hash64(k))
+    assert cf.stash
+    assert all(cf.contains(url_hash64(k)) for k in KEYS[:600])
 
 
 def test_sharded_vectorized_probe_matches_scalar():
-    s = ShardedSeenSet(n_shards=8, bloom_bits=1 << 14, cuckoo_buckets=1 << 8)
-    for k in KEYS[:1000]:
-        s.add(k)
-    hs = np.array([url_hash64(k) for k in KEYS[:1000] + ABSENT[:1000]], dtype=np.uint64)
-    vec = s.might_contain_many(hs)
-    scalar = [s.might_contain_h64(int(h)) for h in hs]
+    hs = kernels.h64_of(KEYS[:1000] + ABSENT[:1000])
+    blobs = kernels.merge({}, hs[:1000], 8, 1 << 14, 1 << 8)
+    vec = kernels.probe(blobs, hs, 8)
+    scalar = []
+    for h in hs.astype(np.uint64):
+        blob = blobs[int(h % np.uint64(8))]
+        bloom = CountingBloom.from_bytes(blob["bloom"].iloc[0])
+        cuckoo = CuckooFilter.from_bytes(blob["cuckoo"].iloc[0])
+        scalar.append(bloom.might_contain(int(h)) and cuckoo.contains(int(h)))
     assert vec.tolist() == scalar
     assert vec[:1000].all(), "a seen key probed definitely-new"
 
@@ -150,10 +123,8 @@ def test_sharded_capacity_million_keys():
     absent = (
         rng.integers(0, 1 << 63, size=100_000, dtype=np.int64).astype(np.uint64)
         | np.uint64(1 << 63)
-    )  # disjoint by the top bit
-    s = ShardedSeenSet(n_shards=16, bloom_bits=1 << 20, cuckoo_buckets=1 << 16)
-    for h in present:
-        s.add_h64(int(h))
-    assert s.might_contain_many(present).all(), "false negative at 10^6 keys"
-    fpp = s.might_contain_many(absent).mean()
+    )  # disjoint by the top bit; negative as Spark's signed h64
+    blobs = kernels.merge({}, present, 16, 1 << 20, 1 << 16)
+    assert kernels.probe(blobs, present, 16).all(), "false negative at 10^6 keys"
+    fpp = kernels.probe(blobs, absent, 16).mean()
     assert fpp < 0.02, f"false-positive rate {fpp:.3%} — the prune is useless"

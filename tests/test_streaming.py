@@ -6,11 +6,7 @@ import os
 import pytest
 
 from mhtml_to_html_spark.frontier.indexing import DIST_INDEX_MIN_ROWS
-from mhtml_to_html_spark.streaming import (
-    stream_dedup_events,
-    stream_events_windowed,
-    stream_split_archives,
-)
+from mhtml_to_html_spark.streaming import stream_events_windowed
 from tests.helpers.indexing import two_pass_index
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -59,90 +55,6 @@ def test_streaming_windowed_agg_matches_batch(spark, events_schema, events_dir):
     )
     got = {tuple(r) for r in result.collect()}
     want = {tuple(r) for r in expected.collect()}
-    assert got == want
-
-
-@pytest.mark.spark
-def test_streaming_dedup_matches_batch(spark, events_schema, events_dir):
-    stream = spark.readStream.schema(events_schema).parquet(events_dir)
-    result = _run_available_now(
-        stream_dedup_events(stream).select("event_id"), "deduped", spark
-    )
-    n_stream = result.count()
-    n_batch = (
-        spark.read.parquet(f"{SF_DIR}/events.parquet").select("event_id").distinct().count()
-    )
-    assert n_stream == n_batch
-
-
-@pytest.mark.spark
-def test_streaming_sessionize_matches_batch(spark, events_schema, events_dir):
-    """applyInPandasWithState sessionization == a batch window
-    computation of the same gap-session semantics."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from mhtml_to_html_spark.streaming import stream_sessionize
-
-    gap = "30 minutes"
-    stream = spark.readStream.schema(events_schema).parquet(events_dir)
-    result = _run_available_now(stream_sessionize(stream, gap=gap), "sessions", spark)
-
-    batch = spark.read.parquet(f"{SF_DIR}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gap_ms = 30 * 60_000
-    sessions = (
-        batch.withColumn("prev_ts", F.lag("ts").over(w))
-        .withColumn(
-            "new_session",
-            (F.col("prev_ts").isNull())
-            | ((F.col("ts").cast("long") - F.col("prev_ts").cast("long")) * 1000 > gap_ms),
-        )
-        .withColumn("session_id", F.sum(F.col("new_session").cast("int")).over(w))
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select("user_id", "session_start", "session_end", "n_events", "total_value")
-    )
-    got = sorted(map(tuple, result.collect()))
-    want = sorted(map(tuple, sessions.collect()))
-    # the stream may keep the last session of each user open past the
-    # final watermark; every emitted session must match the batch, and
-    # the bulk of sessions must be emitted
-    want_set = set(want)
-    assert got, "no sessions emitted"
-    assert all(s in want_set for s in got), "a streamed session disagrees with batch"
-    assert len(got) >= len(want) - batch.select("user_id").distinct().count()
-
-
-@pytest.mark.spark
-def test_streaming_split_matches_batch(spark, tmp_path):
-    from mhtml_to_html_spark.operators.split import split_archives
-    from mhtml_to_html_spark.sources.corpus import archives_df
-
-    archives = archives_df(spark, 6, 2, partitions=2)
-    src = str(tmp_path / "archives")
-    archives.write.parquet(src)
-
-    stream = spark.readStream.schema(
-        "archive_id string, content binary, case_family string, eol string"
-    ).parquet(src)
-    result = _run_available_now(
-        stream_split_archives(stream).select("archive_id", "seq", "part_id", "content_type"),
-        "stream_parts",
-        spark,
-    )
-    batch = split_archives(spark.read.parquet(src)).select(
-        "archive_id", "seq", "part_id", "content_type"
-    )
-    got = sorted(tuple(r) for r in result.collect())
-    want = sorted(tuple(r) for r in batch.collect())
     assert got == want
 
 
