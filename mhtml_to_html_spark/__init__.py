@@ -20,6 +20,14 @@ idiomatic Spark DataFrame pipeline:
                   PSNR/phash invariants (no Pillow in env).
 - ``plans``     — snapshot/checkpoint catalog seam (Iceberg-layout-in-
                   miniature over Parquet + JSON manifests).
+
+Importing the package installs :mod:`._zipcache` in the process, so a
+Python worker that runs any of the package's UDFs stops re-reading
+pyspark's zip archives before each task.
 """
+
+from . import _zipcache
+
+_zipcache.install()
 
 __version__ = "0.1.0"

@@ -55,17 +55,39 @@ class CountingBloom:
         dec = np.where((counts > 0) & (counts < 255), counts - 1, counts)
         self.counts[pos] = dec
 
+    def _positions_many(self, h64s: np.ndarray) -> np.ndarray:
+        """:meth:`_positions` of each uint64 key, as an (n, k) array."""
+        h64s = np.asarray(h64s, dtype=np.uint64)
+        h1 = h64s & np.uint64(0xFFFFFFFF)
+        h2 = (h64s >> np.uint64(32)) | np.uint64(1)
+        steps = np.arange(self.k, dtype=np.uint64)
+        return ((h1[:, None] + steps * h2[:, None]) % np.uint64(self.n_bits)).astype(np.int64)
+
+    def _hits(self, h64s: np.ndarray) -> np.ndarray:
+        """Per counter, how many of the uint64 keys ``h64s`` map to it,
+        each key counting a position once (as :meth:`add` does)."""
+        pos = self._positions_many(h64s)
+        first = np.ones(pos.shape, dtype=bool)
+        for j in range(1, self.k):
+            first[:, j] = (pos[:, :j] != pos[:, j : j + 1]).all(axis=1)
+        return np.bincount(pos[first], minlength=self.n_bits)
+
+    def add_many(self, h64s: np.ndarray) -> None:
+        """:meth:`add` of every key, folded at once: adds saturate at
+        255, so the sum clipped once equals the per-key clips."""
+        self.counts = np.minimum(self.counts + self._hits(h64s), 255).astype(np.uint8)
+
+    def remove_many(self, h64s: np.ndarray) -> None:
+        """:meth:`remove` of every key, folded at once: 255 stays
+        sticky, any other counter floors at 0."""
+        c = self.counts.astype(np.int64)
+        self.counts = np.where(c == 255, 255, np.maximum(c - self._hits(h64s), 0)).astype(np.uint8)
+
     def might_contain(self, h64: int) -> bool:
         return bool(np.all(self.counts[self._positions(h64)] > 0))
 
     def might_contain_many(self, h64s: np.ndarray) -> np.ndarray:
-        h1 = (h64s & 0xFFFFFFFF).astype(np.uint64)
-        h2 = ((h64s >> np.uint64(32)) | np.uint64(1)).astype(np.uint64)
-        out = np.ones(len(h64s), dtype=bool)
-        for i in range(self.k):
-            pos = (h1 + np.uint64(i) * h2) % np.uint64(self.n_bits)
-            out &= self.counts[pos.astype(np.int64)] > 0
-        return out
+        return (self.counts[self._positions_many(h64s)] > 0).all(axis=1)
 
     def to_bytes(self) -> bytes:
         return struct.pack("<II", self.n_bits, self.k) + self.counts.tobytes()

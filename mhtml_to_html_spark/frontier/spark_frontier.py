@@ -54,9 +54,10 @@ Scale notes (no single-partition exchange, no driver-held state):
   the driver's seeds and on the fetch UDF's children; recrawls reuse
   seen's columns; snapshots store them), so no round runs a
   canonicalize pass, and the fetch stage runs in whole waves of the
-  session's slots, since each Python task pays ~230ms before its UDF
-  runs (step 7): a robots-on round below slots × 256 fetches starts
-  one robots task plus one fetch task per slot.
+  session's slots, since each Python task pays a fixed ~65ms of slot
+  time before its UDF runs (step 7): a robots-on round below
+  slots × 256 fetches starts one robots task plus one fetch task per
+  slot.
 """
 
 from __future__ import annotations
@@ -89,7 +90,9 @@ _FETCH_SCHEMA = (
 )
 _SEEN_SCHEMA = "key string, h64 long, host string, fetched_round int"
 _SHARD_BLOB_SCHEMA = "shard int, bloom binary, cuckoo binary"
-# fetch-stage task size target (step 7's wave count; sizing rule there)
+# fetch-stage task size target (step 7's wave count; sizing rule
+# there). Set when a Python task's fixed cost was ~300ms; retuning it
+# for the ~65ms the package's _zipcache leaves is still open.
 _FETCH_ROWS_PER_TASK = 256
 # The most rows a host-keyed join side (the robots cache, the debt
 # table) may have and still be broadcast. Both grow with the hosts met;
@@ -182,6 +185,7 @@ def _seenset_merge_fn(bloom_bits: int, cuckoo_buckets: int):
     updated blob row. Work per task is one shard's blob + its adds."""
 
     def merge(key, blob_pdf, adds_pdf):
+        import numpy as np
         import pandas as pd
 
         from .seenset import CountingBloom, CuckooFilter
@@ -192,9 +196,9 @@ def _seenset_merge_fn(bloom_bits: int, cuckoo_buckets: int):
         else:
             bloom = CountingBloom(bloom_bits, 4)
             cuckoo = CuckooFilter(cuckoo_buckets)
-        for h in adds_pdf["h64"]:
-            h = int(h) & 0xFFFFFFFFFFFFFFFF
-            bloom.add(h)
+        hs = adds_pdf["h64"].to_numpy(dtype=np.int64).astype(np.uint64)
+        bloom.add_many(hs)
+        for h in hs.tolist():
             cuckoo.add(h)
         return pd.DataFrame(
             [{"shard": int(key[0]), "bloom": bloom.to_bytes(), "cuckoo": cuckoo.to_bytes()}]
@@ -265,6 +269,7 @@ def _seenset_remove_fn():
     revisited keys through the normal exactly-once machinery."""
 
     def remove(key, blob_pdf, dels_pdf):
+        import numpy as np
         import pandas as pd
 
         from .seenset import CountingBloom, CuckooFilter
@@ -273,9 +278,9 @@ def _seenset_remove_fn():
             return pd.DataFrame(columns=["shard", "bloom", "cuckoo"])
         bloom = CountingBloom.from_bytes(bytes(blob_pdf["bloom"].iloc[0]))
         cuckoo = CuckooFilter.from_bytes(bytes(blob_pdf["cuckoo"].iloc[0]))
-        for h in dels_pdf["h64"]:
-            h = int(h) & 0xFFFFFFFFFFFFFFFF
-            bloom.remove(h)
+        hs = dels_pdf["h64"].to_numpy(dtype=np.int64).astype(np.uint64)
+        bloom.remove_many(hs)
+        for h in hs.tolist():
             cuckoo.remove(h)
         return pd.DataFrame(
             [{"shard": int(key[0]), "bloom": bloom.to_bytes(), "cuckoo": cuckoo.to_bytes()}]
@@ -919,14 +924,16 @@ def crawl_spark(
         # Two opposing costs: the straggler tail of the stage is
         # O(task size) (hold+decode are per-row costs), so finer tasks
         # bound it tighter — but every mapInPandas task pays a fixed
-        # ~230ms before its UDF runs: pyspark's worker_util
-        # setup_spark_files calls importlib.invalidate_caches() per
-        # task, and on Python 3.11 that makes each of the worker's ~16
-        # zipimporters re-read pyspark.zip's central directory. A
-        # decoded fetch costs ~33ms per row (19ms body synthesis + 14ms
-        # parse_mhtml), so at _FETCH_ROWS_PER_TASK = 256 a full task
-        # carries ~8.4s of rows against ~0.23s fixed (~3%); at the old
-        # 24 rows it was ~30%. A partial wave is the worst case of
+        # ~65ms of slot time before its UDF runs (worker hand-off, UDF
+        # unpickling, the Arrow round trip; scripts/python_task_cost.py
+        # measures it). It was ~300ms while pyspark's per-task
+        # importlib.invalidate_caches() made each of the worker's 16
+        # zipimporters re-read its archive on Python 3.11; importing
+        # the package installs _zipcache, which skips unchanged ones.
+        # A decoded fetch costs ~33ms per row (19ms body synthesis +
+        # 14ms parse_mhtml), so at _FETCH_ROWS_PER_TASK = 256 a full
+        # task carries ~8.4s of rows against ~0.07s fixed (<1%); at the
+        # old 24 rows it was ~8%. A partial wave is the worst case of
         # both: 4 tasks on 3 slots run a second wave of ONE task that
         # pays the fixed cost again on the critical path. Policy:
         # slots × waves tasks, waves = ⌈n / (slots · rows per task)⌉

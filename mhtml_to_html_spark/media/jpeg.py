@@ -386,6 +386,16 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     raise ValueError("JPEG carries no scan")
 
 
+def _idct_blocks(coefs: np.ndarray, qtable: np.ndarray) -> np.ndarray:
+    """(n, 8, 8) quantized coefficients → level-shifted pixel blocks:
+    dequantize, then one batched ``A.T @ X @ A`` (two matmuls over the
+    stack; einsum runs this contraction as a naive loop, 2.2 ms against
+    33 µs for 96 blocks).
+    Baseline and progressive decodes both call this one expression, so
+    the same coefficients give bit-equal pixels on either path."""
+    return _A.T @ (coefs * qtable[None, :, :]) @ _A + 128.0
+
+
 def _decode_scan(
     data, pos, frame, scan_tables, qtables, htables, restart_interval, adobe_transform=None
 ):
@@ -480,15 +490,12 @@ def _decode_scan(
     if bitpos > nbits:
         raise ValueError("JPEG scan truncated")
 
-    # batched dequantize + IDCT per component (one einsum instead of
-    # two 8x8 matmuls per block)
+    # batched dequantize + IDCT per component
     planes = []
     for ci, (cid, hs, vs, tq) in enumerate(comps):
         plane = np.zeros((mcus_y * vs * 8, mcus_x * hs * 8), dtype=np.float64)
         coefs = np.asarray(zz_rows[ci], dtype=np.int64)[:, _UNZIGZAG].reshape(-1, 8, 8)
-        blocks = np.einsum(
-            "ij,njk,kl->nil", _A.T, coefs * qtables[tq][None, :, :], _A
-        ) + 128.0
+        blocks = _idct_blocks(coefs, qtables[tq])
         for (y0, x0), block in zip(origins[ci], blocks):
             plane[y0 : y0 + 8, x0 : x0 + 8] = block
         planes.append(plane)
@@ -885,10 +892,7 @@ def _assemble_progressive(frame, geom, coef, qtables, adobe_transform=None):
     for ci, (_cid, hs, vs, tq) in enumerate(comps):
         by, bx = by_total[ci], bx_total[ci]
         coefs = np.asarray(coef[ci], dtype=np.int64)[:, _UNZIGZAG].reshape(-1, 8, 8)
-        blocks = (
-            np.einsum("ij,njk,kl->nil", _A.T, coefs * qtables[tq][None, :, :], _A)
-            + 128.0
-        )
+        blocks = _idct_blocks(coefs, qtables[tq])
         plane = blocks.reshape(by, bx, 8, 8).transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)
         up = np.repeat(np.repeat(plane, vmax // vs, axis=0), hmax // hs, axis=1)
         full.append(up[:h, :w])

@@ -280,12 +280,6 @@ class _TreeBuilder(HTMLParser):
     def handle_comment(self, data):
         self.top.append_child(Comment(data))
 
-    def handle_entityref(self, name):
-        self.top.append_child(Text(f"&{name};"))
-
-    def handle_charref(self, name):
-        self.top.append_child(Text(f"&#{name};"))
-
 
 def parse_html(markup: str) -> Document:
     """Tolerant parse; guarantees html/head structure like the

@@ -30,8 +30,6 @@ ALLOWED = {
     "mime/dom.py::_TreeBuilder.handle_endtag": "HTMLParser callback",
     "mime/dom.py::_TreeBuilder.handle_data": "HTMLParser callback",
     "mime/dom.py::_TreeBuilder.handle_comment": "HTMLParser callback",
-    "mime/dom.py::_TreeBuilder.handle_entityref": "HTMLParser callback",
-    "mime/dom.py::_TreeBuilder.handle_charref": "HTMLParser callback",
     # references that tests compare the live code against
     "operators/dedup.py::minhash_signatures_agg": "reference for the MinHash kernel (test_plans)",
     "operators/dedup.py::simhash_agg": "reference for the SimHash kernel (test_plans)",

@@ -46,6 +46,57 @@ def test_counting_bloom_vectorized_matches_scalar():
     assert (vec == scalar).all()
 
 
+def _per_key_bloom(counts, n_bits, k, adds, dels):
+    bloom = CountingBloom(n_bits, k)
+    bloom.counts = counts.copy()
+    for h in adds:
+        bloom.add(int(h))
+    for h in dels:
+        bloom.remove(int(h))
+    return bloom
+
+
+def test_counting_bloom_many_equals_per_key_fold():
+    """add_many/remove_many give the blob bytes of the per-key fold:
+    duplicate keys, saturated (sticky) counters, counters floored at 0,
+    and a non-power-of-two size where one key's positions can repeat."""
+    rng = np.random.default_rng(7)
+    for n_bits, k in [(64, 4), (97, 4), (1 << 12, 3)]:
+        keys = rng.integers(0, 1 << 63, size=1500, dtype=np.int64).astype(np.uint64)
+        keys[1::2] |= np.uint64(1 << 63)
+        adds = np.concatenate([keys, keys[:300], keys[:300]])  # duplicates
+        dels = np.concatenate([keys[:200], keys[:50], rng.permutation(keys)[:400]])
+        start = rng.integers(0, 256, size=n_bits).astype(np.uint8)
+        start[:5] = 255
+        start[5:10] = 0
+        for a, d in [(adds, []), ([], dels), (adds, dels)]:
+            scalar = _per_key_bloom(start, n_bits, k, a, d)
+            vec = CountingBloom(n_bits, k)
+            vec.counts = start.copy()
+            vec.add_many(np.asarray(a, dtype=np.uint64))
+            vec.remove_many(np.asarray(d, dtype=np.uint64))
+            assert vec.to_bytes() == scalar.to_bytes(), (n_bits, k, len(a), len(d))
+        assert (scalar.counts == 255).any(), "no counter saturated"
+    scalar = _per_key_bloom(np.zeros(97, np.uint8), 97, 4, keys, [])
+    collide = [h for h in keys.tolist() if len(set(scalar._positions(h).tolist())) < 4]
+    assert collide, "no key repeated a position at n_bits=97"
+
+
+def test_seenset_kernels_equal_per_key_fold():
+    """The crawl's merge and remove kernels write the Bloom bytes of a
+    per-key fold of the same keys, duplicates included."""
+    hs = kernels.h64_of(KEYS + KEYS[:400])
+    blobs = kernels.merge({}, hs, 4, 1 << 10, 1 << 8)
+    blobs = kernels.remove(blobs, hs[:700], 4)
+    shard = hs % 4
+    for s, blob in blobs.items():
+        mine = hs[shard == s].astype(np.uint64)
+        expect = _per_key_bloom(
+            np.zeros(1 << 10, np.uint8), 1 << 10, 4, mine, hs[:700][shard[:700] == s].astype(np.uint64)
+        )
+        assert bytes(blob["bloom"].iloc[0]) == expect.to_bytes()
+
+
 def test_counting_bloom_serialization():
     bloom = CountingBloom(1 << 12, 3)
     for k in KEYS[:100]:
