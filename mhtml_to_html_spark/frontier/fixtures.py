@@ -117,19 +117,26 @@ def robots_rules(host: str) -> dict:
     return {"disallow": disallow, "crawl_delay_level": level}
 
 
-def robots_allows(host: str, key: str) -> bool:
-    rules = robots_rules(host)
-    disallow = rules["disallow"]
+def rules_allow(disallow: str | None, key: str) -> bool:
+    """Whether a cache row's ``disallow`` prefix lets the crawl fetch
+    the canonical ``key``."""
     if disallow is None:
         return True
     path = key.split("/", 3)[-1] if key.count("/") >= 3 else ""
     return not ("/" + path).startswith(disallow)
 
 
-def host_token_budget(host: str, base_budget: int) -> int:
+def robots_allows(host: str, key: str) -> bool:
+    return rules_allow(robots_rules(host)["disallow"], key)
+
+
+def token_budget(base_budget: int, crawl_delay_level: int) -> int:
     """Token-bucket refill per round, scaled by the robots crawl delay."""
-    level = robots_rules(host)["crawl_delay_level"]
-    return max(1, base_budget // (1 + level))
+    return max(1, base_budget // (1 + crawl_delay_level))
+
+
+def host_token_budget(host: str, base_budget: int) -> int:
+    return token_budget(base_budget, robots_rules(host)["crawl_delay_level"])
 
 
 def fetch_double(url: str, attempt: int) -> dict:

@@ -88,10 +88,10 @@ def _two_pass_prefix_sum(
     # localCheckpoint pins partition boundaries: the totals job and the
     # final projection must see the SAME range partitioning (range
     # boundary sampling is not otherwise guaranteed stable across jobs).
-    # Lazy: the totals job right below is the first materialization and
-    # persists the blocks — eager would spend a whole extra job per
-    # call on a loop-iterated path (driver job latency is the
-    # width-independent term that caps scaling efficiency)
+    # Under AQE the call itself runs the range exchange (its sampling
+    # job and its map stage); lazy defers only the numbering stage to
+    # the totals job right below, which persists the blocks — eager
+    # would add a count job per call on a loop-iterated path
     indexed = parted.mapInPandas(
         functools.partial(_local_prefix_batches, weight_col=weight_col), schema=out_schema
     ).localCheckpoint(eager=False)

@@ -162,6 +162,25 @@ class CuckooFilter:
             return True
         return (i1, fp) in self.stash or (i2, fp) in self.stash
 
+    def contains_many(self, h64s: np.ndarray) -> np.ndarray:
+        """:meth:`contains` of every uint64 key at once: fingerprints
+        and both bucket indices in numpy, both buckets compared in one
+        pass; only the misses look in the stash."""
+        h = np.asarray(h64s, dtype=np.uint64)
+        fp = ((h >> np.uint64(48)) & np.uint64(0xFFFF)).astype(np.int64)
+        fp[fp == 0] = 1
+        mask = self.n_buckets - 1
+        i1 = (h & np.uint64(mask)).astype(np.int64)
+        # fp < 2^16 and the multiplier < 2^31, so the product fits int64
+        i2 = (i1 ^ (fp * 0x5BD1E995)) & mask
+        fp16 = fp.astype(np.uint16)[:, None]
+        hit = ((self.table[i1] == fp16) | (self.table[i2] == fp16)).any(axis=1)
+        if self.stash:
+            for j in np.flatnonzero(~hit).tolist():
+                f = int(fp[j])
+                hit[j] = (int(i1[j]), f) in self.stash or (int(i2[j]), f) in self.stash
+        return hit
+
     def remove(self, h64: int) -> bool:
         fp = self._fingerprint(h64)
         i1 = self._index1(h64)

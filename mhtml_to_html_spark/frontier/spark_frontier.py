@@ -1,19 +1,29 @@
 """Distributed URL frontier: driver fixpoint loop over DataFrames.
 
-Each round (the Spark shape of SURVEY.md §3.3):
+Each round (the Spark shape of SURVEY.md §3.3) is one host-keyed Spark
+stage between cheap JVM steps; every step runs under the job group
+``crawl:r<round>:<step>``:
 
-    [drained? recrawl injection: stalest-per-host revisits re-enter;
-     their keys DELETED from the exact seen table + hybrid filter]
-    canonical frontier ──▶ dedup-first (min_by on key)
-             ──sharded bloom+cuckoo prune + exact anti-join──▶ new candidates
-             ──per-host budget window ordered by (depth, host_rank,
-               disc_seq) (+ opt-in politeness-debt boost, robots
-               token-bucket)──▶ fetch_now / deferred
-             ──global fetch position over the same keys──▶ manifest
-             ──fetch UDF (scripted double, retry/backoff; canonicalizes
-               the children it emits)──▶ results
-             ──explode children──▶ discovered
-    seen/failed/metrics updated; snapshot checkpoint; repeat.
+    recrawl   [drained? stalest-per-host revisits re-enter; their keys
+               DELETED from the exact seen table + hybrid filter]
+    prune     canonical fresh rows ──sharded bloom+cuckoo probe (at
+              probe_threshold seen keys) + exact anti-join against
+              seen ∪ failed ∪ blocked──▶ ∪ the deferred backlog
+              ──robots-cache (+ debt) join on host──▶ candidates
+    kernel    repartition(n, host).groupBy(host).applyInPandas: per
+              host, :func:`_host_round` → :func:`_admit_host_batch`:
+              dedup (min disc_seq) → robots (cached rules, or fetched
+              for a first-met host and emitted as a cache row) → token
+              budget (+ opt-in debt boost) → :func:`fetch_row` per
+              admitted key. Out: ok/failed rows with canonical
+              children, deferred, blocked, robots and debt rows, in
+              one eager checkpoint whose job also observes the round's
+              counters
+    index     global fetch position over (depth, host_rank, disc_seq)
+    discover  posexplode the children; disc_seq continues the global
+              counter in (parent fetch order, document order)
+    commit    seen/failed/blocked/robots/debt unions, seen-set fold,
+              snapshot; repeat.
 
 Determinism contract: every "first" and every position is derived from
 explicit columns (depth, host_rank, disc_seq) — the pure-Python oracle
@@ -32,32 +42,36 @@ Scale notes (no single-partition exchange, no driver-held state):
   source of truth: a filter false positive never drops a URL (exact
   anti-join verifies the maybe-seen sliver), and because neither
   structure has false negatives, a seen URL is never refetched;
-- the priority queue is the per-host politeness window (partitioned
-  by host, ordered by depth, host_rank, disc_seq) plus the global
-  fetch position below. The window's host exchange is its only
-  shuffle, and a robots or debt hash join on host (above
-  :data:`BROADCAST_MAX_ROWS`) already provides that partitioning, so
-  the window reuses it;
+- the per-host politeness scheduler is one grouped-pandas stage: the
+  host exchange is the round's only shuffle of candidate rows, and no
+  host state grows per URL (a host brings its round's candidates, one
+  robots cache row and one debt row);
 - global fetch positions, discovery sequence numbers and recrawl
   sequence numbers come from indexing.index_rows: the two-pass
   zipWithIndex index over range-partitioned data once the rows to
   index reach indexing.DIST_INDEX_MIN_ROWS, one window task below it.
   Both paths produce the identical logical order and both are pinned
   to the oracle by tests;
-- per-round metrics are one agg; nothing per-row ever reaches the
-  driver (the test-contract order collection at the very end is the
-  only exception, and ``collect_order=False`` turns it off);
+- per-round counters are observed on the kernel's checkpoint job;
+  nothing per-row ever reaches the driver (the test-contract order
+  collection at the very end is the only exception, and
+  ``collect_order=False`` turns it off);
 - driver-side frames (seeds, empty state tables) are Arrow-built JVM
   ``LocalRelation``s (:func:`local_frame`), so empty state is pruned
   from unions and anti-joins by the optimizer and no scan runs Python;
 - frontier rows are canonical from birth (:func:`canonical_fields` on
-  the driver's seeds and on the fetch UDF's children; recrawls reuse
-  seen's columns; snapshots store them), so no round runs a
-  canonicalize pass, and the fetch stage runs in whole waves of the
+  the driver's seeds and on :func:`fetch_row`'s children; recrawls
+  reuse seen's columns; snapshots store them), so no round runs a
+  canonicalize pass, and the kernel stage runs in whole waves of the
   session's slots, since each Python task pays a fixed ~65ms of slot
-  time before its UDF runs (step 7): a robots-on round below
-  slots × 256 fetches starts one robots task plus one fetch task per
-  slot.
+  time before its UDF runs: a round below slots × 256 candidates runs
+  one kernel task per slot and no other Python task.
+
+Under adaptive execution, ``localCheckpoint`` runs every shuffle stage
+of its plan when it is called, lazy or not (``AdaptiveSparkPlanExec``
+finalizes the plan on ``execute()``): a lazy checkpoint defers only its
+last stage to the first action. Those jobs run under the job group of
+the step that calls the checkpoint.
 """
 
 from __future__ import annotations
@@ -66,12 +80,20 @@ import functools
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.catalog import SnapshotCatalog
 from ..urlnorm import canonicalize_url, is_fetchable, url_host
-from .fixtures import children_of, fetch_with_retries, host_rank, host_rank_col
+from .fixtures import (
+    children_of,
+    fetch_with_retries,
+    host_rank,
+    host_rank_col,
+    robots_rules,
+    rules_allow,
+    token_budget,
+)
 from .indexing import index_rows
 from .seenset import url_hash64
 
@@ -81,24 +103,38 @@ _CANON_FIELDS = "key string, host string, host_rank int, h64 long"
 _CANON_SCHEMA = f"url string, depth int, disc_seq long, {_CANON_FIELDS}"
 _CANON_COLS = ["url", "depth", "disc_seq", "key", "host", "host_rank", "h64"]
 _CHILD_FIELDS = ("url", "key", "host", "host_rank", "h64")
-# the children :func:`fetch_row` emits, as the fetch UDF and the
-# streaming gate both output them
+# the children :func:`fetch_row` emits
 _CHILDREN_TYPE = f"array<struct<url string, {_CANON_FIELDS}>>"
-_FETCH_SCHEMA = (
-    "key string, host string, depth int, disc_seq long, pos long, status string, "
-    f"attempts int, delay_ms long, h64 long, children {_CHILDREN_TYPE}"
+# :func:`_admit_host_batch`'s rows: the canonical row plus its verdict
+# (ok, failed, deferred or blocked) and fetch result; both crawls emit
+# them (the streaming gate as its output rows)
+_ADMIT_SCHEMA = (
+    f"{_CANON_SCHEMA}, status string, attempts int, delay_ms long, "
+    f"children {_CHILDREN_TYPE}"
 )
+_ADMIT_COLS = _CANON_COLS + ["status", "attempts", "delay_ms", "children"]
+# the batch round kernel's rows: admission rows plus one host-state row
+# kind each for a first-met host's robots rules (status 'robots') and a
+# host's overflow count (status 'debt', debt_boost only)
+_KERNEL_SCHEMA = f"{_ADMIT_SCHEMA}, disallow string, crawl_delay_level int, debt long"
+_KERNEL_COLS = _ADMIT_COLS + ["disallow", "crawl_delay_level", "debt"]
+# the total order discovered children are numbered in: parent fetch
+# order (depth, host_rank, disc_seq — the order ``pos`` ranks), then
+# document order
+_CHILD_ORDER = ["p_depth", "p_rank", "p_seq", "child_idx"]
 _SEEN_SCHEMA = "key string, h64 long, host string, fetched_round int"
 _SHARD_BLOB_SCHEMA = "shard int, bloom binary, cuckoo binary"
-# fetch-stage task size target (step 7's wave count; sizing rule
-# there). Set when a Python task's fixed cost was ~300ms; retuning it
-# for the ~65ms the package's _zipcache leaves is still open.
-_FETCH_ROWS_PER_TASK = 256
-# The most rows a host-keyed join side (the robots cache, the debt
-# table) may have and still be broadcast. Both grow with the hosts met;
-# above this they take a plain hash join on host, whose exchange the
-# step-5 politeness window reuses (at 10^7-10^8 hosts a forced
-# broadcast is a multi-GB executor OOM).
+# kernel-stage task size target (the wave count; sizing rule at the
+# kernel step). Set when a Python task's fixed cost was ~300ms;
+# retuning it for the ~65ms the package's _zipcache leaves is still open.
+_KERNEL_ROWS_PER_TASK = 256
+# The most rows a join side may have and still be broadcast: the robots
+# cache and the debt table (both grow with the hosts met) and the seen
+# ∪ failed ∪ blocked keys of the prune's anti-join. Above it they take a
+# plain hash join (at 10^7-10^8 hosts a forced broadcast is a multi-GB
+# executor OOM). The crawl knows each side's row count, so it decides
+# up front: a checkpointed side has no size estimate, and AQE would
+# otherwise run both sides' shuffles before switching to a broadcast.
 BROADCAST_MAX_ROWS = 100_000
 # Seen-set sizing. The hybrid filters are an accelerator, never the
 # source of truth, so undersizing degrades the prune (more rows pay the
@@ -113,8 +149,9 @@ BROADCAST_MAX_ROWS = 100_000
 SEEN_SHARDS = 8
 SEEN_BLOOM_BITS = 1 << 18
 SEEN_CUCKOO_BUCKETS = 1 << 13
-# rounds of robots-cache union pieces between lineage flattens (step 4)
-ROBOTS_FLATTEN_EVERY = 8
+# the local properties a job group sets; crawl_spark restores the
+# caller's values on return
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
@@ -237,9 +274,8 @@ def _seenset_probe_fn(out_schema_cols):
         cuckoo = CuckooFilter.from_bytes(bytes(blob_pdf["cuckoo"].iloc[0]))
         hs = cand_pdf["h64"].to_numpy(dtype=np.int64).astype(np.uint64)
         maybe = bloom.might_contain_many(hs)
-        hit_idx = np.where(maybe)[0]
-        for j in hit_idx:
-            maybe[j] = cuckoo.contains(int(hs[j]))
+        hit_idx = np.flatnonzero(maybe)
+        maybe[hit_idx] = cuckoo.contains_many(hs[hit_idx])
         return cand_pdf.assign(maybe_seen=maybe)
 
     return probe
@@ -298,24 +334,6 @@ def seenset_remove(seenset_df: DataFrame, dels: DataFrame, n_shards: int) -> Dat
         .cogroup(keyed.groupby("shard"))
         .applyInPandas(_seenset_remove_fn(), schema=_SHARD_BLOB_SCHEMA)
     )
-
-
-def _robots_batches(batches):
-    """Robots 'fetch' for newly met hosts → cache rows (deterministic
-    double; production swaps in an HTTP robots.txt fetch)."""
-    import pandas as pd
-
-    from .fixtures import robots_rules
-
-    for pdf in batches:
-        rules = [robots_rules(h) for h in pdf["host"]]
-        yield pd.DataFrame(
-            {
-                "host": pdf["host"],
-                "disallow": [r["disallow"] for r in rules],
-                "crawl_delay_level": [r["crawl_delay_level"] for r in rules],
-            }
-        )
 
 
 def extract_links(body: bytes) -> list[str]:
@@ -377,9 +395,9 @@ def fetch_row(
 ) -> tuple[str, int, int, int, list[dict]]:
     """One URL's fetch work: fetch with retry/backoff, h64, the
     optional decode, discovery, and the children's canonical fields.
-    It is the crawl's one per-URL fetch kernel: the batch fetch UDF
-    (:func:`_fetch_batches`) runs it per manifest row and the streaming
-    gate (``streaming/frontier.py``) per admitted key. ``stand_in``
+    It is the crawl's one per-URL fetch kernel: :func:`_admit_host_batch`
+    runs it per admitted key, for the batch round kernel and the
+    streaming gate alike. ``stand_in``
     (unsigned h64 → MHTML body, see :func:`stand_in_pool`) turns the
     decode on: the real body is decoded when the fetch returned one,
     else the stand-in's synthesized archive. Returns ``(status,
@@ -436,8 +454,8 @@ def stand_in_pool(payload_images: int, payload_scale: int):
     per URL, uncached; that is the measured work.
 
     The pool lives for ONE Spark task (``TaskContext.taskAttemptId()``),
-    for the fetch UDF (one ``mapInPandas`` call per task) and the
-    streaming gate (one call per host, many hosts per task) alike: a
+    for the batch round kernel and the streaming gate alike (one call
+    per host, many hosts per task): a
     worker-lifetime pool would let later tasks and jobs reuse bodies
     earlier ones synthesized, speeding up the stand-in, not the engine.
     Outside a task (in-process callers) each call gets a fresh pool.
@@ -464,36 +482,183 @@ def stand_in_pool(payload_images: int, payload_scale: int):
     return stand_in
 
 
-def _fetch_batches(
-    batches,
-    decode_payload: bool = False,
-    payload_images: int = 2,
-    payload_scale: int = 1,
+def _admit_host_batch(
+    batch, seen: set, host_budget: int, rules: dict | None = None, debt: int = 0, **fetch_kw
+) -> list[tuple]:
+    """The per-host admission kernel both crawls run, on one host's
+    canonical rows (``_CANON_COLS``): the batch round kernel
+    (:func:`_host_round`) once per host and round, the streaming
+    politeness gate once per host and micro-batch. In order:
+
+    - dedup: the minimum ``disc_seq`` of a key wins (a deferred backlog
+      row beats any later rediscovery of its key);
+    - seen: a key whose unsigned h64 is in ``seen`` is dropped, and
+      admitted and blocked keys join it (the gate's all-time per-host
+      set; the batch crawl prunes seen keys upstream and passes an
+      empty set);
+    - robots: with ``rules`` (a robots cache row: ``disallow``,
+      ``crawl_delay_level``) a disallowed key is ``blocked`` once and
+      the level scales the token budget;
+    - budget: plus ``min(debt, budget)``, the opt-in debt boost (≤ 2×);
+    - fetch: in (depth, host_rank, disc_seq) order, up to the budget,
+      each through ``fetch_row(key, **fetch_kw)``; the rest is
+      ``deferred``.
+
+    Returns the output rows (``_ADMIT_COLS``); only fetched rows carry
+    children."""
+    budget = host_budget if rules is None else token_budget(host_budget, rules["crawl_delay_level"])
+    budget += min(debt, budget)
+    batch = (
+        batch.sort_values("disc_seq")
+        .drop_duplicates("key")
+        .sort_values(["depth", "host_rank", "disc_seq"])
+    )
+    rows = []
+    admitted = 0
+    for r in batch[_CANON_COLS].itertuples(index=False):
+        h = int(r.h64) & 0xFFFFFFFFFFFFFFFF
+        if h in seen:
+            continue  # exactly-once across the whole stream
+        if rules is not None and not rules_allow(rules["disallow"], r.key):
+            seen.add(h)  # permanently blocked — reported exactly once
+            rows.append((*r, "blocked", 0, 0, []))
+        elif admitted < budget:
+            status, attempts, delay_ms, _h64, children = fetch_row(r.key, **fetch_kw)
+            seen.add(h)
+            admitted += 1
+            rows.append((*r, status, attempts, delay_ms, children))
+        else:
+            rows.append((*r, "deferred", 0, 0, []))
+    return rows
+
+
+def _host_state_row(host: str, status: str, disallow=None, crawl_delay_level=0, debt=0):
+    """A kernel row (``_KERNEL_COLS``) that carries host state, not a
+    URL: numeric placeholders are 0, never None, so pandas keeps every
+    int column int64 (a None would turn h64 into float64 and round it)."""
+    row = dict.fromkeys(_KERNEL_COLS, 0) | {
+        "url": None, "key": None, "children": None, "host": host, "status": status,
+        "disallow": disallow, "crawl_delay_level": crawl_delay_level, "debt": debt,
+    }
+    return tuple(row[c] for c in _KERNEL_COLS)
+
+
+def _host_round(
+    host_budget: int,
+    use_robots: bool,
+    debt_boost: bool,
+    decode_payload: bool,
+    payload_images: int,
+    payload_scale: int,
     **fetch_kw,
 ):
-    """The fetch UDF: :func:`fetch_row` over every manifest row."""
-    import pandas as pd
+    """The round kernel's ``applyInPandas`` function, bound to the
+    crawl's settings (a closure: pyspark cannot read the type hints of
+    a ``functools.partial``). Per host, its candidate rows arrive with
+    the robots cache row joined on (``disallow``,
+    ``crawl_delay_level``; a null level means the host is met for the
+    first time) and, with ``debt_boost``, last round's overflow count
+    (``debt``). A first-met host's rules come from ``robots_rules``
+    (deterministic double; production swaps in an HTTP robots.txt
+    fetch) and leave as a ``robots`` row for the cache; with
+    ``debt_boost`` a host that defers rows leaves a ``debt`` row. Rows
+    are ``_KERNEL_COLS``."""
+    status_at = _ADMIT_COLS.index("status")
 
-    stand_in = stand_in_pool(payload_images, payload_scale) if decode_payload else None
-    cols = [
-        "key", "host", "depth", "disc_seq", "pos", "status", "attempts",
-        "delay_ms", "h64", "children",
+    def host_round(key, pdf):
+        import pandas as pd
+
+        (host,) = key
+        rules = None
+        state = []
+        if use_robots:
+            level = pdf["crawl_delay_level"].iloc[0]
+            if pd.isna(level):
+                rules = robots_rules(host)
+                state.append(_host_state_row(host, "robots", **rules))
+            else:
+                disallow = pdf["disallow"].iloc[0]
+                rules = {
+                    "disallow": None if pd.isna(disallow) else disallow,
+                    "crawl_delay_level": int(level),
+                }
+        debt = 0
+        if debt_boost and not pd.isna(pdf["debt"].iloc[0]):
+            debt = int(pdf["debt"].iloc[0])
+        stand_in = stand_in_pool(payload_images, payload_scale) if decode_payload else None
+        rows = _admit_host_batch(
+            pdf, set(), host_budget, rules, debt, stand_in=stand_in, **fetch_kw
+        )
+        n_deferred = sum(r[status_at] == "deferred" for r in rows)
+        if debt_boost and n_deferred:
+            state.append(_host_state_row(host, "debt", debt=n_deferred))
+        return pd.DataFrame([(*r, None, 0, 0) for r in rows] + state, columns=_KERNEL_COLS)
+
+    return host_round
+
+
+def _kernel_counters() -> list:
+    """The round's counters over the kernel's rows, observed on the
+    job that checkpoints them."""
+    status = F.col("status")
+
+    def n(*statuses):
+        return F.sum(status.isin(*statuses).cast("long"))
+
+    return [
+        n("ok", "failed").alias("fetched"),
+        n("ok").alias("ok"),
+        n("deferred").alias("deferred"),
+        n("blocked").alias("blocked"),
+        n("robots").alias("robots"),
+        n("debt").alias("debt"),
+        F.sum("attempts").alias("attempts"),
+        F.sum("delay_ms").alias("delay_ms"),
+        F.sum(F.when(status == "ok", F.size("children"))).alias("children"),
     ]
-    for pdf in batches:
-        rows = [
-            (key, host, int(depth), int(disc_seq), int(pos),
-             *fetch_row(key, stand_in=stand_in, **fetch_kw))
-            for key, host, depth, disc_seq, pos in zip(
-                pdf["key"], pdf["host"], pdf["depth"], pdf["disc_seq"], pdf["pos"]
-            )
-        ]
-        yield pd.DataFrame(rows, columns=cols)
 
 
-def _host_side(df: DataFrame, n_rows: int) -> DataFrame:
-    """A host-keyed join side as the crawl joins it: broadcast up to
-    :data:`BROADCAST_MAX_ROWS` rows, a plain hash join on host above."""
+def discovered_rows(ok: DataFrame, n_rows: int, start: int) -> tuple[DataFrame, int | None]:
+    """The next frontier's canonical rows (``_CANON_COLS``) from the
+    children ``fetch_row`` emitted on the ``ok`` admission rows, at
+    depth + 1: one JVM-side posexplode, never a second Python pass.
+    ``disc_seq`` continues the crawl-global counter from ``start`` in
+    (parent fetch order, document order), :data:`_CHILD_ORDER`,
+    indexed by ``index_rows`` with ``n_rows`` (the exact children count
+    or an upper bound) picking the path. Both crawls discover through
+    it. Returns ``(rows, count)`` as ``index_rows`` does."""
+    children = ok.select(
+        F.col("depth").alias("p_depth"),
+        F.col("host_rank").alias("p_rank"),
+        F.col("disc_seq").alias("p_seq"),
+        F.posexplode("children").alias("child_idx", "c"),
+        (F.col("depth") + 1).cast("int").alias("depth"),
+    ).select(*_CHILD_ORDER, "depth", *(F.col(f"c.{f}").alias(f) for f in _CHILD_FIELDS))
+    discovered, n = index_rows(children, _CHILD_ORDER, "disc_seq", n_rows, start=start)
+    return discovered.select(*_CANON_COLS), n
+
+
+def _join_side(df: DataFrame, n_rows: int) -> DataFrame:
+    """A join side of ``n_rows`` rows as the crawl joins it: broadcast up
+    to :data:`BROADCAST_MAX_ROWS` rows, a plain hash join above."""
     return df if n_rows > BROADCAST_MAX_ROWS else F.broadcast(df)
+
+
+def _restores_job_group(fn):
+    """Run ``fn(spark, ...)`` and then restore the caller's job group,
+    which ``fn`` sets per step."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, *args, **kw):
+        sc = spark.sparkContext
+        saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
+        try:
+            return fn(spark, *args, **kw)
+        finally:
+            for k, v in zip(_JOB_GROUP_PROPS, saved):
+                sc.setLocalProperty(k, v)
+
+    return run
 
 
 @dataclass
@@ -506,6 +671,7 @@ class SparkCrawlResult:
     snapshots: list[int] = field(default_factory=list)
 
 
+@_restores_job_group
 def crawl_spark(
     spark: SparkSession,
     seeds: list[str],
@@ -535,10 +701,15 @@ def crawl_spark(
     Sizes are module constants, read where they are used: the
     seen-set's :data:`SEEN_SHARDS`, :data:`SEEN_BLOOM_BITS` and
     :data:`SEEN_CUCKOO_BUCKETS` (sizing rule beside them),
-    :data:`BROADCAST_MAX_ROWS` for the robots and debt joins,
-    :data:`ROBOTS_FLATTEN_EVERY`, and indexing.DIST_INDEX_MIN_ROWS for
-    every global index. ``fetcher="http"`` fetches with httpclient's
-    default timeout."""
+    :data:`BROADCAST_MAX_ROWS` for the seen, robots and debt joins, and
+    indexing.DIST_INDEX_MIN_ROWS for every global index.
+    ``fetcher="http"`` fetches with httpclient's default timeout.
+
+    Every Spark job runs in the job group ``crawl:r<round>:<step>``,
+    step ∈ recrawl, prune, kernel, index, discover, commit (resume's
+    reads count under the first round's ``recrawl``, the final
+    ``collect_order`` reads under the last round's ``commit``); the
+    caller's job group is restored on return."""
     if discover == "parse" and fetcher != "http":
         # the scripted double carries no body, so parse-discovery would
         # silently crawl nothing past the seeds
@@ -546,23 +717,32 @@ def crawl_spark(
 
     result = SparkCrawlResult()
     catalog = SnapshotCatalog(checkpoint_dir) if checkpoint_dir else None
+    sc = spark.sparkContext
+
+    def step(round_idx: int, name: str) -> None:
+        sc.setJobGroup(f"crawl:r{round_idx}:{name}", f"crawl_spark round {round_idx}: {name}")
 
     # seen carries (host, fetched_round) for the recrawl scheduler;
     # failed/blocked are permanent deny-lists and stay (key, h64)
     empty_seen = local_frame(spark, [], _SEEN_SCHEMA)
     empty_keys = local_frame(spark, [], "key string, h64 long")
+    empty_robots = local_frame(
+        spark, [], "host string, disallow string, crawl_delay_level int"
+    )
+    debt_df = empty_debt = local_frame(spark, [], "host string, debt long")
+    seenset_df = local_frame(spark, [], _SHARD_BLOB_SCHEMA)
+    # the deferred backlog: canonical rows that rejoin the next round
+    # past the seen prune (a deferred key cannot enter seen/failed/
+    # blocked while it waits), where the kernel's dedup lets them beat
+    # any rediscovery of their keys
+    pending = empty_frontier = local_frame(spark, [], _CANON_SCHEMA)
+    n_pending = 0
     start_round = 0
     disc_total = 0
     # the injection budget must survive resume: a resumed crawl that
     # forgot its past injections would exceed max_recrawls and diverge
     # from both the oracle and the uninterrupted run
     recrawls_done = 0
-
-    empty_robots = local_frame(
-        spark, [], "host string, disallow string, crawl_delay_level int"
-    )
-    debt_df = empty_debt = local_frame(spark, [], "host string, debt long")
-    seenset_df = local_frame(spark, [], _SHARD_BLOB_SCHEMA)
     # the snapshot's tables, for the write, resume and the reload after
     # each write; loading a table the snapshot lacks raises
     snap_tables = ["frontier", "seen", "failed", "order", "seenset"] + (
@@ -581,6 +761,7 @@ def crawl_spark(
     # adds into the shard blobs before that point is a pure
     # shuffle+checkpoint tax — one cogroup per round for nothing
     seen_pending = None
+    n_robots_hosts = 0
     if resume and catalog is not None and catalog.latest() is not None:
         manifest = catalog.latest()
         snap = manifest["snapshot_id"]
@@ -590,7 +771,10 @@ def crawl_spark(
         disc_total = manifest["metrics"]["disc_total"]
         recrawls_done = int(manifest["metrics"]["recrawls_done"])
         result.metrics = manifest["metrics"]["rounds"]
+        step(start_round, "recrawl")
         expected_frontier = frontier.count()
+        # seeds the incremental robots-host counter
+        n_robots_hosts = robots_cache.count() if use_robots else 0
     else:
         rows = seed_rows(seeds)
         frontier = local_frame(spark, rows, _CANON_SCHEMA)
@@ -604,46 +788,41 @@ def crawl_spark(
         robots_cache = empty_robots
         blocked = empty_keys
 
-    # the politeness backlog (deferred rows) is carried between rounds
-    # past admission: a row that cleared it once (dedup + seen prune +
-    # robots) never re-pays it. At 10^10-URL scale a throttled host's
-    # whole queue would otherwise recycle through the dedup shuffle,
-    # the filter probe and the rules join on EVERY round —
-    # O(backlog × rounds) admission work for rows whose verdict cannot
-    # change (deferred keys cannot enter seen/failed/blocked while they
-    # wait, and robots rules per host are immutable once cached).
-    pend_cols = list(_CANON_COLS)
-    if use_robots:
-        pend_cols.append("crawl_delay_level")
-    empty_pending = local_frame(
-        spark, [], _CANON_SCHEMA + (", crawl_delay_level int" if use_robots else "")
-    )
-    pending = empty_pending
-    n_pending = 0
-
     have_seen = start_round > 0
     seen_total = sum(m["fetched"] + m["blocked"] for m in result.metrics)
-    n_par = max(spark.sparkContext.defaultParallelism, 4)
-    robots_chain_len = 0
+    n_slots = sc.defaultParallelism
+    n_par = max(n_slots, 4)
     n_debt_hosts = 0
-    # resume: one count() seeds the incremental robots-host counter
-    n_robots_hosts = robots_cache.count() if use_robots and start_round > 0 else 0
+    kernel = _host_round(
+        host_budget=host_budget,
+        use_robots=use_robots,
+        debt_boost=debt_boost,
+        decode_payload=decode_payload,
+        payload_images=payload_images,
+        payload_scale=payload_scale,
+        hold_ms=hold_ms,
+        fetcher=fetcher,
+        discover=discover,
+        fanout=fanout,
+        n_hosts=n_hosts,
+    )
+    round_idx = start_round
 
     for round_idx in range(start_round, max_rounds):
-        # 0. recrawl injection: when the frontier drains with rounds
-        #    left, re-enqueue each host's ``recrawl_budget`` stalest
-        #    seen pages (plan_recrawl's manifest — per-host top-N, no
-        #    global sort) at depth 0 with fresh disc_seq assigned in
-        #    (host, rank) order. The revisited keys are REMOVED from
-        #    the exact seen table AND the hybrid filter first — the
-        #    counting-Bloom decrements, the cuckoo deletes its
-        #    fingerprint (deletion is why the Bloom counts) — so the
-        #    unchanged exactly-once machinery re-admits exactly them.
-        #    The revisits number at most seen_total rows (hosts×budget
-        #    can be huge at 10^7 hosts), so that bound picks the index
-        #    path. A seen key is already canonical, so the revisit rows
-        #    are built in the JVM from seen's own (key, h64, host) — no
-        #    canonicalize pass.
+        # recrawl injection: when the frontier drains with rounds left,
+        # re-enqueue each host's ``recrawl_budget`` stalest seen pages
+        # (plan_recrawl's manifest — per-host top-N, no global sort) at
+        # depth 0 with fresh disc_seq assigned in (host, rank) order.
+        # The revisited keys are REMOVED from the exact seen table AND
+        # the hybrid filter first — the counting-Bloom decrements, the
+        # cuckoo deletes its fingerprint (deletion is why the Bloom
+        # counts) — so the unchanged exactly-once machinery re-admits
+        # exactly them. The revisits number at most seen_total rows
+        # (hosts×budget can be huge at 10^7 hosts), so that bound picks
+        # the index path. A seen key is already canonical, so the
+        # revisit rows are built in the JVM from seen's own (key, h64,
+        # host) — no canonicalize pass.
+        step(round_idx, "recrawl")
         n_recrawled = 0
         if expected_frontier == 0 and recrawl_budget > 0 and recrawls_done < max_recrawls:
             revisits = plan_recrawl(
@@ -690,396 +869,179 @@ def crawl_spark(
         if expected_frontier == 0:
             break
 
-        # 1. the fresh rows (seeds/discoveries/recrawls) are canonical
-        #    from birth: the driver canonicalizes seeds, the fetch UDF
-        #    its children, and recrawls reuse seen's columns — no round
-        #    runs a canonicalize pass. The deferred backlog rejoins
-        #    after the robots gate (step 4).
-
-        # 2. within-round first-discovery dedup: deterministic min_by on
-        #    the explicit disc_seq (never dropDuplicates — shuffle-order
-        #    unstable). min_by aggregates map-side, so only one row per
-        #    key reaches the shuffle — cheaper than a window sort at
-        #    frontier scale.
-        deduped = (
-            frontier.groupBy("key")
-            .agg(
-                F.min_by(
-                    F.struct("url", "depth", "disc_seq", "host", "host_rank", "h64"), "disc_seq"
-                ).alias("first")
-            )
-            .select("first.url", "first.depth", "first.disc_seq", "key", "first.host", "first.host_rank", "first.h64")
-        )
-
-        # 3. seen/failed pruning: the sharded Bloom+cuckoo hybrid prunes
-        #    (definitely-new URLs skip the anti-join entirely); the
-        #    exact anti-join verifies the maybe-seen sliver, keeping the
-        #    crawl false-positive-free. The probe co-partitions
-        #    candidates with the shard blobs — nothing is broadcast.
-        #    Below ``probe_threshold`` seen keys the filter accelerates
-        #    nothing (the exact anti-join is already a small-table
-        #    join), so the prune stage is skipped — the filter is an
-        #    accelerator by contract, never the source of truth.
+        # prune (lazy): the fresh rows (seeds/discoveries/recrawls) are
+        # canonical from birth. The sharded Bloom+cuckoo hybrid prunes
+        # (definitely-new URLs skip the anti-join entirely); the exact
+        # anti-join verifies the maybe-seen sliver, keeping the crawl
+        # false-positive-free. The probe co-partitions rows with the
+        # shard blobs — nothing is broadcast. Below ``probe_threshold``
+        # seen keys the filter accelerates nothing (the exact anti-join
+        # is already a small-table join), so the probe is skipped — the
+        # filter is an accelerator by contract, never the source of
+        # truth. The backlog rejoins past the prune; the robots cache
+        # (and debt) then join on host. Every join side takes the
+        # BROADCAST_MAX_ROWS rule (:func:`_join_side`).
+        step(round_idx, "prune")
+        candidates = frontier
         if have_seen:
             seen_all = seen.select("key", "h64").unionByName(failed)
             if use_robots:
                 seen_all = seen_all.unionByName(blocked)
+            seen_all = _join_side(seen_all.select("key"), seen_total)
             if seen_total >= probe_threshold:
-                probed = seenset_probe(deduped, seenset_df, SEEN_SHARDS)
+                probed = seenset_probe(candidates, seenset_df, SEEN_SHARDS)
                 definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
                 maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-                verified_new = maybe.join(seen_all.select("key"), "key", "left_anti")
+                verified_new = maybe.join(seen_all, "key", "left_anti")
                 candidates = definite_new.unionByName(verified_new)
             else:
-                candidates = deduped.join(seen_all.select("key"), "key", "left_anti")
-        else:
-            candidates = deduped
+                candidates = candidates.join(seen_all, "key", "left_anti")
         if n_pending:
-            # first-discovery vs the backlog is ONE anti-join: a
-            # pending row's disc_seq is strictly smaller than any
-            # fresh discovery's (the counter is monotone), so the
-            # pending row always wins
-            candidates = candidates.join(pending.select("key"), "key", "left_anti")
-
-        # 4. robots gate: the cache table grows by the round's newly
-        #    met hosts ('fetched' via the deterministic double), then a
-        #    join classifies candidates; disallowed URLs go to the
-        #    permanent blocked set. The cache grows with every host
-        #    ever met, so the join takes the BROADCAST_MAX_ROWS rule
-        #    (:func:`_host_side`).
-        n_blocked = 0
-        newly_blocked = None
+            candidates = candidates.unionByName(pending)
         if use_robots:
-            # the new-hosts count below and step 5's politeness
-            # materialization BOTH consume the candidate pipeline; cut
-            # it once (lazily — the count materializes it) so robots-on
-            # rounds don't re-evaluate dedup + seen-prune + explode per
-            # consumer. This was the dominant robots-on overhead after
-            # the round-5 crawl-loop speedups shrank everything else.
-            candidates = candidates.localCheckpoint(eager=False)
-            new_hosts = (
-                candidates.select("host").distinct().join(robots_cache, "host", "left_anti")
-            )
-            # materialize only the NEW hosts' rules (O(new), usually
-            # tiny after round 1) and union them in lazily: the old
-            # shape re-checkpointed the WHOLE cache every round — an
-            # O(known-hosts) copy per round that dominated the
-            # robots-on overhead. The union chain stays shallow
-            # (one checkpointed piece per round) and snapshots flatten
-            # it when checkpointing is on.
-            # lazy checkpoint: the count right below materializes it
-            fetched_rules = new_hosts.mapInPandas(
-                _robots_batches, schema="host string, disallow string, crawl_delay_level int"
-            ).localCheckpoint(eager=False)
-            n_new_hosts = fetched_rules.count()
-            if n_new_hosts:
-                robots_cache = robots_cache.unionByName(fetched_rules)
-                n_robots_hosts += n_new_hosts
-                robots_chain_len += 1
-                if robots_chain_len >= ROBOTS_FLATTEN_EVERY:
-                    # bound the cache's lineage: the per-round shallow
-                    # union (one checkpointed piece per round) keeps
-                    # the steady-state cost O(new hosts), but with
-                    # snapshots off a long crawl would deepen the plan
-                    # linearly (r5 watch item). Folding the union into
-                    # one lazy checkpoint every ROBOTS_FLATTEN_EVERY
-                    # rounds caps plan depth at O(K) for an amortized
-                    # O(hosts/K) copy per round — the next robots join
-                    # materializes it in the job it already runs.
-                    robots_cache = robots_cache.localCheckpoint(eager=False)
-                    robots_chain_len = 0
-            # the host counter is incremental — no per-round count()
-            # over the cache
-            robots_side = _host_side(robots_cache, n_robots_hosts)
-            path = F.regexp_replace(F.col("key"), "^[a-zA-Z]+://[^/]+", "")
-            allowed = F.col("disallow").isNull() | ~path.startswith(F.col("disallow"))
-            # the allowed/blocked classification RIDES the round's one
-            # politeness materialization (step 5's budgeted checkpoint
-            # + bcounts agg) instead of paying its own checkpoint and
-            # count jobs per round — the robots-on overhead was
-            # dominated by those extra driver jobs, not by the join
-            candidates = (
-                candidates.join(robots_side, "host", "left")
-                .withColumn("allowed", allowed)
-                .drop("disallow")
-            )
-        if n_pending:
-            # the backlog rejoins here, past the admission stages it
-            # already cleared (allowed by construction; its immutable
-            # crawl_delay_level rode along when it was deferred)
-            candidates = candidates.unionByName(
-                pending.withColumn("allowed", F.lit(True)) if use_robots else pending
-            )
-
-        # 5. priority + politeness: per-host budget window ordered by the
-        #    explicit (depth, host_rank, disc_seq) priority keys,
-        #    overflow deferred to next round; the global order over the
-        #    same keys is step 6. Materialize ONCE — everything
-        #    downstream (fetch manifest, deferred frontier, counts)
-        #    derives from this single evaluation of the round pipeline.
+            candidates = candidates.join(_join_side(robots_cache, n_robots_hosts), "host", "left")
         if debt_boost:
-            # politeness-debt boost: hosts whose queue overflowed LAST
-            # round get base + min(debt, base) this round (bounded 2x).
-            # The debt table only holds overflowed hosts, so it is
-            # usually broadcast. n_debt_hosts came out of LAST round's
-            # politeness agg — no extra count() job (resume
-            # conservatively broadcasts)
-            candidates = candidates.join(_host_side(debt_df, n_debt_hosts), "host", "left")
-        # blocked rows (allowed=false) ride the same exchange but rank
-        # in their own window partition, so they never consume budget
-        w_host = (
-            Window.partitionBy("host", "allowed") if use_robots else Window.partitionBy("host")
-        ).orderBy("depth", "host_rank", "disc_seq")
-        budgeted = candidates.withColumn("host_pos", F.row_number().over(w_host))
-        if use_robots:
-            # token-bucket crawl delay: the robots crawl-delay level
-            # scales each host's per-round refill
-            budget_col = F.greatest(
-                F.lit(1), F.floor(F.lit(host_budget) / (F.col("crawl_delay_level") + 1))
+            candidates = candidates.join(_join_side(debt_df, n_debt_hosts), "host", "left")
+
+        # kernel: ONE grouped-pandas stage admits and fetches every
+        # host's candidates (:func:`_host_round`), checkpointed eagerly
+        # with the round's counters observed on the same job (a lazy
+        # checkpoint plus an agg is one job more under AQE).
+        # Partitioning runs in WHOLE WAVES of the session's slots: each
+        # Python task pays a fixed ~65ms of slot time before its UDF
+        # runs (worker hand-off, UDF unpickling, the Arrow round trip;
+        # scripts/python_task_cost.py measures it), while a decoded
+        # fetch costs ~33ms per row (19ms body synthesis + 14ms
+        # parse_mhtml). Policy: slots × waves tasks, waves = ⌈candidates
+        # / (slots · _KERNEL_ROWS_PER_TASK)⌉ clamped to [1, 8], sized
+        # from expected_frontier (the round's candidates before dedup
+        # and prune, an upper bound) — one wave of fat tasks at toy
+        # rounds, the 8-wave cap at 10^10-URL rounds. An explicit
+        # repartition by number is never coalesced by AQE, so the count
+        # holds. Placement is by host hash, so a task's fetch work is
+        # bounded by politeness: at most 2 × host_budget fetches (the
+        # debt cap) per host it holds.
+        # Memory bound per kernel task: the JVM sorts the task's rows by
+        # host and hands Python one host group at a time, so a worker
+        # holds its largest host group (that host's fresh rows plus its
+        # backlog, ~200 B per canonical row) and the group's output
+        # rows (plus fanout × ~180 B of children per fetched row), plus
+        # the per-task body pool of :func:`stand_in_pool` (≤ 64 bodies,
+        # ~62MB at payload (8, 6)).
+        step(round_idx, "kernel")
+        waves = min(8, max(1, -(-expected_frontier // (n_slots * _KERNEL_ROWS_PER_TASK))))
+        counters = Observation()
+        admitted = (
+            candidates.repartition(n_slots * waves, "host")
+            .groupBy("host")
+            .applyInPandas(kernel, schema=_KERNEL_SCHEMA)
+            .observe(counters, *_kernel_counters())
+            .localCheckpoint(eager=True)
+        )
+        c = {k: int(v or 0) for k, v in counters.get.items()}
+        if n_slots * waves > n_par:
+            # the downstream steps each re-read the slim checkpoint and
+            # would pay a fixed per-task cost per kernel partition;
+            # coalesce is narrow (no shuffle, no extra stage)
+            admitted = admitted.coalesce(n_par)
+        status = F.col("status")
+        n_fetched, n_deferred, n_blocked = c["fetched"], c["deferred"], c["blocked"]
+        # every candidate deduped away (all seen/failed/blocked): a
+        # zero-fetch round — no metrics row, same as the oracle; the
+        # next iteration either injects a recrawl or terminates at the
+        # top break
+        zero_round = n_fetched + n_deferred == 0
+
+        if not zero_round:
+            # index: global fetch position (ordering contract) over
+            # (depth, host_rank, disc_seq); the fetched count picks the
+            # index path (same logical order either way; tests force
+            # both paths against the oracle)
+            step(round_idx, "index")
+            fetched_pos, _ = index_rows(
+                admitted.filter(status.isin("ok", "failed")).select(
+                    "key", "depth", "host_rank", "disc_seq", "status", "attempts"
+                ),
+                ["depth", "host_rank", "disc_seq"],
+                "pos",
+                n_fetched,
             )
-        else:
-            budget_col = F.lit(host_budget)
-        if debt_boost:
-            budget_col = budget_col + F.least(
-                F.coalesce(F.col("debt"), F.lit(0)), budget_col
+            # discover: only ok rows carry children, so the observed
+            # children count is the exact row count and picks the path
+            step(round_idx, "discover")
+            discovered, _ = discovered_rows(
+                admitted.filter(status == "ok"), c["children"], disc_total
             )
-        budgeted = budgeted.withColumn("token_budget", budget_col)
-        # lazy: the bcounts agg right below materializes (and persists)
-        # it in the same job; fetch_now/deferred then read the blocks
-        budgeted = budgeted.localCheckpoint(eager=False)
-        # ONE agg answers "is the frontier drained?", the deferred
-        # count, the debt-host count AND (robots) the blocked count —
-        # separate driver jobs otherwise
-        allowed_col = F.col("allowed") if use_robots else F.lit(True)
-        ok_rows = allowed_col
-        bcounts = budgeted.agg(
-            F.sum(ok_rows.cast("long")).alias("n"),
-            F.sum(
-                (ok_rows & (F.col("host_pos") <= F.col("token_budget"))).cast("long")
-            ).alias("fetchable"),
-            F.count_distinct(
-                F.when(
-                    ok_rows & (F.col("host_pos") > F.col("token_budget")), F.col("host")
-                )
-            ).alias("debt_hosts"),
-            F.sum((~ok_rows).cast("long")).alias("blocked"),
-        ).collect()[0]
-        n_debt_hosts = int(bcounts["debt_hosts"] or 0)
-        n_blocked = int(bcounts["blocked"] or 0)
-        if use_robots and n_blocked:
-            newly_blocked = budgeted.filter(~F.col("allowed")).select("key", "h64")
-            blocked = blocked.unionByName(newly_blocked)
-        if int(bcounts["n"] or 0) == 0:
-            # zero-fetch round (every frontier row deduped away): no
-            # metrics row, same as the oracle — the next iteration
-            # either injects a recrawl or terminates at the top break
-            expected_frontier = 0
-            # debt_df deliberately NOT recomputed on this path: the
-            # oracle updates debt only when candidates exist, and an
-            # empty-round overwrite would clear a nonzero backlog
-            continue
-        if debt_boost:
-            # next round's debt = this round's per-host overflow counts
-            # (computed after the zero-candidate exit so the control
-            # flow matches the oracle's `if not candidates: continue`)
-            debt_df = (
-                budgeted.filter(ok_rows & (F.col("host_pos") > F.col("token_budget")))
-                .groupBy("host")
-                .agg(F.count("*").alias("debt"))
-                .localCheckpoint(eager=True)
+
+        # commit: state unions, all distributed; the hybrid seen-set
+        # folds via a per-shard cogroup (one task per shard, work =
+        # blob + its adds); no per-row collect anywhere
+        step(round_idx, "commit")
+        if use_robots and c["robots"]:
+            robots_cache = robots_cache.unionByName(
+                admitted.filter(status == "robots").select("host", "disallow", "crawl_delay_level")
             )
-        n_deferred = int(bcounts["n"]) - int(bcounts["fetchable"] or 0)
-        fetch_now = budgeted.filter(ok_rows & (F.col("host_pos") <= F.col("token_budget")))
-        deferred = budgeted.filter(
-            ok_rows & (F.col("host_pos") > F.col("token_budget"))
-        ).select(*pend_cols)
-
-        # 6. global fetch position (ordering contract) over (depth,
-        #    host_rank, disc_seq); the manifest's exact row count from
-        #    the agg above picks the index path (same logical order
-        #    either way; tests force both paths against the oracle).
-        n_fetchable = int(bcounts["fetchable"] or 0)
-        manifest_df, _ = index_rows(
-            fetch_now.select("key", "host", "depth", "host_rank", "disc_seq"),
-            ["depth", "host_rank", "disc_seq"],
-            "pos",
-            n_fetchable,
+            n_robots_hosts += c["robots"]
+        seen = seen.unionByName(
+            admitted.filter(status == "ok").select(
+                "key", "h64", "host", F.lit(round_idx).cast("int").alias("fetched_round")
+            )
         )
-
-        # 7. fetch (scripted double, retry/backoff inside the UDF) —
-        #    repartition the manifest so the politeness-bounded fetch
-        #    set spreads across every core, then materialize once
-        fetch_fn = functools.partial(
-            _fetch_batches,
-            decode_payload=decode_payload,
-            payload_images=payload_images,
-            payload_scale=payload_scale,
-            hold_ms=hold_ms,
-            fetcher=fetcher,
-            discover=discover,
-            fanout=fanout,
-            n_hosts=n_hosts,
-        )
-        # Fetch partitioning runs in WHOLE WAVES of the session's slots.
-        # Two opposing costs: the straggler tail of the stage is
-        # O(task size) (hold+decode are per-row costs), so finer tasks
-        # bound it tighter — but every mapInPandas task pays a fixed
-        # ~65ms of slot time before its UDF runs (worker hand-off, UDF
-        # unpickling, the Arrow round trip; scripts/python_task_cost.py
-        # measures it). It was ~300ms while pyspark's per-task
-        # importlib.invalidate_caches() made each of the worker's 16
-        # zipimporters re-read its archive on Python 3.11; importing
-        # the package installs _zipcache, which skips unchanged ones.
-        # A decoded fetch costs ~33ms per row (19ms body synthesis +
-        # 14ms parse_mhtml), so at _FETCH_ROWS_PER_TASK = 256 a full
-        # task carries ~8.4s of rows against ~0.07s fixed (<1%); at the
-        # old 24 rows it was ~8%. A partial wave is the worst case of
-        # both: 4 tasks on 3 slots run a second wave of ONE task that
-        # pays the fixed cost again on the critical path. Policy:
-        # slots × waves tasks, waves = ⌈n / (slots · rows per task)⌉
-        # clamped to [1, 8] — at toy rounds one wave of fat tasks; at
-        # 10^10-URL rounds the cap binds and the behavior is the old
-        # fine-wave insurance. Round-robin dealing (below) keeps every
-        # task within ±1 row of the others, so fatter tasks add no
-        # straggler tail.
-        n_slots = spark.sparkContext.defaultParallelism
-        waves = min(8, max(1, -(-n_fetchable // (n_slots * _FETCH_ROWS_PER_TASK))))
-        n_fetch_parts = n_slots * waves
-        # Distribution WITHIN the stage: keyless ROUND-ROBIN, not hash
-        # and (since r6) not range. Hash placement is binomial — at
-        # ~100 rows/task the row count swings ±10% and the slowest
-        # task sets the stage tail (~5s of the 32-core wall at 36k
-        # URLs; the round-5 fix). Range-striping on pos fixed that but
-        # paid a per-round SAMPLING JOB over the manifest
-        # (repartitionByRange bounds come from a sample pass) — ~0.4s
-        # of the 3-round bench. Round-robin gives the identical
-        # equal-rows-per-task property (each parent partition deals
-        # its rows cyclically, so every task holds total/n ±1) with no
-        # sampling pass; the mandatory local sort-before-repartition
-        # (SPARK-23207, retry determinism) is over the slim manifest
-        # rows only. Per-row costs (attempts, decode) are uncorrelated
-        # with placement, so task times still concentrate; fetch
-        # results carry explicit pos, so placement never affects the
-        # ordering contract (parity suites pin it byte-for-byte).
-        fetched = (
-            manifest_df.select("key", "host", "depth", "disc_seq", "pos")
-            .repartition(n_fetch_parts)
-            .mapInPandas(fetch_fn, schema=_FETCH_SCHEMA)
-        )
-        # lazy: the stats agg below is the first action over the
-        # fetched rows — it materializes the checkpoint in the SAME
-        # job it runs in (an eager checkpoint would be a whole extra
-        # driver job per round; job latency is width-independent, so
-        # saved jobs raise N-vs-4N efficiency directly)
-        fetched = fetched.localCheckpoint(eager=False)
-        if n_fetch_parts > n_par:
-            # The fine wave partitioning exists for the fetch stage
-            # only; the ~dozen downstream jobs that re-read the slim
-            # checkpoint each round (children explode, seen update,
-            # metrics agg, ...) would inherit all n_fetch_parts
-            # partitions and pay a fixed per-task cost apiece — at 4N
-            # width that overhead is WIDTH-INDEPENDENT (~same seconds
-            # at 8 and 32 cores), which is exactly what caps scaling
-            # efficiency. coalesce is narrow (no shuffle, no extra
-            # stage): each downstream task just reads several
-            # checkpoint blocks.
-            fetched = fetched.coalesce(n_par)
-
-        # 8. round metrics: this agg is the ACTION that materializes
-        #    the lazy fetch checkpoint — fetch stage + counter fold run
-        #    as one driver job, and n_children rides along: it is the
-        #    exact discovery count, so step 9 pays no count job
-        stats = fetched.agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
-            F.sum("attempts").alias("attempts"),
-            F.sum("delay_ms").alias("delay_ms"),
-            F.sum(F.size("children")).alias("n_children"),
-        ).collect()[0]
-        n_fetched = int(stats["n"] or 0)
-        n_ok = int(stats["ok"] or 0)
-
-        # 9. link discovery from ok fetches; disc_seq continues the
-        #    global counter in (parent_pos, child_idx) order, indexed
-        #    like step 6 (fanout×fetched rows is the bigger of the two
-        #    per-round orderings). Only ok rows carry children, so the
-        #    stats agg's n_children is the exact posexplode row count
-        #    and picks the index path. Children — parsed
-        #    from the fetched bodies or scripted, both already
-        #    eligibility-filtered in document order — are emitted by
-        #    the fetch UDF itself, canonical: one JVM-side posexplode,
-        #    never a second Python pass over the round.
-        ok = fetched.filter(F.col("status") == "ok")
-        children = ok.select(
-            "pos", "depth", F.posexplode("children").alias("child_idx", "c")
-        ).select(
-            F.col("pos").alias("parent_pos"),
-            F.col("child_idx").cast("int").alias("child_idx"),
-            (F.col("depth") + 1).cast("int").alias("depth"),
-            *(F.col(f"c.{f}").alias(f) for f in _CHILD_FIELDS),
-        )
-        n_discovered = int(stats["n_children"] or 0)
-        discovered, _ = index_rows(
-            children, ["parent_pos", "child_idx"], "disc_seq", n_discovered, start=disc_total
-        )
-        discovered = discovered.select(*_CANON_COLS)
-
-        # 10. state updates — all distributed: the hybrid seen-set via
-        #    a per-shard cogroup fold (one task per shard, work = blob
-        #    + its adds); no per-row collect anywhere
-        new_seen = ok.select(
-            "key", "h64", "host", F.lit(round_idx).cast("int").alias("fetched_round")
-        )
-        new_failed = fetched.filter(F.col("status") != "ok").select("key", "h64")
-        seen = seen.unionByName(new_seen)
-        failed = failed.unionByName(new_failed)
-        seen_adds = fetched.select("h64")
-        if use_robots and n_blocked:
-            seen_adds = seen_adds.unionByName(newly_blocked.select("h64"))
-        seen_pending = (
-            seen_adds
-            if seen_pending is None
-            else seen_pending.unionByName(seen_adds)
-        )
+        failed = failed.unionByName(admitted.filter(status == "failed").select("key", "h64"))
+        if n_blocked:
+            blocked = blocked.unionByName(admitted.filter(status == "blocked").select("key", "h64"))
+        seen_adds = admitted.filter(status.isin("ok", "failed", "blocked")).select("h64")
+        seen_pending = seen_adds if seen_pending is None else seen_pending.unionByName(seen_adds)
         seen_total += n_fetched + n_blocked
         if seen_total >= probe_threshold or catalog is not None:
             # the next round WILL probe (or a snapshot must carry a
             # consistent filter): fold everything pending in ONE
             # cogroup pass and cut lineage. Below the threshold the
-            # pending union just rides along — the probe gate at step
-            # 3 shares this exact seen_total condition, so a probe can
-            # never observe an unfolded filter
-            # lazy: the next round's probe (or the snapshot write) is
-            # the first consumer and materializes the fold then; an
-            # eager job here would serialize every shard blob twice
+            # pending union just rides along — the probe gate in the
+            # prune step shares this exact seen_total condition, so a
+            # probe can never observe an unfolded filter. Lazy, and
+            # under AQE the fold's shuffle stages run here, at the
+            # call; its last stage runs in the first job that reads it
+            # (the next probe or the snapshot write)
             seenset_df = seenset_merge(
                 seenset_df, seen_pending, SEEN_SHARDS, SEEN_BLOOM_BITS,
                 SEEN_CUCKOO_BUCKETS,
             ).localCheckpoint(eager=False)
             seen_pending = None
         have_seen = True
+        if zero_round:
+            # debt_df deliberately NOT recomputed on this path: the
+            # oracle updates debt only when candidates exist, and an
+            # empty-round overwrite would clear a nonzero backlog
+            expected_frontier = 0
+            pending, n_pending = empty_frontier, 0
+            continue
+        if debt_boost:
+            # next round's debt = this round's per-host overflow counts
+            debt_df = admitted.filter(status == "debt").select("host", "debt")
+            n_debt_hosts = c["debt"]
 
-        round_order = fetched.select(
-            F.lit(round_idx).alias("round"),
-            "pos",
-            F.col("key").alias("url"),
-            "depth",
-            "status",
-            "attempts",
+        order_acc = order_acc.unionByName(
+            fetched_pos.select(
+                F.lit(round_idx).alias("round"),
+                "pos",
+                F.col("key").alias("url"),
+                "depth",
+                "status",
+                "attempts",
+            )
         )
-        order_acc = order_acc.unionByName(round_order)
-
-        disc_total += n_discovered
-        expected_frontier = n_deferred + n_discovered
+        disc_total += c["children"]
+        expected_frontier = n_deferred + c["children"]
         round_metrics = {
             "round": round_idx,
             "fetched": n_fetched,
-            "ok": n_ok,
-            "failed": n_fetched - n_ok,
-            "attempts": int(stats["attempts"] or 0),
+            "ok": c["ok"],
+            "failed": n_fetched - c["ok"],
+            "attempts": c["attempts"],
             "deferred": n_deferred,
             "blocked": n_blocked,
-            "virtual_delay_ms": int(stats["delay_ms"] or 0),
+            "virtual_delay_ms": c["delay_ms"],
             "recrawled": n_recrawled,
         }
         result.metrics.append(round_metrics)
@@ -1087,22 +1049,22 @@ def crawl_spark(
         # fresh rows next round = discoveries only; the deferred
         # backlog stays canonical in `pending`
         frontier = discovered
-        pending = deferred
+        pending = admitted.filter(status == "deferred").select(*_CANON_COLS)
         n_pending = n_deferred
 
-        # 11. checkpoint: snapshot cuts lineage AND makes the crawl
-        #     resumable with per-partition manifest lineage; the hybrid
-        #     seen-set rides along as ordinary binary rows (one per
-        #     shard), so resume never rebuilds it. Without a catalog,
-        #     `budgeted`/`fetched` are already materialized so the next
-        #     round's lineage stays one round deep.
+        # snapshot: cuts lineage AND makes the crawl resumable with
+        # per-partition manifest lineage; the hybrid seen-set rides
+        # along as ordinary binary rows (one per shard), so resume
+        # never rebuilds it. Without a catalog the kernel output is
+        # already checkpointed, so the next round's lineage stays one
+        # round deep.
         if catalog is not None:
             tables = {
                 # the snapshot frontier holds canonical rows (fresh ∪
                 # backlog), so a resumed or reloaded round never
-                # re-canonicalizes; backlog rows re-run admission once
+                # re-canonicalizes; backlog rows re-run the prune once
                 # on reload — deterministic, so resume stays byte-exact
-                "frontier": frontier.unionByName(pending.select(*_CANON_COLS)),
+                "frontier": frontier.unionByName(pending),
                 "seen": seen,
                 "failed": failed,
                 "order": order_acc,
@@ -1124,10 +1086,10 @@ def crawl_spark(
             result.snapshots.append(snap)
             (frontier, seen, failed, order_acc, seenset_df,
              robots_cache, blocked, debt_df) = load_snapshot(snap)
-            pending = empty_pending
-            n_pending = 0
+            pending, n_pending = empty_frontier, 0
 
     if collect_order:
+        step(round_idx, "commit")
         for row in order_acc.orderBy("round", "pos").collect():
             result.order.append(
                 {

@@ -19,13 +19,14 @@ children from the gate's canonical child structs), so each micro-batch
 runs one Python stage, the gate itself.
 
 Scale shape (the whole round barrier is DataFrame ops — the batch
-crawl's own pattern, ``spark_frontier.py`` steps 6-8):
+crawl's own index and discover steps, ``spark_frontier.py``):
 - the driver holds ONLY per-round counters (one ``agg`` row per
   round) and the frontier parquet path; no gate output row, child
   URL, or frontier row is ever collected;
 - the next frontier = deferred rows ∪ exploded children, with
-  ``disc_seq`` assigned by the batch crawl's index rule
-  (``frontier/indexing.py:index_rows``): the distributed two-pass index
+  ``disc_seq`` assigned by the batch crawl's own discovery
+  (``spark_frontier.discovered_rows`` over
+  ``frontier/indexing.py:index_rows``): the distributed two-pass index
   once the round reaches ``DIST_INDEX_MIN_ROWS`` rows, one window task
   below it (the round is small by definition there) — same total order
   either way, both paths pinned against the oracle;
@@ -61,11 +62,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..frontier.indexing import index_rows
 from ..frontier.spark_frontier import (
     _CANON_COLS,
     _CANON_SCHEMA,
-    _CHILD_FIELDS,
+    discovered_rows,
     local_frame,
     seed_rows,
 )
@@ -73,7 +73,6 @@ from ..frontier.spark_frontier import (
 # seconds one availableNow gate pass may run before the round fails
 # (its feeder state is then not committed; resume=True re-runs it)
 PASS_TIMEOUT_S = 600
-_CHILD_ORDER = ["p_depth", "p_rank", "p_seq", "child_idx"]
 _ORDER_KEYS = ("round", "pos", "url", "depth", "status", "attempts")
 
 
@@ -104,24 +103,14 @@ def _next_frontier(
         counters = {k: int(c[k] or 0) for k in _COUNTER_KEYS}
 
     deferred = out.filter(F.col("status") == "deferred").select(*_CANON_COLS)
-    # children came out of the gate's fetch_row, canonical (parsed from
-    # the fetched bytes or scripted, eligibility-filtered, document
-    # order): one JVM-side posexplode, no second Python pass per round
-    children = out.filter(F.col("status") == "ok").select(
-        F.col("depth").alias("p_depth"),
-        F.col("host_rank").alias("p_rank"),
-        F.col("disc_seq").alias("p_seq"),
-        F.posexplode("children").alias("child_idx", "c"),
-        (F.col("depth") + 1).cast("int").alias("depth"),
-    ).select(*_CHILD_ORDER, "depth", *(F.col(f"c.{f}").alias(f) for f in _CHILD_FIELDS))
-
-    # disc_seq continues the crawl-global counter under the total
-    # order (parent fetch order, child document order); the round's
-    # gate row count picks the index path
-    discovered, n_disc = index_rows(
-        children, _CHILD_ORDER, "disc_seq", counters["n"], start=disc
+    # children came out of the gate's fetch_row, canonical; disc_seq
+    # continues the global counter under the batch crawl's total order
+    # (parent fetch order, child document order), the round's gate row
+    # count picking the index path
+    discovered, n_disc = discovered_rows(
+        out.filter(F.col("status") == "ok"), counters["n"], disc
     )
-    frontier = deferred.unionByName(discovered.select(*_CANON_COLS))
+    frontier = deferred.unionByName(discovered)
     return frontier, n_disc, counters
 
 

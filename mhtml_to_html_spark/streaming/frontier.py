@@ -12,10 +12,11 @@ This module is the Structured-Streaming shape of
   fetches per micro-batch (the token-bucket refill interval). Overflow
   is emitted as ``status='deferred'`` for the feeder to re-queue — the
   same defer-to-next-wave semantics as the batch crawl's round loop.
-- **one fetch kernel**: the gate owns admission only; each admitted key
-  runs the batch crawl's per-URL kernel ``spark_frontier.fetch_row``
-  (fetch, decode, discovery, canonical children), with the same
-  per-task body pool (``spark_frontier.stand_in_pool``).
+- **one admission kernel**: each host's micro-batch runs the batch
+  crawl's per-host kernel ``spark_frontier._admit_host_batch`` (dedup,
+  seen, robots, token budget, and ``fetch_row`` per admitted key: fetch,
+  decode, discovery, canonical children), with the same per-task body
+  pool (``spark_frontier.stand_in_pool``).
 - **canonical rows in, canonical rows out**: :func:`canonical_gate`
   takes frontier rows that are canonical from birth (``_CANON_SCHEMA``,
   the batch crawl's frontier row) and emits them with the fetch result
@@ -42,21 +43,16 @@ import functools
 
 from pyspark.sql import DataFrame
 
-from ..frontier.fixtures import host_token_budget, robots_allows
+from ..frontier.fixtures import robots_rules
 from ..frontier.spark_frontier import (
-    _CANON_COLS,
+    _ADMIT_COLS,
+    _ADMIT_SCHEMA,
     _CANON_SCHEMA,
-    _CHILDREN_TYPE,
+    _admit_host_batch,
     canonical_fields,
-    fetch_row,
     stand_in_pool,
 )
 
-GATE_SCHEMA = (
-    f"{_CANON_SCHEMA}, status string, attempts int, delay_ms long, "
-    f"children {_CHILDREN_TYPE}"
-)
-_GATE_COLUMNS = _CANON_COLS + ["status", "attempts", "delay_ms", "children"]
 _GATE_STATE_SCHEMA = "seen array<long>"
 
 
@@ -93,58 +89,18 @@ def _canonicalize_batches(batches):
         yield pd.DataFrame(out)
 
 
-def _admit_host_batch(
-    host: str, batch, seen: set, host_budget: int, use_robots: bool, **fetch_kw
-):
-    """The per-host admission kernel of the politeness gate: sort the
-    micro-batch's canonical rows by the crawl priority (depth,
-    host_rank, disc_seq), dedup first-discovery-wins against the batch
-    and the host's all-time seen-hash set (mutated in place), fetch up
-    to the host's token budget through ``fetch_row(key, **fetch_kw)``,
-    defer the rest. Returns the output rows (``_GATE_COLUMNS``); only
-    fetched rows carry children.
-
-    With ``use_robots`` the host's robots rules gate admission:
-    disallowed URLs emit ``status='blocked'`` once and join the seen
-    set; the crawl-delay level scales the per-micro-batch token
-    refill, the same token-bucket rule as the batch crawl."""
-    budget = host_token_budget(host, host_budget) if use_robots else host_budget
-    # first-discovery-wins dedup (min disc_seq — the batch crawl's
-    # min_by semantics), then the crawl priority order
-    batch = (
-        batch.sort_values("disc_seq")
-        .drop_duplicates("key")
-        .sort_values(["depth", "host_rank", "disc_seq"])
-    )
-    rows = []
-    admitted = 0
-    for r in batch[_CANON_COLS].itertuples(index=False):
-        h = int(r.h64) & 0xFFFFFFFFFFFFFFFF
-        if h in seen:
-            continue  # exactly-once across the whole stream
-        if use_robots and not robots_allows(host, r.key):
-            seen.add(h)  # permanently blocked — reported exactly once
-            rows.append((*r, "blocked", 0, 0, []))
-        elif admitted < budget:
-            status, attempts, delay_ms, _h64, children = fetch_row(r.key, **fetch_kw)
-            seen.add(h)
-            admitted += 1
-            rows.append((*r, status, attempts, delay_ms, children))
-        else:
-            rows.append((*r, "deferred", 0, 0, []))
-    return rows
-
-
 def _politeness_gate(
     key,
     pdfs,
     state,
+    host_budget: int,
+    use_robots: bool,
     decode_payload: bool,
     payload_images: int,
     payload_scale: int,
-    **admit_kw,
+    **fetch_kw,
 ):
-    """applyInPandasWithState wrapper around :func:`_admit_host_batch`:
+    """applyInPandasWithState wrapper around ``_admit_host_batch``:
     the host's exact seen-hash set rides in the GroupState (per-host
     state is exactly where a robots cache and a seen set belong — they
     are host-keyed data)."""
@@ -154,11 +110,11 @@ def _politeness_gate(
     seen = _decode_seen(state.get[0]) if state.exists else set()
     stand_in = stand_in_pool(payload_images, payload_scale) if decode_payload else None
     rows = _admit_host_batch(
-        host, pd.concat(list(pdfs), ignore_index=True), seen, stand_in=stand_in,
-        **admit_kw,
+        pd.concat(list(pdfs), ignore_index=True), seen, host_budget,
+        robots_rules(host) if use_robots else None, stand_in=stand_in, **fetch_kw,
     )
     state.update((_encode_seen(seen),))
-    yield pd.DataFrame(rows, columns=_GATE_COLUMNS)
+    yield pd.DataFrame(rows, columns=_ADMIT_COLS)
 
 
 def canonical_gate(
@@ -174,7 +130,7 @@ def canonical_gate(
     n_hosts: int = 7,
 ) -> DataFrame:
     """Canonical frontier stream (``_CANON_SCHEMA``) → fetch-result
-    stream (``GATE_SCHEMA``): one ``applyInPandasWithState`` stage.
+    stream (``_ADMIT_SCHEMA``): one ``applyInPandasWithState`` stage.
 
     Output rows are the input's canonical columns plus ``status`` ∈
     {ok, failed, deferred, blocked}, ``attempts``, ``delay_ms`` and the
@@ -202,7 +158,7 @@ def canonical_gate(
             fanout=fanout,
             n_hosts=n_hosts,
         ),
-        outputStructType=GATE_SCHEMA,
+        outputStructType=_ADMIT_SCHEMA,
         stateStructType=_GATE_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,

@@ -89,8 +89,8 @@ def test_spark_matches_oracle(spark, oracle_result, tmp_path):
     "use_robots",
     [
         pytest.param(False, id="robots-off"),
-        # robots on with the hash (not broadcast) rules join: the host
-        # window reuses the join's host partitioning
+        # robots on with hash (not broadcast) joins: the seen anti-join
+        # and the robots-cache join each shuffle both sides
         pytest.param(True, id="robots-hash-join"),
     ],
 )
@@ -265,22 +265,89 @@ def test_plan_recrawl_budget_and_staleness(spark):
 
 
 @pytest.mark.spark
-def test_robots_cache_flatten_preserves_parity(spark, monkeypatch):
-    """The periodic robots-cache lineage flatten (r6: bound the shallow
-    union chain at ``ROBOTS_FLATTEN_EVERY`` pieces) must not change one
-    byte of the crawl: force a flatten every round and compare against
-    the oracle."""
-    from mhtml_to_html_spark.frontier import spark_frontier
+def test_robots_cache_holds_each_host_once(spark, tmp_path):
+    """The round kernel emits a robots cache row only for a host it
+    meets for the first time: after a checkpointed robots-on crawl the
+    snapshot's cache holds every host the crawl met exactly once, with
+    its ``robots_rules``, and the crawl matches the oracle."""
+    from mhtml_to_html_spark.frontier.fixtures import robots_rules
+    from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
+    from mhtml_to_html_spark.plans.catalog import SnapshotCatalog
+    from mhtml_to_html_spark.urlnorm import url_host
 
-    monkeypatch.setattr(spark_frontier, "ROBOTS_FLATTEN_EVERY", 1)
     oracle = crawl_oracle(SEEDS, max_rounds=MAX_ROUNDS, host_budget=BUDGET, use_robots=True)
-    res = spark_frontier.crawl_spark(
+    ckpt = str(tmp_path / "ckpt")
+    res = crawl_spark(
         spark, SEEDS, max_rounds=MAX_ROUNDS, host_budget=BUDGET,
-        use_robots=True, collect_order=True,
+        use_robots=True, checkpoint_dir=ckpt, collect_order=True,
     )
     assert res.order == oracle.order
     assert res.seen == oracle.seen
+    assert res.failed == oracle.failed
     assert res.blocked == oracle.blocked
+    catalog = SnapshotCatalog(ckpt)
+    cache = catalog.load_table(spark, catalog.latest()["snapshot_id"], "robots").collect()
+    hosts = [r["host"] for r in cache]
+    assert len(hosts) == len(set(hosts))
+    met = {url_host(k) for k in oracle.seen | oracle.failed | oracle.blocked}
+    assert met <= set(hosts)
+    for r in cache:
+        rules = robots_rules(r["host"])
+        assert (r["disallow"], r["crawl_delay_level"]) == (
+            rules["disallow"], rules["crawl_delay_level"]
+        )
+
+
+def _job_groups(spark) -> dict[int, str | None]:
+    """Job group of every job the status store holds, by job id, once
+    the listener bus has delivered them."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    groups = {}
+    for j in (jobs.apply(i) for i in range(jobs.size())):
+        group = j.jobGroup()
+        groups[j.jobId()] = group.get() if group.isDefined() else None
+    return groups
+
+
+@pytest.mark.spark
+def test_crawl_jobs_run_in_round_step_groups(spark):
+    """Every Spark job of a two-round crawl runs in a job group
+    ``crawl:r<round>:<step>`` of a known step, each round's kernel
+    among them; the caller's job group is back on return, so a job the
+    caller runs afterwards carries no ``crawl:`` group."""
+    import re
+
+    from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
+
+    sc = spark.sparkContext
+    step_group = re.compile(r"crawl:r[01]:(recrawl|prune|kernel|index|discover|commit)")
+    before = set(_job_groups(spark))
+    sc.setJobGroup("caller", "a caller's job group")
+    try:
+        res = crawl_spark(
+            spark, SEEDS, max_rounds=2, host_budget=BUDGET, use_robots=True, collect_order=True
+        )
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        spark.range(3).collect()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert len(res.metrics) == 2
+    groups = {i: g for i, g in _job_groups(spark).items() if i not in before}
+    last = max(groups)
+    assert groups.pop(last) == "caller"
+    assert groups and all(g is not None and step_group.fullmatch(g) for g in groups.values())
+    assert {"crawl:r0:kernel", "crawl:r1:kernel"} <= set(groups.values())
+
+    # a caller with no job group gets none back
+    crawl_spark(spark, SEEDS, max_rounds=1, host_budget=BUDGET)
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    before = set(_job_groups(spark))
+    spark.range(3).collect()
+    after = {i: g for i, g in _job_groups(spark).items() if i not in before}
+    assert after and set(after.values()) == {None}
 
 
 def _sql_plans(spark) -> dict[int, str]:
@@ -334,12 +401,14 @@ def test_crawl_scans_no_python_rdd(spark):
 def test_crawl_runs_no_canonicalize_pass_and_fetches_in_whole_waves(spark, tmp_path):
     """Frontier rows are canonical from birth: no execution of a fresh,
     checkpointed, resumed or recrawling crawl runs
-    ``_canonicalize_batches``. The fetch stage is whole waves of the
-    session's slots: a fresh crawl whose rounds fit one wave deals
-    every manifest into exactly ``defaultParallelism`` tasks. The
-    streaming feeder's micro-batch runs one Python operator, the gate;
-    only the raw-URL ``stream_frontier_fetch`` canonicalizes ahead of
-    it."""
+    ``_canonicalize_batches``. Each round admits and fetches in ONE
+    grouped-pandas stage, the host kernel, dealt by host into whole
+    waves of the session's slots: a fresh crawl whose rounds fit one
+    wave runs exactly one kernel execution per round, each over a
+    ``hashpartitioning(host, slots)`` exchange, and no other Python
+    operator. The streaming feeder's micro-batch runs one Python
+    operator, the gate; only the raw-URL ``stream_frontier_fetch``
+    canonicalizes ahead of it."""
     import contextlib
     import io
     import re
@@ -356,13 +425,17 @@ def test_crawl_runs_no_canonicalize_pass_and_fetches_in_whole_waves(spark, tmp_p
     # round 1 alone is more rows than slots × 24, so a rows-per-task
     # sizing rule would have spread it past one wave
     assert fresh.metrics[0]["fetched"] > slots * 24
-    fresh_plans = {i: p for i, p in _sql_plans(spark).items() if i not in before}
-    dealt = {
-        int(n)
-        for p in fresh_plans.values()
-        for n in re.findall(r"RoundRobinPartitioning\((\d+)\)", p)
+    fresh_plans = [p for i, p in _sql_plans(spark).items() if i not in before]
+    kernel_plans = [p for p in fresh_plans if "FlatMapGroupsInPandas" in p]
+    assert len(kernel_plans) == len(fresh.metrics) == 2
+    for p in kernel_plans:
+        assert "host_round(" in p
+        dealt = set(re.findall(r"hashpartitioning\(host#\d+, (\d+)\), REPARTITION_BY_NUM", p))
+        assert dealt == {str(slots)}
+    python_ops = {
+        op for p in fresh_plans for op in re.findall(r"\b(\w*InPandas\w*|BatchEvalPython)\b", p)
     }
-    assert dealt == {slots}
+    assert python_ops == {"FlatMapGroupsInPandas"}
 
     ckpt = str(tmp_path / "ckpt")
     crawl_spark(spark, seeds, max_rounds=1, checkpoint_dir=ckpt, **kw)
@@ -378,7 +451,7 @@ def test_crawl_runs_no_canonicalize_pass_and_fetches_in_whole_waves(spark, tmp_p
 
     plans = [p for i, p in _sql_plans(spark).items() if i not in before]
     # positive control: plan descriptions name the Python functions
-    assert any("_robots_batches" in p for p in plans)
+    assert any("host_round(" in p for p in plans)
     assert not [p for p in plans if "_canonicalize_batches" in p]
 
     before = set(_sql_plans(spark))
@@ -403,16 +476,23 @@ def test_crawl_runs_no_canonicalize_pass_and_fetches_in_whole_waves(spark, tmp_p
 
 
 def test_fetch_children_match_canonicalize_pass(monkeypatch):
-    """The fetch UDF's canonical child structs equal the canonicalize
-    pass's row for each child URL — scripted children, and links parsed
-    out of a fetched archive — so both sites share one
-    canonicalization. No Spark: the UDF bodies run on pandas batches."""
+    """The admission kernel's canonical child structs equal the
+    canonicalize pass's row for each child URL — scripted children, and
+    links parsed out of a fetched archive — so both sites share one
+    canonicalization. No Spark: the kernel and the UDF body run on
+    pandas batches."""
     import pandas as pd
 
     from mhtml_to_html_spark.frontier import httpclient
-    from mhtml_to_html_spark.frontier.spark_frontier import _fetch_batches, extract_links
+    from mhtml_to_html_spark.frontier.spark_frontier import (
+        _ADMIT_COLS,
+        _CANON_COLS,
+        _admit_host_batch,
+        extract_links,
+        seed_rows,
+    )
     from mhtml_to_html_spark.streaming.frontier import _canonicalize_batches
-    from mhtml_to_html_spark.urlnorm import canonicalize_url, url_host
+    from mhtml_to_html_spark.urlnorm import canonicalize_url
 
     def canonical_rows(urls):
         pdf = pd.DataFrame({"url": urls, "depth": 1, "disc_seq": range(len(urls))})
@@ -420,16 +500,9 @@ def test_fetch_children_match_canonicalize_pass(monkeypatch):
         return out[["url", "key", "host", "host_rank", "h64"]].to_dict("records")
 
     def children(keys, **kw):
-        manifest = pd.DataFrame(
-            {
-                "key": keys,
-                "host": [url_host(k) for k in keys],
-                "depth": 0,
-                "disc_seq": range(len(keys)),
-                "pos": range(len(keys)),
-            }
-        )
-        (out,) = _fetch_batches(iter([manifest]), **kw)
+        rows = pd.DataFrame(seed_rows(keys), columns=_CANON_COLS)
+        out = pd.DataFrame(_admit_host_batch(rows, set(), len(keys), **kw), columns=_ADMIT_COLS)
+        assert (out["status"] != "deferred").all()
         return [c for kids in out["children"] for c in kids]
 
     scripted = children([canonicalize_url(u) for u in SEEDS], fanout=3, n_hosts=5)

@@ -179,3 +179,32 @@ def test_sharded_capacity_million_keys():
     assert kernels.probe(blobs, present, 16).all(), "false negative at 10^6 keys"
     fpp = kernels.probe(blobs, absent, 16).mean()
     assert fpp < 0.02, f"false-positive rate {fpp:.3%} — the prune is useless"
+
+
+def test_cuckoo_contains_many_matches_contains():
+    """The vectorized probe equals per-key ``contains`` on inserted
+    keys, on random keys, and on fingerprints that sit in the stash
+    (600 keys in 32 slots)."""
+    cf = CuckooFilter(8)
+    inserted = [url_hash64(k) for k in KEYS[:600]]
+    for h in inserted:
+        cf.add(h)
+    assert cf.stash
+    stashed = [
+        h for h in inserted
+        if not (cf.table[cf._index1(h)] == cf._fingerprint(h)).any()
+        and not (
+            cf.table[cf._index2(cf._index1(h), cf._fingerprint(h))] == cf._fingerprint(h)
+        ).any()
+    ]
+    assert stashed, "fixture: some fingerprints live only in the stash"
+    rng = np.random.default_rng(7)
+    random_keys = rng.integers(0, 1 << 63, size=5000, dtype=np.int64).astype(np.uint64)
+    for hs in (inserted, stashed, random_keys, [url_hash64(k) for k in ABSENT]):
+        hs = np.asarray(hs, dtype=np.uint64)
+        assert cf.contains_many(hs).tolist() == [cf.contains(int(h)) for h in hs]
+    big = CuckooFilter(1 << 12)
+    for k in KEYS:
+        big.add(url_hash64(k))
+    hs = np.asarray([url_hash64(k) for k in KEYS + ABSENT], dtype=np.uint64)
+    assert big.contains_many(hs).tolist() == [big.contains(int(h)) for h in hs]

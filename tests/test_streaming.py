@@ -314,11 +314,12 @@ def test_gate_fetches_through_fetch_row(monkeypatch):
     from mhtml_to_html_spark.frontier.fixtures import children_of
     from mhtml_to_html_spark.frontier.seenset import url_hash64
     from mhtml_to_html_spark.frontier.spark_frontier import (
+        _ADMIT_COLS,
         _CANON_COLS,
+        _admit_host_batch,
         canonical_fields,
         seed_rows,
     )
-    from mhtml_to_html_spark.streaming.frontier import _GATE_COLUMNS, _admit_host_batch
     from mhtml_to_html_spark.urlnorm import is_fetchable
 
     monkeypatch.setattr(
@@ -329,11 +330,11 @@ def test_gate_fetches_through_fetch_row(monkeypatch):
     rows = seed_rows([f"https://{host}/seed/{i}" for i in range(5)])
     decoded = []
     out = _admit_host_batch(
-        host, pd.DataFrame(rows, columns=_CANON_COLS), set(), BUDGET, False,
+        pd.DataFrame(rows, columns=_CANON_COLS), set(), BUDGET,
         fetcher="http", discover="scripted", fanout=FANOUT, n_hosts=NHOSTS,
         stand_in=lambda h64: decoded.append(h64) or b"",
     )
-    got = [dict(zip(_GATE_COLUMNS, r)) for r in out]
+    got = [dict(zip(_ADMIT_COLS, r)) for r in out]
     assert [r["status"] for r in got] == ["ok"] * BUDGET + ["deferred"] * 2
     assert [tuple(r[c] for c in _CANON_COLS) for r in got] == rows
     for r in got[:BUDGET]:
