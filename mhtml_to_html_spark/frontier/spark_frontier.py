@@ -10,15 +10,16 @@ stage between cheap JVM steps; every step runs under the job group
               probe_threshold seen keys) + exact anti-join against
               seen ∪ failed ∪ blocked──▶ ∪ the deferred backlog
               ──robots-cache (+ debt) join on host──▶ candidates
-    kernel    repartition(n, host).groupBy(host).applyInPandas: per
-              host, :func:`_host_round` → :func:`_admit_host_batch`:
-              dedup (min disc_seq) → robots (cached rules, or fetched
-              for a first-met host and emitted as a cache row) → token
-              budget (+ opt-in debt boost) → :func:`fetch_row` per
-              admitted key. Out: ok/failed rows with canonical
-              children, deferred, blocked, robots and debt rows, in
-              one eager checkpoint whose job also observes the round's
-              counters
+    kernel    repartition(n, host).sortWithinPartitions(host)
+              .mapInPandas(:func:`_round_kernel`): per Arrow batch, one
+              dedup (min disc_seq) and sort (:func:`_admission_rows`),
+              then per host run :func:`_admit_host_batch`: robots
+              (cached rules, or fetched for a first-met host and
+              emitted as a cache row) → token budget (+ opt-in debt
+              boost) → :func:`fetch_row` per admitted key. Out: ok/failed
+              rows with canonical children, deferred, blocked, robots
+              and debt rows, in one eager checkpoint whose job also
+              observes the round's counters
     index     global fetch position over (depth, host_rank, disc_seq)
     discover  posexplode the children; disc_seq continues the global
               counter in (parent fetch order, document order)
@@ -42,10 +43,11 @@ Scale notes (no single-partition exchange, no driver-held state):
   source of truth: a filter false positive never drops a URL (exact
   anti-join verifies the maybe-seen sliver), and because neither
   structure has false negatives, a seen URL is never refetched;
-- the per-host politeness scheduler is one grouped-pandas stage: the
-  host exchange is the round's only shuffle of candidate rows, and no
-  host state grows per URL (a host brings its round's candidates, one
-  robots cache row and one debt row);
+- the per-host politeness scheduler is one host-sorted pandas stage:
+  the host exchange is the round's only shuffle of candidate rows, the
+  Python side pays its pandas and Arrow work once per batch, not once
+  per host, and no host state grows per URL (a host brings its round's
+  candidates, one robots cache row and one debt row);
 - global fetch positions, discovery sequence numbers and recrawl
   sequence numbers come from indexing.index_rows: the two-pass
   zipWithIndex index over range-partitioned data once the rows to
@@ -102,6 +104,8 @@ from .seenset import url_hash64
 _CANON_FIELDS = "key string, host string, host_rank int, h64 long"
 _CANON_SCHEMA = f"url string, depth int, disc_seq long, {_CANON_FIELDS}"
 _CANON_COLS = ["url", "depth", "disc_seq", "key", "host", "host_rank", "h64"]
+# field positions in the canonical tuples :func:`_admission_rows` returns
+_KEY_AT, _HOST_AT, _H64_AT = (_CANON_COLS.index(c) for c in ("key", "host", "h64"))
 _CHILD_FIELDS = ("url", "key", "host", "host_rank", "h64")
 # the children :func:`fetch_row` emits
 _CHILDREN_TYPE = f"array<struct<url string, {_CANON_FIELDS}>>"
@@ -454,8 +458,8 @@ def stand_in_pool(payload_images: int, payload_scale: int):
     per URL, uncached; that is the measured work.
 
     The pool lives for ONE Spark task (``TaskContext.taskAttemptId()``),
-    for the batch round kernel and the streaming gate alike (one call
-    per host, many hosts per task): a
+    for the batch round kernel (one call per task) and the streaming
+    gate (one call per host, many hosts per task) alike: a
     worker-lifetime pool would let later tasks and jobs reuse bodies
     earlier ones synthesized, speeding up the stand-in, not the engine.
     Outside a task (in-process callers) each call gets a fresh pool.
@@ -482,16 +486,31 @@ def stand_in_pool(payload_images: int, payload_scale: int):
     return stand_in
 
 
-def _admit_host_batch(
-    batch, seen: set, host_budget: int, rules: dict | None = None, debt: int = 0, **fetch_kw
-) -> list[tuple]:
-    """The per-host admission kernel both crawls run, on one host's
-    canonical rows (``_CANON_COLS``): the batch round kernel
-    (:func:`_host_round`) once per host and round, the streaming
-    politeness gate once per host and micro-batch. In order:
+def _admission_rows(pdf) -> list[tuple]:
+    """Canonical rows (a pandas frame with ``_CANON_COLS``, any number
+    of hosts) as the tuples :func:`_admit_host_batch` walks: deduped
+    (the minimum ``disc_seq`` of a key wins, so a deferred backlog row
+    beats any later rediscovery of its key; a key fixes its host) and
+    in (host, depth, host_rank, disc_seq) order, so each host is one run
+    of tuples in fetch-priority order. The batch round kernel runs it
+    once per Arrow batch, the streaming gate once per host and
+    micro-batch."""
+    if pdf["key"].duplicated().any():
+        pdf = pdf.sort_values("disc_seq").drop_duplicates("key")
+    pdf = pdf.sort_values(["host", "depth", "host_rank", "disc_seq"])
+    return list(zip(*(pdf[c].tolist() for c in _CANON_COLS)))
 
-    - dedup: the minimum ``disc_seq`` of a key wins (a deferred backlog
-      row beats any later rediscovery of its key);
+
+def _admit_host_batch(
+    rows: list[tuple], seen: set, host_budget: int, rules: dict | None = None, debt: int = 0,
+    **fetch_kw,
+) -> list[tuple]:
+    """The admission core both crawls run, on one host's rows as
+    :func:`_admission_rows` returns them (deduped, in (depth, host_rank,
+    disc_seq) order): the batch round kernel (:func:`_round_kernel`)
+    once per host run of an Arrow batch, the streaming politeness gate
+    once per host and micro-batch. In order:
+
     - seen: a key whose unsigned h64 is in ``seen`` is dropped, and
       admitted and blocked keys join it (the gate's all-time per-host
       set; the batch crawl prunes seen keys upstream and passes an
@@ -500,36 +519,30 @@ def _admit_host_batch(
       ``crawl_delay_level``) a disallowed key is ``blocked`` once and
       the level scales the token budget;
     - budget: plus ``min(debt, budget)``, the opt-in debt boost (≤ 2×);
-    - fetch: in (depth, host_rank, disc_seq) order, up to the budget,
-      each through ``fetch_row(key, **fetch_kw)``; the rest is
-      ``deferred``.
+    - fetch: in row order, up to the budget, each through
+      ``fetch_row(key, **fetch_kw)``; the rest is ``deferred``.
 
     Returns the output rows (``_ADMIT_COLS``); only fetched rows carry
     children."""
     budget = host_budget if rules is None else token_budget(host_budget, rules["crawl_delay_level"])
     budget += min(debt, budget)
-    batch = (
-        batch.sort_values("disc_seq")
-        .drop_duplicates("key")
-        .sort_values(["depth", "host_rank", "disc_seq"])
-    )
-    rows = []
+    out = []
     admitted = 0
-    for r in batch[_CANON_COLS].itertuples(index=False):
-        h = int(r.h64) & 0xFFFFFFFFFFFFFFFF
+    for r in rows:
+        h = r[_H64_AT] & 0xFFFFFFFFFFFFFFFF
         if h in seen:
             continue  # exactly-once across the whole stream
-        if rules is not None and not rules_allow(rules["disallow"], r.key):
+        if rules is not None and not rules_allow(rules["disallow"], r[_KEY_AT]):
             seen.add(h)  # permanently blocked — reported exactly once
-            rows.append((*r, "blocked", 0, 0, []))
+            out.append((*r, "blocked", 0, 0, []))
         elif admitted < budget:
-            status, attempts, delay_ms, _h64, children = fetch_row(r.key, **fetch_kw)
+            status, attempts, delay_ms, _h64, children = fetch_row(r[_KEY_AT], **fetch_kw)
             seen.add(h)
             admitted += 1
-            rows.append((*r, status, attempts, delay_ms, children))
+            out.append((*r, status, attempts, delay_ms, children))
         else:
-            rows.append((*r, "deferred", 0, 0, []))
-    return rows
+            out.append((*r, "deferred", 0, 0, []))
+    return out
 
 
 def _host_state_row(host: str, status: str, disallow=None, crawl_delay_level=0, debt=0):
@@ -543,7 +556,7 @@ def _host_state_row(host: str, status: str, disallow=None, crawl_delay_level=0, 
     return tuple(row[c] for c in _KERNEL_COLS)
 
 
-def _host_round(
+def _round_kernel(
     host_budget: int,
     use_robots: bool,
     debt_boost: bool,
@@ -552,49 +565,89 @@ def _host_round(
     payload_scale: int,
     **fetch_kw,
 ):
-    """The round kernel's ``applyInPandas`` function, bound to the
-    crawl's settings (a closure: pyspark cannot read the type hints of
-    a ``functools.partial``). Per host, its candidate rows arrive with
-    the robots cache row joined on (``disallow``,
+    """The round kernel's ``mapInPandas`` function, bound to the crawl's
+    settings. Its partition arrives sorted by host, each candidate row
+    with the host's robots cache row joined on (``disallow``,
     ``crawl_delay_level``; a null level means the host is met for the
     first time) and, with ``debt_boost``, last round's overflow count
-    (``debt``). A first-met host's rules come from ``robots_rules``
-    (deterministic double; production swaps in an HTTP robots.txt
-    fetch) and leave as a ``robots`` row for the cache; with
-    ``debt_boost`` a host that defers rows leaves a ``debt`` row. Rows
-    are ``_KERNEL_COLS``."""
+    (``debt``). Per Arrow batch it runs :func:`_admission_rows` once,
+    then :func:`_admit_host_batch` on each host's run of tuples, and
+    emits one frame. A first-met host's rules come from
+    ``robots_rules`` (deterministic double; production swaps in an HTTP
+    robots.txt fetch) and leave as a ``robots`` row for the cache; with
+    ``debt_boost`` a host that defers rows leaves a ``debt`` row. An
+    Arrow batch may end inside a host's run, so the batch's last host
+    carries into the next batch, and the last carry is finished after
+    the partition's last batch. Rows are ``_KERNEL_COLS``."""
     status_at = _ADMIT_COLS.index("status")
+    state_cols = (["disallow", "crawl_delay_level"] if use_robots else []) + (
+        ["debt"] if debt_boost else [])
 
-    def host_round(key, pdf):
+    def admit(pdf, stand_in):
         import pandas as pd
 
-        (host,) = key
-        rules = None
-        state = []
-        if use_robots:
-            level = pdf["crawl_delay_level"].iloc[0]
-            if pd.isna(level):
-                rules = robots_rules(host)
-                state.append(_host_state_row(host, "robots", **rules))
-            else:
-                disallow = pdf["disallow"].iloc[0]
-                rules = {
-                    "disallow": None if pd.isna(disallow) else disallow,
-                    "crawl_delay_level": int(level),
-                }
-        debt = 0
-        if debt_boost and not pd.isna(pdf["debt"].iloc[0]):
-            debt = int(pdf["debt"].iloc[0])
-        stand_in = stand_in_pool(payload_images, payload_scale) if decode_payload else None
-        rows = _admit_host_batch(
-            pdf, set(), host_budget, rules, debt, stand_in=stand_in, **fetch_kw
-        )
-        n_deferred = sum(r[status_at] == "deferred" for r in rows)
-        if debt_boost and n_deferred:
-            state.append(_host_state_row(host, "debt", debt=n_deferred))
-        return pd.DataFrame([(*r, None, 0, 0) for r in rows] + state, columns=_KERNEL_COLS)
+        firsts = pdf.drop_duplicates("host")
+        state = {c: dict(zip(firsts["host"].tolist(), firsts[c].tolist())) for c in state_cols}
+        rows = _admission_rows(pdf)
+        out = []
+        start, n = 0, len(rows)
+        while start < n:
+            host = rows[start][_HOST_AT]
+            end = start + 1
+            while end < n and rows[end][_HOST_AT] == host:
+                end += 1
+            rules = None
+            host_state = []
+            if use_robots:
+                level = state["crawl_delay_level"][host]
+                if pd.isna(level):
+                    rules = robots_rules(host)
+                    host_state.append(_host_state_row(host, "robots", **rules))
+                else:
+                    disallow = state["disallow"][host]
+                    rules = {
+                        "disallow": None if pd.isna(disallow) else disallow,
+                        "crawl_delay_level": int(level),
+                    }
+            debt = 0
+            if debt_boost and not pd.isna(state["debt"][host]):
+                debt = int(state["debt"][host])
+            admitted = _admit_host_batch(
+                rows[start:end], set(), host_budget, rules, debt, stand_in=stand_in, **fetch_kw
+            )
+            out.extend((*r, None, 0, 0) for r in admitted)
+            n_deferred = sum(r[status_at] == "deferred" for r in admitted)
+            if debt_boost and n_deferred:
+                host_state.append(_host_state_row(host, "debt", debt=n_deferred))
+            out.extend(host_state)
+            start = end
+        return pd.DataFrame(out, columns=_KERNEL_COLS)
 
-    return host_round
+    def round_kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        stand_in = stand_in_pool(payload_images, payload_scale) if decode_payload else None
+        carry = []  # frames of one host whose run may go on in the next batch
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            hosts = pdf["host"].to_numpy()
+            # where the batch's last host run starts
+            other = np.flatnonzero(hosts != hosts[-1])
+            cut = int(other[-1]) + 1 if len(other) else 0
+            if cut == 0 and carry and carry[0]["host"].iat[0] == hosts[0]:
+                carry.append(pdf)
+                continue
+            done = carry + [pdf.iloc[:cut]]
+            carry = [pdf.iloc[cut:]]
+            done = pd.concat(done, ignore_index=True) if len(done) > 1 else done[0]
+            if len(done):
+                yield admit(done, stand_in)
+        if carry:
+            yield admit(pd.concat(carry, ignore_index=True), stand_in)
+
+    return round_kernel
 
 
 def _kernel_counters() -> list:
@@ -793,7 +846,7 @@ def crawl_spark(
     n_slots = sc.defaultParallelism
     n_par = max(n_slots, 4)
     n_debt_hosts = 0
-    kernel = _host_round(
+    kernel = _round_kernel(
         host_budget=host_budget,
         use_robots=use_robots,
         debt_boost=debt_boost,
@@ -903,38 +956,42 @@ def crawl_spark(
         if debt_boost:
             candidates = candidates.join(_join_side(debt_df, n_debt_hosts), "host", "left")
 
-        # kernel: ONE grouped-pandas stage admits and fetches every
-        # host's candidates (:func:`_host_round`), checkpointed eagerly
-        # with the round's counters observed on the same job (a lazy
-        # checkpoint plus an agg is one job more under AQE).
+        # kernel: ONE pandas stage admits and fetches every host's
+        # candidates (:func:`_round_kernel`), checkpointed eagerly with
+        # the round's counters observed on the same job (a lazy
+        # checkpoint plus an agg is one job more under AQE). The rows
+        # are dealt by host and sorted on it within each partition, so
+        # the kernel makes one pandas pass per Arrow batch, not one per
+        # host group.
         # Partitioning runs in WHOLE WAVES of the session's slots: each
         # Python task pays a fixed ~65ms of slot time before its UDF
         # runs (worker hand-off, UDF unpickling, the Arrow round trip;
         # scripts/python_task_cost.py measures it), while a decoded
-        # fetch costs ~33ms per row (19ms body synthesis + 14ms
-        # parse_mhtml). Policy: slots × waves tasks, waves = ⌈candidates
-        # / (slots · _KERNEL_ROWS_PER_TASK)⌉ clamped to [1, 8], sized
-        # from expected_frontier (the round's candidates before dedup
-        # and prune, an upper bound) — one wave of fat tasks at toy
-        # rounds, the 8-wave cap at 10^10-URL rounds. An explicit
-        # repartition by number is never coalesced by AQE, so the count
-        # holds. Placement is by host hash, so a task's fetch work is
-        # bounded by politeness: at most 2 × host_budget fetches (the
-        # debt cap) per host it holds.
-        # Memory bound per kernel task: the JVM sorts the task's rows by
-        # host and hands Python one host group at a time, so a worker
-        # holds its largest host group (that host's fresh rows plus its
-        # backlog, ~200 B per canonical row) and the group's output
-        # rows (plus fanout × ~180 B of children per fetched row), plus
-        # the per-task body pool of :func:`stand_in_pool` (≤ 64 bodies,
-        # ~62MB at payload (8, 6)).
+        # fetch costs ~20ms per row (~10.7ms stand-in body synthesis +
+        # ~9ms parse_mhtml). Policy: slots × waves tasks, waves =
+        # ⌈candidates / (slots · _KERNEL_ROWS_PER_TASK)⌉ clamped to
+        # [1, 8], sized from expected_frontier (the round's candidates
+        # before dedup and prune, an upper bound) — one wave of fat
+        # tasks at toy rounds, the 8-wave cap at 10^10-URL rounds. An
+        # explicit repartition by number is never coalesced by AQE, so
+        # the count holds. Placement is by host hash, so a task's fetch
+        # work is bounded by politeness: at most 2 × host_budget
+        # fetches (the debt cap) per host it holds.
+        # Memory bound per kernel task: the JVM sorts the task's rows
+        # by host (spilling past its memory) and hands Python one Arrow
+        # batch at a time, so a worker holds one batch (at most
+        # spark.sql.execution.arrow.maxRecordsPerBatch rows, ~200 B per
+        # canonical row), the carried rows of the one host that batch
+        # ends in, the batch's output rows (plus fanout × ~180 B of
+        # children per fetched row), and the per-task body pool of
+        # :func:`stand_in_pool` (≤ 64 bodies, ~62MB at payload (8, 6)).
         step(round_idx, "kernel")
         waves = min(8, max(1, -(-expected_frontier // (n_slots * _KERNEL_ROWS_PER_TASK))))
         counters = Observation()
         admitted = (
             candidates.repartition(n_slots * waves, "host")
-            .groupBy("host")
-            .applyInPandas(kernel, schema=_KERNEL_SCHEMA)
+            .sortWithinPartitions("host")
+            .mapInPandas(kernel, schema=_KERNEL_SCHEMA)
             .observe(counters, *_kernel_counters())
             .localCheckpoint(eager=True)
         )

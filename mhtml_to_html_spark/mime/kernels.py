@@ -74,7 +74,6 @@ def decode_quoted_printable(data: bytes) -> bytes:
     return bytes(out)
 
 
-_B64_ALPHABET_BYTES = b"ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789+/"
 _ASCII_WS = b" \t\n\f\r"
 
 
@@ -84,7 +83,8 @@ def decode_base64_checked(value: str | bytes) -> bytes | None:
     Strips ASCII whitespace; tolerates missing padding; returns ``None``
     (instead of raising) when the value is not valid base64 — the
     caller leaves the part encoded and records a ``base64-left-encoded``
-    anomaly, matching the reference's quiet-recovery behavior.
+    anomaly, matching the reference's quiet-recovery behavior. A non-ASCII
+    character or byte is never valid.
     """
     if isinstance(value, str):
         try:
@@ -99,15 +99,15 @@ def decode_base64_checked(value: str | bytes) -> bytes | None:
             raw = raw[:-2]
         elif raw.endswith(b"="):
             raw = raw[:-1]
-    if len(raw) % 4 == 1:
-        return None
-    # C-speed alphabet check: deleting every valid byte must leave nothing
-    if raw.translate(None, _B64_ALPHABET_BYTES):
+    # WHATWG padding: only the (at most two) trailing '=' removed above,
+    # and never a lone sextet; the strict decode then rejects every byte
+    # outside the alphabet
+    if len(raw) % 4 == 1 or b"=" in raw:
         return None
     pad = (-len(raw)) % 4
     try:
-        return base64.b64decode(raw + b"=" * pad, validate=True)
-    except (binascii.Error, ValueError):
+        return binascii.a2b_base64(raw + b"=" * pad if pad else raw, strict_mode=True)
+    except binascii.Error:
         return None
 
 

@@ -356,8 +356,9 @@ class _Parser:
             Non-QP parts take a bulk fast path: the next delimiter is
             located with ``bytes.find`` over the archive instead of a
             per-line scan (base64 image bodies are thousands of lines;
-            the line loop was ~75% of decode CPU), and terminators are
-            stripped with two ``bytes.replace`` calls. Byte-for-byte
+            the line loop was ~75% of decode CPU), and a base64 body
+            keeps its terminators for :func:`_decode_base64_part`,
+            which strips whitespace once. Byte-for-byte
             equivalent to the line loop — every divergence-prone rule
             (first-occurrence-only delimiter test per line, ``--``
             prefix requirement, transport padding, data prefix on the
@@ -419,10 +420,8 @@ class _Parser:
                     index_end = fidx
                     nl = mhtml.find(b"\n", fidx)
                     pos = n + 1 if nl == -1 else nl + 1
-                if te == "base64":
-                    # every \n is a line terminator by construction;
-                    # drop each one plus any \r immediately before it
-                    chunk = chunk.replace(b"\r\n", b"\n").replace(b"\n", b"")
+                # a base64 chunk keeps its line terminators: the part's
+                # decode strips all whitespace once (_decode_base64_part)
                 append(chunk)
                 # trailing line terminator belongs to the delimiter / EOF
                 if current_len > 1 and tail_byte(2) == 0x0D and tail_byte(1) == 0x0A:
@@ -470,23 +469,31 @@ class _Parser:
             # decode gating (parse.js:353-362): only the index document,
             # Content-ID'd documents and stylesheets are base64-decoded
             # here; everything else stays byte-exact for inlining.
-            if (
-                part.transfer_encoding == "base64"
-                and part.content_type
-                and (
+            decoded = None
+            if part.transfer_encoding == "base64":
+                decoded = _decode_base64_part(raw)
+                if part.content_type and (
                     part.part_id == self.index
                     or (part.content_id is not None and is_document(part.content_type))
                     or is_stylesheet(part.content_type)
-                )
-            ):
-                decoded = decode_base64_checked(decode_string(raw))
-                if decoded is not None:
-                    part.transfer_encoding = None
-                    raw = decoded
-                else:
-                    anomaly = {"type": UNDECODABLE_BASE64_ANOMALY, "id": part.part_id}
-                    self.anomalies.append(anomaly)
-                    part.anomalies.append(anomaly)
+                ):
+                    if decoded is not None:
+                        part.transfer_encoding = None
+                        raw = decoded
+                    else:
+                        anomaly = {"type": UNDECODABLE_BASE64_ANOMALY, "id": part.part_id}
+                        self.anomalies.append(anomaly)
+                        part.anomalies.append(anomaly)
+                if part.transfer_encoding == "base64" and (
+                    decoded is None
+                    or not raw.isascii()
+                    or (part.content_type and is_document(part.content_type))
+                ):
+                    # the part stays encoded, and its encoded bytes are
+                    # read again: kept as its data (undecodable), sniffed
+                    # for a BOM (non-ASCII) or charset-scanned (a
+                    # document). Those read them with line ends stripped
+                    raw = _strip_line_ends(raw)
             bom_charset = get_bom_charset(raw)
             charset = bom_charset or declared_charset
             part.charset = charset
@@ -501,7 +508,6 @@ class _Parser:
             elif part.transfer_encoding == "base64":
                 # kept encoded in the reference (inlined as data URI);
                 # the pipeline wants payload bytes, so decode when valid
-                decoded = decode_base64_checked(decode_string(raw))
                 part.data = decoded if decoded is not None else raw
             else:
                 part.data = raw
@@ -620,6 +626,29 @@ class _Parser:
                     process_resource()
                 state = "END" if pos >= n - 1 else "CONTENT"
         return headers
+
+
+def _strip_line_ends(data: bytes) -> bytes:
+    """A base64 body without its line terminators: every ``\n`` plus a
+    ``\r`` right before it (a lone ``\r`` stays), as the line loop strips
+    them line by line."""
+    return data.replace(b"\r\n", b"\n").replace(b"\n", b"")
+
+
+def _decode_base64_part(raw: bytes) -> bytes | None:
+    """A base64 part's body, line terminators still in, decoded: the
+    verdict and bytes of ``decode_base64_checked(decode_string(
+    _strip_line_ends(raw)))`` with one whitespace strip and no text
+    round trip. Only a non-ASCII body takes the text rules' path: a
+    UTF-8 BOM at the start of the stripped body is dropped (as
+    ``decode_string`` drops it), any other non-ASCII byte fails."""
+    if not raw.isascii():
+        raw = _strip_line_ends(raw)
+        if raw.startswith(b"\xef\xbb\xbf"):
+            raw = raw[3:]
+        if not raw.isascii():
+            return None
+    return decode_base64_checked(raw)
 
 
 def _process_stylesheet_charset(

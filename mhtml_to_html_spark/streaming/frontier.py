@@ -12,11 +12,12 @@ This module is the Structured-Streaming shape of
   fetches per micro-batch (the token-bucket refill interval). Overflow
   is emitted as ``status='deferred'`` for the feeder to re-queue — the
   same defer-to-next-wave semantics as the batch crawl's round loop.
-- **one admission kernel**: each host's micro-batch runs the batch
-  crawl's per-host kernel ``spark_frontier._admit_host_batch`` (dedup,
-  seen, robots, token budget, and ``fetch_row`` per admitted key: fetch,
-  decode, discovery, canonical children), with the same per-task body
-  pool (``spark_frontier.stand_in_pool``).
+- **one admission core**: each host's micro-batch runs the batch
+  crawl's dedup and sort (``spark_frontier._admission_rows``) and its
+  per-host core ``spark_frontier._admit_host_batch`` (seen, robots,
+  token budget, and ``fetch_row`` per admitted key: fetch, decode,
+  discovery, canonical children), with the same per-task body pool
+  (``spark_frontier.stand_in_pool``).
 - **canonical rows in, canonical rows out**: :func:`canonical_gate`
   takes frontier rows that are canonical from birth (``_CANON_SCHEMA``,
   the batch crawl's frontier row) and emits them with the fetch result
@@ -48,6 +49,7 @@ from ..frontier.spark_frontier import (
     _ADMIT_COLS,
     _ADMIT_SCHEMA,
     _CANON_SCHEMA,
+    _admission_rows,
     _admit_host_batch,
     canonical_fields,
     stand_in_pool,
@@ -110,7 +112,7 @@ def _politeness_gate(
     seen = _decode_seen(state.get[0]) if state.exists else set()
     stand_in = stand_in_pool(payload_images, payload_scale) if decode_payload else None
     rows = _admit_host_batch(
-        pd.concat(list(pdfs), ignore_index=True), seen, host_budget,
+        _admission_rows(pd.concat(list(pdfs), ignore_index=True)), seen, host_budget,
         robots_rules(host) if use_robots else None, stand_in=stand_in, **fetch_kw,
     )
     state.update((_encode_seen(seen),))

@@ -1,6 +1,6 @@
-"""The per-host admission kernel both crawls run
-(``spark_frontier._admit_host_batch``) and the batch round's host
-wrapper (``_host_round``), on pandas frames for one host, no Spark.
+"""The admission core both crawls run (``spark_frontier._admission_rows``
+then ``_admit_host_batch``) and the batch round's kernel
+(``_round_kernel``), on pandas frames for one host, no Spark.
 Each expectation follows ``crawl_oracle``'s rules: first discovery
 wins, a robots-disallowed key is blocked once, the crawl-delay level
 scales the token budget, the debt boost adds at most one more budget,
@@ -17,8 +17,9 @@ from mhtml_to_html_spark.frontier.spark_frontier import (
     _ADMIT_COLS,
     _CANON_COLS,
     _KERNEL_COLS,
+    _admission_rows,
     _admit_host_batch,
-    _host_round,
+    _round_kernel,
     canonical_fields,
 )
 
@@ -36,7 +37,7 @@ def rows(*specs, host=HOST):
 
 
 def admit(batch, budget, rules=None, debt=0):
-    out = _admit_host_batch(batch, set(), budget, rules, debt)
+    out = _admit_host_batch(_admission_rows(batch), set(), budget, rules, debt)
     return [dict(zip(_ADMIT_COLS, r)) for r in out]
 
 
@@ -118,14 +119,19 @@ def test_kernel_rules_match_the_oracle_fixtures():
 
 
 def test_host_round_emits_cache_and_debt_rows():
-    """The batch wrapper: a first-met host (null cached level) leaves one
+    """The batch kernel: a first-met host (null cached level) leaves one
     ``robots`` row with its ``robots_rules``; a cached host leaves none
     and uses the cached rules; with debt_boost a host that defers
     leaves one ``debt`` row counting its deferred rows."""
     batch = rows(*((f"p/{i}", 1, i) for i in range(5)))
     kw = dict(host_budget=2, use_robots=True, debt_boost=True, decode_payload=False,
               payload_images=2, payload_scale=1)
-    host_round = _host_round(**kw)
+    kernel = _round_kernel(**kw)
+
+    def host_round(_key, pdf):
+        (out,) = kernel(iter([pdf]))
+        return out
+
     first = host_round((HOST,), batch.assign(disallow=None, crawl_delay_level=None, debt=None))
     assert list(first.columns) == _KERNEL_COLS
     rules = robots_rules(HOST)
@@ -142,3 +148,39 @@ def test_host_round_emits_cache_and_debt_rows():
     # cached level 0 with no disallow: budget 2 plus a debt boost of 2
     assert int(cached["status"].isin(["ok", "failed"]).sum()) == 4
     assert cached[cached["status"] == "debt"]["debt"].tolist() == [1]
+
+
+def test_round_kernel_is_blind_to_arrow_batch_boundaries():
+    """The kernel's partition arrives sorted by host but cut into Arrow
+    batches anywhere: a host's run (here with a duplicate key whose
+    first discovery sits in an earlier batch) carries into the next
+    batch, and the last host is finished after the last batch. Every
+    cut gives the rows of one whole-partition batch, in the same
+    order."""
+    hosts = [f"host{i}.example.com" for i in (1, 2, 3)]
+    pdf = pd.concat(
+        [
+            rows(("p/a", 2, 3), ("p/b", 1, 5), ("p/c", 1, 1), ("p/a", 1, 9), host=hosts[0]),
+            rows(("q/a", 1, 4), host=hosts[1]),
+            rows(*((f"r/{i}", 1 + i % 2, 10 + i) for i in range(6)), host=hosts[2]),
+        ],
+        ignore_index=True,
+    ).assign(
+        disallow=None, crawl_delay_level=[None] * 5 + [0.0] * 6, debt=[1.0] * 5 + [None] * 6
+    )
+    # the JVM's sort on host keeps no order within a host
+    pdf = pdf.sample(frac=1, random_state=3).sort_values("host", kind="stable")
+    kernel = _round_kernel(host_budget=2, use_robots=True, debt_boost=True,
+                           decode_payload=False, payload_images=2, payload_scale=1)
+
+    def run(size):
+        batches = [pdf.iloc[i:i + size] for i in range(0, len(pdf), size)]
+        out = pd.concat(list(kernel(iter(batches))), ignore_index=True)
+        return out.astype(object).where(out.notna(), None).values.tolist()
+
+    whole = run(len(pdf))
+    statuses = [r[_KERNEL_COLS.index("status")] for r in whole]
+    assert {"ok", "deferred", "robots", "debt"} <= set(statuses)
+    assert sum(r[_KERNEL_COLS.index("key")] == f"https://{hosts[0]}/p/a" for r in whole) == 1
+    for size in range(1, len(pdf)):
+        assert run(size) == whole

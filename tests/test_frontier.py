@@ -169,6 +169,37 @@ def test_spark_matches_oracle_with_robots(spark, tmp_path):
 
 
 @pytest.mark.spark
+@pytest.mark.parametrize("batch_rows", [2, 3])
+def test_spark_matches_oracle_with_hosts_spanning_arrow_batches(spark, batch_rows):
+    """The round kernel walks host runs of Arrow batches: with batches of
+    2 or 3 rows nearly every host's run straddles batches, so its rows
+    are carried into the next batch (and the partition's last host is
+    finished after the last batch). A robots-on, debt-boost crawl must
+    still match the oracle's order and seen, failed and blocked sets."""
+    from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf, None)
+    kw = dict(max_rounds=MAX_ROUNDS, host_budget=2, use_robots=True, debt_boost=True)
+    # host16's robots.txt disallows /d2, where its root pages link
+    seeds = SEEDS + [f"https://host16.example.com/{p}" for p in "abc"]
+    oracle = crawl_oracle(seeds, **kw)
+    spark.conf.set(conf, str(batch_rows))
+    try:
+        res = crawl_spark(spark, seeds, collect_order=True, **kw)
+    finally:
+        if saved is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, saved)
+    assert any(m["deferred"] for m in res.metrics)
+    assert res.order == oracle.order
+    assert res.seen == oracle.seen
+    assert res.failed == oracle.failed
+    assert res.blocked == oracle.blocked and res.blocked
+
+
+@pytest.mark.spark
 def test_spark_resume_from_checkpoint(spark, oracle_result, tmp_path):
     from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
 
@@ -402,13 +433,15 @@ def test_crawl_runs_no_canonicalize_pass_and_fetches_in_whole_waves(spark, tmp_p
     """Frontier rows are canonical from birth: no execution of a fresh,
     checkpointed, resumed or recrawling crawl runs
     ``_canonicalize_batches``. Each round admits and fetches in ONE
-    grouped-pandas stage, the host kernel, dealt by host into whole
-    waves of the session's slots: a fresh crawl whose rounds fit one
-    wave runs exactly one kernel execution per round, each over a
-    ``hashpartitioning(host, slots)`` exchange, and no other Python
-    operator. The streaming feeder's micro-batch runs one Python
-    operator, the gate; only the raw-URL ``stream_frontier_fetch``
-    canonicalizes ahead of it."""
+    pandas stage, the host kernel, dealt by host into whole waves of
+    the session's slots and sorted on host within each partition: a
+    fresh crawl whose rounds fit one wave runs exactly one
+    ``MapInPandas`` kernel execution per round, each over a
+    ``hashpartitioning(host, slots)`` exchange and a sort on host, and
+    no other Python operator (no per-host ``FlatMapGroupsInPandas``).
+    The streaming feeder's micro-batch runs one Python operator, the
+    gate; only the raw-URL ``stream_frontier_fetch`` canonicalizes
+    ahead of it."""
     import contextlib
     import io
     import re
@@ -426,16 +459,21 @@ def test_crawl_runs_no_canonicalize_pass_and_fetches_in_whole_waves(spark, tmp_p
     # sizing rule would have spread it past one wave
     assert fresh.metrics[0]["fetched"] > slots * 24
     fresh_plans = [p for i, p in _sql_plans(spark).items() if i not in before]
-    kernel_plans = [p for p in fresh_plans if "FlatMapGroupsInPandas" in p]
+    kernel_plans = [p for p in fresh_plans if "round_kernel(" in p]
     assert len(kernel_plans) == len(fresh.metrics) == 2
     for p in kernel_plans:
-        assert "host_round(" in p
-        dealt = set(re.findall(r"hashpartitioning\(host#\d+, (\d+)\), REPARTITION_BY_NUM", p))
-        assert dealt == {str(slots)}
+        assert re.search(r"\) MapInPandas\nInput \[\d+\]: .*\nArguments: round_kernel\(", p)
+        dealt = set(re.findall(r"hashpartitioning\((host#\d+), (\d+)\), REPARTITION_BY_NUM", p))
+        assert {n for _, n in dealt} == {str(slots)}
+        # the partition-local sort on the dealt host column, no global sort
+        sorted_on = re.findall(
+            r"\) Sort\b.*\nInput \[\d+\]: .*\nArguments: \[(host#\d+) ASC NULLS FIRST\], false", p
+        )
+        assert sorted_on and set(sorted_on) == {h for h, _ in dealt}
     python_ops = {
         op for p in fresh_plans for op in re.findall(r"\b(\w*InPandas\w*|BatchEvalPython)\b", p)
     }
-    assert python_ops == {"FlatMapGroupsInPandas"}
+    assert python_ops == {"MapInPandas"}
 
     ckpt = str(tmp_path / "ckpt")
     crawl_spark(spark, seeds, max_rounds=1, checkpoint_dir=ckpt, **kw)
@@ -451,7 +489,7 @@ def test_crawl_runs_no_canonicalize_pass_and_fetches_in_whole_waves(spark, tmp_p
 
     plans = [p for i, p in _sql_plans(spark).items() if i not in before]
     # positive control: plan descriptions name the Python functions
-    assert any("host_round(" in p for p in plans)
+    assert any("round_kernel(" in p for p in plans)
     assert not [p for p in plans if "_canonicalize_batches" in p]
 
     before = set(_sql_plans(spark))
@@ -487,6 +525,7 @@ def test_fetch_children_match_canonicalize_pass(monkeypatch):
     from mhtml_to_html_spark.frontier.spark_frontier import (
         _ADMIT_COLS,
         _CANON_COLS,
+        _admission_rows,
         _admit_host_batch,
         extract_links,
         seed_rows,
@@ -501,7 +540,9 @@ def test_fetch_children_match_canonicalize_pass(monkeypatch):
 
     def children(keys, **kw):
         rows = pd.DataFrame(seed_rows(keys), columns=_CANON_COLS)
-        out = pd.DataFrame(_admit_host_batch(rows, set(), len(keys), **kw), columns=_ADMIT_COLS)
+        out = pd.DataFrame(
+            _admit_host_batch(_admission_rows(rows), set(), len(keys), **kw), columns=_ADMIT_COLS
+        )
         assert (out["status"] != "deferred").all()
         return [c for kids in out["children"] for c in kids]
 

@@ -199,6 +199,48 @@ CASES = {
         f"--{B}\r\nContent-Type: text/plain\r\n\r\n\r\n"
         f"--{B}--\r\n"
     ),
+    # undecodable base64 parts stay encoded with a base64-left-encoded
+    # anomaly; their kept bytes must agree between the two paths
+    "base64_undecodable_parts": concat_bytes(
+        f"MIME-Version: 1.0\r\nContent-Type: multipart/related;"
+        f' boundary="{B}"\r\n\r\n'
+        f"--{B}\r\nContent-Type: text/html\r\n"
+        f"Content-Transfer-Encoding: base64\r\n\r\n",
+        b"PHA+\r\nx*y\r\r\nQUJD\r\n",
+        f"--{B}\r\nContent-Type: text/css\r\nContent-Transfer-Encoding: base64\r\n\r\n",
+        b"QQ=\r\n",
+        f"--{B}\r\nContent-Type: image/gif\r\nContent-Transfer-Encoding: base64\r\n"
+        f"Content-Location: https://e.com/a.gif\r\n\r\n",
+        b"=QQQ\r\nQUJD\n\rQ===\r\n",
+        f"--{B}\r\nContent-Type: image/png\r\nContent-Transfer-Encoding: base64\r\n"
+        f"Content-Location: https://e.com/b.png\r\n\r\n",
+        b"QUJD\xffREVG\r\n\r\n",
+        f"--{B}--\r\n",
+    ),
+    # decodable edge cases: a lone CR and other whitespace inside the
+    # data, a UTF-8 BOM at the start or after a blank line (the part's
+    # charset), a document without a Content-ID (left encoded,
+    # charset-scanned as text)
+    "base64_whitespace_and_bom": concat_bytes(
+        f"MIME-Version: 1.0\r\nContent-Type: multipart/related;"
+        f' boundary="{B}"\r\n\r\n'
+        f"--{B}\r\nContent-Type: text/html\r\n"
+        f"Content-Transfer-Encoding: base64\r\n\r\n",
+        b"PGh0bWw+PG\r1ldGEg\t Y2hh cnNldD11dGYtOD48L2h0bWw+\r\n",
+        f"--{B}\r\nContent-Type: text/html\r\nContent-Transfer-Encoding: base64\r\n"
+        f"Content-Location: https://e.com/frame.html\r\n\r\n",
+        b"\r\n\xef\xbb\xbfPHA+ZnJhbWU8L3A+\r\n",
+        f"--{B}\r\nContent-Type: text/html\r\nContent-Transfer-Encoding: base64\r\n"
+        f"Content-Location: https://e.com/frame2.html\r\n\r\n",
+        b"PHA+\r\nZnJhbWU8L3A+\r\n",
+        f"--{B}\r\nContent-Type: image/gif\r\nContent-Transfer-Encoding: base64\r\n"
+        f"Content-Location: https://e.com/c.gif\r\n\r\n",
+        b"\xef\xbb\xbfR0lG\r\nODlh\x0cAQAB\r\nAA==\r\n",
+        f"--{B}\r\nContent-Type: image/gif\r\nContent-Transfer-Encoding: base64\r\n"
+        f"Content-Location: https://e.com/d.gif\r\n\r\n",
+        b"\r\n\xef\xbb\xbfR0lGODlh\r\n",
+        f"--{B}--\r\n",
+    ),
     "boundary_at_eof_no_newline": concat_bytes(
         f"MIME-Version: 1.0\r\nContent-Type: multipart/related;"
         f' boundary="{B}"\r\n\r\n'

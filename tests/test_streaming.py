@@ -316,6 +316,7 @@ def test_gate_fetches_through_fetch_row(monkeypatch):
     from mhtml_to_html_spark.frontier.spark_frontier import (
         _ADMIT_COLS,
         _CANON_COLS,
+        _admission_rows,
         _admit_host_batch,
         canonical_fields,
         seed_rows,
@@ -330,7 +331,7 @@ def test_gate_fetches_through_fetch_row(monkeypatch):
     rows = seed_rows([f"https://{host}/seed/{i}" for i in range(5)])
     decoded = []
     out = _admit_host_batch(
-        pd.DataFrame(rows, columns=_CANON_COLS), set(), BUDGET,
+        _admission_rows(pd.DataFrame(rows, columns=_CANON_COLS)), set(), BUDGET,
         fetcher="http", discover="scripted", fanout=FANOUT, n_hosts=NHOSTS,
         stand_in=lambda h64: decoded.append(h64) or b"",
     )
