@@ -72,13 +72,12 @@ def _two_pass_prefix_sum(
     weight_col: str | None,
     out_col: str,
     start: int,
-    num_partitions: int | None,
 ) -> tuple[DataFrame, int]:
     """``out_col`` = ``start`` + the exclusive prefix sum of
     ``weight_col`` (1 per row when None) under ``order_cols``; returns
     ``(df, total weight)``."""
     spark = df.sparkSession
-    n = num_partitions or max(spark.sparkContext.defaultParallelism, 4)
+    n = max(spark.sparkContext.defaultParallelism, 4)
     parted = df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols)
 
     out_schema = StructType(
@@ -120,16 +119,13 @@ def assign_global_index(
     order_cols: list[str],
     out_col: str = "pos",
     start: int = 0,
-    num_partitions: int | None = None,
-    return_count: bool = False,
-):
+) -> tuple[DataFrame, int]:
     """Add ``out_col`` = the 0-based rank of each row under the total
     order ``order_cols`` (+ ``start``), with no single-partition
     exchange anywhere in the plan. ``order_cols`` must be tie-free.
-    With ``return_count`` returns ``(df, n_rows)`` — the total falls
-    out of the offsets pass for free."""
-    out, n_rows = _two_pass_prefix_sum(df, order_cols, None, out_col, start, num_partitions)
-    return (out, n_rows) if return_count else out
+    Returns ``(df, n_rows)`` — the total falls out of the offsets pass
+    for free."""
+    return _two_pass_prefix_sum(df, order_cols, None, out_col, start)
 
 
 def assign_prefix_sum(
@@ -137,7 +133,6 @@ def assign_prefix_sum(
     order_cols: list[str],
     weight_col: str,
     out_col: str = "cum_before",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Add ``out_col`` = the EXCLUSIVE prefix sum of ``weight_col``
     under the total order ``order_cols`` (sum of all strictly-preceding
@@ -146,7 +141,7 @@ def assign_prefix_sum(
     ``Window.orderBy().rowsBetween(unboundedPreceding, -1)`` computes
     the identical column through ONE task; this never does.
     ``order_cols`` must be tie-free; weights must be integral."""
-    return _two_pass_prefix_sum(df, order_cols, weight_col, out_col, 0, num_partitions)[0]
+    return _two_pass_prefix_sum(df, order_cols, weight_col, out_col, 0)[0]
 
 
 def index_rows(
@@ -161,6 +156,6 @@ def index_rows(
     ``count`` is the exact row count when the two-pass path computed
     it anyway, else ``None``."""
     if n_rows >= DIST_INDEX_MIN_ROWS:
-        return assign_global_index(df, order_cols, out_col, start, return_count=True)
+        return assign_global_index(df, order_cols, out_col, start)
     rank = F.row_number().over(Window.orderBy(*order_cols)) - 1 + F.lit(start)
     return df.withColumn(out_col, rank.cast("long")), None

@@ -5,11 +5,12 @@ stage between cheap JVM steps; every step runs under the job group
 ``crawl:r<round>:<step>``:
 
     recrawl   [drained? stalest-per-host revisits re-enter; their keys
-               DELETED from the exact seen table + hybrid filter]
-    prune     canonical fresh rows ──sharded bloom+cuckoo probe (at
-              probe_threshold seen keys) + exact anti-join against
-              seen ∪ failed ∪ blocked──▶ ∪ the deferred backlog
-              ──robots-cache (+ debt) join on host──▶ candidates
+               DELETED from the done table + hybrid filter]
+    prune     canonical frontier rows (the deferred backlog ∪ the
+              discoveries) ──sharded bloom+cuckoo probe (at
+              probe_threshold done keys) + exact anti-join against the
+              done table's keys──robots-cache (+ debt) join on host──▶
+              candidates
     kernel    repartition(n, host).sortWithinPartitions(host)
               .mapInPandas(:func:`_round_kernel`): per Arrow batch, one
               dedup (min disc_seq) and sort (:func:`_admission_rows`),
@@ -23,8 +24,9 @@ stage between cheap JVM steps; every step runs under the job group
     index     global fetch position over (depth, host_rank, disc_seq)
     discover  posexplode the children; disc_seq continues the global
               counter in (parent fetch order, document order)
-    commit    seen/failed/blocked/robots/debt unions, seen-set fold,
-              snapshot; repeat.
+    commit    done/robots/debt unions, seen-set fold, snapshot; the
+              next frontier is the deferred backlog ∪ the discoveries;
+              repeat.
 
 Determinism contract: every "first" and every position is derived from
 explicit columns (depth, host_rank, disc_seq) — the pure-Python oracle
@@ -32,6 +34,9 @@ explicit columns (depth, host_rank, disc_seq) — the pure-Python oracle
 byte-for-byte (tests/test_frontier.py).
 
 Scale notes (no single-partition exchange, no driver-held state):
+- the crawl's state is ONE key table, ``done`` (key, h64, host,
+  fetched_round, status ∈ ok/failed/blocked), one union piece per
+  round; the seen-set filters below accelerate the prune against it;
 - the seen-set is the north_rule's partitioned counting-Bloom +
   cuckoo-filter hybrid, kept as a DataFrame of shard-blob rows
   (seenset.py structures serialized per shard). Updates fold new keys
@@ -39,7 +44,7 @@ Scale notes (no single-partition exchange, no driver-held state):
   probes co-partition candidates with their shard's blob the same way
   — the filter is never broadcast, never driver-held, and rides
   snapshots as ordinary binary rows, so 10^10-key sizing (~10 GiB of
-  filter) never needs one machine. The exact key table stays the
+  filter) never needs one machine. The done table stays the
   source of truth: a filter false positive never drops a URL (exact
   anti-join verifies the maybe-seen sliver), and because neither
   structure has false negatives, a seen URL is never refetched;
@@ -63,7 +68,7 @@ Scale notes (no single-partition exchange, no driver-held state):
   from unions and anti-joins by the optimizer and no scan runs Python;
 - frontier rows are canonical from birth (:func:`canonical_fields` on
   the driver's seeds and on :func:`fetch_row`'s children; recrawls
-  reuse seen's columns; snapshots store them), so no round runs a
+  reuse done's columns; snapshots store them), so no round runs a
   canonicalize pass, and the kernel stage runs in whole waves of the
   session's slots, since each Python task pays a fixed ~65ms of slot
   time before its UDF runs: a round below slots × 256 candidates runs
@@ -126,15 +131,18 @@ _KERNEL_COLS = _ADMIT_COLS + ["disallow", "crawl_delay_level", "debt"]
 # order (depth, host_rank, disc_seq — the order ``pos`` ranks), then
 # document order
 _CHILD_ORDER = ["p_depth", "p_rank", "p_seq", "child_idx"]
-_SEEN_SCHEMA = "key string, h64 long, host string, fetched_round int"
+# the crawl's one state table: every key fetched (ok or failed) or
+# blocked, with the round it was met in (the recrawl scheduler ages ok
+# rows by it)
+_DONE_SCHEMA = "key string, h64 long, host string, fetched_round int, status string"
 _SHARD_BLOB_SCHEMA = "shard int, bloom binary, cuckoo binary"
 # kernel-stage task size target (the wave count; sizing rule at the
 # kernel step). Set when a Python task's fixed cost was ~300ms;
 # retuning it for the ~65ms the package's _zipcache leaves is still open.
 _KERNEL_ROWS_PER_TASK = 256
 # The most rows a join side may have and still be broadcast: the robots
-# cache and the debt table (both grow with the hosts met) and the seen
-# ∪ failed ∪ blocked keys of the prune's anti-join. Above it they take a
+# cache and the debt table (both grow with the hosts met) and the done
+# table's keys in the prune's anti-join. Above it they take a
 # plain hash join (at 10^7-10^8 hosts a forced broadcast is a multi-GB
 # executor OOM). The crawl knows each side's row count, so it decides
 # up front: a checkpointed side has no size estimate, and AQE would
@@ -754,7 +762,7 @@ def crawl_spark(
     Sizes are module constants, read where they are used: the
     seen-set's :data:`SEEN_SHARDS`, :data:`SEEN_BLOOM_BITS` and
     :data:`SEEN_CUCKOO_BUCKETS` (sizing rule beside them),
-    :data:`BROADCAST_MAX_ROWS` for the seen, robots and debt joins, and
+    :data:`BROADCAST_MAX_ROWS` for the done, robots and debt joins, and
     indexing.DIST_INDEX_MIN_ROWS for every global index.
     ``fetcher="http"`` fetches with httpclient's default timeout.
 
@@ -775,77 +783,65 @@ def crawl_spark(
     def step(round_idx: int, name: str) -> None:
         sc.setJobGroup(f"crawl:r{round_idx}:{name}", f"crawl_spark round {round_idx}: {name}")
 
-    # seen carries (host, fetched_round) for the recrawl scheduler;
-    # failed/blocked are permanent deny-lists and stay (key, h64)
-    empty_seen = local_frame(spark, [], _SEEN_SCHEMA)
-    empty_keys = local_frame(spark, [], "key string, h64 long")
+    # done carries (host, fetched_round) for the recrawl scheduler and
+    # each key's status; every key in it is pruned for good (recrawl
+    # deletes the revisited ones first)
     empty_robots = local_frame(
         spark, [], "host string, disallow string, crawl_delay_level int"
     )
     debt_df = empty_debt = local_frame(spark, [], "host string, debt long")
     seenset_df = local_frame(spark, [], _SHARD_BLOB_SCHEMA)
-    # the deferred backlog: canonical rows that rejoin the next round
-    # past the seen prune (a deferred key cannot enter seen/failed/
-    # blocked while it waits), where the kernel's dedup lets them beat
-    # any rediscovery of their keys
-    pending = empty_frontier = local_frame(spark, [], _CANON_SCHEMA)
-    n_pending = 0
     start_round = 0
-    disc_total = 0
     # the injection budget must survive resume: a resumed crawl that
     # forgot its past injections would exceed max_recrawls and diverge
     # from both the oracle and the uninterrupted run
     recrawls_done = 0
     # the snapshot's tables, for the write, resume and the reload after
     # each write; loading a table the snapshot lacks raises
-    snap_tables = ["frontier", "seen", "failed", "order", "seenset"] + (
-        ["robots", "blocked"] if use_robots else []) + (["debt"] if debt_boost else [])
+    snap_tables = ["frontier", "done", "order", "seenset"] + (
+        ["robots"] if use_robots else []) + (["debt"] if debt_boost else [])
 
     def load_snapshot(snap):
         t = {name: catalog.load_table(spark, snap, name) for name in snap_tables}
-        return (t["frontier"], t["seen"], t["failed"], t["order"], t["seenset"],
-                t.get("robots", empty_robots), t.get("blocked", empty_keys),
-                t.get("debt", empty_debt))
+        return (t["frontier"], t["done"], t["order"], t["seenset"],
+                t.get("robots", empty_robots), t.get("debt", empty_debt))
 
-    # seen keys fetched since the last blob merge (lazy union of
+    # done keys met since the last blob merge (lazy union of
     # checkpointed per-round outputs): the hybrid filter is an
     # ACCELERATOR that only pays for itself once the probe actually
     # runs (seen_total >= probe_threshold), so folding every round's
     # adds into the shard blobs before that point is a pure
     # shuffle+checkpoint tax — one cogroup per round for nothing
     seen_pending = None
-    n_robots_hosts = 0
-    if resume and catalog is not None and catalog.latest() is not None:
-        manifest = catalog.latest()
-        snap = manifest["snapshot_id"]
-        (frontier, seen, failed, order_acc, seenset_df,
-         robots_cache, blocked, debt_df) = load_snapshot(snap)
+    n_robots_hosts = n_debt_hosts = 0
+    manifest = catalog.latest() if resume and catalog is not None else None
+    if manifest is not None:
         start_round = manifest["round"] + 1
+        step(start_round, "recrawl")
+        frontier, done, order_acc, seenset_df, robots_cache, debt_df = load_snapshot(
+            manifest["snapshot_id"]
+        )
         disc_total = manifest["metrics"]["disc_total"]
         recrawls_done = int(manifest["metrics"]["recrawls_done"])
         result.metrics = manifest["metrics"]["rounds"]
-        step(start_round, "recrawl")
-        expected_frontier = frontier.count()
-        # seeds the incremental robots-host counter
-        n_robots_hosts = robots_cache.count() if use_robots else 0
+        # the writer's row counts: no count() job
+        counts = {name: t["rows"] for name, t in manifest["tables"].items()}
+        expected_frontier, seen_total = counts["frontier"], counts["done"]
+        n_robots_hosts, n_debt_hosts = counts.get("robots", 0), counts.get("debt", 0)
     else:
         rows = seed_rows(seeds)
         frontier = local_frame(spark, rows, _CANON_SCHEMA)
         # the driver built the seeds itself: no count() job
         disc_total = expected_frontier = len(rows)
-        seen = empty_seen
-        failed = empty_keys
+        seen_total = 0
+        done = local_frame(spark, [], _DONE_SCHEMA)
         order_acc = local_frame(
             spark, [], "round int, pos long, url string, depth int, status string, attempts int"
         )
         robots_cache = empty_robots
-        blocked = empty_keys
 
-    have_seen = start_round > 0
-    seen_total = sum(m["fetched"] + m["blocked"] for m in result.metrics)
     n_slots = sc.defaultParallelism
     n_par = max(n_slots, 4)
-    n_debt_hosts = 0
     kernel = _round_kernel(
         host_budget=host_budget,
         use_robots=use_robots,
@@ -863,26 +859,27 @@ def crawl_spark(
 
     for round_idx in range(start_round, max_rounds):
         # recrawl injection: when the frontier drains with rounds left,
-        # re-enqueue each host's ``recrawl_budget`` stalest seen pages
+        # re-enqueue each host's ``recrawl_budget`` stalest ok pages
         # (plan_recrawl's manifest — per-host top-N, no global sort) at
         # depth 0 with fresh disc_seq assigned in (host, rank) order.
-        # The revisited keys are REMOVED from the exact seen table AND
-        # the hybrid filter first — the counting-Bloom decrements, the
+        # The revisited keys are REMOVED from the done table AND the
+        # hybrid filter first — the counting-Bloom decrements, the
         # cuckoo deletes its fingerprint (deletion is why the Bloom
         # counts) — so the unchanged exactly-once machinery re-admits
         # exactly them. The revisits number at most seen_total rows
         # (hosts×budget can be huge at 10^7 hosts), so that bound picks
-        # the index path. A seen key is already canonical, so the
-        # revisit rows are built in the JVM from seen's own (key, h64,
+        # the index path. A done key is already canonical, so the
+        # revisit rows are built in the JVM from done's own (key, h64,
         # host) — no canonicalize pass.
         step(round_idx, "recrawl")
         n_recrawled = 0
         if expected_frontier == 0 and recrawl_budget > 0 and recrawls_done < max_recrawls:
+            fetched_ok = done.filter(F.col("status") == "ok")
             revisits = plan_recrawl(
-                seen.select("key", "host", "fetched_round"),
+                fetched_ok.select("key", "host", "fetched_round"),
                 host_budget=recrawl_budget,
                 current_round=round_idx,
-            ).join(seen.select("key", "h64"), "key")
+            ).join(fetched_ok.select("key", "h64"), "key")
             revisits, n_recrawled = index_rows(
                 revisits, ["host", "rk"], "rseq", seen_total, start=disc_total
             )
@@ -903,7 +900,7 @@ def crawl_spark(
                 seenset_df = seenset_remove(
                     seenset_df, removed_h64, SEEN_SHARDS
                 ).localCheckpoint(eager=True)
-                seen = seen.join(
+                done = done.join(
                     revisits.select("key"), "key", "left_anti"
                 ).localCheckpoint(eager=True)
                 frontier = revisits.select(
@@ -917,40 +914,35 @@ def crawl_spark(
                 )
                 disc_total += n_recrawled
                 expected_frontier = n_recrawled
-                seen_total = max(0, seen_total - n_recrawled)
+                seen_total -= n_recrawled
             recrawls_done += 1
         if expected_frontier == 0:
             break
 
-        # prune (lazy): the fresh rows (seeds/discoveries/recrawls) are
-        # canonical from birth. The sharded Bloom+cuckoo hybrid prunes
-        # (definitely-new URLs skip the anti-join entirely); the exact
-        # anti-join verifies the maybe-seen sliver, keeping the crawl
+        # prune (lazy): the frontier rows (seeds, recrawls, or the
+        # deferred backlog ∪ the discoveries) are canonical from birth.
+        # The sharded Bloom+cuckoo hybrid prunes (definitely-new URLs
+        # skip the anti-join entirely); the exact anti-join against the
+        # done keys verifies the maybe-seen sliver, keeping the crawl
         # false-positive-free. The probe co-partitions rows with the
         # shard blobs — nothing is broadcast. Below ``probe_threshold``
-        # seen keys the filter accelerates nothing (the exact anti-join
+        # done keys the filter accelerates nothing (the exact anti-join
         # is already a small-table join), so the probe is skipped — the
         # filter is an accelerator by contract, never the source of
-        # truth. The backlog rejoins past the prune; the robots cache
-        # (and debt) then join on host. Every join side takes the
-        # BROADCAST_MAX_ROWS rule (:func:`_join_side`).
+        # truth. The robots cache (and debt) then join on host. Every
+        # join side takes the BROADCAST_MAX_ROWS rule (:func:`_join_side`).
         step(round_idx, "prune")
         candidates = frontier
-        if have_seen:
-            seen_all = seen.select("key", "h64").unionByName(failed)
-            if use_robots:
-                seen_all = seen_all.unionByName(blocked)
-            seen_all = _join_side(seen_all.select("key"), seen_total)
+        if seen_total:
+            done_keys = _join_side(done.select("key"), seen_total)
             if seen_total >= probe_threshold:
                 probed = seenset_probe(candidates, seenset_df, SEEN_SHARDS)
                 definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
                 maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-                verified_new = maybe.join(seen_all, "key", "left_anti")
+                verified_new = maybe.join(done_keys, "key", "left_anti")
                 candidates = definite_new.unionByName(verified_new)
             else:
-                candidates = candidates.join(seen_all, "key", "left_anti")
-        if n_pending:
-            candidates = candidates.unionByName(pending)
+                candidates = candidates.join(done_keys, "key", "left_anti")
         if use_robots:
             candidates = candidates.join(_join_side(robots_cache, n_robots_hosts), "host", "left")
         if debt_boost:
@@ -1003,10 +995,9 @@ def crawl_spark(
             admitted = admitted.coalesce(n_par)
         status = F.col("status")
         n_fetched, n_deferred, n_blocked = c["fetched"], c["deferred"], c["blocked"]
-        # every candidate deduped away (all seen/failed/blocked): a
-        # zero-fetch round — no metrics row, same as the oracle; the
-        # next iteration either injects a recrawl or terminates at the
-        # top break
+        # every candidate deduped away (all done): a zero-fetch round —
+        # no metrics row, same as the oracle; the next iteration either
+        # injects a recrawl or terminates at the top break
         zero_round = n_fetched + n_deferred == 0
 
         if not zero_round:
@@ -1039,15 +1030,11 @@ def crawl_spark(
                 admitted.filter(status == "robots").select("host", "disallow", "crawl_delay_level")
             )
             n_robots_hosts += c["robots"]
-        seen = seen.unionByName(
-            admitted.filter(status == "ok").select(
-                "key", "h64", "host", F.lit(round_idx).cast("int").alias("fetched_round")
-            )
+        done_adds = admitted.filter(status.isin("ok", "failed", "blocked")).select(
+            "key", "h64", "host", F.lit(round_idx).cast("int").alias("fetched_round"), "status"
         )
-        failed = failed.unionByName(admitted.filter(status == "failed").select("key", "h64"))
-        if n_blocked:
-            blocked = blocked.unionByName(admitted.filter(status == "blocked").select("key", "h64"))
-        seen_adds = admitted.filter(status.isin("ok", "failed", "blocked")).select("h64")
+        done = done.unionByName(done_adds)
+        seen_adds = done_adds.select("h64")
         seen_pending = seen_adds if seen_pending is None else seen_pending.unionByName(seen_adds)
         seen_total += n_fetched + n_blocked
         if seen_total >= probe_threshold or catalog is not None:
@@ -1065,13 +1052,11 @@ def crawl_spark(
                 SEEN_CUCKOO_BUCKETS,
             ).localCheckpoint(eager=False)
             seen_pending = None
-        have_seen = True
         if zero_round:
             # debt_df deliberately NOT recomputed on this path: the
             # oracle updates debt only when candidates exist, and an
             # empty-round overwrite would clear a nonzero backlog
             expected_frontier = 0
-            pending, n_pending = empty_frontier, 0
             continue
         if debt_boost:
             # next round's debt = this round's per-host overflow counts
@@ -1103,11 +1088,13 @@ def crawl_spark(
         }
         result.metrics.append(round_metrics)
 
-        # fresh rows next round = discoveries only; the deferred
-        # backlog stays canonical in `pending`
-        frontier = discovered
-        pending = admitted.filter(status == "deferred").select(*_CANON_COLS)
-        n_pending = n_deferred
+        # next round = the deferred backlog ∪ the discoveries, the
+        # oracle's own rule: a deferred key is never done, so the prune
+        # keeps it, and its disc_seq is below any rediscovery's, so the
+        # kernel's dedup keeps it over them
+        frontier = admitted.filter(status == "deferred").select(*_CANON_COLS).unionByName(
+            discovered
+        )
 
         # snapshot: cuts lineage AND makes the crawl resumable with
         # per-partition manifest lineage; the hybrid seen-set rides
@@ -1116,18 +1103,14 @@ def crawl_spark(
         # already checkpointed, so the next round's lineage stays one
         # round deep.
         if catalog is not None:
+            # the snapshot frontier holds canonical rows, so a resumed
+            # or reloaded round never re-canonicalizes
             tables = {
-                # the snapshot frontier holds canonical rows (fresh ∪
-                # backlog), so a resumed or reloaded round never
-                # re-canonicalizes; backlog rows re-run the prune once
-                # on reload — deterministic, so resume stays byte-exact
-                "frontier": frontier.unionByName(pending),
-                "seen": seen,
-                "failed": failed,
+                "frontier": frontier,
+                "done": done,
                 "order": order_acc,
                 "seenset": seenset_df,
                 "robots": robots_cache,
-                "blocked": blocked,
                 "debt": debt_df,
             }
             snap = catalog.write_snapshot(
@@ -1141,9 +1124,7 @@ def crawl_spark(
                 round_idx=round_idx,
             )
             result.snapshots.append(snap)
-            (frontier, seen, failed, order_acc, seenset_df,
-             robots_cache, blocked, debt_df) = load_snapshot(snap)
-            pending, n_pending = empty_frontier, 0
+            frontier, done, order_acc, seenset_df, robots_cache, debt_df = load_snapshot(snap)
 
     if collect_order:
         step(round_idx, "commit")
@@ -1158,10 +1139,9 @@ def crawl_spark(
                     "attempts": row["attempts"],
                 }
             )
-        result.seen = {r["key"] for r in seen.select("key").collect()}
-        result.failed = {r["key"] for r in failed.select("key").collect()}
-        if use_robots:
-            result.blocked = {r["key"] for r in blocked.select("key").collect()}
+        by_status = {"ok": result.seen, "failed": result.failed, "blocked": result.blocked}
+        for r in done.select("key", "status").collect():
+            by_status[r["status"]].add(r["key"])
     return result
 
 

@@ -8,7 +8,6 @@ re-architected for vectorized batch execution inside pandas UDFs.
 from .kernels import (  # noqa: F401
     decode_quoted_printable,
     decode_base64_checked,
-    encode_base64,
     decode_string,
     get_bom_charset,
     get_charset,

@@ -15,7 +15,6 @@ Arrow-batched pandas UDFs; none import Spark.
 
 from __future__ import annotations
 
-import base64
 import binascii
 import codecs
 import re
@@ -24,7 +23,6 @@ from functools import lru_cache
 __all__ = [
     "decode_quoted_printable",
     "decode_base64_checked",
-    "encode_base64",
     "decode_string",
     "get_bom_charset",
     "get_charset",
@@ -109,11 +107,6 @@ def decode_base64_checked(value: str | bytes) -> bytes | None:
         return binascii.a2b_base64(raw + b"=" * pad if pad else raw, strict_mode=True)
     except binascii.Error:
         return None
-
-
-def encode_base64(data: bytes) -> str:
-    """bytes → base64 string (``btoa`` analogue, util.js:195-201)."""
-    return base64.b64encode(data).decode("ascii")
 
 
 # --- charsets ---------------------------------------------------------------

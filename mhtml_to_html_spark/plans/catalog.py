@@ -4,7 +4,9 @@ No Iceberg jars ship in this environment (bare pyspark), so the crawl
 checkpoints go through this seam instead: immutable Parquet data files
 + a JSON manifest per snapshot carrying snapshot id, parent pointer,
 per-table row counts, per-partition lineage (file → rows), and the
-round's fetch metrics. If Iceberg jars appear, this class binds to
+round's fetch metrics. As in Iceberg, the row counts come from the
+files the write produced (their parquet footers), never from a scan
+of the data. If Iceberg jars appear, this class binds to
 real Iceberg tables with no caller changes (same write/load/latest
 surface).
 
@@ -21,6 +23,7 @@ import os
 import time
 from typing import Any
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -67,22 +70,14 @@ class SnapshotCatalog:
         for name, df in tables.items():
             path = os.path.join(snap_dir, name)
             df.write.mode("overwrite").parquet(path)
-            files = []
-            spark = df.sparkSession
-            stats = spark.read.parquet(path)
-            # per-partition lineage: every data file with its row count
-            import pyspark.sql.functions as F
-
-            per_file = (
-                stats.groupBy(F.input_file_name().alias("file"))
-                .count()
-                .collect()
-            )
-            total = 0
-            for row in per_file:
-                files.append({"file": os.path.basename(row["file"]), "rows": row["count"]})
-                total += row["count"]
-            manifest["tables"][name] = {"rows": total, "files": sorted(files, key=lambda f: f["file"])}
+            # per-partition lineage: every data file with its row count,
+            # read from the footers the write just produced (no Spark job)
+            files = [
+                {"file": f, "rows": pq.read_metadata(os.path.join(path, f)).num_rows}
+                for f in sorted(os.listdir(path))
+                if f.endswith(".parquet")
+            ]
+            manifest["tables"][name] = {"rows": sum(f["rows"] for f in files), "files": files}
         with open(os.path.join(snap_dir, "manifest.json"), "w") as f:
             json.dump(manifest, f, indent=1, sort_keys=True)
         return snapshot_id

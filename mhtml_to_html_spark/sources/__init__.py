@@ -2,9 +2,6 @@
 
 from .corpus import (  # noqa: F401
     build_archive,
-    corpus_rows,
-    images_rows,
     archives_df,
-    images_df,
     read_archives,
 )

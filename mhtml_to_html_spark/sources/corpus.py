@@ -7,7 +7,7 @@ image parts (PPM/BMP/raw/lossy, base64 or binary transfer encoding)
 with caption parts, plus charset/QP variation, so the decode path the
 bench measures is the one the tests pin.
 
-``images_rows`` is the golden T3 table (exact BASELINE.json input_hint
+``image_meta`` is one golden image row (exact BASELINE.json input_hint
 schema); archives are built FROM it, so the pixel/caption invariants
 are checked end-to-end: archive bytes → split → decode → compare.
 """
@@ -15,7 +15,6 @@ are checked end-to-end: archive bytes → split → decode → compare.
 from __future__ import annotations
 
 import base64
-from typing import Iterator
 
 import numpy as np
 
@@ -62,11 +61,6 @@ def image_meta(global_img_id: int, dim_scale: int = 1, with_phash: bool = True) 
         "caption": caption_for(global_img_id),
         "phash": phash64(pixels) if with_phash else None,
     }
-
-
-def images_rows(n_archives: int, images_per_archive: int = 3) -> Iterator[dict]:
-    for i in range(n_archives * images_per_archive):
-        yield image_meta(i)
 
 
 def build_archive(archive_idx: int, images_per_archive: int = 3, dim_scale: int = 1) -> bytes:
@@ -142,22 +136,9 @@ def build_archive(archive_idx: int, images_per_archive: int = 3, dim_scale: int 
     return eol.join(lines).encode("latin-1", errors="strict")
 
 
-def corpus_rows(n_archives: int, images_per_archive: int = 3) -> Iterator[dict]:
-    for i in range(n_archives):
-        yield {
-            "archive_id": f"arc_{i:06d}",
-            "content": build_archive(i, images_per_archive),
-            "case_family": "corpus",
-            "eol": "crlf" if i % 3 else "lf",
-        }
-
-
 # --- Spark sources ------------------------------------------------------------
 
 _ARCHIVES_SCHEMA = "archive_id string, content binary, case_family string, eol string"
-_IMAGES_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
-)
 
 
 def archives_df(spark, n_archives: int, images_per_archive: int = 3, partitions: int | None = None):
@@ -186,21 +167,6 @@ def archives_df(spark, n_archives: int, images_per_archive: int = 3, partitions:
             yield pd.DataFrame(rows, columns=["archive_id", "content", "case_family", "eol"])
 
     return idx.mapInPandas(build, schema=_ARCHIVES_SCHEMA)
-
-
-def images_df(spark, n_archives: int, images_per_archive: int = 3, partitions: int | None = None):
-    """Golden image table (input_hint schema), synthesized executor-side."""
-    n_parts = partitions or spark.sparkContext.defaultParallelism
-    idx = spark.range(0, n_archives * images_per_archive, 1, n_parts).withColumnRenamed("id", "i")
-
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [image_meta(int(i)) for i in pdf["i"]]
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"])
-
-    return idx.mapInPandas(build, schema=_IMAGES_SCHEMA)
 
 
 def read_archives(spark, path):

@@ -72,10 +72,12 @@ def test_spark_debt_boost_resumes_from_snapshot(spark, tmp_path):
 
 @pytest.mark.spark
 @pytest.mark.parametrize("damage", ["deleted", "corrupt"])
-def test_spark_debt_boost_resume_fails_without_debt_table(spark, tmp_path, damage):
-    """A snapshot whose debt table is gone or unreadable must not
-    resume: carrying on with an empty debt table would silently
-    diverge from the uninterrupted schedule."""
+@pytest.mark.parametrize("table", ["debt", "done"])
+def test_spark_debt_boost_resume_fails_without_debt_table(spark, tmp_path, table, damage):
+    """A snapshot whose debt table (or done table, the crawl's key
+    state) is gone or unreadable must not resume: carrying on with an
+    empty table would silently diverge from the uninterrupted
+    schedule."""
     import glob
     import os
 
@@ -92,7 +94,7 @@ def test_spark_debt_boost_resume_fails_without_debt_table(spark, tmp_path, damag
     )
     latest = SnapshotCatalog(ckpt).latest()["snapshot_id"]
     files = glob.glob(
-        os.path.join(ckpt, "snapshots", f"snap_{latest:06d}", "debt", "*.parquet")
+        os.path.join(ckpt, "snapshots", f"snap_{latest:06d}", table, "*.parquet")
     )
     assert files
     for f in files:

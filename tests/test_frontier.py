@@ -343,11 +343,13 @@ def _job_groups(spark) -> dict[int, str | None]:
 
 
 @pytest.mark.spark
-def test_crawl_jobs_run_in_round_step_groups(spark):
+def test_crawl_jobs_run_in_round_step_groups(spark, tmp_path):
     """Every Spark job of a two-round crawl runs in a job group
     ``crawl:r<round>:<step>`` of a known step, each round's kernel
     among them; the caller's job group is back on return, so a job the
-    caller runs afterwards carries no ``crawl:`` group."""
+    caller runs afterwards carries no ``crawl:`` group. A resumed crawl
+    reads its snapshot in the first resumed round's ``recrawl`` step,
+    not in the caller's group."""
     import re
 
     from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
@@ -379,6 +381,27 @@ def test_crawl_jobs_run_in_round_step_groups(spark):
     spark.range(3).collect()
     after = {i: g for i, g in _job_groups(spark).items() if i not in before}
     assert after and set(after.values()) == {None}
+
+    # resume with no round left: only snapshot reads and the final
+    # collect_order reads run, all in round 2's steps
+    ckpt = str(tmp_path / "ckpt")
+    kw = dict(max_rounds=2, host_budget=BUDGET, use_robots=True, checkpoint_dir=ckpt)
+    crawl_spark(spark, SEEDS, **kw)
+    before = set(_job_groups(spark))
+    sc.setJobGroup("caller", "a caller's job group")
+    try:
+        resumed = crawl_spark(spark, SEEDS, resume=True, collect_order=True, **kw)
+        spark.range(3).collect()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert resumed.order == res.order and len(resumed.metrics) == 2
+    groups = {i: g for i, g in _job_groups(spark).items() if i not in before}
+    assert groups.pop(max(groups)) == "caller"
+    assert groups and all(
+        g is not None and re.fullmatch(r"crawl:r2:(recrawl|commit)", g) for g in groups.values()
+    )
+    assert "crawl:r2:recrawl" in groups.values()
 
 
 def _sql_plans(spark) -> dict[int, str]:

@@ -36,3 +36,40 @@ def test_ingest_snapshots_and_time_travel(spark, tmp_path):
     table = manifest["tables"]["images"]
     assert table["rows"] == 16
     assert sum(f["rows"] for f in table["files"]) == 16
+
+
+@pytest.mark.spark
+def test_snapshot_lineage_comes_from_the_written_files(spark, tmp_path):
+    """Writing k materialized tables runs exactly k Spark jobs, the
+    writes themselves: each file's row count comes from its parquet
+    footer, with no read-back job. The manifest lists every data file
+    the write produced, and each table's rows sum over its files."""
+    import os
+
+    from mhtml_to_html_spark.frontier.spark_frontier import local_frame
+
+    sc = spark.sparkContext
+    tables = {
+        "spread": spark.range(0, 10, 1, 3).localCheckpoint(eager=True),
+        "local": local_frame(spark, [("a", 1), ("b", 2)], "key string, n long"),
+        "empty": local_frame(spark, [], "key string, n long"),
+    }
+    catalog = SnapshotCatalog(str(tmp_path / "warehouse"))
+    group = "snapshot-lineage-test"
+    sc.setJobGroup(group, "write_snapshot")
+    try:
+        snap = catalog.write_snapshot(tables, round_idx=0)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == len(tables)
+
+    manifest = catalog.manifest(snap)
+    for name, want in (("spread", 10), ("local", 2), ("empty", 0)):
+        table = manifest["tables"][name]
+        path = os.path.join(str(tmp_path / "warehouse"), "snapshots", f"snap_{snap:06d}", name)
+        written = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        assert [f["file"] for f in table["files"]] == written
+        assert table["rows"] == want == sum(f["rows"] for f in table["files"])
+        assert catalog.load_table(spark, snap, name).count() == want

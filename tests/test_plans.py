@@ -146,7 +146,7 @@ def test_global_index_no_single_partition_exchange(spark):
         (F.col("id") % 13).cast("int").alias("host_rank"),
         F.col("id").alias("disc_seq"),
     )
-    out = assign_global_index(df, ["depth", "host_rank", "disc_seq"], "pos")
+    out, _ = assign_global_index(df, ["depth", "host_rank", "disc_seq"], "pos")
     plan = plan_of(out)
     assert "SinglePartition" not in plan, "global index funnels through one partition"
     assert "Window" not in plan
@@ -174,7 +174,7 @@ def test_global_index_matches_window_order(spark):
         F.col("id").alias("disc_seq"),
     )
     order = ["depth", "host_rank", "disc_seq"]
-    dist = assign_global_index(df, order, "pos")
+    dist, _ = assign_global_index(df, order, "pos")
     w = Window.orderBy(*order)
     ref = df.withColumn("pos", (F.row_number().over(w) - 1).cast("long"))
     want = sorted(map(tuple, ref.collect()))
@@ -296,11 +296,10 @@ def test_global_index_edge_cases(spark):
     from mhtml_to_html_spark.frontier.indexing import assign_global_index
 
     empty = spark.createDataFrame([], "depth int, host_rank int, disc_seq long")
-    assert assign_global_index(empty, ["depth", "host_rank", "disc_seq"]).count() == 0
+    got, n = assign_global_index(empty, ["depth", "host_rank", "disc_seq"])
+    assert got.count() == 0 and n == 0
     one = spark.createDataFrame([(1, 2, 3)], "depth int, host_rank int, disc_seq long")
-    got, n = assign_global_index(
-        one, ["depth", "host_rank", "disc_seq"], start=10, return_count=True
-    )
+    got, n = assign_global_index(one, ["depth", "host_rank", "disc_seq"], start=10)
     assert n == 1 and got.collect()[0]["pos"] == 10
 
 

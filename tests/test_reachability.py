@@ -52,10 +52,6 @@ ALLOWED = {
     "functions/columns.py::is_fetchable_col": "functions API: JVM-side fetchable-scheme predicate",
     "images/synth.py::decode_image": "images API: decoder paired with encode_image",
     "images/synth.py::psnr": "images API: lossy-codec quality measure",
-    "mime/kernels.py::encode_base64": "mime API: the reference's btoa helper",
-    "sources/corpus.py::corpus_rows": "sources API: the stored-corpus rows",
-    "sources/corpus.py::images_rows": "sources API: the golden image rows",
-    "sources/corpus.py::images_df": "sources API: the golden image table",
 }
 
 

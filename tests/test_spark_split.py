@@ -9,7 +9,7 @@ from mhtml_to_html_spark.images.synth import decode_image, psnr, synth_image
 from mhtml_to_html_spark.operators.images_extract import extract_images
 from mhtml_to_html_spark.operators.registry import registry_keys, select_index
 from mhtml_to_html_spark.operators.split import split_archives
-from mhtml_to_html_spark.sources.corpus import archives_df, image_meta, images_df
+from mhtml_to_html_spark.sources.corpus import archives_df, image_meta
 
 N_ARCHIVES = 12
 IMAGES_PER = 3
@@ -55,14 +55,11 @@ def test_registry_first_wins(parts):
     assert dupes == 0
 
 
-def test_images_extracted_with_invariants(parts, spark):
-    extracted = extract_images(parts)
-    golden = images_df(spark, N_ARCHIVES, IMAGES_PER, partitions=4).withColumnRenamed(
-        "bytes", "golden_bytes"
-    )
-    joined = extracted.join(golden, on="image_id", how="inner").collect()
-    assert len(joined) == N_ARCHIVES * IMAGES_PER
-    for row in joined:
+def test_images_extracted_with_invariants(parts):
+    golden_ids = {image_meta(i)["image_id"] for i in range(N_ARCHIVES * IMAGES_PER)}
+    extracted = [r for r in extract_images(parts).collect() if r["image_id"] in golden_ids]
+    assert len(extracted) == N_ARCHIVES * IMAGES_PER
+    for row in extracted:
         gid = int(row["image_id"].split("_")[1])
         source = synth_image(gid, row["w"], row["h"])
         decoded = decode_image(bytes(row["bytes"]), row["fmt"])
