@@ -22,10 +22,11 @@ stage between cheap JVM steps; every step runs under the job group
               and debt rows, in one eager checkpoint whose job also
               observes the round's counters
     index     global fetch position over (depth, host_rank, disc_seq)
-    discover  posexplode the children; disc_seq continues the global
+    discover  the next frontier (:func:`next_frontier`, shared with the
+              streaming feeder): the deferred backlog ∪ the
+              posexploded children; disc_seq continues the global
               counter in (parent fetch order, document order)
-    commit    done/robots/debt unions, seen-set fold, snapshot; the
-              next frontier is the deferred backlog ∪ the discoveries;
+    commit    done/robots/debt unions, seen-set fold, snapshot;
               repeat.
 
 Determinism contract: every "first" and every position is derived from
@@ -659,8 +660,10 @@ def _round_kernel(
 
 
 def _kernel_counters() -> list:
-    """The round's counters over the kernel's rows, observed on the
-    job that checkpoints them."""
+    """The round's counters over its admission rows: observed on the
+    job that checkpoints the batch kernel's rows, and on the streaming
+    gate's micro-batch (whose rows carry no robots or debt status, so
+    those two count 0)."""
     status = F.col("status")
 
     def n(*statuses):
@@ -679,24 +682,50 @@ def _kernel_counters() -> list:
     ]
 
 
-def discovered_rows(ok: DataFrame, n_rows: int, start: int) -> tuple[DataFrame, int | None]:
-    """The next frontier's canonical rows (``_CANON_COLS``) from the
-    children ``fetch_row`` emitted on the ``ok`` admission rows, at
-    depth + 1: one JVM-side posexplode, never a second Python pass.
-    ``disc_seq`` continues the crawl-global counter from ``start`` in
-    (parent fetch order, document order), :data:`_CHILD_ORDER`,
-    indexed by ``index_rows`` with ``n_rows`` (the exact children count
-    or an upper bound) picking the path. Both crawls discover through
-    it. Returns ``(rows, count)`` as ``index_rows`` does."""
-    children = ok.select(
+def round_metrics(round_idx: int, c: dict, n_recrawled: int = 0) -> dict | None:
+    """The oracle's metrics row of a round from its counters ``c``
+    (:func:`_kernel_counters`), or None for a zero-fetch round (every
+    row deduped away or blocked: nothing fetched or deferred), which
+    the oracle reports no row for. Both crawls report through it."""
+    if c["fetched"] + c["deferred"] == 0:
+        return None
+    return {
+        "round": round_idx,
+        "fetched": c["fetched"],
+        "ok": c["ok"],
+        "failed": c["fetched"] - c["ok"],
+        "attempts": c["attempts"],
+        "deferred": c["deferred"],
+        "blocked": c["blocked"],
+        "virtual_delay_ms": c["delay_ms"],
+        "recrawled": n_recrawled,
+    }
+
+
+def next_frontier(admitted: DataFrame, c: dict, start: int) -> DataFrame:
+    """The next round's canonical rows (``_CANON_COLS``), the oracle's
+    rule: the deferred backlog ∪ the children ``fetch_row`` emitted on
+    the ok rows of ``admitted`` (a round's admission rows, counted by
+    ``c``), at depth + 1. A deferred key is never done, so the prune
+    keeps it, and its disc_seq is below any rediscovery's, so the
+    admission dedup keeps it over them. The children take one JVM-side
+    posexplode, never a second Python pass; their ``disc_seq``
+    continues the crawl-global counter from ``start`` in (parent fetch
+    order, document order), :data:`_CHILD_ORDER`, indexed by
+    ``index_rows`` with the observed children count picking the path.
+    Both crawls build their next round through it; it has
+    ``c["deferred"] + c["children"]`` rows."""
+    status = F.col("status")
+    children = admitted.filter(status == "ok").select(
         F.col("depth").alias("p_depth"),
         F.col("host_rank").alias("p_rank"),
         F.col("disc_seq").alias("p_seq"),
         F.posexplode("children").alias("child_idx", "c"),
         (F.col("depth") + 1).cast("int").alias("depth"),
     ).select(*_CHILD_ORDER, "depth", *(F.col(f"c.{f}").alias(f) for f in _CHILD_FIELDS))
-    discovered, n = index_rows(children, _CHILD_ORDER, "disc_seq", n_rows, start=start)
-    return discovered.select(*_CANON_COLS), n
+    discovered, _ = index_rows(children, _CHILD_ORDER, "disc_seq", c["children"], start=start)
+    deferred = admitted.filter(status == "deferred").select(*_CANON_COLS)
+    return deferred.unionByName(discovered.select(*_CANON_COLS))
 
 
 def _join_side(df: DataFrame, n_rows: int) -> DataFrame:
@@ -994,13 +1023,13 @@ def crawl_spark(
             # coalesce is narrow (no shuffle, no extra stage)
             admitted = admitted.coalesce(n_par)
         status = F.col("status")
-        n_fetched, n_deferred, n_blocked = c["fetched"], c["deferred"], c["blocked"]
-        # every candidate deduped away (all done): a zero-fetch round —
-        # no metrics row, same as the oracle; the next iteration either
-        # injects a recrawl or terminates at the top break
-        zero_round = n_fetched + n_deferred == 0
+        # None for a zero-fetch round (every candidate deduped away or
+        # blocked): no metrics row, same as the oracle; the next
+        # iteration either injects a recrawl or terminates at the top
+        # break
+        round_row = round_metrics(round_idx, c, n_recrawled)
 
-        if not zero_round:
+        if round_row is not None:
             # index: global fetch position (ordering contract) over
             # (depth, host_rank, disc_seq); the fetched count picks the
             # index path (same logical order either way; tests force
@@ -1012,14 +1041,12 @@ def crawl_spark(
                 ),
                 ["depth", "host_rank", "disc_seq"],
                 "pos",
-                n_fetched,
+                c["fetched"],
             )
             # discover: only ok rows carry children, so the observed
             # children count is the exact row count and picks the path
             step(round_idx, "discover")
-            discovered, _ = discovered_rows(
-                admitted.filter(status == "ok"), c["children"], disc_total
-            )
+            frontier = next_frontier(admitted, c, disc_total)
 
         # commit: state unions, all distributed; the hybrid seen-set
         # folds via a per-shard cogroup (one task per shard, work =
@@ -1036,7 +1063,7 @@ def crawl_spark(
         done = done.unionByName(done_adds)
         seen_adds = done_adds.select("h64")
         seen_pending = seen_adds if seen_pending is None else seen_pending.unionByName(seen_adds)
-        seen_total += n_fetched + n_blocked
+        seen_total += c["fetched"] + c["blocked"]
         if seen_total >= probe_threshold or catalog is not None:
             # the next round WILL probe (or a snapshot must carry a
             # consistent filter): fold everything pending in ONE
@@ -1052,7 +1079,7 @@ def crawl_spark(
                 SEEN_CUCKOO_BUCKETS,
             ).localCheckpoint(eager=False)
             seen_pending = None
-        if zero_round:
+        if round_row is None:
             # debt_df deliberately NOT recomputed on this path: the
             # oracle updates debt only when candidates exist, and an
             # empty-round overwrite would clear a nonzero backlog
@@ -1074,27 +1101,8 @@ def crawl_spark(
             )
         )
         disc_total += c["children"]
-        expected_frontier = n_deferred + c["children"]
-        round_metrics = {
-            "round": round_idx,
-            "fetched": n_fetched,
-            "ok": c["ok"],
-            "failed": n_fetched - c["ok"],
-            "attempts": c["attempts"],
-            "deferred": n_deferred,
-            "blocked": n_blocked,
-            "virtual_delay_ms": c["delay_ms"],
-            "recrawled": n_recrawled,
-        }
-        result.metrics.append(round_metrics)
-
-        # next round = the deferred backlog ∪ the discoveries, the
-        # oracle's own rule: a deferred key is never done, so the prune
-        # keeps it, and its disc_seq is below any rediscovery's, so the
-        # kernel's dedup keeps it over them
-        frontier = admitted.filter(status == "deferred").select(*_CANON_COLS).unionByName(
-            discovered
-        )
+        expected_frontier = c["deferred"] + c["children"]
+        result.metrics.append(round_row)
 
         # snapshot: cuts lineage AND makes the crawl resumable with
         # per-partition manifest lineage; the hybrid seen-set rides
@@ -1119,7 +1127,7 @@ def crawl_spark(
                     "rounds": result.metrics,
                     "disc_total": disc_total,
                     "recrawls_done": recrawls_done,
-                    **round_metrics,
+                    **round_row,
                 },
                 round_idx=round_idx,
             )

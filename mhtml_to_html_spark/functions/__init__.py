@@ -1,10 +1,6 @@
 from .columns import (  # noqa: F401
     ct_is_document,
-    ct_is_stylesheet,
-    ct_is_text,
-    ct_is_image,
     ct_is_media,
-    ct_is_multipart,
     charset_of,
     media_type_of,
     data_uri,

@@ -22,27 +22,11 @@ def ct_is_document(col="content_type") -> Column:
     return c.startswith("text/html") | c.startswith("application/xhtml+xml")
 
 
-def ct_is_stylesheet(col="content_type") -> Column:
-    return _ct(col).startswith("text/css")
-
-
-def ct_is_text(col="content_type") -> Column:
-    return _ct(col).startswith("text/")
-
-
-def ct_is_image(col="content_type") -> Column:
-    return _ct(col).startswith("image/")
-
-
 def ct_is_media(col="content_type") -> Column:
     c = _ct(col)
     return (
         c.startswith("image/") | c.startswith("audio/") | c.startswith("video/") | c.startswith("font/")
     )
-
-
-def ct_is_multipart(col="content_type") -> Column:
-    return _ct(col).startswith("multipart/")
 
 
 def charset_of(col="content_type") -> Column:

@@ -3,12 +3,16 @@
 No Iceberg jars ship in this environment (bare pyspark), so the crawl
 checkpoints go through this seam instead: immutable Parquet data files
 + a JSON manifest per snapshot carrying snapshot id, parent pointer,
-per-table row counts, per-partition lineage (file → rows), and the
-round's fetch metrics. As in Iceberg, the row counts come from the
-files the write produced (their parquet footers), never from a scan
-of the data. If Iceberg jars appear, this class binds to
-real Iceberg tables with no caller changes (same write/load/latest
-surface).
+and per table its schema, row count and per-partition lineage (file →
+rows), plus the round's fetch metrics. As in Iceberg, the row counts
+come from the files the write produced (their parquet footers), never
+from a scan of the data, and a load reads exactly the files the
+manifest lists with the schema it records, so it runs no
+schema-inference job: a listed file that is gone fails the load, one
+that is corrupt fails the first read. The manifest is written to a temp
+file and renamed into place, so a crash mid-write leaves the previous
+snapshot the latest. If Iceberg jars appear, this class binds to real
+Iceberg tables with no caller changes (same write/load/latest surface).
 
 Writing a snapshot and reading it back also serves as the round's
 lineage cut (the role ``localCheckpoint`` plays in iterative Spark
@@ -25,6 +29,7 @@ from typing import Any
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class SnapshotCatalog:
@@ -77,9 +82,15 @@ class SnapshotCatalog:
                 for f in sorted(os.listdir(path))
                 if f.endswith(".parquet")
             ]
-            manifest["tables"][name] = {"rows": sum(f["rows"] for f in files), "files": files}
-        with open(os.path.join(snap_dir, "manifest.json"), "w") as f:
+            manifest["tables"][name] = {
+                "rows": sum(f["rows"] for f in files),
+                "files": files,
+                "schema": df.schema.json(),
+            }
+        path = os.path.join(snap_dir, "manifest.json")
+        with open(path + ".tmp", "w") as f:
             json.dump(manifest, f, indent=1, sort_keys=True)
+        os.replace(path + ".tmp", path)
         return snapshot_id
 
     # -- read ---------------------------------------------------------------
@@ -96,4 +107,8 @@ class SnapshotCatalog:
 
     def load_table(self, spark: SparkSession, snapshot_id: int, name: str) -> DataFrame:
         # every table's data files live in its own snapshot's directory
-        return spark.read.parquet(os.path.join(self._snap_dir(snapshot_id), name))
+        table = self.manifest(snapshot_id)["tables"][name]
+        path = os.path.join(self._snap_dir(snapshot_id), name)
+        return spark.read.schema(StructType.fromJson(json.loads(table["schema"]))).parquet(
+            *(os.path.join(path, f["file"]) for f in table["files"])
+        )

@@ -18,18 +18,22 @@ deferred rows with the canonical columns the gate passed through,
 children from the gate's canonical child structs), so each micro-batch
 runs one Python stage, the gate itself.
 
-Scale shape (the whole round barrier is DataFrame ops — the batch
-crawl's own index and discover steps, ``spark_frontier.py``):
-- the driver holds ONLY per-round counters (one ``agg`` row per
-  round) and the frontier parquet path; no gate output row, child
-  URL, or frontier row is ever collected;
-- the next frontier = deferred rows ∪ exploded children, with
-  ``disc_seq`` assigned by the batch crawl's own discovery
-  (``spark_frontier.discovered_rows`` over
-  ``frontier/indexing.py:index_rows``): the distributed two-pass index
-  once the round reaches ``DIST_INDEX_MIN_ROWS`` rows, one window task
-  below it (the round is small by definition there) — same total order
-  either way, both paths pinned against the oracle;
+Each round commits the way a batch crawl round does, through the batch
+crawl's own pieces (``spark_frontier.py``):
+- the counters are the batch kernel's (``_kernel_counters``), observed
+  on the micro-batch itself; the driver holds ONLY those per-round
+  counters, and no gate output row, child URL, or frontier row is ever
+  collected;
+- the next frontier is the batch crawl's ``next_frontier``: deferred
+  rows ∪ the ok rows' children, with ``disc_seq`` continuing the global
+  counter in (parent fetch order, document order) through
+  ``frontier/indexing.py:index_rows`` (the distributed two-pass index
+  once the round's children reach ``DIST_INDEX_MIN_ROWS``, one window
+  task below it — same total order either way, both paths pinned
+  against the oracle); its row count comes from the counters, so no
+  count job runs;
+- the metrics row is the oracle's (``round_metrics``), and a zero-fetch
+  round reports none;
 - all frontier/sink writes are plain distributed parquet writes
   (no single-task write funnels).
 ``tests/test_plans.py::test_feeder_round_path_never_collects`` gates
@@ -40,11 +44,14 @@ Durability contract:
 - the GATE state (per-host exact seen-hash sets) lives in the
   structured-streaming checkpoint — exactly-once admission survives
   any crash;
-- the FEEDER state (pending frontier + discovery counter) persists
-  per round under ``work_dir/feeder`` (frontier as parquet, counters
-  as json); ``resume=True`` continues from the latest COMPLETED
-  round. A crash between the streaming commit and the feeder-state
-  write replays one gate pass on resume: the seen state dedups every
+- the FEEDER state is one ``SnapshotCatalog`` snapshot per round under
+  ``work_dir/feeder``: the pending frontier as its ``frontier`` table,
+  the discovery counter and the round's metrics row in its manifest,
+  which is renamed into place, so a round is committed whole or not at
+  all. ``resume=True`` continues from the latest snapshot; a frontier
+  file it lists that is gone fails the resume, never an empty frontier
+  in its place. A crash between the streaming commit and the manifest
+  rename replays one gate pass on resume: the seen state dedups every
   already-fetched key (nothing is refetched — the exactly-once
   contract holds), only the round attribution of that tail can shift,
   the standard at-least-once feeder window.
@@ -56,66 +63,28 @@ mid-crawl restart.
 
 from __future__ import annotations
 
-import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..frontier.spark_frontier import (
-    _CANON_COLS,
+    _ADMIT_SCHEMA,
     _CANON_SCHEMA,
-    discovered_rows,
+    _kernel_counters,
     local_frame,
+    next_frontier,
+    round_metrics,
     seed_rows,
 )
+from ..plans.catalog import SnapshotCatalog
 
 # seconds one availableNow gate pass may run before the round fails
 # (its feeder state is then not committed; resume=True re-runs it)
 PASS_TIMEOUT_S = 600
 _ORDER_KEYS = ("round", "pos", "url", "depth", "status", "attempts")
-
-
-_COUNTER_AGGS = lambda: [  # noqa: E731 — shared by the agg and observe paths
-    F.count(F.lit(1)).alias("n"),
-    F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
-    F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("failed"),
-    F.sum(F.when(F.col("status") == "deferred", 1).otherwise(0)).alias("deferred"),
-    F.sum(F.when(F.col("status") == "blocked", 1).otherwise(0)).alias("blocked"),
-]
-
-_COUNTER_KEYS = ("n", "ok", "failed", "deferred", "blocked")
-
-
-def _next_frontier(
-    out: DataFrame, disc: int, counters: dict | None = None
-) -> tuple[DataFrame, int | None, dict]:
-    """One round's barrier, all DataFrame ops: counters via ONE agg
-    (skipped when the caller already observed them on the stream —
-    the same numbers, collected by the micro-batch itself), next
-    frontier = deferred ∪ children-of-ok with ``disc_seq`` continuing
-    the global counter in (parent fetch order, document order), all
-    canonical rows (``_CANON_COLS``). ``out`` is the gate's output.
-    Returns (frontier_df, n_discovered, counters); ``n_discovered`` is
-    None when the index path did not count the children."""
-    if counters is None:
-        c = out.agg(*_COUNTER_AGGS()).collect()[0]
-        counters = {k: int(c[k] or 0) for k in _COUNTER_KEYS}
-
-    deferred = out.filter(F.col("status") == "deferred").select(*_CANON_COLS)
-    # children came out of the gate's fetch_row, canonical; disc_seq
-    # continues the global counter under the batch crawl's total order
-    # (parent fetch order, child document order), the round's gate row
-    # count picking the index path
-    discovered, n_disc = discovered_rows(
-        out.filter(F.col("status") == "ok"), counters["n"], disc
-    )
-    frontier = deferred.unionByName(discovered)
-    return frontier, n_disc, counters
-
-
-def _state_meta_path(work_dir: str) -> str:
-    return f"{work_dir}/feeder/latest.json"
+# the sink's rows: the gate's admission rows tagged with their round
+_SINK_SCHEMA = f"{_ADMIT_SCHEMA}, feeder_round int"
 
 
 def stream_crawl_job(
@@ -128,7 +97,6 @@ def stream_crawl_job(
     n_hosts: int = 7,
     use_robots: bool = False,
     resume: bool = False,
-    stop_after_round: int | None = None,
     fetcher: str = "double",
     discover: str = "scripted",
     decode_payload: bool = False,
@@ -136,48 +104,46 @@ def stream_crawl_job(
     payload_scale: int = 1,
 ) -> dict:
     """Run the streaming crawl to fixpoint (or ``max_rounds``);
-    returns ``{"rounds": [...], "fixpoint": bool, "next_round": int}``
-    with one metrics dict per executed round. ``stop_after_round``
-    stops cleanly after that many NEW rounds (the mid-crawl restart
-    test's hook); call again with ``resume=True`` to continue. Each
-    gate pass may run :data:`PASS_TIMEOUT_S` seconds."""
+    returns ``{"rounds": [...], "fixpoint": bool}`` with the oracle's
+    metrics row of every round this call ran (none for a zero-fetch
+    round). ``resume=True`` continues from the latest committed round.
+    Each gate pass may run :data:`PASS_TIMEOUT_S` seconds."""
     from .frontier import canonical_gate
 
     src, sink, ckpt = f"{work_dir}/src", f"{work_dir}/sink", f"{work_dir}/ckpt"
-    meta_path = _state_meta_path(work_dir)
+    catalog = SnapshotCatalog(f"{work_dir}/feeder")
 
-    if resume and os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        start_round, disc = int(meta["round"]) + 1, int(meta["disc"])
-        n_pending = int(meta["n_pending"])
-        frontier = spark.read.parquet(meta["frontier"]) if meta["frontier"] else None
+    manifest = catalog.latest() if resume else None
+    if manifest is not None:
+        start_round, disc = manifest["round"] + 1, manifest["metrics"]["disc_total"]
+        # the writer's row count: no count() job
+        n_pending = manifest["tables"]["frontier"]["rows"]
+        frontier = catalog.load_table(spark, manifest["snapshot_id"], "frontier")
     else:
         rows = seed_rows(seeds)  # seeds are the job's driver-side input
         start_round, disc = 0, len(rows)
         n_pending = len(rows)
-        frontier = local_frame(spark, rows, _CANON_SCHEMA) if rows else None
+        frontier = local_frame(spark, rows, _CANON_SCHEMA)
 
     metrics = []
-    executed = 0
-    r = start_round
-    while r < max_rounds and n_pending:
-        if stop_after_round is not None and executed >= stop_after_round:
+    for feeder_round in range(start_round, max_rounds):
+        if not n_pending:
             break
         # distributed parquet write (resume path: a parquet→parquet
-        # copy feeder/frontier_round_N → src, never through the driver)
+        # copy of the snapshot's frontier → src, never through the
+        # driver)
         frontier.write.mode("append").parquet(src)
+        # one subdirectory per round: the per-round read below and any
+        # later order collection scan only what they need (a single
+        # growing directory would make round N re-scan all N-1 earlier
+        # rounds — quadratic I/O over the crawl). It exists already
+        # when an earlier pass of this round ran but its commit did not
+        # (the at-least-once window below).
+        round_sink = f"{sink}/r{feeder_round:06d}"
+        replayed = os.path.exists(round_sink)
 
-        feeder_round = r
-
-        def to_sink(df, batch_id, _r=feeder_round):
-            # one subdirectory per round: the per-round read below and
-            # any later order collection scan only what they need (a
-            # single growing directory would make round N re-scan all
-            # N-1 earlier rounds — quadratic I/O over the crawl)
-            df.withColumn("feeder_round", F.lit(_r)).write.mode("append").parquet(
-                f"{sink}/r{_r:06d}"
-            )
+        def to_sink(df, batch_id, _r=feeder_round, _path=round_sink):
+            df.withColumn("feeder_round", F.lit(_r)).write.mode("append").parquet(_path)
 
         # State-shard width for the politeness gate. The stateful
         # shuffle inherits spark.sql.shuffle.partitions at the
@@ -208,10 +174,11 @@ def stream_crawl_job(
                     fanout=fanout,
                     n_hosts=n_hosts,
                 )
-                # round counters ride the micro-batch itself
-                # (CollectMetrics over every gate row) instead of a
-                # separate driver job re-reading the sink afterwards
-                .observe("round_counters", *_COUNTER_AGGS())
+                # the batch kernel's round counters ride the
+                # micro-batch itself (CollectMetrics over every gate
+                # row) instead of a separate driver job re-reading the
+                # sink afterwards
+                .observe("round_counters", *_kernel_counters())
                 .writeStream.foreachBatch(to_sink)
                 .outputMode("append")
                 .option("checkpointLocation", ckpt)
@@ -232,75 +199,44 @@ def stream_crawl_job(
                 "re-run with resume=True (the gate checkpoint dedups)"
             )
 
-        # the observed metrics are exact when this pass ran as ONE
-        # micro-batch — the steady-state shape (the per-round budget
-        # contract already depends on it). A replayed-WAL restart or a
-        # multi-batch pass yields several progress rows, and a metrics
-        # row only covers its own batch, so anything but exactly one
-        # progress row falls back to the agg job inside _next_frontier.
-        counters = None
+        # blocked rows (use_robots) join the gate's seen set but get NO
+        # crawl-order position and do not count as fetched — the batch
+        # oracle's semantics (they also yield no children: only
+        # status='ok' rows discover)
+        out = spark.read.schema(_SINK_SCHEMA).parquet(round_sink)
+        # the observed counters are exact when this pass ran as ONE
+        # micro-batch into an empty round directory — the steady-state
+        # shape (the per-round budget contract already depends on it).
+        # A replayed-WAL restart or a multi-batch pass yields several
+        # progress rows, a metrics row only covers its own batch, and a
+        # replayed round's directory also holds the earlier pass's
+        # rows, so any other shape falls back to one agg job over the
+        # sink.
         this_pass = [p for p in q.recentProgress if p is not None]
-        if len(this_pass) == 1:
+        row = None
+        if len(this_pass) == 1 and not replayed:
             row = this_pass[0].get("observedMetrics", {}).get("round_counters")
-            if row is not None:
-                counters = {k: int(row[k] or 0) for k in _COUNTER_KEYS}
+        if row is None:
+            row = out.agg(*_kernel_counters()).collect()[0]
+        c = {k: int(v or 0) for k, v in row.asDict().items()}
 
-        out = spark.read.parquet(f"{sink}/r{feeder_round:06d}")
-        # blocked rows (use_robots) are reported once and join the seen
-        # set but get NO crawl-order position and do not count as
-        # fetched — the batch oracle's semantics (they also yield no
-        # children: only status='ok' rows discover)
-        frontier, n_disc, counters = _next_frontier(out, disc, counters=counters)
-
-        # COMMIT POINT: persist the feeder state for this round. The
-        # frontier write is the action that materializes the barrier;
-        # the pending count then reads back as a metadata-only
-        # count(*) over the written parquet footers (no data scan).
-        frontier_path = f"{work_dir}/feeder/frontier_round_{feeder_round}"
-        frontier.write.mode("overwrite").parquet(frontier_path)
-        n_pending = int(
-            spark.read.parquet(frontier_path)
-            .agg(F.count("*").alias("n"))
-            .collect()[0]["n"]
+        # COMMIT POINT: the round's snapshot, whose frontier write is
+        # the action that materializes the barrier; its manifest rename
+        # commits the round
+        frontier = next_frontier(out, c, disc)
+        disc += c["children"]
+        n_pending = c["deferred"] + c["children"]
+        round_row = round_metrics(feeder_round, c)
+        if round_row is not None:
+            metrics.append(round_row)
+        snap = catalog.write_snapshot(
+            {"frontier": frontier},
+            metrics={"disc_total": disc, **(round_row or {})},
+            round_idx=feeder_round,
         )
-        if n_disc is None:  # the window path: folded into the frontier count
-            n_disc = n_pending - counters["deferred"]
-        disc += n_disc
-        if not n_pending:
-            frontier_path = ""
+        frontier = catalog.load_table(spark, snap, "frontier")
 
-        metrics.append(
-            {
-                "round": feeder_round,
-                "fetched": counters["n"] - counters["deferred"] - counters["blocked"],
-                "ok": counters["ok"],
-                "failed": counters["failed"],
-                "deferred": counters["deferred"],
-                "blocked": counters["blocked"],
-                "discovered": disc,
-            }
-        )
-
-        os.makedirs(f"{work_dir}/feeder", exist_ok=True)
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "round": feeder_round,
-                    "disc": disc,
-                    "frontier": frontier_path,
-                    "n_pending": n_pending,
-                },
-                fh,
-            )
-        os.replace(tmp, meta_path)
-        if n_pending:
-            frontier = spark.read.parquet(frontier_path)
-
-        executed += 1
-        r += 1
-
-    return {"rounds": metrics, "fixpoint": not n_pending, "next_round": r}
+    return {"rounds": metrics, "fixpoint": not n_pending}
 
 
 def stream_crawl_order(spark: SparkSession, work_dir: str) -> list[dict]:

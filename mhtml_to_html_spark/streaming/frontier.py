@@ -54,6 +54,7 @@ from ..frontier.spark_frontier import (
     canonical_fields,
     stand_in_pool,
 )
+from ..functions import is_fetchable_col
 
 _GATE_STATE_SCHEMA = "seen array<long>"
 
@@ -178,7 +179,7 @@ def stream_frontier_fetch(urls_stream: DataFrame, **gate_kw) -> DataFrame:
 
     # fetch eligibility + one urn unwrap, JVM-side — the same gate the
     # batch crawl applies at seed injection (convert.js:167-171,810-814)
-    eligible = urls_stream.filter(F.col("url").rlike("^(?i)(https?|urn):"))
+    eligible = urls_stream.filter(is_fetchable_col("url"))
     unwrapped = F.when(
         F.col("url").rlike("^(?i)urn:[^:]+:.+"),
         F.regexp_extract(F.col("url"), "^(?i)urn:[^:]+:(.+)$", 1),

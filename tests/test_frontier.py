@@ -349,7 +349,7 @@ def test_crawl_jobs_run_in_round_step_groups(spark, tmp_path):
     among them; the caller's job group is back on return, so a job the
     caller runs afterwards carries no ``crawl:`` group. A resumed crawl
     reads its snapshot in the first resumed round's ``recrawl`` step,
-    not in the caller's group."""
+    not in the caller's group, and runs no job for it."""
     import re
 
     from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
@@ -382,8 +382,8 @@ def test_crawl_jobs_run_in_round_step_groups(spark, tmp_path):
     after = {i: g for i, g in _job_groups(spark).items() if i not in before}
     assert after and set(after.values()) == {None}
 
-    # resume with no round left: only snapshot reads and the final
-    # collect_order reads run, all in round 2's steps
+    # resume with no round left: the snapshot loads run no job, so only
+    # the final collect_order reads run, in round 2's commit step
     ckpt = str(tmp_path / "ckpt")
     kw = dict(max_rounds=2, host_budget=BUDGET, use_robots=True, checkpoint_dir=ckpt)
     crawl_spark(spark, SEEDS, **kw)
@@ -401,7 +401,7 @@ def test_crawl_jobs_run_in_round_step_groups(spark, tmp_path):
     assert groups and all(
         g is not None and re.fullmatch(r"crawl:r2:(recrawl|commit)", g) for g in groups.values()
     )
-    assert "crawl:r2:recrawl" in groups.values()
+    assert "crawl:r2:recrawl" not in groups.values()
 
 
 def _sql_plans(spark) -> dict[int, str]:

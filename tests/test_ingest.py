@@ -43,7 +43,9 @@ def test_snapshot_lineage_comes_from_the_written_files(spark, tmp_path):
     """Writing k materialized tables runs exactly k Spark jobs, the
     writes themselves: each file's row count comes from its parquet
     footer, with no read-back job. The manifest lists every data file
-    the write produced, and each table's rows sum over its files."""
+    the write produced, and each table's rows sum over its files.
+    Loading a table runs no job either (no schema inference): the
+    manifest records its schema."""
     import os
 
     from mhtml_to_html_spark.frontier.spark_frontier import local_frame
@@ -72,4 +74,37 @@ def test_snapshot_lineage_comes_from_the_written_files(spark, tmp_path):
         written = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
         assert [f["file"] for f in table["files"]] == written
         assert table["rows"] == want == sum(f["rows"] for f in table["files"])
-        assert catalog.load_table(spark, snap, name).count() == want
+        load_group = f"snapshot-load-{name}"
+        sc.setJobGroup(load_group, "load_table")
+        try:
+            loaded = catalog.load_table(spark, snap, name)
+            assert loaded.schema.simpleString() == tables[name].schema.simpleString()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert not sc.statusTracker().getJobIdsForGroup(load_group)
+            assert loaded.count() == want
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+
+
+@pytest.mark.spark
+def test_manifest_write_is_atomic(spark, tmp_path, monkeypatch):
+    """A crash partway through a manifest write leaves no snapshot
+    behind: the previous snapshot stays the latest, and it loads."""
+    import json
+
+    catalog = SnapshotCatalog(str(tmp_path / "warehouse"))
+    first = catalog.write_snapshot({"t": spark.range(3)}, round_idx=0)
+
+    def crash(obj, fh, **kw):
+        fh.write(json.dumps(obj)[:20])
+        raise OSError("disk went away")
+
+    monkeypatch.setattr(json, "dump", crash)
+    with pytest.raises(OSError, match="disk went away"):
+        catalog.write_snapshot({"t": spark.range(5)}, round_idx=1)
+    monkeypatch.undo()
+
+    assert catalog.list_snapshots() == [first]
+    assert catalog.latest()["snapshot_id"] == first
+    assert catalog.load_table(spark, first, "t").count() == 3

@@ -42,14 +42,9 @@ ALLOWED = {
     "frontier/robots.py::RobotsRules.allows": "the RFC 9309 matcher",
     # public API that a package __init__ re-exports and no live root calls
     "functions/columns.py::ct_is_document": "functions API: JVM-side content-type predicate",
-    "functions/columns.py::ct_is_stylesheet": "functions API: JVM-side content-type predicate",
-    "functions/columns.py::ct_is_text": "functions API: JVM-side content-type predicate",
-    "functions/columns.py::ct_is_image": "functions API: JVM-side content-type predicate",
     "functions/columns.py::ct_is_media": "functions API: JVM-side content-type predicate",
-    "functions/columns.py::ct_is_multipart": "functions API: JVM-side content-type predicate",
     "functions/columns.py::charset_of": "functions API: JVM-side charset= parameter",
     "functions/columns.py::data_uri": "functions API: JVM-side data: URI",
-    "functions/columns.py::is_fetchable_col": "functions API: JVM-side fetchable-scheme predicate",
     "images/synth.py::decode_image": "images API: decoder paired with encode_image",
     "images/synth.py::psnr": "images API: lossy-codec quality measure",
 }

@@ -435,58 +435,82 @@ def test_stream_crawl_job_restart_parity(spark, tmp_path, monkeypatch):
 
     SEEDS, ROUNDS, BUDGET = seed_urls(4, 2), 3, 5
     oracle = crawl_oracle(SEEDS, max_rounds=ROUNDS, host_budget=BUDGET)
-    want_rounds = [(m["round"], m["fetched"]) for m in oracle.metrics]
 
     for threshold in _DIST_INDEX_THRESHOLDS:
         work = str(tmp_path / f"stream_job_{threshold}")
-        args = dict(max_rounds=ROUNDS, host_budget=BUDGET)
         with monkeypatch.context() as m:
             two_pass = two_pass_index(m, threshold)
-            first = stream_crawl_job(spark, SEEDS, work, stop_after_round=1, **args)
+            first = stream_crawl_job(spark, SEEDS, work, max_rounds=1, host_budget=BUDGET)
             assert len(first["rounds"]) == 1 and not first["fixpoint"]
 
-            resumed = stream_crawl_job(spark, SEEDS, work, resume=True, **args)
+            resumed = stream_crawl_job(
+                spark, SEEDS, work, max_rounds=ROUNDS, host_budget=BUDGET, resume=True
+            )
             assert resumed["rounds"][0]["round"] == 1  # continued, not restarted
         assert bool(two_pass) == (threshold == 0), threshold
 
         assert stream_crawl_order(spark, work) == oracle.order, threshold
         # metrics line up per round with the oracle's
-        all_rounds = first["rounds"] + resumed["rounds"]
-        assert [(m["round"], m["fetched"]) for m in all_rounds] == want_rounds, threshold
+        assert first["rounds"] + resumed["rounds"] == oracle.metrics, threshold
 
 
 @pytest.mark.spark
 def test_stream_crawl_job_resume_raises_on_missing_frontier(spark, tmp_path):
-    """Honest resume: when the frontier parquet that
-    ``feeder/latest.json`` names is gone, ``resume=True`` raises — it
-    never puts an empty frontier in its place and reports a fixpoint."""
-    import json
+    """Honest resume: when the frontier table of the feeder's latest
+    snapshot is gone, ``resume=True`` raises — it never puts an empty
+    frontier in its place and reports a fixpoint."""
     import shutil
 
     from pyspark.errors import AnalysisException
 
     from mhtml_to_html_spark.frontier.fixtures import seed_urls
+    from mhtml_to_html_spark.plans.catalog import SnapshotCatalog
     from mhtml_to_html_spark.streaming.feeder import stream_crawl_job
 
     SEEDS, work = seed_urls(4, 2), str(tmp_path / "stream_job")
-    args = dict(max_rounds=3, host_budget=5)
-    first = stream_crawl_job(spark, SEEDS, work, stop_after_round=1, **args)
+    first = stream_crawl_job(spark, SEEDS, work, max_rounds=1, host_budget=5)
     assert not first["fixpoint"]
-    with open(os.path.join(work, "feeder", "latest.json")) as fh:
-        meta = json.load(fh)
-    assert meta["n_pending"] > 0 and os.path.isdir(meta["frontier"])
-    shutil.rmtree(meta["frontier"])
+    latest = SnapshotCatalog(os.path.join(work, "feeder")).latest()
+    frontier = os.path.join(
+        work, "feeder", "snapshots", f"snap_{latest['snapshot_id']:06d}", "frontier"
+    )
+    assert latest["tables"]["frontier"]["rows"] > 0 and os.path.isdir(frontier)
+    shutil.rmtree(frontier)
 
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
-        stream_crawl_job(spark, SEEDS, work, resume=True, **args)
+        stream_crawl_job(spark, SEEDS, work, max_rounds=3, host_budget=5, resume=True)
+
+
+@pytest.mark.spark
+def test_stream_crawl_job_replays_a_round_whose_commit_was_lost(spark, tmp_path):
+    """The at-least-once window: a crash after round 0's gate pass
+    committed but before its feeder snapshot did. Resume re-runs round
+    0, whose gate pass now dedups every seed, and must still take the
+    next frontier and the round's metrics from both passes' sink rows:
+    order and metrics rows equal the oracle's (round 0 defers nothing,
+    so no row changes round)."""
+    from mhtml_to_html_spark.frontier.fixtures import seed_urls
+    from mhtml_to_html_spark.frontier.oracle import crawl_oracle
+    from mhtml_to_html_spark.streaming.feeder import stream_crawl_job, stream_crawl_order
+
+    SEEDS, work = seed_urls(4, 2), str(tmp_path / "stream_job")
+    oracle = crawl_oracle(SEEDS, max_rounds=3, host_budget=5)
+    assert oracle.metrics[0]["deferred"] == 0
+    stream_crawl_job(spark, SEEDS, work, max_rounds=1, host_budget=5)
+    os.remove(os.path.join(work, "feeder", "snapshots", "snap_000000", "manifest.json"))
+
+    resumed = stream_crawl_job(spark, SEEDS, work, max_rounds=3, host_budget=5, resume=True)
+    assert stream_crawl_order(spark, work) == oracle.order
+    assert resumed["rounds"] == oracle.metrics
 
 
 @pytest.mark.spark
 def test_stream_crawl_job_robots_parity(spark, tmp_path, monkeypatch):
     """Robots-enabled streaming feeder job: blocked URLs are reported
     in metrics but get NO crawl-order position and never count as
-    fetched — the full ordering must still match the batch oracle
-    byte-for-byte, on both child indexers."""
+    fetched — the full ordering and every metrics row must still match
+    the batch oracle's, on both child indexers. Seeds that robots
+    blocks all make a zero-fetch round, which reports no row."""
     from mhtml_to_html_spark.frontier.fixtures import seed_urls
     from mhtml_to_html_spark.frontier.oracle import crawl_oracle
     from mhtml_to_html_spark.streaming.feeder import (
@@ -494,22 +518,24 @@ def test_stream_crawl_job_robots_parity(spark, tmp_path, monkeypatch):
         stream_crawl_order,
     )
 
-    SEEDS, ROUNDS, BUDGET = seed_urls(4, 2), 3, 5
-    oracle = crawl_oracle(SEEDS, max_rounds=ROUNDS, host_budget=BUDGET, use_robots=True)
-    want_rounds = [(m["round"], m["fetched"], m["blocked"]) for m in oracle.metrics]
-
-    for threshold in _DIST_INDEX_THRESHOLDS:
-        work = str(tmp_path / f"robots_job_{threshold}")
-        with monkeypatch.context() as m:
-            two_pass = two_pass_index(m, threshold)
-            res = stream_crawl_job(
-                spark, SEEDS, work, max_rounds=ROUNDS, host_budget=BUDGET,
-                use_robots=True,
-            )
-        assert bool(two_pass) == (threshold == 0), threshold
-        assert stream_crawl_order(spark, work) == oracle.order, threshold
-        got_rounds = [(m["round"], m["fetched"], m["blocked"]) for m in res["rounds"]]
-        assert got_rounds == want_rounds, threshold
+    ROUNDS, BUDGET = 3, 5
+    inputs = {
+        "seeds": seed_urls(4, 2),
+        "all-blocked": ["https://host16.example.com/d2/x", "https://host16.example.com/d2/y"],
+    }
+    for name, seeds in inputs.items():
+        oracle = crawl_oracle(seeds, max_rounds=ROUNDS, host_budget=BUDGET, use_robots=True)
+        for threshold in _DIST_INDEX_THRESHOLDS:
+            work = str(tmp_path / f"robots_job_{name}_{threshold}")
+            with monkeypatch.context() as m:
+                two_pass = two_pass_index(m, threshold)
+                res = stream_crawl_job(
+                    spark, seeds, work, max_rounds=ROUNDS, host_budget=BUDGET,
+                    use_robots=True,
+                )
+            assert bool(two_pass) == (threshold == 0), (name, threshold)
+            assert stream_crawl_order(spark, work) == oracle.order, (name, threshold)
+            assert res["rounds"] == oracle.metrics, (name, threshold)
 
 
 @pytest.mark.spark
